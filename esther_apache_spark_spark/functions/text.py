@@ -32,10 +32,15 @@ def tokenize_sql(expr: str, normalize: bool = True) -> str:
     """``tokenize`` as a SQL fragment — same expression tree, assembled
     as one string so plan-building hot paths (the LSH family builds
     inside the bench's timed region) pay one py4j round-trip instead of
-    ~45 (guide §4, driver side). Backslashes are doubled because Spark's
-    SQL string literals are backslash-escaped by default."""
-    base = f"regexp_replace(lower({expr}), '[^\\\\w\\\\s]', '')" if normalize else expr
-    return f"filter(split(trim({base}), '\\\\s+'), t -> t != '')"
+    ~45 (guide §4, driver side). The regex backslashes are spelled
+    ``chr(92)`` because a backslash inside a SQL string literal means
+    different things under ``spark.sql.parser.escapedStringLiterals``
+    true and false; ``chr(92)`` is one backslash under both, and
+    Catalyst constant-folds the ``concat`` back to the plain pattern."""
+    if normalize:
+        punct = "concat('[^', chr(92), 'w', chr(92), 's]')"
+        expr = f"regexp_replace(lower({expr}), {punct}, '')"
+    return f"filter(split(trim({expr}), concat(chr(92), 's+')), t -> t != '')"
 
 
 def word_shingles(tokens: Column, n: int = 3) -> Column:

@@ -223,7 +223,8 @@ def _hot_nsh_arr(
     ``_nsh_arr[b] = ceil(bucket_size / max_bucket)`` for the id's
     band-``b`` bucket, 1 when the bucket is at or under the cap.
 
-    ``shard(id, b) = xxhash64(id, b) % nsh_arr[b]`` then bounds every
+    ``shard(id, b) = md5('shard:' || id || ':' || b) % nsh_arr[b]`` (see
+    ``_shard_hash_sql``) then bounds every
     banded self-join group at ``max_bucket`` expected rows; salting the
     hash with the band id makes each band shard a hot cluster
     differently, which is what keeps mega-clusters connected across
@@ -286,55 +287,30 @@ def _with_shards(src: DataFrame, nsh: DataFrame | None, nbands: int) -> DataFram
     )
 
 
-def _shard_arr(src: DataFrame, shard_hash_sql, nbands: int) -> DataFrame:
+def _shard_hash_sql(id_expr: str, band: int) -> str:
+    """Per-(id, band) shard hash for hot-bucket sharding as a SQL
+    fragment: md5 of ``'shard:' || id || ':' || band`` — salted by the
+    band so each band shards a hot cluster differently, and replayable
+    in the DuckDB oracles."""
+    return _md5_long_sql(
+        f"concat_ws(':', cast({id_expr} as string), '{band}')", salt="shard:"
+    )
+
+
+def _shard_arr(src: DataFrame, nbands: int) -> DataFrame:
     """Materialize every band's shard value ONCE per row as ``_sh_arr``
     (0 on the all-ones modulus — no hot bucket — else the exact join-key
     shard formula). The banded join key reads its element, and the
     first-meet-band pair filter compares elements instead of re-deriving
-    shard hashes per candidate pair. ``shard_hash_sql(id_expr, band)``
-    returns a SQL fragment; the whole array is ONE ``F.expr`` (one py4j
-    round-trip instead of ~10 per band — see ``_md5_long_sql``)."""
+    shard hashes per candidate pair. The whole array is ONE ``F.expr``
+    (one py4j round-trip instead of ~10 per band — see
+    ``_md5_long_sql``)."""
     elems = ", ".join(
         f"CASE WHEN element_at(_nsh_arr, {b + 1}) = 1 THEN CAST(0 AS BIGINT) "
-        f"ELSE pmod({shard_hash_sql('_id', b)}, element_at(_nsh_arr, {b + 1})) END"
+        f"ELSE pmod({_shard_hash_sql('_id', b)}, element_at(_nsh_arr, {b + 1})) END"
         for b in range(nbands)
     )
     return src.withColumn("_sh_arr", F.expr(f"array({elems})")).drop("_nsh_arr")
-
-
-def minhash_signature(
-    tokens: Column, num_perm: int = 32, shingle_n: int | None = None
-) -> Column:
-    """array<string> -> array<bigint> MinHash signature.
-
-    Permutation i is simulated by re-hashing a per-element base hash with
-    the permutation index — ``xxhash64(xxhash64(element), i)`` — the
-    standard seeded-hash construction (Broder 1997); the signature
-    element is the min over the set.
-
-    Built as ONE pass over the elements: each element is string-hashed
-    once, then folded into a running array of per-permutation minima via
-    ``aggregate``+``zip_with``. The naive form (num_perm separate
-    ``transform``s over the shingle expression) re-evaluates the
-    tokenize→shingle→string-hash subtree per permutation — measured 65×
-    slower at sf0.1 because higher-order functions are interpreted, not
-    codegen'd."""
-    if shingle_n:
-        # shingle hashes directly from token hashes — no shingle strings
-        base = F.array_distinct(shingle_hashes(tokens, shingle_n))
-    else:
-        base = F.transform(F.array_distinct(tokens), lambda e: F.xxhash64(e))
-    perm_idx = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    acc0 = F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_perm)
-    return F.aggregate(
-        base,
-        acc0,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(perm_idx, lambda i: F.xxhash64(h, i)),
-            lambda a, b: F.least(a, b),
-        ),
-    )
 
 
 # Fixed odd ~2^29 position weights for the md5-family shingle combine:
@@ -364,8 +340,8 @@ def md5_long(col: Column, salt: str = "", hexlen: int = 15) -> Column:
     Spark and DuckDB (``CAST(CONCAT('0x', substr(md5(x), 1, hexlen)) AS
     BIGINT)``), the same construction as ``sampling.hash_bucket`` /
     ``sketches.cms_slot`` widened to 60 bits. This is the hash family
-    that makes the LSH operators SQL-replayable end-to-end; xxhash64
-    stays available as the cheaper non-replayable default."""
+    of every LSH operator (MinHash, SimHash, shard salts), which makes
+    them SQL-replayable end-to-end."""
     s = F.concat(F.lit(salt), col) if salt else col
     return F.conv(F.substring(F.md5(s), 1, hexlen), 16, 10).cast("long")
 
@@ -390,58 +366,38 @@ def _md5_long_sql(expr: str, salt: str = "", hexlen: int = 15) -> str:
 
 
 def minhash_perm_constants(
-    num_perm: int, seed: int = 7, a_bits: int = 64
+    num_perm: int, seed: int = 7
 ) -> tuple["np.ndarray", "np.ndarray"]:
     """The (a_i, b_i) multiply-shift permutation constants shared by the
-    vectorized signature fold and (for the md5 family) the DuckDB oracle
-    literals. ``a_bits=64`` reproduces the legacy xxhash64-era family
-    byte-for-byte; ``a_bits=62`` keeps a_i < 2^62 so a_i·x with a 60-bit
-    md5 base hash stays < 2^122 — exactly representable in DuckDB's
-    HUGEINT, making ``(a·x + b) mod 2^63`` replayable in SQL."""
+    vectorized signature fold and the DuckDB oracle literals. Odd
+    a_i < 2^62, so a_i·x with a 60-bit md5 base hash stays < 2^122 —
+    exactly representable in DuckDB's HUGEINT, making
+    ``(a·x + b) mod 2^63`` replayable in SQL."""
     rng = np.random.default_rng(seed)
-    if a_bits >= 64:
-        a = (rng.integers(0, 2**63, num_perm, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
-    else:
-        a = (
-            rng.integers(0, 2 ** (a_bits - 1), num_perm, dtype=np.uint64)
-            << np.uint64(1)
-        ) | np.uint64(1)
+    a = (rng.integers(0, 2**61, num_perm, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
     b = rng.integers(0, 2**63, num_perm, dtype=np.uint64)
     return a, b
 
 
 def minhash_signature_vec(
-    base_hashes: Column, num_perm: int = 32, seed: int = 7, mask_bits: int | None = None
+    base_hashes: Column, num_perm: int = 32, seed: int = 7
 ) -> Column:
-    """Vectorized fast path for ``minhash_signature``: takes the
-    JVM-computed base hashes (``array<bigint>``, e.g. ``shingle_hashes``)
-    and folds the per-permutation minima in NumPy via one Arrow batch.
+    """MinHash signature of the JVM-computed base hashes
+    (``array<bigint>``, e.g. ``shingle_base_frame``'s ``_base``): the
+    per-permutation minima are folded in NumPy via one Arrow batch.
+    Interpreted HOF folds cost O(num_perm·|set|) per row; the GEMM-ish
+    batch form is ~4× faster end-to-end at sf0.1.
 
-    The permutation family differs from the expression form —
-    ``(a_i·x + b_i) mod 2^64`` with odd ``a_i`` (a true permutation of
-    Z_2^64, multiply-shift style) instead of re-seeded ``xxhash64`` —
-    so signatures are not byte-identical to ``minhash_signature``, but
-    the estimator property (P[sig_i(A)=sig_i(B)] = Jaccard(A,B)) is the
-    same and is what the property tests assert. Interpreted HOF folds
-    cost O(num_perm·|set|) per row; the GEMM-ish batch form is ~4×
-    faster end-to-end at sf0.1.
-
-    ``mask_bits=63`` switches to the SQL-replayable md5 family:
-    constants from ``minhash_perm_constants(a_bits=62)`` and the fold
-    masked to the low 63 bits — (a·x + b) mod 2^63, which DuckDB
-    replays exactly in HUGEINT because mod 2^63 of the uint64-wrapped
-    product equals mod 2^63 of the true product (2^63 | 2^64). Values
-    stay non-negative, so signed BIGINT min agrees with the unsigned
-    min on both engines."""
-    a, b = minhash_perm_constants(
-        num_perm, seed, a_bits=62 if mask_bits is not None else 64
-    )
-    if mask_bits is not None:
-        mask = np.uint64(2**mask_bits - 1)
-        empty = np.full(num_perm, 2**mask_bits - 1, dtype=np.int64)
-    else:
-        mask = None
-        empty = np.full(num_perm, _LONG_MAX, dtype=np.int64)
+    Permutation i is ``(a_i·x + b_i) mod 2^63`` with the constants of
+    ``minhash_perm_constants`` (odd a_i, multiply-shift style); the
+    estimator property P[sig_i(A)=sig_i(B)] = Jaccard(A,B) is what the
+    property tests assert. DuckDB replays the fold exactly in HUGEINT
+    because mod 2^63 of the uint64-wrapped product equals mod 2^63 of
+    the true product (2^63 | 2^64). Values stay non-negative, so signed
+    BIGINT min agrees with the unsigned min on both engines."""
+    a, b = minhash_perm_constants(num_perm, seed)
+    mask = np.uint64(_LONG_MAX)
+    empty = np.full(num_perm, _LONG_MAX, dtype=np.int64)
 
     @F.pandas_udf("array<long>")
     def _sig(s: pd.Series) -> pd.Series:
@@ -454,28 +410,27 @@ def minhash_signature_vec(
             if len(x) == 0:
                 out.append(empty)
                 continue
-            v = x[None, :] * a[:, None] + b[:, None]  # uint64 wraparound
-            if mask is not None:
-                v &= mask
+            v = (x[None, :] * a[:, None] + b[:, None]) & mask  # uint64 wraparound
             out.append(v.min(axis=1).view(np.int64))
         return pd.Series(out, dtype=object)
 
     return _sig(base_hashes)
 
 
-def simhash_vec(token_hashes: Column, bits: int = 64) -> Column:
-    """Vectorized twin of ``simhash``: takes JVM-computed 64-bit token
-    hashes (``transform(tokens, xxhash64)``) and does the 64-bit-position
-    vote accumulation in NumPy. Bit rule is identical (bit set iff vote
-    sum >= 0, bit 63 wraps like Java shiftleft), so fingerprints are
-    byte-identical to the expression form — asserted in tests.
+#: SimHash fingerprint width: the 60 informative bits of ``md5_long``.
+SIMHASH_BITS = 60
 
-    ``bits=60`` is the SQL-replayable md5 family: token hashes from
-    ``md5_long`` carry 60 informative bits, and the 60-bit fingerprint
-    stays non-negative — no Java sign wrap, so DuckDB can rebuild it
-    with plain ``<<``/``>>``/``&`` BIGINT arithmetic."""
-    shifts = np.arange(bits, dtype=np.uint64)
-    all_set = -1 if bits == 64 else (1 << bits) - 1
+
+def simhash_vec(token_hashes: Column) -> Column:
+    """SimHash (Charikar 2002) of JVM-computed token hashes
+    (``transform(tokens, md5_long)``), with the per-bit vote
+    accumulation done in NumPy: bit i of the 60-bit fingerprint is set
+    iff the tokens whose hash has bit i set are at least half of all
+    tokens (so a token-less text gets all 60 bits set). The
+    fingerprint stays non-negative — no Java sign wrap, so DuckDB can
+    rebuild it with plain ``<<``/``>>``/``&`` BIGINT arithmetic."""
+    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
+    all_set = (1 << SIMHASH_BITS) - 1
 
     @F.pandas_udf("long")
     def _fp(s: pd.Series) -> pd.Series:
@@ -766,38 +721,18 @@ def _quotient_labels(
     return members.join(glab, key_col).select(F.col("_mid").alias("node"), "comp")
 
 
-def _mh_shard_hash_fn(hash_family: str):
-    """Per-(id, band) shard hash for hot-bucket sharding as a SQL
-    fragment builder ``(id_expr: str, band: int) -> str``, in the given
-    hash family (md5 = SQL-replayable, xxhash64 = fast path). Same
-    values as the former Column builder: the md5 family hashes
-    ``'shard:' || id || ':' || band``; xxhash64 hashes (id, band) with
-    the band as an int literal, exactly like ``F.lit(band)``."""
-
-    def shard_hash_sql(id_expr: str, band: int) -> str:
-        if hash_family == "md5":
-            return _md5_long_sql(
-                f"concat_ws(':', cast({id_expr} as string), '{band}')",
-                salt="shard:",
-            )
-        return f"xxhash64({id_expr}, {band})"
-
-    return shard_hash_sql
-
-
 def shingle_base_frame(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int | None = 3,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Per-doc distinct shingle-hash set ``(_id, _base)`` — the shared
     base of every MinHash consumer (``minhash_band_frame``) and of
     exact-Jaccard auditing (``lsh_pair_audit``): exact Jaccard over
     ``_base`` IS the n-gram Jaccard the MinHash signature estimates,
     in the same hash family, so estimator and truth are comparable
-    pointwise (and, for the md5 family, SQL-replayable).
+    pointwise and SQL-replayable.
 
     Implementation notes (moved verbatim from ``minhash_band_frame``):
     JVM computes the shingle hashes; the permutation fold downstream
@@ -817,68 +752,40 @@ def shingle_base_frame(
     from esther_apache_spark_spark.functions.text import tokenize_sql
 
     tok_sql = tokenize_sql(f"`{text_col}`")
-    if hash_family == "md5":
-        # SQL-replayable base: each TOKEN md5-hashed once (the same
-        # per-token cost profile as the simhash md5 family, ~+20% over
-        # xxhash64), then shingles combined ARITHMETICALLY — a weighted
-        # sum of the tokens' 30-bit halves with fixed odd ~2^29
-        # constants. Every product is < 2^60 and the sum < 2^62, so the
-        # arithmetic is exact signed-64-bit in BOTH engines (no
-        # wraparound, ANSI-safe, plain BIGINT in DuckDB — no HUGEINT
-        # needed) and the values are identical by construction, so even
-        # a combine collision cannot diverge Spark from the oracle. The
-        # earlier shingle-STRING md5 form (array_join per position) was
-        # measured 25× slower than the xxhash64 base at sf1 — md5 per
-        # shingle string, not per token, was the entire gap.
-        if shingle_n and 2 * shingle_n > len(SHINGLE_COMBINE):
-            raise ValueError(
-                f"md5 family supports shingle_n <= {len(SHINGLE_COMBINE) // 2}"
-            )
-        if shingle_n:
-            th = df.selectExpr(
-                f"`{id_col}` AS _id",
-                f"transform({tok_sql}, t -> {_md5_long_sql('t')}) AS _th",
-            )
-            combine = " + ".join(
-                f"(get(_th, i + {j}) & {(1 << 30) - 1}) * {SHINGLE_COMBINE[2 * j]}"
-                f" + shiftright(get(_th, i + {j}), 30) * {SHINGLE_COMBINE[2 * j + 1]}"
-                for j in range(shingle_n)
-            )
-            base_df = th.selectExpr(
-                "_id",
-                "array_distinct(CASE WHEN size(_th) >= "
-                f"{shingle_n} THEN transform(sequence(0, size(_th) - "
-                f"{shingle_n}), i -> {combine}) "
-                "ELSE cast(array() as array<bigint>) END) AS _base",
-            )
-        else:
-            base_df = df.selectExpr(
-                f"`{id_col}` AS _id",
-                f"transform(array_distinct({tok_sql}), "
-                f"e -> {_md5_long_sql('e')}) AS _base",
-            )
-    elif shingle_n:
-        th = df.selectExpr(
+    # SQL-replayable base: each TOKEN md5-hashed once, then shingles
+    # combined ARITHMETICALLY — a weighted sum of the tokens' 30-bit
+    # halves with fixed odd ~2^29 constants. Every product is < 2^60 and
+    # the sum < 2^62, so the arithmetic is exact signed-64-bit in BOTH
+    # engines (no wraparound, ANSI-safe, plain BIGINT in DuckDB — no
+    # HUGEINT needed) and the values are identical by construction, so
+    # even a combine collision cannot diverge Spark from the oracle. The
+    # earlier shingle-STRING md5 form (array_join per position) was
+    # measured 25× slower at sf1 — md5 per shingle string, not per
+    # token, was the entire gap.
+    if shingle_n and 2 * shingle_n > len(SHINGLE_COMBINE):
+        raise ValueError(f"shingle_n must be <= {len(SHINGLE_COMBINE) // 2}")
+    if not shingle_n:
+        return df.selectExpr(
             f"`{id_col}` AS _id",
-            f"transform({tok_sql}, t -> xxhash64(t)) AS _th",
+            f"transform(array_distinct({tok_sql}), "
+            f"e -> {_md5_long_sql('e')}) AS _base",
         )
-        gram = "xxhash64(" + ", ".join(
-            f"get(_th, i + {j})" for j in range(shingle_n)
-        ) + ")"
-        base_df = th.selectExpr(
-            "_id",
-            "array_distinct(CASE WHEN size(_th) >= "
-            f"{shingle_n} THEN transform(sequence(0, size(_th) - "
-            f"{shingle_n}), i -> {gram}) "
-            "ELSE cast(array() as array<bigint>) END) AS _base",
-        )
-    else:
-        base_df = df.selectExpr(
-            f"`{id_col}` AS _id",
-            f"transform(array_distinct({tok_sql}), e -> xxhash64(e)) AS _base",
-        )
-
-    return base_df
+    th = df.selectExpr(
+        f"`{id_col}` AS _id",
+        f"transform({tok_sql}, t -> {_md5_long_sql('t')}) AS _th",
+    )
+    combine = " + ".join(
+        f"(get(_th, i + {j}) & {(1 << 30) - 1}) * {SHINGLE_COMBINE[2 * j]}"
+        f" + shiftright(get(_th, i + {j}), 30) * {SHINGLE_COMBINE[2 * j + 1]}"
+        for j in range(shingle_n)
+    )
+    return th.selectExpr(
+        "_id",
+        "array_distinct(CASE WHEN size(_th) >= "
+        f"{shingle_n} THEN transform(sequence(0, size(_th) - "
+        f"{shingle_n}), i -> {combine}) "
+        "ELSE cast(array() as array<bigint>) END) AS _base",
+    )
 
 
 def minhash_band_frame(
@@ -888,23 +795,19 @@ def minhash_band_frame(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Cached MinHash signature frame ``(_id, _sig, _bh)`` — the
     signature array plus its ``bands`` band hashes — shared by the
     within-corpus candidate self-join (``minhash_lsh_candidates``) and
     the cross-corpus matcher (``minhash_cross_matches``). One narrow
     pass over the text; the caller joins on exploded ``_bh``."""
-    if hash_family not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
     rows_per_band = num_perm // bands
     if rows_per_band * bands != num_perm:
         raise ValueError("num_perm must be divisible by bands")
     df = _non_null_text(df, text_col)
 
     base_df = shingle_base_frame(
-        df, id_col=id_col, text_col=text_col,
-        shingle_n=shingle_n, hash_family=hash_family,
+        df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     )
 
     # Cache the signatures (and their band hashes — computed once here,
@@ -918,20 +821,14 @@ def minhash_band_frame(
             f"cast(element_at({sig}, {b * rows_per_band + r + 1}) as string)"
             for r in range(rows_per_band)
         ) + ")"
-        if hash_family == "md5":
-            return _md5_long_sql(joined)
-        return f"xxhash64({joined})"
+        return _md5_long_sql(joined)
 
     bh_arr = "array(" + ", ".join(
         band_hash_sql("_sig", b) for b in range(bands)
     ) + ")"
     return _cache(base_df.select(
         "_id",
-        minhash_signature_vec(
-            F.col("_base"),
-            num_perm,
-            mask_bits=63 if hash_family == "md5" else None,
-        ).alias("_sig"),
+        minhash_signature_vec(F.col("_base"), num_perm).alias("_sig"),
     ).select("_id", "_sig", F.expr(bh_arr).alias("_bh")))
 
 
@@ -944,7 +841,6 @@ def minhash_lsh_candidates(
     shingle_n: int = 3,
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
@@ -967,14 +863,11 @@ def minhash_lsh_candidates(
     collapsed pair set is exact for clone groups ≤ max_bucket, chunked
     cliques above it — same bound the direct shards deliver).
 
-    ``hash_family="md5"`` swaps every hash site (shingle base hash,
-    permutation fold, band hash, shard salt) to the md5-hex→BIGINT
-    scheme so the WHOLE pipeline — signature → bands → pairs →
-    sig_agreement — replays bit-for-bit in DuckDB SQL (see
-    ``plans/extensions.py`` ``dedup_minhash_lsh``'s oracle). The
-    xxhash64 default stays the cheaper non-replayable fast path."""
-    if hash_family not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    Every hash site (shingle base hash, permutation fold, band hash,
+    shard salt) uses the md5-hex→BIGINT scheme, so the WHOLE pipeline —
+    signature → bands → pairs → sig_agreement — replays bit-for-bit in
+    DuckDB SQL (see ``plans/extensions.py`` ``dedup_minhash_lsh``'s
+    oracle)."""
     rows_per_band = num_perm // bands
     if rows_per_band * bands != num_perm:
         raise ValueError("num_perm must be divisible by bands")
@@ -993,7 +886,6 @@ def minhash_lsh_candidates(
             shingle_n=shingle_n,
             max_bucket=max_bucket,
             collapse_exact=False,
-            hash_family=hash_family,
         )
         # identical texts: every signature position matches
         return _expand_collapsed_pairs(
@@ -1005,7 +897,6 @@ def minhash_lsh_candidates(
             cap=max_bucket,
         )
 
-    shard_hash = _mh_shard_hash_fn(hash_family)
     sig = minhash_band_frame(
         df,
         id_col=id_col,
@@ -1013,7 +904,6 @@ def minhash_lsh_candidates(
         num_perm=num_perm,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
     )
     if max_bucket is not None:
         narrow = sig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
@@ -1021,7 +911,7 @@ def minhash_lsh_candidates(
     else:
         nsh = None
     banded = (
-        _shard_arr(_with_shards(sig, nsh, bands), shard_hash, bands)
+        _shard_arr(_with_shards(sig, nsh, bands), bands)
         .selectExpr(
             "_id", "_sig", "_bh", "_sh_arr",
             "posexplode(_bh) AS (_band, _bucket)",
@@ -1087,7 +977,6 @@ def minhash_cross_matches(
     bands: int = 8,
     shingle_n: int = 3,
     min_agree: int = 16,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Cross-corpus MinHash matches: ``(id_a, id_b, n_agree,
     sig_agreement)`` where ``id_a`` is a corpus doc, ``id_b`` a probe
@@ -1111,11 +1000,11 @@ def minhash_cross_matches(
         raise ValueError("min_agree must be in [0, num_perm]")
     ca = minhash_band_frame(
         corpus, id_col=id_col, text_col=text_col, num_perm=num_perm,
-        bands=bands, shingle_n=shingle_n, hash_family=hash_family,
+        bands=bands, shingle_n=shingle_n,
     )
     pb = minhash_band_frame(
         probes, id_col=id_col, text_col=text_col, num_perm=num_perm,
-        bands=bands, shingle_n=shingle_n, hash_family=hash_family,
+        bands=bands, shingle_n=shingle_n,
     )
     left = ca.select(
         F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"),
@@ -1411,66 +1300,17 @@ def ngram_jaccard_pairs(
     return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
-def simhash(tokens: Column, bits: int = 64) -> Column:
-    """array<string> -> bigint SimHash (Charikar 2002): per-token 64-bit
-    hash; each bit position accumulates +1/-1; sign of the sum gives the
-    fingerprint bit. Pure expressions via transform/aggregate over bit
-    positions — no UDF."""
-    if bits != 64:
-        raise ValueError("only 64-bit simhash supported")
-    # ONE pass over the tokens: hash each token once, then fold its ±1
-    # bit votes into a 64-wide counter array (aggregate + zip_with).
-    # The naive form (64 separate filter() passes over the token-hash
-    # array) re-evaluates the tokenization per bit — interpreted HOFs
-    # make that ~60× slower.
-    h = F.transform(tokens, lambda t: F.xxhash64(t))
-    bit_idx = F.sequence(F.lit(0), F.lit(bits - 1))
-    votes = F.aggregate(
-        h,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.transform(
-                bit_idx,
-                # call_function: the SQL shiftright accepts a column
-                # shift amount; the Python wrapper insists on an int
-                lambda i: F.when(
-                    F.call_function("shiftright", x, i).bitwiseAND(
-                        F.lit(1).cast("long")
-                    )
-                    != 0,
-                    1,
-                ).otherwise(-1),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    # votes[i] >= 0  <=>  ones*2 >= n  =>  set bit i. Bit 63 wraps like
-    # Java (1L << 63 == Long.MIN_VALUE), which is exactly the mask.
-    masks = F.transform(
-        votes,
-        lambda v, i: F.when(
-            v >= 0, F.call_function("shiftleft", F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(
-        masks, F.lit(0).cast("long"), lambda acc, m: acc.bitwiseOR(m)
-    )
-
-
 def simhash_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    band_bits: int = 16,
+    band_bits: int = 15,
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
-    bits: int = 64,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """Near-dup candidates by SimHash banding: split the ``bits``-wide
-    fingerprint into bits/band_bits bands; docs sharing any band are
-    candidates (Hamming-distance blocking). Returns (id_a, id_b,
+    """Near-dup candidates by SimHash banding: split the 60-bit
+    fingerprint (``simhash_vec``) into 60/band_bits bands; docs sharing
+    any band are candidates (Hamming-distance blocking). Returns (id_a, id_b,
     hamming) pairs. ``max_bucket`` shards hot buckets to bound the
     self-join fan-out (see module docstring); ``collapse_exact``
     additionally collapses byte-identical texts to one representative
@@ -1481,17 +1321,12 @@ def simhash_candidates(
     narrow aggregate and collapses at ≥ ``AUTO_COLLAPSE_DUP_MASS``;
     pass True/False to force a path.
 
-    ``hash_family="md5"`` (pair with ``bits=60``, ``band_bits=15``)
-    hashes tokens with the md5-hex→BIGINT scheme: 60 informative bits,
-    non-negative fingerprint (no Java sign wrap), so fingerprints,
-    bands, pairs AND hamming distances replay exactly in DuckDB SQL —
-    see ``plans/extensions.py`` ``dedup_simhash``'s oracle."""
-    if hash_family not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    if hash_family == "xxhash64" and bits != 64:
-        raise ValueError("xxhash64 family supports bits=64 only")
-    if bits % band_bits:
-        raise ValueError("bits must be divisible by band_bits")
+    Tokens are hashed with the md5-hex→BIGINT scheme (``md5_long``), so
+    fingerprints, bands, pairs AND hamming distances replay exactly in
+    DuckDB SQL — see ``plans/extensions.py`` ``dedup_simhash``'s
+    oracle."""
+    if SIMHASH_BITS % band_bits:
+        raise ValueError(f"{SIMHASH_BITS} must be divisible by band_bits")
     df = _non_null_text(df, text_col)
     collapse_exact = _resolve_collapse_exact(
         df, F.md5(F.coalesce(F.col(text_col), F.lit(""))), collapse_exact, "text"
@@ -1505,8 +1340,6 @@ def simhash_candidates(
             band_bits=band_bits,
             max_bucket=max_bucket,
             collapse_exact=False,
-            bits=bits,
-            hash_family=hash_family,
         )
         # identical texts: identical fingerprints, Hamming distance 0
         return _expand_collapsed_pairs(
@@ -1517,23 +1350,14 @@ def simhash_candidates(
             {"hamming": F.bit_count(F.lit(0))},
             cap=max_bucket,
         )
-    nbands = bits // band_bits
-    if hash_family == "md5":
-        token_hashes = F.transform(
-            tokenize(F.col(text_col)), lambda t: md5_long(t)
-        )
-    else:
-        token_hashes = F.transform(
-            tokenize(F.col(text_col)), lambda t: F.xxhash64(t)
-        )
-
-    shard_hash = _mh_shard_hash_fn(hash_family)
+    nbands = SIMHASH_BITS // band_bits
+    token_hashes = F.transform(tokenize(F.col(text_col)), lambda t: md5_long(t))
 
     # cache = reuse across both join sides AND a plan barrier keeping the
     # Arrow UDF out of the posexplode generator (see minhash note)
     fp = _cache(df.select(  # df already NULL-text-filtered at entry
         F.col(id_col).alias("_id"),
-        simhash_vec(token_hashes, bits=bits).alias("_fp"),
+        simhash_vec(token_hashes).alias("_fp"),
     ))
     mask = (1 << band_bits) - 1
 
@@ -1551,7 +1375,7 @@ def simhash_candidates(
     else:
         nsh = None
     banded = (
-        _shard_arr(_with_shards(fp, nsh, nbands), shard_hash, nbands)
+        _shard_arr(_with_shards(fp, nsh, nbands), nbands)
         .selectExpr(
             "_id", "_fp", "_sh_arr",
             f"posexplode({band_arr_sql}) AS (_band, _bucket)",
@@ -1590,11 +1414,9 @@ def simhash_components(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    band_bits: int = 16,
+    band_bits: int = 15,
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
-    bits: int = 64,
-    hash_family: str = "xxhash64",
     max_hamming: int | None = None,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
@@ -1639,8 +1461,6 @@ def simhash_components(
                 band_bits=band_bits,
                 max_bucket=max_bucket,
                 collapse_exact=False,
-                bits=bits,
-                hash_family=hash_family,
             )
         )
         return connected_components(
@@ -1657,8 +1477,6 @@ def simhash_components(
             band_bits=band_bits,
             max_bucket=max_bucket,
             collapse_exact=False,
-            bits=bits,
-            hash_family=hash_family,
         )
     )
     return _quotient_labels(

@@ -119,7 +119,6 @@ def build_minhash_bucket_index(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
     include_doc_bands: bool = True,
@@ -148,7 +147,6 @@ def build_minhash_bucket_index(
         shingle_n=shingle_n,
         max_bucket=max_bucket,
         collapse_exact=collapse_exact,
-        hash_family=hash_family,
     )
     labels = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -160,7 +158,6 @@ def build_minhash_bucket_index(
         num_perm=num_perm,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
     )
     banded = sig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
     bucket_reps = (
@@ -186,7 +183,6 @@ def minhash_merge_edges(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
 ) -> DataFrame:
@@ -203,7 +199,6 @@ def minhash_merge_edges(
         num_perm=num_perm,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
     )
     bband = bsig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
     # batch ↔ history-component edges: bucket co-occupancy IS the
@@ -224,7 +219,6 @@ def minhash_merge_edges(
         shingle_n=shingle_n,
         max_bucket=max_bucket,
         collapse_exact=collapse_exact,
-        hash_family=hash_family,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     return bh.unionByName(bb)
 
@@ -237,7 +231,6 @@ def incremental_minhash_merge(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
     checkpoint_dir: str | None = None,
@@ -268,7 +261,6 @@ def incremental_minhash_merge(
         num_perm=num_perm,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
         max_bucket=max_bucket,
         collapse_exact=collapse_exact,
     )
@@ -648,7 +640,6 @@ def apply_minhash_merge_to_index(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     doc_bands: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Fold a day's merge back into the MinHash index — the step that
@@ -692,7 +683,6 @@ def apply_minhash_merge_to_index(
         num_perm=num_perm,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
     )
     bband = bsig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
     bl = batch_labels.select(F.col(id_col).alias("_id"), F.col("comp").alias("_rep"))
@@ -971,7 +961,6 @@ def append_minhash_merge_to_index(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
 ) -> None:
     """The SUB-LINEAR nightly fold (VERDICT r9 #2b): where
     ``apply_minhash_merge_to_index`` rebuilds the full labels /
@@ -1001,7 +990,6 @@ def append_minhash_merge_to_index(
             num_perm=num_perm,
             bands=bands,
             shingle_n=shingle_n,
-            hash_family=hash_family,
         ),
         path,
     )
@@ -1016,7 +1004,6 @@ def _minhash_fold_delta(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
 ) -> dict[str, DataFrame]:
     """The per-table row delta ONE MinHash fold contributes — shared by
     the plain-directory append fold above and the snapshot commit fold
@@ -1028,7 +1015,6 @@ def _minhash_fold_delta(
         num_perm=num_perm,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
     )
     bband = bsig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
     bl = batch_labels.select(

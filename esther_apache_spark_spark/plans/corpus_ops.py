@@ -1439,7 +1439,7 @@ def _minhash_perm_literals() -> str:
     equals mod 2^63 of the true HUGEINT product because 2^63 | 2^64)."""
     from esther_apache_spark_spark.operators import dedup as D
 
-    a, b = D.minhash_perm_constants(32, 7, a_bits=62)
+    a, b = D.minhash_perm_constants(32, 7)
     return (
         "CAST([" + ",".join(str(int(x)) for x in a) + "] AS HUGEINT[]) AS A, "
         "CAST([" + ",".join(str(int(x)) for x in b) + "] AS HUGEINT[]) AS B"
@@ -1537,7 +1537,6 @@ def decontaminate_minhash_train_docs(spark: SparkSession, sf_dir: str) -> DataFr
         bands=8,
         shingle_n=3,
         min_agree=16,
-        hash_family="md5",
     )
     return matches.groupBy(F.col("id_a").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_eval_matches"),

@@ -339,7 +339,7 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (no (band, bucket) group over max_bucket=4096) — true by orders of
 # magnitude at every test SF (500–5 000 distinct docs); the sharded path
 # is covered separately by tests/test_scale_guards.py.
-_MINHASH_A, _MINHASH_B = D.minhash_perm_constants(32, 7, a_bits=62)
+_MINHASH_A, _MINHASH_B = D.minhash_perm_constants(32, 7)
 _MINHASH_PERMS = (
     "CAST([" + ",".join(str(int(x)) for x in _MINHASH_A) + "] AS HUGEINT[]) AS A, "
     "CAST([" + ",".join(str(int(x)) for x in _MINHASH_B) + "] AS HUGEINT[]) AS B"
@@ -432,7 +432,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup.py."""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_candidates(
-        docs, num_perm=32, bands=8, shingle_n=3, hash_family="md5"
+        docs, num_perm=32, bands=8, shingle_n=3
     )
 
 
@@ -480,7 +480,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands and the first-meet-band pair emission exactly."""
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_candidates(
-        docs, band_bits=15, bits=60, hash_family="md5"
+        docs, band_bits=15
     ).filter(F.col("hamming") <= 8)
 
 
@@ -764,7 +764,7 @@ def dedup_simhash_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry proves it by hash equality)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_candidates(
-        docs, band_bits=15, bits=60, hash_family="md5", collapse_exact=False
+        docs, band_bits=15, collapse_exact=False
     ).filter(F.col("hamming") <= 8)
 
 
@@ -778,7 +778,7 @@ def dedup_simhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver corpus under the one shared oracle."""
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_candidates(
-        docs, band_bits=15, bits=60, hash_family="md5", collapse_exact=True
+        docs, band_bits=15, collapse_exact=True
     ).filter(F.col("hamming") <= 8)
 
 
@@ -809,7 +809,7 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     use."""
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_components(
-        docs, band_bits=15, bits=60, hash_family="md5", max_hamming=8
+        docs, band_bits=15, max_hamming=8
     )
 
 
@@ -4193,9 +4193,9 @@ def lsh_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `deterministic_sample_docs`' hash gate)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_candidates(
-        docs, num_perm=32, bands=8, shingle_n=3, hash_family="md5"
+        docs, num_perm=32, bands=8, shingle_n=3
     )
-    base = D.shingle_base_frame(docs, shingle_n=3, hash_family="md5")
+    base = D.shingle_base_frame(docs, shingle_n=3)
     a = base.select(F.col("_id").alias("id_a"), F.col("_base").alias("bh_a"))
     b = base.select(F.col("_id").alias("id_b"), F.col("_base").alias("bh_b"))
     jac = (
@@ -4281,7 +4281,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shorter than the shingle width have no shingles and drop out
     (inner join), matching the oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    base = D.shingle_base_frame(docs, shingle_n=3, hash_family="md5")
+    base = D.shingle_base_frame(docs, shingle_n=3)
     sh = base.select(F.col("_id").alias("doc_id"), F.explode("_base").alias("s"))
     firsts = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     joined = sh.join(firsts, "s")

@@ -138,11 +138,11 @@ def incremental_minhash_dedup_new_docs(
 
     path = _index_dir("mh", sf_dir)
     I.write_index(
-        I.build_minhash_bucket_index(history, hash_family="md5"), path
+        I.build_minhash_bucket_index(history), path
     )
     idx = I.read_index(spark, path, ["bucket_reps"])
     batch_labels, _remap = I.incremental_minhash_merge(
-        batch, idx["bucket_reps"], hash_family="md5"
+        batch, idx["bucket_reps"]
     )
     return batch_labels.select("doc_id", F.col("comp").cast("long").alias("comp"))
 
@@ -231,7 +231,7 @@ def streaming_minhash_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFram
     )
     path = _index_dir("mh", sf_dir)
     I.write_index(
-        I.build_minhash_bucket_index(history, hash_family="md5"), path
+        I.build_minhash_bucket_index(history), path
     )
     return run_stream_minhash_novelty(spark, sf_dir, path)
 
@@ -273,7 +273,7 @@ def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFram
 
     path = _index_dir("mh", sf_dir)
     I.write_index(
-        I.build_minhash_bucket_index(history, hash_family="md5"), path
+        I.build_minhash_bucket_index(history), path
     )
     idx = I.read_index(spark, path, ["bucket_reps", "labels", "doc_bands"])
     retired = history.filter(
@@ -286,7 +286,7 @@ def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFram
     I.write_index({"bucket_reps": pruned["bucket_reps"]}, rpath)
     reps = I.read_index(spark, rpath, ["bucket_reps"])["bucket_reps"]
     batch_labels, _remap = I.incremental_minhash_merge(
-        batch, reps, hash_family="md5"
+        batch, reps
     )
     return batch_labels.select(
         "doc_id", F.col("comp").cast("long").alias("comp")

@@ -736,7 +736,6 @@ def run_stream_minhash_novelty(
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     hist_frac: int | None = None,
     hist_salt: str = "incrmh",
 ) -> DataFrame:
@@ -797,7 +796,6 @@ def run_stream_minhash_novelty(
             num_perm=num_perm,
             bands=bands,
             shingle_n=shingle_n,
-            hash_family=hash_family,
         )
         bband = sig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
         hits = (

@@ -45,9 +45,11 @@ def pytest_addoption(parser):
 
 
 def full_tier_enabled(config) -> bool:
-    return bool(
-        config.getoption("--full-tests", default=False)
-        or os.environ.get("SPARK_GRAFT_FULL_TESTS")
+    """``--full-tests``, or ``SPARK_GRAFT_FULL_TESTS`` set to 1/true/yes
+    (any case); every other value, ``0`` included, keeps the fast tier."""
+    env = os.environ.get("SPARK_GRAFT_FULL_TESTS", "").strip().lower()
+    return bool(config.getoption("--full-tests", default=False)) or env in (
+        "1", "true", "yes",
     )
 
 

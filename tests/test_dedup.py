@@ -8,6 +8,7 @@ with brute-force Python reimplementations of the same definitions.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import re
 
@@ -56,28 +57,22 @@ DISJOINT = (
 )
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("fam", ["xxhash64", "md5"])
-def test_minhash_identical_docs_full_agreement(spark, fam):
+def test_minhash_identical_docs_full_agreement(spark):
     df = _docs_df(spark, [BASE, BASE, DISJOINT])
     pairs = D.minhash_lsh_candidates(
-        df, num_perm=32, bands=8, shingle_n=3, hash_family=fam
+        df, num_perm=32, bands=8, shingle_n=3
     ).collect()
     got = {(r["id_a"], r["id_b"]): r["sig_agreement"] for r in pairs}
     assert got.get((0, 1)) == 1.0  # identical docs: every signature position agrees
 
 
-@_pytest.mark.parametrize("fam", ["xxhash64", "md5"])
-def test_minhash_agreement_estimates_jaccard(spark, fam):
-    """The estimator property holds for BOTH hash families — the md5
-    family changes the hash construction (60-bit base, mod-2^63 fold),
-    not the MinHash estimator guarantee."""
+def test_minhash_agreement_estimates_jaccard(spark):
+    """The estimator property holds for the md5 family's construction
+    (60-bit base, mod-2^63 fold)."""
     texts = [BASE, VARIANT, DISJOINT]
     df = _docs_df(spark, texts)
     pairs = D.minhash_lsh_candidates(
-        df, num_perm=64, bands=32, shingle_n=3, hash_family=fam
+        df, num_perm=64, bands=32, shingle_n=3
     ).collect()
     got = {(r["id_a"], r["id_b"]): r["sig_agreement"] for r in pairs}
     true_j = _jaccard(_py_shingles(BASE), _py_shingles(VARIANT))
@@ -106,14 +101,11 @@ def test_ngram_jaccard_is_exact(spark):
                 assert (a, b) in got
 
 
-@_pytest.mark.parametrize(
-    "kw", [{"band_bits": 16}, {"band_bits": 15, "bits": 60, "hash_family": "md5"}]
-)
-def test_simhash_identical_zero_hamming(spark, kw):
+def test_simhash_identical_zero_hamming(spark):
     df = _docs_df(spark, [BASE, BASE, DISJOINT])
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_candidates(df, **kw).collect()
+        for r in D.simhash_candidates(df).collect()
     }
     assert got.get((0, 1)) == 0
     if (0, 2) in got:  # if blocked at all, disjoint text is far away
@@ -185,24 +177,57 @@ def test_srp_vec_matches_expression_form(spark):
     assert expr == vec
 
 
-def test_simhash_vec_matches_expression_form(spark):
+def test_simhash_vec_matches_python_vote_rule(spark):
+    """``simhash_vec`` over md5 token hashes equals a pure-Python
+    60-bit SimHash: bit i is set iff at least half of the tokens' hashes
+    have bit i set. The empty text sets every bit."""
     from esther_apache_spark_spark.functions.text import tokenize
 
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "pack my box with five dozen liquor jugs"),
-         (3, ""),
-         (4, "a")],
-        "doc_id long, text string",
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "pack my box with five dozen liquor jugs",
+        3: "",
+        4: "a",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = dict(
+        df.select(
+            "doc_id",
+            D.simhash_vec(
+                F.transform(tokenize(F.col("text")), lambda t: D.md5_long(t))
+            ).alias("fp"),
+        ).collect()
     )
-    tokens = tokenize(F.col("text"))
-    got = df.select(
-        "doc_id",
-        D.simhash(tokens).alias("expr_fp"),
-        D.simhash_vec(F.transform(tokens, lambda t: F.xxhash64(t))).alias("vec_fp"),
-    ).collect()
-    for r in got:
-        assert r["expr_fp"] == r["vec_fp"], r
+
+    def ref(text):
+        hashes = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in _py_tokenize(text)]
+        return sum(
+            1 << i
+            for i in range(60)
+            if 2 * sum((h >> i) & 1 for h in hashes) >= len(hashes)
+        )
+
+    assert got == {i: ref(t) for i, t in texts.items()}
+    assert got[3] == 2**60 - 1
+
+
+def test_tokenize_sql_independent_of_escaped_string_literals(spark):
+    """``tokenize_sql`` tokenizes exactly like ``tokenize`` whether or
+    not the session parses SQL string literals with escapes."""
+    from esther_apache_spark_spark.functions.text import tokenize, tokenize_sql
+
+    conf = "spark.sql.parser.escapedStringLiterals"
+    df = spark.createDataFrame([("Hello, World!\tA_b",)], "text string")
+    want = df.select(tokenize(F.col("text"))).first()[0]
+    assert want == ["hello", "world", "a_b"]
+    old = spark.conf.get(conf)
+    try:
+        for setting in ("true", "false"):
+            spark.conf.set(conf, setting)
+            got = df.selectExpr(tokenize_sql("text")).first()[0]
+            assert got == want, setting
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_minhash_vec_properties(spark):
@@ -509,31 +534,28 @@ def test_substring_spans_any_scope_catches_within_doc_repeat(spark):
 def test_minhash_cross_matches_planted_contamination(spark):
     """Cross-corpus matcher: an exact copy of a probe doc in the corpus
     matches at full signature agreement; an edited near-copy matches
-    above the threshold; unrelated docs never pair. Both hash families
-    agree on the (id_a, id_b) match set."""
+    above the threshold; unrelated docs never pair."""
     from esther_apache_spark_spark.operators.dedup import minhash_cross_matches
 
     eval_text = " ".join(f"evalword{i}" for i in range(30))
     # one edited LAST word → only 1 of 28 shingles differs (Jaccard
-    # ≈ 0.93), far enough above the 0.5 threshold that both hash
-    # families' signatures land a band meet and ≥16/32 agreement
+    # ≈ 0.93), far enough above the 0.5 threshold that the signatures
+    # land a band meet and ≥16/32 agreement
     near = " ".join(f"evalword{i}" if i != 29 else "edited29" for i in range(30))
     other = " ".join(f"unrelated{i}" for i in range(30))
     corpus = spark.createDataFrame(
         [(1, eval_text), (2, near), (3, other)], "doc_id long, text string"
     )
     probes = spark.createDataFrame([(100, eval_text)], "doc_id long, text string")
-    for fam in ("xxhash64", "md5"):
-        got = {
-            r["id_a"]: (r["id_b"], r["n_agree"])
-            for r in minhash_cross_matches(
-                corpus, probes, num_perm=32, bands=8, shingle_n=3,
-                min_agree=16, hash_family=fam,
-            ).collect()
-        }
-        assert got[1] == (100, 32), fam  # identical text: all positions agree
-        assert 2 in got and got[2][1] >= 16, fam  # near-copy above threshold
-        assert 3 not in got, fam  # unrelated never pairs
+    got = {
+        r["id_a"]: (r["id_b"], r["n_agree"])
+        for r in minhash_cross_matches(
+            corpus, probes, num_perm=32, bands=8, shingle_n=3, min_agree=16
+        ).collect()
+    }
+    assert got[1] == (100, 32)  # identical text: all positions agree
+    assert 2 in got and got[2][1] >= 16  # near-copy above threshold
+    assert 3 not in got  # unrelated never pairs
 
 
 def test_minhash_cross_matches_rejects_bad_threshold(spark):

@@ -92,14 +92,14 @@ def mh_split(spark):
 
 def test_incremental_minhash_equals_full_recompute(spark, mh_split):
     h, b = mh_split
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
     batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"], hash_family="md5"
+        b, idx["bucket_reps"]
     )
     full = _full_labels(
         h.unionByName(b).select("doc_id"),
         "doc_id",
-        D.minhash_lsh_candidates(h.unionByName(b), hash_family="md5"),
+        D.minhash_lsh_candidates(h.unionByName(b)),
     )
     got_batch = _labels(batch_labels)
     assert got_batch == {k: full[k] for k in got_batch}
@@ -127,9 +127,9 @@ def test_incremental_minhash_no_false_merges(spark):
     b = spark.createDataFrame(
         [(40, TXT_C), (41, TXT_D)], "doc_id long, text string"
     )
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
     batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"], hash_family="md5"
+        b, idx["bucket_reps"]
     )
     got = _labels(batch_labels)
     assert got == {40: 10, 41: 20}
@@ -145,14 +145,14 @@ def test_incremental_minhash_on_testdata(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < int(0.8 * (1 << 32))
     h, b = docs.filter(in_hist), docs.filter(~in_hist)
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
     batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"], hash_family="md5"
+        b, idx["bucket_reps"]
     )
     full = _full_labels(
         docs.select("doc_id"),
         "doc_id",
-        D.minhash_lsh_candidates(docs, hash_family="md5"),
+        D.minhash_lsh_candidates(docs),
     )
     got_batch = _labels(batch_labels)
     assert len(got_batch) == b.count()
@@ -255,10 +255,10 @@ def test_merge_plan_reads_index_not_history(spark, sf_dir):
         docs.filter(~in_hist).write.parquet(batch_path)
         b = spark.read.parquet(batch_path)
         path = f"{root}/mhindex"
-        I.write_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+        I.write_index(I.build_minhash_bucket_index(h), path)
         idx = I.read_index(spark, path, ["bucket_reps", "labels"])
         edges = I.minhash_merge_edges(
-            b, idx["bucket_reps"], hash_family="md5", collapse_exact=False
+            b, idx["bucket_reps"], collapse_exact=False
         )
         # two lenses, because each hides one side: inputFiles() resolves
         # un-cached scans (the index probe) but not cached ones; the
@@ -272,7 +272,7 @@ def test_merge_plan_reads_index_not_history(spark, sf_dir):
         assert "documents.parquet" not in cached_plan
         # and the merge still works end-to-end off the parquet index
         batch_labels, _ = I.incremental_minhash_merge(
-            b, idx["bucket_reps"], hash_family="md5"
+            b, idx["bucket_reps"]
         )
         assert batch_labels.count() == b.count()
     finally:
@@ -298,15 +298,14 @@ def test_apply_minhash_merge_to_index_equals_fresh_build(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < int(0.8 * (1 << 32))
     h, b = docs.filter(in_hist), docs.filter(~in_hist)
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
     batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"], hash_family="md5"
+        b, idx["bucket_reps"]
     )
     updated = I.apply_minhash_merge_to_index(
         idx["bucket_reps"], idx["labels"], b, batch_labels, remap,
-        hash_family="md5",
     )
-    fresh = I.build_minhash_bucket_index(docs, hash_family="md5")
+    fresh = I.build_minhash_bucket_index(docs)
     assert _kv(updated["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
     )
@@ -320,15 +319,14 @@ def test_apply_minhash_merge_to_index_fixture_shapes(spark, mh_split):
     member (30+3), smaller-batch-id remap (10->5), all-novel batch
     self-rows — updated index == fresh build over the union."""
     h, b = mh_split
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
     batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"], hash_family="md5"
+        b, idx["bucket_reps"]
     )
     updated = I.apply_minhash_merge_to_index(
         idx["bucket_reps"], idx["labels"], b, batch_labels, remap,
-        hash_family="md5",
     )
-    fresh = I.build_minhash_bucket_index(h.unionByName(b), hash_family="md5")
+    fresh = I.build_minhash_bucket_index(h.unionByName(b))
     assert _kv(updated["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
     )
@@ -367,19 +365,19 @@ def test_two_day_merge_fold_merge_equals_fresh(spark, mh_split):
         [(60, TXT_D), (2, TXT_C), (70, "yet more genuinely novel content here")],
         "doc_id long, text string",
     )
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
-    bl1, rm1 = I.incremental_minhash_merge(b1, idx["bucket_reps"], hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
+    bl1, rm1 = I.incremental_minhash_merge(b1, idx["bucket_reps"])
     day1 = I.apply_minhash_merge_to_index(
-        idx["bucket_reps"], idx["labels"], b1, bl1, rm1, hash_family="md5"
+        idx["bucket_reps"], idx["labels"], b1, bl1, rm1
     )
     bl2, rm2 = I.incremental_minhash_merge(
-        b2, day1["bucket_reps"], hash_family="md5"
+        b2, day1["bucket_reps"]
     )
     day2 = I.apply_minhash_merge_to_index(
-        day1["bucket_reps"], day1["labels"], b2, bl2, rm2, hash_family="md5"
+        day1["bucket_reps"], day1["labels"], b2, bl2, rm2
     )
     union = h.unionByName(b1).unionByName(b2)
-    fresh = I.build_minhash_bucket_index(union, hash_family="md5")
+    fresh = I.build_minhash_bucket_index(union)
     assert _kv(day2["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
     )
@@ -389,7 +387,7 @@ def test_two_day_merge_fold_merge_equals_fresh(spark, mh_split):
     # day-2 batch labels equal the full recompute over the union
     full = _full_labels(
         union.select("doc_id"), "doc_id",
-        D.minhash_lsh_candidates(union, hash_family="md5"),
+        D.minhash_lsh_candidates(union),
     )
     got2 = _labels(bl2)
     assert got2 == {k: full[k] for k in got2}

@@ -57,7 +57,7 @@ def _retired(spark, ids, id_col="doc_id"):
 
 
 def _assert_minhash_equals_fresh(surviving, got):
-    fresh = I.build_minhash_bucket_index(surviving, hash_family="md5")
+    fresh = I.build_minhash_bucket_index(surviving)
     assert _kv(got["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
     )
@@ -80,7 +80,7 @@ def test_retire_minhash_min_reelection_and_singleton(spark):
         spark,
         [(10, TXT_A), (11, TXT_A), (12, TXT_A), (20, TXT_C), (30, TXT_D)],
     )
-    idx = I.build_minhash_bucket_index(corpus, hash_family="md5")
+    idx = I.build_minhash_bucket_index(corpus)
     got = I.retire_minhash_docs(
         idx["bucket_reps"], idx["labels"], idx["doc_bands"],
         _retired(spark, [10, 30]),
@@ -100,7 +100,7 @@ def test_retire_minhash_whole_component_and_pair_to_singleton(spark):
     corpus = _docs(
         spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)]
     )
-    idx = I.build_minhash_bucket_index(corpus, hash_family="md5")
+    idx = I.build_minhash_bucket_index(corpus)
     got = I.retire_minhash_docs(
         idx["bucket_reps"], idx["labels"], idx["doc_bands"],
         _retired(spark, [10, 11, 20]),
@@ -163,14 +163,14 @@ def test_retire_minhash_on_testdata_then_merge(spark, sf_dir):
         0.3 * (1 << 32)
     )
     retired = h.filter(retire_gate).select("doc_id")
-    idx = I.build_minhash_bucket_index(h, hash_family="md5")
+    idx = I.build_minhash_bucket_index(h)
     got = I.retire_minhash_docs(
         idx["bucket_reps"], idx["labels"], idx["doc_bands"], retired
     )
     surviving_hist = h.filter(~retire_gate)
     _assert_minhash_equals_fresh(surviving_hist, got)
     batch_labels, _ = I.incremental_minhash_merge(
-        b, got["bucket_reps"], hash_family="md5"
+        b, got["bucket_reps"]
     )
     surviving = surviving_hist.unionByName(b)
     from esther_apache_spark_spark.operators.components import (
@@ -178,7 +178,7 @@ def test_retire_minhash_on_testdata_then_merge(spark, sf_dir):
     )
 
     full = connected_components(
-        D.minhash_lsh_candidates(surviving, hash_family="md5").select(
+        D.minhash_lsh_candidates(surviving).select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
     )
@@ -210,7 +210,7 @@ def test_retire_minhash_reads_index_not_corpus(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="retpin_")
     try:
         path = f"{root}/mhindex"
-        I.write_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+        I.write_index(I.build_minhash_bucket_index(h), path)
         rpath = f"{root}/retids"
         retired.write.parquet(rpath)
         idx = I.read_index(
@@ -326,14 +326,14 @@ def test_append_fold_three_day_chain_equals_fresh(spark):
     root = tempfile.mkdtemp(prefix="appendfold_")
     try:
         path = f"{root}/mh"
-        I.write_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+        I.write_index(I.build_minhash_bucket_index(h), path)
         union = h
         for day in days:
             resolved = I.read_minhash_index_resolved(spark, path)
             bl, rm = I.incremental_minhash_merge(
-                day, resolved["bucket_reps"], hash_family="md5"
+                day, resolved["bucket_reps"]
             )
-            I.append_minhash_merge_to_index(path, day, bl, rm, hash_family="md5")
+            I.append_minhash_merge_to_index(path, day, bl, rm)
             union = union.unionByName(day)
         # the chained remap really happened: 20→2 then 2→1
         log = _kv(spark.read.parquet(f"{path}/remap_log"), "old_comp", "new_comp")
@@ -395,7 +395,7 @@ def test_append_fold_writes_are_o_batch(spark):
     root = tempfile.mkdtemp(prefix="appendob_")
     try:
         path = f"{root}/mh"
-        I.write_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+        I.write_index(I.build_minhash_bucket_index(h), path)
 
         def snapshot():
             # data files only: the append legitimately re-touches the
@@ -414,9 +414,9 @@ def test_append_fold_writes_are_o_batch(spark):
         before = snapshot()
         resolved = I.read_minhash_index_resolved(spark, path)
         bl, rm = I.incremental_minhash_merge(
-            day, resolved["bucket_reps"], hash_family="md5"
+            day, resolved["bucket_reps"]
         )
-        I.append_minhash_merge_to_index(path, day, bl, rm, hash_family="md5")
+        I.append_minhash_merge_to_index(path, day, bl, rm)
         after = snapshot()
         for p, sig in before.items():
             assert after.get(p) == sig, f"base file rewritten by fold: {p}"

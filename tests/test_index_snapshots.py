@@ -89,11 +89,10 @@ def _fold_once(spark, path, day):
     m = S.read_manifest(path)
     resolved = I.read_minhash_index_resolved(spark, path, m["version"])
     bl, rm = I.incremental_minhash_merge(
-        day, resolved["bucket_reps"], hash_family="md5"
+        day, resolved["bucket_reps"]
     )
     return I.commit_minhash_fold(
         path, day, bl, rm, expected_epoch=m.get("epoch", 0),
-        hash_family="md5",
     )
 
 
@@ -103,12 +102,12 @@ def test_snapshot_lifecycle_equals_fresh_build(spark, store_root):
     over the then-current corpus."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
-    v = I.commit_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+    v = I.commit_index(I.build_minhash_bucket_index(h), path)
     assert v == 1
 
     def check(corpus):
         got = I.read_minhash_index_resolved(spark, path)
-        fresh = I.build_minhash_bucket_index(corpus, hash_family="md5")
+        fresh = I.build_minhash_bucket_index(corpus)
         assert _labels_set(got) == _labels_set(fresh)
         assert _kv(got["bucket_reps"], "_band", "_bucket", "_rep") == _kv(
             fresh["bucket_reps"], "_band", "_bucket", "_rep"
@@ -143,7 +142,7 @@ def test_unpublished_files_are_invisible(spark, store_root):
     exposes mid-fold."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A)])
-    I.commit_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+    I.commit_index(I.build_minhash_bucket_index(h), path)
     before = _labels_set(I.read_minhash_index_resolved(spark, path))
     # land data files for a bogus label row, but never publish
     S._write_table_files(
@@ -160,7 +159,7 @@ def test_commits_never_touch_live_files_and_time_travel(spark, store_root):
     pinned BEFORE those steps still reads its original frames."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
-    I.commit_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+    I.commit_index(I.build_minhash_bucket_index(h), path)
     v1 = S.latest_version(path)
     labels_v1 = _labels_set(I.read_minhash_index_resolved(spark, path, v1))
     sigs = _data_file_sigs(path)
@@ -326,12 +325,12 @@ def test_retire_invalidates_inflight_fold_end_to_end(spark, store_root):
     commit once retire_minhash_index has landed."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
-    I.commit_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+    I.commit_index(I.build_minhash_bucket_index(h), path)
     m = S.read_manifest(path)
     resolved = I.read_minhash_index_resolved(spark, path, m["version"])
     day = _docs(spark, [(5, TXT_A)])
     bl, rm = I.incremental_minhash_merge(
-        day, resolved["bucket_reps"], hash_family="md5"
+        day, resolved["bucket_reps"]
     )
     bl = bl.localCheckpoint()
     rm = rm.localCheckpoint()
@@ -342,23 +341,20 @@ def test_retire_invalidates_inflight_fold_end_to_end(spark, store_root):
     with pytest.raises(S.StaleAppendError):
         I.commit_minhash_fold(
             path, day, bl, rm, expected_epoch=m.get("epoch", 0),
-            hash_family="md5",
         )
     # re-derived against the post-retirement view: goes through and
     # equals the fresh build over the post-retirement corpus
     m2 = S.read_manifest(path)
     resolved2 = I.read_minhash_index_resolved(spark, path, m2["version"])
     bl2, rm2 = I.incremental_minhash_merge(
-        day, resolved2["bucket_reps"], hash_family="md5"
+        day, resolved2["bucket_reps"]
     )
     I.commit_minhash_fold(
         path, day, bl2, rm2, expected_epoch=m2.get("epoch", 0),
-        hash_family="md5",
     )
     got = I.read_minhash_index_resolved(spark, path)
     fresh = I.build_minhash_bucket_index(
         h.filter(F.col("doc_id") != 10).unionByName(day),
-        hash_family="md5",
     )
     assert _labels_set(got) == _labels_set(fresh)
 
@@ -381,7 +377,7 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
         (10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C), (30, TXT_D),
     ]
     h = _docs(spark, history)
-    I.commit_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+    I.commit_index(I.build_minhash_bucket_index(h), path)
 
     batches = [[(5, TXT_A)], [(6, TXT_C), (7, TXT_D)]]
     retire_ids = [10, 20]
@@ -400,13 +396,12 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
                         spark, path, m["version"]
                     )
                     bl, rm = I.incremental_minhash_merge(
-                        day, resolved["bucket_reps"], hash_family="md5"
+                        day, resolved["bucket_reps"]
                     )
                     try:
                         I.commit_minhash_fold(
                             path, day, bl, rm,
                             expected_epoch=m.get("epoch", 0),
-                            hash_family="md5",
                         )
                         break
                     except S.StaleAppendError:
@@ -447,7 +442,7 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
     final_corpus = h.unionByName(
         _docs(spark, [r for b in batches for r in b])
     ).filter(~F.col("doc_id").isin(retire_ids))
-    fresh = I.build_minhash_bucket_index(final_corpus, hash_family="md5")
+    fresh = I.build_minhash_bucket_index(final_corpus)
     got = I.read_minhash_index_resolved(spark, path)
     assert _labels_set(got) == _labels_set(fresh)
 
@@ -480,7 +475,7 @@ def test_vacuum_keeps_horizon_and_drops_the_rest(spark, store_root):
     the old manifests themselves; the kept versions read unchanged."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
-    I.commit_index(I.build_minhash_bucket_index(h, hash_family="md5"), path)
+    I.commit_index(I.build_minhash_bucket_index(h), path)
     _fold_once(spark, path, _docs(spark, [(5, TXT_A)]))
     I.compact_index(spark, path, "minhash")  # v3: fresh files only
     want = _labels_set(I.read_minhash_index_resolved(spark, path))
@@ -650,11 +645,11 @@ def test_streaming_gate_reads_snapshot_store(spark, sf_dir, store_root):
     history = docs.filter(
         hash_bucket(F.col("doc_id"), salt="incrmh") < I.HIST_GATE_FRAC
     )
-    idx = I.build_minhash_bucket_index(history, hash_family="md5")
+    idx = I.build_minhash_bucket_index(history)
     dir_path, snap_path = f"{store_root}/dir", f"{store_root}/snap"
     I.write_index(idx, dir_path)
     I.commit_index(
-        I.build_minhash_bucket_index(history, hash_family="md5"), snap_path
+        I.build_minhash_bucket_index(history), snap_path
     )
     want = _kv(run_stream_minhash_novelty(spark, sf_dir, dir_path), "doc_id")
     got = _kv(run_stream_minhash_novelty(spark, sf_dir, snap_path), "doc_id")

@@ -60,7 +60,7 @@ def _assert_resolved_equals_fresh(spark, path, live, trace):
     corpus = spark.createDataFrame(
         sorted(live.items()), "doc_id long, text string"
     )
-    fresh = I.build_minhash_bucket_index(corpus, hash_family="md5")
+    fresh = I.build_minhash_bucket_index(corpus)
     ctx = f"trace={trace}"
     assert _kv(got["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
@@ -95,7 +95,7 @@ def test_random_lifecycle_schedule_matches_fresh_build(spark, seed):
             sorted(live.items()), "doc_id long, text string"
         )
         I.commit_index(
-            I.build_minhash_bucket_index(corpus, hash_family="md5"), path
+            I.build_minhash_bucket_index(corpus), path
         )
         trace.append(f"build({sorted(live)})")
 
@@ -115,11 +115,11 @@ def test_random_lifecycle_schedule_matches_fresh_build(spark, seed):
                     spark, path, m["version"]
                 )
                 bl, rm = I.incremental_minhash_merge(
-                    batch, resolved["bucket_reps"], hash_family="md5"
+                    batch, resolved["bucket_reps"]
                 )
                 I.commit_minhash_fold(
                     path, batch, bl, rm,
-                    expected_epoch=m.get("epoch", 0), hash_family="md5",
+                    expected_epoch=m.get("epoch", 0),
                 )
                 live.update(batch_rows)
                 trace.append(f"fold({batch_ids})")

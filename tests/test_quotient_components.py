@@ -89,7 +89,7 @@ def test_ngram_components_direct_path_matches(ngram_docs):
 
 # --- simhash ---------------------------------------------------------------
 
-SIMHASH_KW = dict(band_bits=15, bits=60, hash_family="md5")
+SIMHASH_KW = dict(band_bits=15)
 
 
 def test_simhash_quotient_equals_expanded_and_direct(ngram_docs):

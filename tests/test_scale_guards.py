@@ -119,7 +119,7 @@ def test_simhash_hot_bucket_bounded_and_connected(spark):
     df = _docs_df(spark, [BOILER] * n_dup + uniques)
     pairs = [
         (r["id_a"], r["id_b"])
-        for r in D.simhash_candidates(df, band_bits=16, max_bucket=40).collect()
+        for r in D.simhash_candidates(df, band_bits=15, max_bucket=40).collect()
     ]
     cluster_pairs = [p for p in pairs if p[0] < n_dup and p[1] < n_dup]
     assert 0 < len(cluster_pairs) < (n_dup * (n_dup - 1) // 2) / 2
@@ -716,7 +716,7 @@ def test_minhash_cross_matches_boilerplate_linear_not_quadratic(spark):
         [(i, passage) for i in range(500)], "doc_id long, text string"
     )
     evald = spark.createDataFrame([(10_000, passage)], "doc_id long, text string")
-    m = minhash_cross_matches(train, evald, min_agree=16, hash_family="xxhash64")
+    m = minhash_cross_matches(train, evald, min_agree=16)
     plan = m._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

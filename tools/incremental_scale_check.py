@@ -96,14 +96,14 @@ def main() -> None:
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
-    I.write_index(I.build_minhash_bucket_index(hist, hash_family="md5"), idx_path)
+    I.write_index(I.build_minhash_bucket_index(hist), idx_path)
     build = time.perf_counter() - t0
 
     idx = I.read_index(spark, idx_path, ["bucket_reps", "labels"])
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
-    bl, remap = I.incremental_minhash_merge(batch, idx["bucket_reps"], hash_family="md5")
+    bl, remap = I.incremental_minhash_merge(batch, idx["bucket_reps"])
     n_batch, n_remap = bl.count(), remap.count()
     merge = time.perf_counter() - t0
 
@@ -112,7 +112,7 @@ def main() -> None:
     t0 = time.perf_counter()
     _full_labels_count(
         batch.select("doc_id"), "doc_id",
-        D.minhash_lsh_candidates(docs, hash_family="md5"),
+        D.minhash_lsh_candidates(docs),
     )
     full = time.perf_counter() - t0
     out["modalities"]["minhash"] = {

@@ -88,14 +88,14 @@ def main() -> None:
 
             t0 = time.perf_counter()
             I.write_index(
-                I.build_minhash_bucket_index(history, hash_family="md5"), path
+                I.build_minhash_bucket_index(history), path
             )
             build_sec = time.perf_counter() - t0
 
             idx = I.read_index(spark, path, ["bucket_reps", "labels", "doc_bands"])
             t0 = time.perf_counter()
             bl, rm = I.incremental_minhash_merge(
-                batch, idx["bucket_reps"], hash_family="md5"
+                batch, idx["bucket_reps"]
             )
             bl = bl.localCheckpoint()  # merge materialized; folds timed alone
             rm = rm.localCheckpoint()
@@ -105,7 +105,7 @@ def main() -> None:
             I.write_index(
                 I.apply_minhash_merge_to_index(
                     idx["bucket_reps"], idx["labels"], batch, bl, rm,
-                    hash_family="md5", doc_bands=idx["doc_bands"],
+                    doc_bands=idx["doc_bands"],
                 ),
                 f"{root}/{tag}_rewritten",
             )
@@ -113,7 +113,7 @@ def main() -> None:
 
             pre_append = _du(path)
             t0 = time.perf_counter()
-            I.append_minhash_merge_to_index(path, batch, bl, rm, hash_family="md5")
+            I.append_minhash_merge_to_index(path, batch, bl, rm)
             append_sec = time.perf_counter() - t0
 
             # snapshot-commit arm: the SAME fold delta published through
@@ -127,7 +127,7 @@ def main() -> None:
             I.commit_index(idx, spath)
             pre_commit = _du(spath)
             t0 = time.perf_counter()
-            I.commit_minhash_fold(spath, batch, bl, rm, hash_family="md5")
+            I.commit_minhash_fold(spath, batch, bl, rm)
             commit_sec = time.perf_counter() - t0
             import glob as _glob
 
@@ -176,7 +176,6 @@ def main() -> None:
                 I.write_index(
                     I.build_minhash_bucket_index(
                         docs.join(retired, "doc_id", "left_anti"),
-                        hash_family="md5",
                     ),
                     f"{root}/{tag}_rebuilt",
                 )

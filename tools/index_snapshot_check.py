@@ -124,7 +124,7 @@ def snapshot_arm(spark, path: str, history, days, retired,
     ]
     t0 = time.perf_counter()
     I.commit_index(
-        I.build_minhash_bucket_index(history, hash_family="md5"), path
+        I.build_minhash_bucket_index(history), path
     )
     for th in threads:
         th.start()
@@ -134,11 +134,10 @@ def snapshot_arm(spark, path: str, history, days, retired,
         m = S.read_manifest(path)
         resolved = I.read_minhash_index_resolved(spark, path, m["version"])
         bl, rm = I.incremental_minhash_merge(
-            day, resolved["bucket_reps"], hash_family="md5"
+            day, resolved["bucket_reps"]
         )
         I.commit_minhash_fold(
             path, day, bl, rm, expected_epoch=m.get("epoch", 0),
-            hash_family="md5",
         )
         commit_secs.append(round(time.perf_counter() - t1, 3))
     t1 = time.perf_counter()
@@ -194,14 +193,14 @@ def legacy_arm(spark, path: str, history, days, readers: int = 2,
     from esther_apache_spark_spark.operators import incremental as I
 
     I.write_index(
-        I.build_minhash_bucket_index(history, hash_family="md5"), path
+        I.build_minhash_bucket_index(history), path
     )
     for day in days:
         resolved = I.read_minhash_index_resolved(spark, path)
         bl, rm = I.incremental_minhash_merge(
-            day, resolved["bucket_reps"], hash_family="md5"
+            day, resolved["bucket_reps"]
         )
-        I.append_minhash_merge_to_index(path, day, bl, rm, hash_family="md5")
+        I.append_minhash_merge_to_index(path, day, bl, rm)
     quiesced = _checksum(I.read_minhash_index_resolved(spark, path))
     lstop = threading.Event()
     ltorn: list = []
