@@ -14,16 +14,19 @@ Scale notes:
   both keyed on node id, co-partitionable.
 - A checkpoint after every round truncates the lineage; without it the
   plan doubles per iteration and the driver, not the data, becomes the
-  bottleneck. The DEFAULT is ``localCheckpoint`` (block-manager memory
-  — fast, no disk round-trip), but on local[k] the block manager IS
-  the driver heap, and the r7 sf10 checkpoint OOMed an 8 GB heap on
-  the survivor family's edge frames. ``checkpoint_dir=`` (or the
-  ``SPARK_GRAFT_CHECKPOINT_DIR`` env var — how ``bench.py
-  --sf10-cold`` wires it) switches every round to RELIABLE
-  ``checkpoint(eager=True)`` into that directory: lineage truncates
-  the same way, blocks live on disk instead of heap, and on a real
-  cluster the dir is shared storage (HDFS/S3) so executor loss is
-  also survivable mid-iteration.
+  bottleneck. The checkpoint kind follows the SESSION: with no
+  checkpoint dir it is ``localCheckpoint`` (block-manager memory —
+  fast, no disk round-trip), but on local[k] the block manager IS the
+  driver heap, and the r7 sf10 checkpoint OOMed an 8 GB heap on the
+  survivor family's edge frames. When the context has a checkpoint dir
+  (``spark.checkpoint.dir`` — on a cluster ``--conf
+  spark.checkpoint.dir=...``, locally ``get_spark`` sets it from
+  ``SPARK_GRAFT_CHECKPOINT_DIR``, which is how ``bench.py --sf10-cold``
+  wires it) every round is a RELIABLE ``checkpoint(eager=True)`` into
+  it: lineage truncates the same way, blocks live on disk instead of
+  heap, and on a real cluster the dir is shared storage (HDFS/S3) so
+  executor loss is also survivable mid-iteration. CC only reads the
+  dir; it never sets it, so concurrent calls cannot race on it.
 - The convergence check rides the round's checkpoint job as an
   ``observe`` metric (count of labels the round changed — the canonical
   Pregel-style stop condition): ONE action per round, no separate
@@ -34,33 +37,29 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+#: Cap on propagation rounds. Hooking plus double pointer jumping
+#: converges LSH dup graphs in 2-4 rounds and a 40-hop chain in 4
+#: (the last one confirming no label changed); reaching the cap with
+#: labels still changing raises rather than return a non-fixpoint.
+MAX_ROUNDS = 25
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(node, comp) for every node appearing in ``edges``; ``comp`` is
     the minimum node id of the node's connected component. Edges are
     treated as undirected; self-loops and duplicate edges are fine.
     Node ids may be any orderable type (longs, strings, ...).
 
-    ``checkpoint_dir`` (default: the ``SPARK_GRAFT_CHECKPOINT_DIR``
-    env var, else None) selects reliable disk checkpoints over
-    ``localCheckpoint`` for the per-round lineage truncation — see the
-    module docstring for when each wins. Results are identical either
-    way; only where the materialized blocks live changes."""
-    if checkpoint_dir is None:
-        checkpoint_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
-    if checkpoint_dir:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    Per-round lineage truncation is a reliable ``checkpoint`` when the
+    session's context has a checkpoint dir, else ``localCheckpoint`` —
+    see the module docstring for when each wins. Results are identical
+    either way; only where the materialized blocks live changes."""
+    if edges.sparkSession.sparkContext.getCheckpointDir():
 
         def _ckpt(df: DataFrame) -> DataFrame:
             return df.checkpoint(eager=True)
@@ -70,7 +69,7 @@ def connected_components(
         def _ckpt(df: DataFrame) -> DataFrame:
             return df.localCheckpoint()
 
-    return _cc_loop(edges, src, dst, max_iter, _ckpt)
+    return _cc_loop(edges, src, dst, _ckpt)
 
 
 def _loop_width(n_edges: int, session) -> int:
@@ -97,7 +96,7 @@ def _loop_width(n_edges: int, session) -> int:
     return max(1, min(cap, (2 * n_edges + 65535) // 65536))
 
 
-def _cc_loop(edges, src, dst, max_iter, _ckpt):
+def _cc_loop(edges, src, dst, _ckpt):
     # Materialize the (possibly expensive) edge plan ONCE — with an
     # EAGER action — before the direction-doubling union (r11). The r10
     # persist() alone was lazy: the union-distinct checkpoint was the
@@ -133,7 +132,7 @@ def _cc_loop(edges, src, dst, max_iter, _ckpt):
         .select(F.col("a").alias("node"), F.least("a", "_mb").alias("comp"))
     )
     comp_type = labels.schema["comp"].dataType
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         msgs = und.join(labels, und.a == labels.node).select(
             F.col("b").alias("node"), "comp",
             F.lit(None).cast(comp_type).alias("_old"),
@@ -223,5 +222,7 @@ def _cc_loop(edges, src, dst, max_iter, _ckpt):
         )
         labels = new_full.select("node", "comp")
         if not obs.get["chg"]:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {MAX_ROUNDS} rounds"
+    )

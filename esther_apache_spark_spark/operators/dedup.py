@@ -68,40 +68,12 @@ _active_cache_scope: ContextVar[list | None] = ContextVar(
     "_dedup_cache_scope", default=None
 )
 
-#: Session-wide override for the plan-barrier caches' storage level
-#: (VERDICT r06 #6, reference tuto_rdd_pyspark(2).ipynb cells 33-35's
-#: ``persist(StorageLevel.*)``). ``None`` keeps ``DataFrame.cache()``'s
-#: default — which for Spark SQL is already MEMORY_AND_DISK
-#: (deserialized), the right 100 TB default: a cached frame larger than
-#: executor memory spills instead of thrashing eviction. Set e.g.
-#: ``StorageLevel.DISK_ONLY`` for data-sized intermediates on
-#: memory-tight clusters, or ``MEMORY_AND_DISK_DESER``-family levels
-#: with replication for hot shared dims.
-_default_storage_level: ContextVar = ContextVar(
-    "_dedup_storage_level", default=None
-)
 
-
-@contextlib.contextmanager
-def storage_level_scope(level):
-    """Run a block with every dedup plan-barrier cache persisted at
-    ``level`` (a ``pyspark.StorageLevel``) instead of the
-    MEMORY_AND_DISK default — the DataFrame-world exposure of the
-    reference's RDD ``persist(StorageLevel)`` tutorial surface."""
-    token = _default_storage_level.set(level)
-    try:
-        yield
-    finally:
-        _default_storage_level.reset(token)
-
-
-def _cache(df: DataFrame, level=None) -> DataFrame:
-    """``df.cache()``/``df.persist(level)`` that enrolls the frame in
-    the active cache_scope. Level resolution: explicit arg, else the
-    ambient ``storage_level_scope``, else ``cache()``'s default
-    (MEMORY_AND_DISK deserialized)."""
-    level = level if level is not None else _default_storage_level.get()
-    df = df.cache() if level is None else df.persist(level)
+def _cache(df: DataFrame) -> DataFrame:
+    """``df.cache()`` (MEMORY_AND_DISK deserialized — a cached frame
+    larger than executor memory spills instead of thrashing eviction)
+    that enrolls the frame in the active cache_scope."""
+    df = df.cache()
     scope = _active_cache_scope.get()
     if scope is not None:
         scope.append(df)
@@ -136,22 +108,22 @@ def _spread_narrow_input(df: DataFrame) -> DataFrame:
     """Round-robin-spread a provably-narrow scan before a token-heavy
     pass (guide §2.5, input skew: "one huge unsplittable file ...
     repartition immediately after the read"). Parquet cannot split
-    below row-group granularity, so a small single-row-group file (the
-    shape of the driver's testdata tables) runs every scan-fused token
-    pipeline single-threaded no matter the core count.
+    below row-group granularity, so a small input made of few
+    single-row-group files (the shape of the driver's testdata tables)
+    runs every scan-fused token pipeline on fewer tasks than cores no
+    matter the core count.
 
     The gate is DRIVER-SIDE ONLY (no job, no AQE materialization):
-    Catalyst's optimized-plan size estimate plus the scan's file list.
-    Spread fires only when the input is a single sub-maxPartitionBytes
-    file — the one layout that cannot be split wider by
-    ``files.minPartitionNum`` — so the shuffle it adds is bounded by
-    one split (~128 MB) and the rule is inert at corpus scale (many
-    files / large files keep their scan layout). Round-robin
-    repartition is retry-safe (sortBeforeRepartition is on) and every
-    consumer below is keyed aggregation, so results are unaffected.
-    Measured on dedup_substring_spans at sf0.1: 2.22 -> 1.52 s warm.
-    Falls back to the input unchanged if the estimate is unavailable
-    (non-scan plans, exotic sources)."""
+    spread fires when the scan reads ``0 < len(files) <
+    defaultParallelism`` files AND Catalyst's optimized-plan size
+    estimate is under 128 MiB. The shuffle it adds is therefore
+    bounded by ~128 MB and the rule is inert at corpus scale (as many
+    files as cores, or a large estimate, keep their scan layout).
+    Round-robin repartition is retry-safe (sortBeforeRepartition is
+    on) and every consumer below is keyed aggregation, so results are
+    unaffected. Measured on dedup_substring_spans at sf0.1: 2.22 ->
+    1.52 s warm. Falls back to the input unchanged if the file list or
+    the estimate is unavailable (non-scan plans, exotic sources)."""
     try:
         sess = df.sparkSession
         cores = sess.sparkContext.defaultParallelism
@@ -645,8 +617,6 @@ def _quotient_labels(
     id_col: str,
     key_col: str,
     intra_members: DataFrame | None = None,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Member-level component labels ``(node, comp)`` computed on the
     QUOTIENT graph — identical to ``connected_components(
@@ -694,9 +664,7 @@ def _quotient_labels(
 
     im = intra_members if intra_members is not None else members
     rep_lab = connected_components(
-        rep_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
+        rep_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).withColumnRenamed("node", "_rep")
     gsz = im.groupBy(key_col).agg(F.count(F.lit(1)).alias("_gn"))
     glab = (
@@ -1078,8 +1046,6 @@ def ngram_jaccard_components(
     threshold: float = 0.5,
     max_df: int | None = 100_000,
     collapse_exact: bool | str = "auto",
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup cluster labels ``(node, comp)`` for exact n-gram Jaccard
     ≥ ``threshold`` — what the survivor/leakage-split consumers feed
@@ -1111,22 +1077,13 @@ def ngram_jaccard_components(
             collapse_exact=False,
         )
         return connected_components(
-            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-            max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir,
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
     rep_pairs, groups, members, im = _ngram_collapsed_parts(
         df, id_col, text_col, shingle_n, threshold, max_df
     )
     return _quotient_labels(
-        rep_pairs,
-        groups,
-        members,
-        id_col,
-        "_tkey",
-        intra_members=im,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
+        rep_pairs, groups, members, id_col, "_tkey", intra_members=im
     )
 
 
@@ -1418,8 +1375,6 @@ def simhash_components(
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
     max_hamming: int | None = None,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup cluster labels ``(node, comp)`` from SimHash banding —
     the fingerprint-modality sibling of ``ngram_jaccard_components`` /
@@ -1464,9 +1419,7 @@ def simhash_components(
             )
         )
         return connected_components(
-            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-            max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir,
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
     groups, members = _collapse_identical_text(df, id_col, text_col)
     rep_pairs = _gate(
@@ -1479,15 +1432,7 @@ def simhash_components(
             collapse_exact=False,
         )
     )
-    return _quotient_labels(
-        rep_pairs,
-        groups,
-        members,
-        id_col,
-        "_tkey",
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-    )
+    return _quotient_labels(rep_pairs, groups, members, id_col, "_tkey")
 
 
 def embedding_cosine_dups(
@@ -1747,8 +1692,6 @@ def embedding_cosine_components(
     dim: int | None = None,
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Semantic near-dup cluster labels ``(node, comp)`` for cosine ≥
     ``threshold`` — the embedding twin of ``ngram_jaccard_components``.
@@ -1782,9 +1725,7 @@ def embedding_cosine_components(
             collapse_exact=False,
         )
         return connected_components(
-            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-            max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir,
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
     if dim is None:
         first = df.select(F.size(vec_col).alias("d")).first()
@@ -1800,14 +1741,7 @@ def embedding_cosine_components(
     nz_keys = _nonzero_vec_keys(groups)
     mm = members.join(nz_keys, "_vkey") if threshold <= 1.0 else members.limit(0)
     return _quotient_labels(
-        rep_pairs,
-        groups,
-        members,
-        "_id",
-        "_vkey",
-        intra_members=mm,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
+        rep_pairs, groups, members, "_id", "_vkey", intra_members=mm
     )
 
 

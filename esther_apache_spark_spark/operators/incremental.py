@@ -233,7 +233,6 @@ def incremental_minhash_merge(
     shingle_n: int = 3,
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Merge an arriving batch into the persisted MinHash index.
     (The labels table itself is not consulted — ``bucket_reps`` already
@@ -264,7 +263,7 @@ def incremental_minhash_merge(
         max_bucket=max_bucket,
         collapse_exact=collapse_exact,
     )
-    merged = connected_components(edges, checkpoint_dir=checkpoint_dir)
+    merged = connected_components(edges)
     batch_ids = batch.select(F.col(id_col))
     batch_labels = batch_ids.join(
         merged, batch_ids[id_col] == merged.node, "left"
@@ -563,7 +562,6 @@ def incremental_srp_merge(
     seed: int = 42,
     dim: int | None = None,
     max_bucket: int | None = 4096,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Merge an arriving embedding batch into the persisted SRP index.
     Same contract as ``incremental_minhash_merge``, with the cosine
@@ -586,7 +584,7 @@ def incremental_srp_merge(
         dim=dim,
         max_bucket=max_bucket,
     )
-    merged = connected_components(edges, checkpoint_dir=checkpoint_dir)
+    merged = connected_components(edges)
     batch_ids = batch.select(F.col(id_col))
     batch_labels = batch_ids.join(
         merged, batch_ids[id_col] == merged.node, "left"
@@ -821,7 +819,6 @@ def retire_minhash_docs(
     doc_bands: DataFrame,
     retired: DataFrame,
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """Retire documents from a MinHash index (takedowns / TTL): returns
     the index frames exactly equal to ``build_minhash_bucket_index``
@@ -853,8 +850,7 @@ def retire_minhash_docs(
     sb = doc_bands.join(surv, doc_bands._id == surv.node, "semi")
     sub = connected_components(
         _chain_edges_within(sb.select("_id", "_band", "_bucket"), "_id",
-                            ["_band", "_bucket"]),
-        checkpoint_dir=checkpoint_dir,
+                            ["_band", "_bucket"])
     )
     new_labels = labels.join(aff, "comp", "left_anti").unionByName(sub)
     # rows to drop: every row owned by an affected component, plus the
@@ -894,7 +890,6 @@ def retire_srp_docs(
     seed: int = 42,
     dim: int | None = None,
     max_bucket: int | None = 4096,
-    checkpoint_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """SRP twin of ``retire_minhash_docs``. ``buckets``/``vectors`` are
     per-doc tables, so their retirement is a plain anti-join; labels of
@@ -930,7 +925,7 @@ def retire_srp_docs(
         dim=dim,
         max_bucket=max_bucket,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    sub = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    sub = connected_components(pairs)
     new_labels = labels.join(aff, "comp", "left_anti").unionByName(sub)
     return {
         "buckets": buckets.join(rid, buckets._id == rid._retid, "left_anti"),
@@ -1387,7 +1382,6 @@ def retire_minhash_index(
     path: str,
     retired: DataFrame,
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> int:
     """Retire documents from a snapshot-store MinHash index: read the
     resolved view at one pinned version, prune it with
@@ -1413,7 +1407,6 @@ def retire_minhash_index(
         resolved["doc_bands"],
         retired,
         id_col=id_col,
-        checkpoint_dir=checkpoint_dir,
     )
     pruned = _with_truncated_log(spark, path, version, pruned)
     return _S.commit_snapshot(
@@ -1426,7 +1419,6 @@ def retire_srp_index(
     path: str,
     retired: DataFrame,
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
     **retire_kw,
 ) -> int:
     """SRP twin of ``retire_minhash_index``."""
@@ -1440,7 +1432,6 @@ def retire_srp_index(
         resolved["labels"],
         retired,
         id_col=id_col,
-        checkpoint_dir=checkpoint_dir,
         **retire_kw,
     )
     pruned = _with_truncated_log(spark, path, version, pruned)

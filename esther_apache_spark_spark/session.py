@@ -76,8 +76,8 @@ def get_spark(
         # it only protects the medium-file regime.
         .config("spark.sql.files.minPartitionNum", str(cores))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # Reliable checkpoints (connected_components with
-        # SPARK_GRAFT_CHECKPOINT_DIR set) are deleted once their RDD is
+        # Reliable checkpoints (connected_components once the context has
+        # a spark.checkpoint.dir, see below) are deleted once their RDD is
         # GC'd — without this the checkpoint dir grows by the full edge
         # frame every CC round until session exit.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
@@ -97,6 +97,12 @@ def get_spark(
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cores}]")
+    # The one place SPARK_GRAFT_CHECKPOINT_DIR is read: it becomes the
+    # context's checkpoint dir at startup, which connected_components
+    # reads (never sets). On a cluster pass --conf spark.checkpoint.dir.
+    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckpt_dir:
+        builder = builder.config("spark.checkpoint.dir", ckpt_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))
     return builder.getOrCreate()

@@ -3,7 +3,17 @@ cycles, cliques, self-loops, and convergence within diameter rounds."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+from esther_apache_spark_spark.operators import components
 from esther_apache_spark_spark.operators.components import connected_components
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cc(spark, pairs):
@@ -22,7 +32,7 @@ def test_two_components_and_cycle(spark):
 
 
 def test_long_chain_converges(spark):
-    n = 40  # diameter 40 > default dense-graph expectation; still < max_iter rounds
+    n = 40  # diameter 40 > default dense-graph expectation; still < MAX_ROUNDS
     got = _cc(spark, [(i, i + 1) for i in range(n)])
     assert set(got.values()) == {0}
     assert len(got) == n + 1
@@ -76,34 +86,95 @@ def test_matches_union_find_oracle(spark, pairs):
     assert _cc(spark, pairs) == _union_find_components(pairs)
 
 
-def test_reliable_checkpoint_dir_identical_labels(spark, tmp_path, monkeypatch):
-    """r8 (VERDICT r7 #5): ``checkpoint_dir=`` swaps the per-round
-    localCheckpoint (driver-heap blocks in local mode — the sf10 OOM)
-    for reliable disk checkpoints. Labels must be identical, the dir
-    must actually receive checkpoint data, and the env-var route
-    (``SPARK_GRAFT_CHECKPOINT_DIR`` — how bench --sf10-cold wires it)
-    must behave the same."""
-    import os
+_PAIRS = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 20)]
 
-    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 20)]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
+_RELIABLE_SCRIPT = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, {repo!r})
+    from esther_apache_spark_spark.operators.components import (
+        connected_components,
+    )
+    from esther_apache_spark_spark.session import get_spark
+
+    spark = get_spark("cc-reliable-checkpoint", shuffle_partitions=2)
+    print("CKDIR", spark.sparkContext.getCheckpointDir())
+    edges = spark.createDataFrame({pairs!r}, "src long, dst long")
+    for r in connected_components(edges).collect():
+        print("LABEL", r["node"], r["comp"])
+    spark.stop()
+    """
+)
+
+
+def test_reliable_checkpoint_dir_identical_labels(spark, tmp_path):
+    """r8 (VERDICT r7 #5): a session checkpoint dir swaps the per-round
+    localCheckpoint (driver-heap blocks in local mode — the sf10 OOM)
+    for reliable disk checkpoints. ``SPARK_GRAFT_CHECKPOINT_DIR`` (how
+    bench --sf10-cold wires it) reaches CC only through ``get_spark``,
+    so the reliable run is a FRESH interpreter with the variable set —
+    the shared session keeps no checkpoint dir and every other CC test
+    stays on localCheckpoint. Labels must be identical and the dir must
+    actually receive checkpoint data."""
+    assert spark.sparkContext.getCheckpointDir() is None
+    edges = spark.createDataFrame(_PAIRS, "src long, dst long")
     base = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
 
     ckdir = str(tmp_path / "ck")
-    via_param = {
-        r["node"]: r["comp"]
-        for r in connected_components(edges, checkpoint_dir=ckdir).collect()
-    }
-    assert via_param == base
-    assert any(os.scandir(ckdir)), "no checkpoint data written to the dir"
-
-    envdir = str(tmp_path / "ck_env")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", envdir)
+    env = dict(os.environ, SPARK_GRAFT_CHECKPOINT_DIR=ckdir, SPARK_DRIVER_MEMORY="1g")
+    env.pop("SPARK_MASTER", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_SCRIPT.format(repo=_REPO, pairs=_PAIRS)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    assert any(ln.startswith("CKDIR ") and ckdir in ln for ln in lines), lines
     via_env = {
-        r["node"]: r["comp"] for r in connected_components(edges).collect()
+        int(n): int(c)
+        for _, n, c in (ln.split() for ln in lines if ln.startswith("LABEL "))
     }
     assert via_env == base
-    assert any(os.scandir(envdir))
+    assert any(os.scandir(ckdir)), "no checkpoint data written to the dir"
+
+
+def test_round_cap_raises_instead_of_returning_unconverged(spark, monkeypatch):
+    """Reaching MAX_ROUNDS with labels still changing is an error: the
+    loop used to fall out of its range and return a non-fixpoint. A
+    40-hop chain needs more than one round."""
+    monkeypatch.setattr(components, "MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _cc(spark, [(i, i + 1) for i in range(40)])
+
+
+def test_components_leave_checkpoint_dir_and_confs_untouched(spark):
+    """Library operators never mutate context-global state: an operator
+    that reaches CC reads the session's checkpoint dir but never sets
+    it, and changes no conf."""
+    from esther_apache_spark_spark.operators.dedup import ngram_jaccard_components
+
+    ckdir = spark.sparkContext.getCheckpointDir()
+    confs = dict(spark.sparkContext.getConf().getAll())
+    sql_confs = spark.conf.getAll
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog today"),
+            (3, "an entirely different sentence about spark"),
+        ],
+        "doc_id long, text string",
+    )
+    labels = {
+        r["node"]: r["comp"]
+        for r in ngram_jaccard_components(docs, threshold=0.5).collect()
+    }
+    assert labels[1] == labels[2] == 1
+    assert spark.sparkContext.getCheckpointDir() == ckdir
+    assert dict(spark.sparkContext.getConf().getAll()) == confs
+    assert spark.conf.getAll == sql_confs
 
 
 def test_session_shuffle_width_untouched_by_cc(spark):

@@ -581,26 +581,16 @@ def test_minhash_cross_matches_empty_probe_side(spark):
 
 
 def test_persist_storage_level_exposed(spark):
-    """VERDICT r06 #6: persist(StorageLevel) variants are exposed on the
-    plan-barrier cache helper — explicit arg, ambient scope, and the
-    MEMORY_AND_DISK default (cache()'s own level, the right one when a
-    cached frame outgrows executor memory) — and the chosen level is
-    visible on the frame's storageLevel."""
-    from pyspark import StorageLevel
-
+    """VERDICT r06 #6: the plan-barrier cache helper persists at
+    MEMORY_AND_DISK (cache()'s own level, the right one when a cached
+    frame outgrows executor memory), visible on the frame's
+    storageLevel. Explicit levels live on FreshKart's
+    ``dim_storage_level`` (next test)."""
     from esther_apache_spark_spark.operators import dedup as D
 
-    base = spark.range(10)
-    c = D._cache(base.selectExpr("id * 2 AS x"))
+    c = D._cache(spark.range(10).selectExpr("id * 2 AS x"))
     assert c.storageLevel.useMemory and c.storageLevel.useDisk
     c.unpersist()
-    with D.storage_level_scope(StorageLevel.DISK_ONLY):
-        d = D._cache(base.selectExpr("id * 3 AS y"))
-    assert d.storageLevel.useDisk and not d.storageLevel.useMemory
-    d.unpersist()
-    e = D._cache(base.selectExpr("id * 5 AS z"), level=StorageLevel.MEMORY_ONLY)
-    assert e.storageLevel.useMemory and not e.storageLevel.useDisk
-    e.unpersist()
 
 
 def test_freshkart_dim_storage_level_param(spark):
