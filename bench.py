@@ -66,10 +66,9 @@ def calibration_probe(spark, probe_dir: str, runs: int = 5,
                       first_touch: bool = True) -> float:
     """Median of ``runs`` calibration-probe executions at ``probe_dir``
     — THE load-factor protocol CALIBRATION_REF is pinned against.
-    Tools (index_lifecycle_check) import this instead of re-rolling the
-    loop, so a future re-pin of the protocol (run count, warmup
-    discipline) cannot silently desynchronize their load factors from
-    bench's."""
+    A tool that needs a load factor imports this rather than re-rolling
+    the loop, so a future re-pin of the protocol (run count, warmup
+    discipline) cannot silently desynchronize it from bench's."""
     import statistics as _statistics
     import time as _time
 

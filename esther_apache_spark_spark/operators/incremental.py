@@ -11,11 +11,14 @@ re-bucketing a byte of history content, and its pairs are merged into
 the existing component labels WITHOUT a global connected-components
 recompute — new labels are minima over the AFFECTED components only.
 
-Index formats (plain parquet directories; see ``write_index``):
+Index formats — each index is the tables of ONE snapshot store
+(``sources/index_store.py``), published by ``commit_index`` and read
+through ``index_store.read_snapshot`` or the resolved readers below:
 
 - MinHash (``build_minhash_bucket_index``): ``bucket_reps`` — one row
   per occupied ``(_band, _bucket)`` per distinct component representative
-  in it — plus ``labels`` (node, comp) for history docs with any pair.
+  in it — plus ``labels`` (node, comp) for history docs with any pair
+  and the per-doc ``doc_bands`` retirement re-pairs from.
   Under the LSH-banding pair criterion, every pair of docs sharing a
   bucket IS a candidate pair, so after history CC each bucket's members
   collapse to (almost always exactly one) component representative —
@@ -28,6 +31,8 @@ Index formats (plain parquet directories; see ``write_index``):
   re-reads the history embedding source), plus ``labels``. Cosine gates
   each candidate, so buckets cannot collapse to reps here; the rerank
   is one cross-GEMM per (table, bucket, shard) cogroup.
+- Both: a ``remap_log`` table (old_comp, new_comp) once a fold has been
+  appended (``commit_*_fold``), resolved at read time.
 
 Merge (``incremental_minhash_merge`` / ``incremental_srp_merge``):
 the arriving batch is banded/bucketed (one narrow pass over BATCH
@@ -59,6 +64,7 @@ from pyspark.sql import functions as F
 
 from esther_apache_spark_spark.operators import dedup as D
 from esther_apache_spark_spark.operators.components import connected_components
+from esther_apache_spark_spark.sources import index_store as S
 
 # Single definition of the simulated history/batch split used by every
 # incremental catalog entry, its DuckDB oracle, AND the streaming
@@ -67,44 +73,6 @@ from esther_apache_spark_spark.operators.components import connected_components
 # streaming entry from its oracle). hash_bucket(id, salt) < HIST_GATE_FRAC
 # selects the 80% "history" slice; >= is the arriving batch.
 HIST_GATE_FRAC = int(0.8 * (1 << 32))
-
-
-# ---------------------------------------------------------------------------
-# Index persistence (plain parquet; one subdirectory per table).
-# ---------------------------------------------------------------------------
-
-
-def write_index(index: dict[str, DataFrame], path: str) -> None:
-    """Persist an index (dict of named DataFrames) under ``path``, one
-    parquet directory per table, overwrite semantics — the nightly
-    job's output contract. At 100 TB sort ``bucket_reps``/``buckets``
-    by their join key at write time (``sortWithinPartitions``) so the
-    probe join's index side scans clustered row groups."""
-    for name, df in index.items():
-        df.write.mode("overwrite").parquet(f"{path}/{name}")
-
-
-def read_index(
-    spark: SparkSession, path: str, names: list[str]
-) -> dict[str, DataFrame]:
-    """Re-open a persisted index: {name: DataFrame} for each table."""
-    return {n: spark.read.parquet(f"{path}/{n}") for n in names}
-
-
-def read_index_tables(
-    spark: SparkSession, path: str, names: list[str]
-) -> dict[str, DataFrame]:
-    """Snapshot-aware RAW table read: on a snapshot store
-    (``sources/index_store.py``) all ``names`` come from ONE pinned
-    manifest version — a concurrent fold/compaction cannot hand a
-    reader table A from before it and table B from after; on a plain
-    directory index this is ``read_index``. The accessor the
-    per-trigger streaming novelty gates use."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    if _S.has_snapshots(path):
-        return _S.read_snapshot(spark, path, names)
-    return read_index(spark, path, names)
 
 
 # ---------------------------------------------------------------------------
@@ -121,7 +89,6 @@ def build_minhash_bucket_index(
     shingle_n: int = 3,
     max_bucket: int | None = 4096,
     collapse_exact: bool | str = "auto",
-    include_doc_bands: bool = True,
 ) -> dict[str, DataFrame]:
     """The nightly index build: history's component ``labels`` (CC over
     ``minhash_lsh_candidates`` pairs — min-member-id labels) and the
@@ -129,9 +96,9 @@ def build_minhash_bucket_index(
     distinct component rep occupying it). History content is read ONCE
     here and never again by the merge.
 
-    ``include_doc_bands`` (default on) also emits the PER-DOC band keys
-    ``doc_bands (_id, _band, _bucket)`` — the inverse mapping document
-    RETIREMENT needs (``retire_minhash_docs``): ``bucket_reps`` merges
+    It also emits the PER-DOC band keys ``doc_bands (_id, _band,
+    _bucket)`` — the inverse mapping document RETIREMENT needs
+    (``retire_minhash_docs``): ``bucket_reps`` merges
     each bucket's members into component reps, so without the per-doc
     rows a takedown could neither re-elect a component's minimum nor
     detect a bridge-doc split without re-reading (possibly already
@@ -169,10 +136,7 @@ def build_minhash_bucket_index(
         )
         .distinct()
     )
-    out = {"bucket_reps": bucket_reps, "labels": labels}
-    if include_doc_bands:
-        out["doc_bands"] = banded
-    return out
+    return {"bucket_reps": bucket_reps, "labels": labels, "doc_bands": banded}
 
 
 def minhash_merge_edges(
@@ -608,154 +572,8 @@ def incremental_srp_merge(
 
 
 # ---------------------------------------------------------------------------
-# Index maintenance: fold a merge back into the persisted index.
-# ---------------------------------------------------------------------------
-
-
-def _with_rep_self_rows(labels: DataFrame) -> DataFrame:
-    """Close a labels frame under representative self-rows: every comp
-    value referenced by a member must itself carry (comp, comp) — the
-    shape ``connected_components`` emits (the min node of a component
-    labels itself). The update paths need this for reps that newly
-    GAINED members: a previously-unlabeled history singleton joined by
-    a larger-id batch doc, or the min id of an all-novel batch clone
-    group — neither appears as a member row or in the remap."""
-    comps = labels.select(F.col("comp").alias("node")).distinct()
-    self_rows = comps.join(labels, "node", "left_anti").select(
-        "node", F.col("node").alias("comp")
-    )
-    return labels.unionByName(self_rows)
-
-
-def apply_minhash_merge_to_index(
-    bucket_reps: DataFrame,
-    labels: DataFrame,
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    doc_bands: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """Fold a day's merge back into the MinHash index — the step that
-    makes the NIGHTLY job itself incremental: with this, the index is
-    never rebuilt from the corpus; it absorbs each batch's bands and
-    the merge's label moves, and ``tests/test_incremental_dedup.py``
-    pins that the result is byte-identical to ``build_minhash_
-    bucket_index`` over the unioned corpus.
-
-    - ``labels``: remap applied to existing rows (old_comp → new_comp,
-      which also inserts the previously-singleton reps the remap
-      carries), plus the batch's non-self labels. Self-labeled batch
-      docs (novel singletons) stay out — matching the fresh build,
-      where CC labels only nodes with edges.
-    - ``bucket_reps``: existing reps pushed through the remap, plus the
-      batch's band keys with each doc's final label, dropping
-      duplicates. History content is never touched — the new band rows
-      come from the BATCH text (one narrow pass, the same frame the
-      merge banded)."""
-    rm = remap.select("old_comp", "new_comp")
-    new_labels = (
-        labels.join(rm, labels.comp == rm.old_comp, "left")
-        .select("node", F.coalesce("new_comp", "comp").alias("comp"))
-        .unionByName(
-            # singleton history reps that gained a component: the remap
-            # row IS their label row (old_comp = the node itself)
-            rm.join(labels, rm.old_comp == labels.node, "left_anti")
-            .select(F.col("old_comp").alias("node"), F.col("new_comp").alias("comp"))
-        )
-        .unionByName(
-            batch_labels.filter(F.col("comp") != F.col(id_col)).select(
-                F.col(id_col).alias("node"), "comp"
-            )
-        )
-    )
-    new_labels = _with_rep_self_rows(new_labels)
-    bsig = D.minhash_band_frame(
-        batch,
-        id_col=id_col,
-        text_col=text_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-    )
-    bband = bsig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
-    bl = batch_labels.select(F.col(id_col).alias("_id"), F.col("comp").alias("_rep"))
-    new_reps = (
-        bucket_reps.join(rm, bucket_reps._rep == rm.old_comp, "left")
-        .select("_band", "_bucket", F.coalesce("new_comp", "_rep").alias("_rep"))
-        .unionByName(bband.join(bl, "_id").select("_band", "_bucket", "_rep"))
-        .distinct()
-    )
-    out = {"bucket_reps": new_reps, "labels": new_labels}
-    if doc_bands is not None:
-        # per-doc rows are label-free: the fold is a plain append
-        out["doc_bands"] = doc_bands.unionByName(bband)
-    return out
-
-
-def apply_srp_merge_to_index(
-    buckets: DataFrame,
-    vectors: DataFrame,
-    labels: DataFrame,
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-) -> dict[str, DataFrame]:
-    """SRP twin of ``apply_minhash_merge_to_index``: labels absorb the
-    remap + batch labels; ``buckets``/``vectors`` are per-doc rows, so
-    the update is a plain append of the batch's projections (one
-    GEMM pass over BATCH vectors — history vectors untouched)."""
-    from esther_apache_spark_spark.operators.similarity import (
-        srp_table_buckets_vec,
-    )
-
-    if dim is None:
-        first = batch.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty batch; pass dim explicitly")
-        dim = first["d"]
-    rm = remap.select("old_comp", "new_comp")
-    new_labels = (
-        labels.join(rm, labels.comp == rm.old_comp, "left")
-        .select("node", F.coalesce("new_comp", "comp").alias("comp"))
-        .unionByName(
-            rm.join(labels, rm.old_comp == labels.node, "left_anti")
-            .select(F.col("old_comp").alias("node"), F.col("new_comp").alias("comp"))
-        )
-        .unionByName(
-            batch_labels.filter(F.col("comp") != F.col(id_col)).select(
-                F.col(id_col).alias("node"), "comp"
-            )
-        )
-    )
-    new_labels = _with_rep_self_rows(new_labels)
-    bproj = batch.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        srp_table_buckets_vec(
-            F.col(vec_col), dim, n_planes, n_tables, seed
-        ).alias("_all"),
-    )
-    new_buckets = buckets.unionByName(
-        bproj.select("_id", F.posexplode("_all").alias("_table", "_bucket"))
-    )
-    new_vectors = vectors.unionByName(bproj.select("_id", "_v"))
-    return {"buckets": new_buckets, "vectors": new_vectors, "labels": new_labels}
-
-
-# ---------------------------------------------------------------------------
 # Index lifecycle (VERDICT r9 #2): document retirement (tombstones) and
-# sub-linear folds (append + remap log + compaction).
+# sub-linear folds (append-commit + remap log + compaction).
 #
 # The r9 index could only GROW: every fold rewrote the ENTIRE labels /
 # bucket_reps tables (at 100 TB the nightly job re-writes the whole
@@ -778,20 +596,19 @@ def apply_srp_merge_to_index(
 # ``doc_bands``; SRP re-ranks from the index's ``vectors`` copy).
 # Result is pinned equal to a fresh build over the surviving corpus.
 #
-# SUB-LINEAR FOLDS (``append_*_merge_to_index`` + ``remap_log`` +
-# ``compact_index``): the rewrite folds (``apply_*_merge_to_index``)
-# stay as the compaction-time semantics; the daily path instead
-# APPENDS (new parquet files only — O(batch) rows written): the
-# batch's labels/bands/vectors plus the merge's remap appended to a
-# ``remap_log`` table. Readers resolve labels through the log's
-# transitive closure (``resolve_remap_log`` — CC over the log's
-# (old, new) edges; exact because merge labels only ever DECREASE to
-# the new component minimum, so the closure's min IS the final label;
-# retirement, which can RAISE labels, is a compaction-class operation
-# and runs on the resolved view). ``compact_index`` materializes the
-# resolved view and truncates the log — the weekly job. The fold-vs-
-# rewrite cost split is measured by tools/index_lifecycle_check.py
-# (BASELINE.md row).
+# SUB-LINEAR FOLDS (``commit_*_fold`` + ``remap_log`` +
+# ``compact_index``): the daily fold APPENDS to the index store (new
+# parquet files only — O(batch) rows written, no base table
+# rewritten): the batch's labels/bands/vectors plus the merge's remap
+# appended to a ``remap_log`` table, in one commit. Readers resolve
+# labels through the log's transitive closure (``_read_resolvable`` —
+# CC over the log's (old, new) edges; exact because merge labels only
+# ever DECREASE to the new component minimum, so the closure's min IS
+# the final label; retirement, which can RAISE labels, is a
+# compaction-class operation and runs on the resolved view).
+# ``compact_index`` materializes the resolved view and truncates the
+# log — the weekly job. Fold and retirement costs are recorded in
+# BASELINE.md (r10).
 # ---------------------------------------------------------------------------
 
 
@@ -935,59 +752,8 @@ def retire_srp_docs(
 
 
 # ---------------------------------------------------------------------------
-# Sub-linear folds: append + remap log + compaction.
+# Sub-linear folds: append-commit + remap log + compaction.
 # ---------------------------------------------------------------------------
-
-
-def append_index(index: dict[str, DataFrame], path: str) -> None:
-    """Append rows to an index's tables (new parquet files only — no
-    existing file is rewritten). The daily-fold write primitive."""
-    for name, df in index.items():
-        df.write.mode("append").parquet(f"{path}/{name}")
-
-
-def append_minhash_merge_to_index(
-    path: str,
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> None:
-    """The SUB-LINEAR nightly fold (VERDICT r9 #2b): where
-    ``apply_minhash_merge_to_index`` rebuilds the full labels /
-    bucket_reps frames (the nightly job rewrites the ENTIRE index
-    daily — linear in corpus age), this appends O(batch) rows and the
-    merge's remap to a ``remap_log``; readers resolve stale labels
-    through the log's closure (``read_minhash_index_resolved``), and
-    ``compact_index`` materializes + truncates weekly.
-
-    Appended: batch band keys under their final labels (bucket_reps),
-    the per-doc band rows (doc_bands), the batch's non-self labels
-    PLUS the remap rows as label rows — (old_comp → new_comp) is
-    exactly the label row a previously-singleton rep gains, and for
-    already-labeled reps it duplicates what log resolution computes
-    (the resolved read's distinct folds it) — and the remap itself
-    (remap_log). Correctness precondition, pinned by test: merges must
-    run against the RESOLVED view, so each remap's old_comp is a
-    CURRENT label and the log stays a forest of strictly-decreasing
-    chains whose closure-min is the final label."""
-    append_index(
-        _minhash_fold_delta(
-            batch,
-            batch_labels,
-            remap,
-            id_col=id_col,
-            text_col=text_col,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-        ),
-        path,
-    )
 
 
 def _minhash_fold_delta(
@@ -1000,9 +766,17 @@ def _minhash_fold_delta(
     bands: int = 8,
     shingle_n: int = 3,
 ) -> dict[str, DataFrame]:
-    """The per-table row delta ONE MinHash fold contributes — shared by
-    the plain-directory append fold above and the snapshot commit fold
-    (``commit_minhash_fold``)."""
+    """The O(batch) per-table row delta ONE MinHash fold appends
+    (``commit_minhash_fold``): batch band keys under their final labels
+    (bucket_reps), the per-doc band rows (doc_bands), the batch's
+    non-self labels PLUS the remap rows as label rows — (old_comp →
+    new_comp) is exactly the label row a previously-singleton rep
+    gains, and for already-labeled reps it duplicates what log
+    resolution computes (the resolved read's distinct folds it) — and
+    the remap itself (remap_log). Correctness precondition, pinned by
+    test: merges must run against the RESOLVED view, so each remap's
+    old_comp is a CURRENT label and the log stays a forest of
+    strictly-decreasing chains whose closure-min is the final label."""
     bsig = D.minhash_band_frame(
         batch,
         id_col=id_col,
@@ -1033,38 +807,6 @@ def _minhash_fold_delta(
     }
 
 
-def append_srp_merge_to_index(
-    path: str,
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-) -> None:
-    """SRP twin of ``append_minhash_merge_to_index``: ``buckets`` /
-    ``vectors`` are per-doc tables, so their deltas are plain appends
-    of the batch's projections; labels and the remap follow the same
-    log discipline as the minhash fold."""
-    append_index(
-        _srp_fold_delta(
-            batch,
-            batch_labels,
-            remap,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            seed=seed,
-            dim=dim,
-        ),
-        path,
-    )
-
-
 def _srp_fold_delta(
     batch: DataFrame,
     batch_labels: DataFrame,
@@ -1076,8 +818,10 @@ def _srp_fold_delta(
     seed: int = 42,
     dim: int | None = None,
 ) -> dict[str, DataFrame]:
-    """The per-table row delta ONE SRP fold contributes — shared by the
-    plain-directory append fold above and ``commit_srp_fold``."""
+    """SRP twin of ``_minhash_fold_delta`` (``commit_srp_fold``):
+    ``buckets`` / ``vectors`` are per-doc tables, so their deltas are
+    plain appends of the batch's projections; labels and the remap
+    follow the same log discipline as the minhash fold."""
     from esther_apache_spark_spark.operators.similarity import (
         srp_table_buckets_vec,
     )
@@ -1112,43 +856,45 @@ def _srp_fold_delta(
     }
 
 
-def resolve_remap_log(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame | None:
-    """Transitive closure of the appended remap log as a resolution map
+def _read_resolvable(
+    spark: SparkSession, path: str, version: int | None
+) -> tuple[dict[str, DataFrame], DataFrame | None]:
+    """Every table of ONE pinned snapshot (latest by default), with the
+    remap log replaced by its transitive closure as a resolution map
     ``(node=any logged comp value, comp=its final label)`` — CC over
-    the log's (old, new) edges. Exact because merge-remaps only ever
-    LOWER a label to the new component minimum: the log is a forest of
-    decreasing chains/trees whose connected minimum IS the final label
-    (retirement can raise labels, which is why it is compaction-class
-    and never enters the log). The log is O(components touched per
-    fold) — tiny next to the index — so this closure is cheap and its
-    application to the base tables is a broadcast-size join.
-
-    On a snapshot store (``sources/index_store.py``) the log is read
-    from the pinned manifest ``version`` so it is consistent with the
-    base tables read at the same version."""
-    import os as _os
-
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    if _S.has_snapshots(path):
-        m = _S.read_manifest(path, version)
-        if "remap_log" not in m["tables"]:
-            return None
-        log = _S.read_snapshot(spark, path, ["remap_log"], m["version"])[
-            "remap_log"
-        ]
-    else:
-        log_dir = f"{path}/remap_log"
-        if not _os.path.isdir(log_dir):
-            return None
-        log = spark.read.parquet(log_dir)
-    return connected_components(
+    the log's (old, new) edges; ``None`` when the snapshot has no log.
+    Exact because merge-remaps only ever LOWER a label to the new
+    component minimum: the log is a forest of decreasing chains/trees
+    whose connected minimum IS the final label (retirement can raise
+    labels, which is why it is compaction-class and never enters the
+    log). The log is O(components touched per fold) — tiny next to the
+    index — so this closure is cheap and its application to the base
+    tables is a broadcast-size join. Reading the log at the same
+    version as the base tables is what keeps the view untorn."""
+    raw = S.read_snapshot(spark, path, version=version)
+    log = raw.pop("remap_log", None)
+    if log is None:
+        return raw, None
+    return raw, connected_components(
         log.select(
             F.col("old_comp").alias("src"), F.col("new_comp").alias("dst")
         )
     )
+
+
+def _with_rep_self_rows(labels: DataFrame) -> DataFrame:
+    """Close a labels frame under representative self-rows: every comp
+    value referenced by a member must itself carry (comp, comp) — the
+    shape ``connected_components`` emits (the min node of a component
+    labels itself). The resolved reads need this for reps that newly
+    GAINED members: a previously-unlabeled history singleton joined by
+    a larger-id batch doc, or the min id of an all-novel batch clone
+    group — neither appears as a member row or in the remap."""
+    comps = labels.select(F.col("comp").alias("node")).distinct()
+    self_rows = comps.join(labels, "node", "left_anti").select(
+        "node", F.col("node").alias("comp")
+    )
+    return labels.unionByName(self_rows)
 
 
 def _resolve_col(
@@ -1170,44 +916,22 @@ def _resolve_col(
 def read_minhash_index_resolved(
     spark: SparkSession, path: str, version: int | None = None
 ) -> dict[str, DataFrame]:
-    """Open an append-mode MinHash index as the resolved view the
-    rewrite fold would have produced: labels and bucket reps pushed
-    through the remap-log closure, duplicates folded, label frame
-    closed under rep self-rows. Equal (pinned) to
-    ``apply_minhash_merge_to_index`` run fold-by-fold, and therefore
-    to a fresh build over the accumulated corpus.
-
-    On a snapshot store, ALL tables (including the remap log) are read
-    from one pinned manifest version (latest by default), so concurrent
-    folds/compactions cannot tear the view; ``version`` time-travels."""
-    import os as _os
-
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    if _S.has_snapshots(path):
-        m = _S.read_manifest(path, version)
-        version = m["version"]
-        names = [
-            n
-            for n in ("bucket_reps", "labels", "doc_bands")
-            if n in m["tables"]
-        ]
-        raw = _S.read_snapshot(spark, path, names, version)
-        res = resolve_remap_log(spark, path, version)
-    else:
-        names = ["bucket_reps", "labels"]
-        if _os.path.isdir(f"{path}/doc_bands"):
-            names.append("doc_bands")
-        raw = read_index(spark, path, names)
-        res = resolve_remap_log(spark, path)
+    """Open a MinHash index store as its resolved view: labels and
+    bucket reps pushed through the remap-log closure, duplicates
+    folded, label frame closed under rep self-rows — equal (pinned) to
+    a fresh build over the accumulated corpus. ALL tables (including
+    the remap log) are read from one pinned manifest version (latest
+    by default), so concurrent folds/compactions cannot tear the view;
+    ``version`` time-travels."""
+    raw, res = _read_resolvable(spark, path, version)
     labels = _with_rep_self_rows(
         _resolve_col(raw["labels"], "comp", res).distinct()
     )
-    reps = _resolve_col(raw["bucket_reps"], "_rep", res).distinct()
-    out = {"bucket_reps": reps, "labels": labels}
-    if "doc_bands" in raw:
-        out["doc_bands"] = raw["doc_bands"]
-    return out
+    return {
+        "bucket_reps": _resolve_col(raw["bucket_reps"], "_rep", res).distinct(),
+        "labels": labels,
+        "doc_bands": raw["doc_bands"],
+    }
 
 
 def read_srp_index_resolved(
@@ -1215,18 +939,7 @@ def read_srp_index_resolved(
 ) -> dict[str, DataFrame]:
     """SRP twin of ``read_minhash_index_resolved`` (buckets/vectors are
     per-doc appends and pass through raw)."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    if _S.has_snapshots(path):
-        m = _S.read_manifest(path, version)
-        version = m["version"]
-        raw = _S.read_snapshot(
-            spark, path, ["buckets", "vectors", "labels"], version
-        )
-        res = resolve_remap_log(spark, path, version)
-    else:
-        raw = read_index(spark, path, ["buckets", "vectors", "labels"])
-        res = resolve_remap_log(spark, path)
+    raw, res = _read_resolvable(spark, path, version)
     labels = _with_rep_self_rows(
         _resolve_col(raw["labels"], "comp", res).distinct()
     )
@@ -1240,58 +953,37 @@ def read_srp_index_resolved(
 def compact_index(spark: SparkSession, path: str, kind: str) -> None:
     """The weekly compaction: materialize the resolved view into fresh
     base tables and truncate the remap log, bounding resolved-read cost
-    between compactions. ``kind`` is ``"minhash"`` or ``"srp"``.
-
-    Plain-directory store: the resolved frames are written to a sibling
-    scratch dir FIRST (the write is the action that reads the old
-    files), then swapped in — single-writer only; a concurrent reader
-    can catch the swap window. Snapshot store: the resolved view is
-    published as one replace-commit — concurrent readers keep whatever
-    version they pinned, the log truncates to an empty table in the
-    same commit, and old files survive until ``vacuum_snapshots``."""
-    import os as _os
-    import shutil as _shutil
-
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    snap = _S.has_snapshots(path)
-    version = _S.latest_version(path) if snap else None
+    between compactions. ``kind`` is ``"minhash"`` or ``"srp"``. The
+    resolved view is published as one replace-commit — concurrent
+    readers keep whatever version they pinned, the log truncates to an
+    empty table in the same commit, and old files survive until
+    ``vacuum_snapshots``."""
+    version = S.latest_version(path)
     if kind == "minhash":
         resolved = read_minhash_index_resolved(spark, path, version)
     elif kind == "srp":
         resolved = read_srp_index_resolved(spark, path, version)
     else:
         raise ValueError(f"unknown index kind: {kind!r}")
-    if snap:
-        resolved = _with_truncated_log(spark, path, version, resolved)
-        # expected_base: the resolved frames were computed at `version`;
-        # a commit landing in between must fail the publish
-        # (ConcurrentReplaceError) rather than be silently erased.
-        # bump_epoch=False: compaction preserves the logical view, so a
-        # concurrent fold's delta stays valid and may re-merge.
-        _S.commit_snapshot(
-            path, resolved, mode="replace", expected_base=version,
-            bump_epoch=False,
-        )
-        return
-    tmp = f"{path}.compacting"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    write_index(resolved, tmp)
-    for name in resolved:
-        _shutil.rmtree(f"{path}/{name}", ignore_errors=True)
-        _os.rename(f"{tmp}/{name}", f"{path}/{name}")
-    _shutil.rmtree(f"{path}/remap_log", ignore_errors=True)
-    _shutil.rmtree(tmp, ignore_errors=True)
+    # expected_base: the resolved frames were computed at `version`;
+    # a commit landing in between must fail the publish
+    # (ConcurrentReplaceError) rather than be silently erased.
+    # bump_epoch=False: compaction preserves the logical view, so a
+    # concurrent fold's delta stays valid and may re-merge.
+    S.commit_snapshot(
+        path,
+        _with_truncated_log(spark, path, version, resolved),
+        mode="replace",
+        expected_base=version,
+        bump_epoch=False,
+    )
 
 
 # ---------------------------------------------------------------------------
-# Snapshot-isolated index commits (sources/index_store.py): the shared-
-# index deployment, where the nightly fold WRITES while streaming
-# novelty gates and ad-hoc merges READ the same path. Directory
-# append/overwrite tears under that concurrency; these wrappers publish
-# every lifecycle step as an atomic manifest commit instead. The frames
-# produced are identical to the directory API's (pinned by
-# tests/test_index_snapshots.py) — only the storage protocol differs.
+# Lifecycle commits: every step the nightly fold, weekly compaction and
+# takedown retirement take is published as one atomic manifest commit
+# of the snapshot store (sources/index_store.py), so streaming novelty
+# gates and ad-hoc merges can READ the index while those jobs WRITE it.
 # ---------------------------------------------------------------------------
 
 
@@ -1302,12 +994,10 @@ def _with_truncated_log(
     snapshot at ``version`` carries one: retirement and compaction both
     publish fully-resolved labels, so any surviving log rows would
     re-lower them wrongly at read."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    m = _S.read_manifest(path, version)
+    m = S.read_manifest(path, version)
     if "remap_log" not in m["tables"]:
         return frames
-    log = _S.read_snapshot(spark, path, ["remap_log"], version)["remap_log"]
+    log = S.read_snapshot(spark, path, ["remap_log"], version)["remap_log"]
     return {**frames, "remap_log": log.limit(0)}
 
 
@@ -1320,14 +1010,8 @@ def commit_index(
     latest version (a commit racing in between raises
     ``ConcurrentReplaceError`` — rebuilds derive from the corpus, so
     the caller decides whether the race matters and re-publishes)."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    expected = (
-        _S.latest_version(path) if mode == "replace" else None
-    )
-    return _S.commit_snapshot(
-        path, index, mode=mode, expected_base=expected
-    )
+    expected = S.latest_version(path) if mode == "replace" else None
+    return S.commit_snapshot(path, index, mode=mode, expected_base=expected)
 
 
 def commit_minhash_fold(
@@ -1338,18 +1022,19 @@ def commit_minhash_fold(
     expected_epoch: int | None = None,
     **kw,
 ) -> int:
-    """Snapshot twin of ``append_minhash_merge_to_index``: the same
-    O(batch) fold delta, published as ONE append-commit — a reader
-    never sees the fold's ``bucket_reps`` without its ``remap_log``.
+    """The SUB-LINEAR nightly fold (VERDICT r9 #2b): the O(batch)
+    ``_minhash_fold_delta`` published as ONE append-commit — no
+    existing file is rewritten, and a reader never sees the fold's
+    ``bucket_reps`` without its ``remap_log``. Readers resolve stale
+    labels through the log's closure (``read_minhash_index_resolved``);
+    ``compact_index`` materializes and truncates weekly.
 
     Pass ``expected_epoch`` (the manifest ``epoch`` captured when the
     resolved view the merge ran against was read): a retirement landing
     between derivation and commit then raises ``StaleAppendError``
     instead of silently re-merging labels that may reference retired
     documents."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    return _S.commit_snapshot(
+    return S.commit_snapshot(
         path,
         _minhash_fold_delta(batch, batch_labels, remap, **kw),
         mode="append",
@@ -1365,11 +1050,9 @@ def commit_srp_fold(
     expected_epoch: int | None = None,
     **kw,
 ) -> int:
-    """Snapshot twin of ``append_srp_merge_to_index``; see
-    ``commit_minhash_fold`` for the ``expected_epoch`` contract."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    return _S.commit_snapshot(
+    """SRP twin of ``commit_minhash_fold``, with the same
+    ``expected_epoch`` contract."""
+    return S.commit_snapshot(
         path,
         _srp_fold_delta(batch, batch_labels, remap, **kw),
         mode="append",
@@ -1383,24 +1066,15 @@ def retire_minhash_index(
     retired: DataFrame,
     id_col: str = "doc_id",
 ) -> int:
-    """Retire documents from a snapshot-store MinHash index: read the
-    resolved view at one pinned version, prune it with
-    ``retire_minhash_docs``, and publish the pruned index as a
-    replace-commit. Retirement re-elects labels (it can RAISE them), so
-    the remap log — whose closure assumes labels only ever decrease —
-    is truncated in the same commit; the pruned tables it publishes are
-    already fully resolved."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    version = _S.latest_version(path)
+    """Retire documents from a MinHash index store: read the resolved
+    view at one pinned version, prune it with ``retire_minhash_docs``,
+    and publish the pruned index as a replace-commit. Retirement
+    re-elects labels (it can RAISE them), so the remap log — whose
+    closure assumes labels only ever decrease — is truncated in the
+    same commit; the pruned tables it publishes are already fully
+    resolved."""
+    version = S.latest_version(path)
     resolved = read_minhash_index_resolved(spark, path, version)
-    if "doc_bands" not in resolved:
-        raise ValueError(
-            "retirement needs the per-doc band table: this index was "
-            "built without doc_bands (build_minhash_bucket_index("
-            "include_doc_bands=False)) — rebuild with the default "
-            "include_doc_bands=True to enable takedowns"
-        )
     pruned = retire_minhash_docs(
         resolved["bucket_reps"],
         resolved["labels"],
@@ -1409,7 +1083,7 @@ def retire_minhash_index(
         id_col=id_col,
     )
     pruned = _with_truncated_log(spark, path, version, pruned)
-    return _S.commit_snapshot(
+    return S.commit_snapshot(
         path, pruned, mode="replace", expected_base=version
     )
 
@@ -1422,9 +1096,7 @@ def retire_srp_index(
     **retire_kw,
 ) -> int:
     """SRP twin of ``retire_minhash_index``."""
-    from esther_apache_spark_spark.sources import index_store as _S
-
-    version = _S.latest_version(path)
+    version = S.latest_version(path)
     resolved = read_srp_index_resolved(spark, path, version)
     pruned = retire_srp_docs(
         resolved["buckets"],
@@ -1435,6 +1107,6 @@ def retire_srp_index(
         **retire_kw,
     )
     pruned = _with_truncated_log(spark, path, version, pruned)
-    return _S.commit_snapshot(
+    return S.commit_snapshot(
         path, pruned, mode="replace", expected_base=version
     )

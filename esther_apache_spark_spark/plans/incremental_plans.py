@@ -9,18 +9,17 @@ connected-components recompute (see ``operators/incremental.py``).
 
 Each entry simulates both halves of the production shape in one call —
 the nightly index build over the hash-gated 80% "history" slice
-(written to parquet, the plan barrier that makes phase 2's lineage
-index-fed), then the merge of the 20% "batch" — and returns the batch's
-final labels. The oracle replays the FULL-corpus recompute in SQL
-(signatures/buckets, pairing, recursive-CTE components) restricted to
-batch docs: the incremental merge's correctness claim IS that its
+(committed to a per-call snapshot store, the plan barrier that makes
+phase 2's lineage index-fed), then the merge of the 20% "batch" — and
+returns the batch's final labels. The oracle replays the FULL-corpus
+recompute in SQL (signatures/buckets, pairing, recursive-CTE
+components) restricted to batch docs: the incremental merge's correctness claim IS that its
 labels equal the full recompute's (min-of-mins over merged components),
 so the oracle never needs to model the index at all.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 
@@ -35,6 +34,7 @@ from esther_apache_spark_spark.plans.extensions import (
     minhash_pairs_cte_body,
 )
 from esther_apache_spark_spark.schemas import EMBEDDING_DIM, load_table
+from esther_apache_spark_spark.sources.index_store import read_snapshot
 
 # Shared with the streaming novelty gates (ADVICE r9): one definition.
 _HIST_FRAC = I.HIST_GATE_FRAC
@@ -77,20 +77,20 @@ def _retire_gate_sql(id_expr: str) -> str:
     )
 
 
-def _index_dir(kind: str, sf_dir: str) -> str:
-    """Per-(kind, sf_dir, PID) scratch path for the simulated nightly
-    index. Keyed by PID (ADVICE r9): every catalog invocation rewrites
-    the index with overwrite semantics, so two concurrent driver/bench
-    processes sharing one stable path could overlap a delete-then-
-    rewrite with the other's read. Within a process the path is stable
-    (entries sharing a kind reuse it); the whole per-process root is
-    removed at interpreter exit."""
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+def _index_dir(kind: str) -> str:
+    """A fresh snapshot-store path for ONE catalog call's simulated
+    nightly index. Every call publishes into its own store, so calls
+    running at once — two driver processes, or two threads sharing a
+    session — never commit to the same store (a second replace-commit
+    on a shared path would raise ``ConcurrentReplaceError``). The
+    stores live under one per-process root, removed at interpreter
+    exit (keyed by PID so one process's exit never reaps another's)."""
     root = os.path.join(
         tempfile.gettempdir(), "spark_graft_incr", f"pid{os.getpid()}"
     )
+    os.makedirs(root, exist_ok=True)
     _reap_at_exit(root)
-    return os.path.join(root, f"{kind}_{h}")
+    return tempfile.mkdtemp(prefix=f"{kind}_", dir=root)
 
 
 _REAP_REGISTERED: set[str] = set()
@@ -122,9 +122,9 @@ def incremental_minhash_dedup_new_docs(
 ) -> DataFrame:
     """Incremental MinHash near-dedup against a persisted band index:
     the hash-gated 80% history slice is indexed once (bucket→component
-    reps + labels, written to parquet — history text leaves the plan
-    there), then the arriving 20% batch is banded, probe-joined against
-    the index, self-joined for batch pairs, and merged into the
+    reps + labels, committed to a snapshot store — history text leaves
+    the plan there), then the arriving 20% batch is banded, probe-joined
+    against the index, self-joined for batch pairs, and merged into the
     existing labels by ONE connected-components run over batch ids +
     touched component reps. Returns (doc_id, comp) for every batch doc
     — comp identical to a full-corpus recompute's label (the oracle
@@ -136,14 +136,10 @@ def incremental_minhash_dedup_new_docs(
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < _HIST_FRAC
     history, batch = docs.filter(in_hist), docs.filter(~in_hist)
 
-    path = _index_dir("mh", sf_dir)
-    I.write_index(
-        I.build_minhash_bucket_index(history), path
-    )
-    idx = I.read_index(spark, path, ["bucket_reps"])
-    batch_labels, _remap = I.incremental_minhash_merge(
-        batch, idx["bucket_reps"]
-    )
+    path = _index_dir("mh")
+    I.commit_index(I.build_minhash_bucket_index(history), path)
+    reps = read_snapshot(spark, path, ["bucket_reps"])["bucket_reps"]
+    batch_labels, _remap = I.incremental_minhash_merge(batch, reps)
     return batch_labels.select("doc_id", F.col("comp").cast("long").alias("comp"))
 
 
@@ -175,11 +171,9 @@ def incremental_semantic_dedup_new_docs(
     in_hist = hash_bucket(F.col("vec_id"), salt="incrsem") < _HIST_FRAC
     history, batch = emb.filter(in_hist), emb.filter(~in_hist)
 
-    path = _index_dir("srp", sf_dir)
-    I.write_index(
-        I.build_srp_vector_index(history, dim=EMBEDDING_DIM), path
-    )
-    idx = I.read_index(spark, path, ["buckets", "vectors", "labels"])
+    path = _index_dir("srp")
+    I.commit_index(I.build_srp_vector_index(history, dim=EMBEDDING_DIM), path)
+    idx = read_snapshot(spark, path, ["buckets", "vectors", "labels"])
     batch_labels, _remap = I.incremental_srp_merge(
         batch,
         idx["buckets"],
@@ -229,10 +223,8 @@ def streaming_minhash_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFram
     history = docs.filter(
         hash_bucket(F.col("doc_id"), salt="incrmh") < _HIST_FRAC
     )
-    path = _index_dir("mh", sf_dir)
-    I.write_index(
-        I.build_minhash_bucket_index(history), path
-    )
+    path = _index_dir("mh")
+    I.commit_index(I.build_minhash_bucket_index(history), path)
     return run_stream_minhash_novelty(spark, sf_dir, path)
 
 
@@ -255,12 +247,12 @@ def streaming_minhash_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFram
 def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index lifecycle end-to-end (VERDICT r9 #2a): the nightly MinHash
     index is built over history, a takedown slice (30% of history by an
-    independent hash gate) is RETIRED from the persisted index —
-    ``retire_minhash_docs`` re-elects component minima, realizes
+    independent hash gate) is RETIRED from the index store —
+    ``retire_minhash_index`` re-elects component minima, realizes
     bridge-splits and drops orphaned bucket rows from the index's own
-    per-doc ``doc_bands``, never re-reading corpus content — and the
-    arriving batch then merges against the pruned index. Returns
-    (doc_id, comp) for batch docs; the oracle replays the fresh build
+    per-doc ``doc_bands``, never re-reading corpus content, and commits
+    the pruned index — and the arriving batch then merges against it.
+    Returns (doc_id, comp) for batch docs; the oracle replays the fresh build
     over the SURVIVING corpus (documents minus the retired history
     slice) restricted to batch docs, so a single leaked bucket row or
     stale label in the pruned index would shift a component minimum and
@@ -271,23 +263,14 @@ def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFram
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < _HIST_FRAC
     history, batch = docs.filter(in_hist), docs.filter(~in_hist)
 
-    path = _index_dir("mh", sf_dir)
-    I.write_index(
-        I.build_minhash_bucket_index(history), path
-    )
-    idx = I.read_index(spark, path, ["bucket_reps", "labels", "doc_bands"])
+    path = _index_dir("mh")
+    I.commit_index(I.build_minhash_bucket_index(history), path)
     retired = history.filter(
         hash_bucket(F.col("doc_id"), salt="retire") < _RETIRE_FRAC
     ).select("doc_id")
-    pruned = I.retire_minhash_docs(
-        idx["bucket_reps"], idx["labels"], idx["doc_bands"], retired
-    )
-    rpath = _index_dir("mhret", sf_dir)
-    I.write_index({"bucket_reps": pruned["bucket_reps"]}, rpath)
-    reps = I.read_index(spark, rpath, ["bucket_reps"])["bucket_reps"]
-    batch_labels, _remap = I.incremental_minhash_merge(
-        batch, reps
-    )
+    I.retire_minhash_index(spark, path, retired)
+    reps = read_snapshot(spark, path, ["bucket_reps"])["bucket_reps"]
+    batch_labels, _remap = I.incremental_minhash_merge(batch, reps)
     return batch_labels.select(
         "doc_id", F.col("comp").cast("long").alias("comp")
     )
@@ -332,8 +315,6 @@ def streaming_srp_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     history = emb.filter(
         hash_bucket(F.col("vec_id"), salt="incrsem") < _HIST_FRAC
     )
-    path = _index_dir("srp", sf_dir)
-    I.write_index(
-        I.build_srp_vector_index(history, dim=EMBEDDING_DIM), path
-    )
+    path = _index_dir("srp")
+    I.commit_index(I.build_srp_vector_index(history, dim=EMBEDDING_DIM), path)
     return run_stream_srp_novelty(spark, sf_dir, path, dim=EMBEDDING_DIM)

@@ -7,8 +7,10 @@ re-open it every trigger, and ad-hoc merges probe it. Plain directory
 reads over ``append``/``overwrite`` writes tear under that concurrency:
 a reader that lists ``bucket_reps`` after a fold's files landed but
 ``remap_log`` before its append finishes resolves labels against a
-half-applied fold, and ``compact_index``'s rmtree+rename swap has a
-window where a table directory simply does not exist.
+half-applied fold, and an rmtree+rename compaction swap has a window
+where a table directory simply does not exist (BASELINE.md r10: 8 of
+12 concurrent reads torn). This store is therefore the ONLY way an
+index is written and read.
 
 This module is the minimal fix, the commit idea behind Delta Lake /
 Apache Iceberg (public designs) reduced to what a shared index needs:
@@ -192,7 +194,11 @@ def commit_snapshot(
     """
     if mode not in ("append", "replace"):
         raise ValueError(f"unknown commit mode: {mode!r}")
-    if mode == "replace" and expected_base is None and has_snapshots(path):
+    if (
+        mode == "replace"
+        and expected_base is None
+        and latest_version(path) is not None
+    ):
         raise ValueError(
             "replace on a non-empty store requires expected_base (the "
             "version the replacement frames were computed from) — "
@@ -270,12 +276,6 @@ def read_snapshot(
             schema = StructType.fromJson(json.loads(t["schema"]))
             out[n] = spark.createDataFrame([], schema)
     return out
-
-
-def has_snapshots(path: str) -> bool:
-    """True when ``path`` is a snapshot store (vs a plain-directory
-    index) — the switch the snapshot-aware readers key on."""
-    return latest_version(path) is not None
 
 
 def vacuum_snapshots(

@@ -742,8 +742,10 @@ def run_stream_minhash_novelty(
     """Streaming NEAR-dup novelty gate against the persisted MinHash
     band index of ``operators/incremental.py`` — the banded sibling of
     ``run_stream_bloom_novelty`` (exact ids), sharing ONE index format
-    with the batch ingest path (VERDICT r8 #6): the nightly job writes
-    ``bucket_reps``; both the batch merge and this stream probe it.
+    with the batch ingest path (VERDICT r8 #6): the nightly job commits
+    ``bucket_reps`` to the index store at ``index_path``
+    (``sources/index_store.py``); both the batch merge and this stream
+    probe it.
 
     Per micro-batch (foreachBatch — the banding needs a batch context:
     signature frames cache, and the probe is an ordinary equi-join):
@@ -781,14 +783,14 @@ def run_stream_minhash_novelty(
     )
 
     def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from esther_apache_spark_spark.operators.incremental import (
-            read_index_tables,
+        from esther_apache_spark_spark.sources.index_store import (
+            read_snapshot,
         )
 
-        # snapshot-aware: on a snapshot-store index this pins one
-        # manifest version per trigger, so a nightly fold committing
-        # mid-stream is picked up atomically at the NEXT trigger
-        reps = read_index_tables(spark, index_path, ["bucket_reps"])[
+        # pins one manifest version per trigger, so a nightly fold
+        # committing mid-stream is picked up atomically at the NEXT
+        # trigger
+        reps = read_snapshot(spark, index_path, ["bucket_reps"])[
             "bucket_reps"
         ]
         sig = D.minhash_band_frame(
@@ -863,6 +865,7 @@ def run_stream_srp_novelty(
     from esther_apache_spark_spark.operators import incremental as I
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import TESTDATA
+    from esther_apache_spark_spark.sources.index_store import read_snapshot
 
     if hist_frac is None:
         hist_frac = I.HIST_GATE_FRAC
@@ -883,11 +886,10 @@ def run_stream_srp_novelty(
         # empty batch gates to an empty novel set, so skip it
         if batch_df.isEmpty():
             return
-        # snapshot-aware AND version-consistent: buckets and vectors
-        # come from one pinned manifest on a snapshot-store index — the
-        # cosine rerank must never join a newer buckets table against
-        # an older vectors table
-        idx = I.read_index_tables(spark, index_path, ["buckets", "vectors"])
+        # version-consistent: buckets and vectors come from one pinned
+        # manifest — the cosine rerank must never join a newer buckets
+        # table against an older vectors table
+        idx = read_snapshot(spark, index_path, ["buckets", "vectors"])
         buckets, vectors = idx["buckets"], idx["vectors"]
         with D.cache_scope():
             hits = (

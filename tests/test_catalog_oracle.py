@@ -75,6 +75,44 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
 
 
+@pytest.mark.slow
+def test_incremental_entries_on_two_threads_in_one_session(spark, duck, sf_dir):
+    """Two incremental entries run at once on one session: each call
+    commits its index into a store of its own, so neither call's
+    replace-commit races the other's (a shared store path would raise
+    ConcurrentReplaceError), and both results stay oracle-exact."""
+    import threading
+
+    from esther_apache_spark_spark.plans import incremental_plans
+
+    # the race itself is timing-dependent; the per-call store is not
+    assert incremental_plans._index_dir("mh") != incremental_plans._index_dir("mh")
+    names = ["incremental_minhash_dedup_new_docs", "incremental_dedup_after_retire"]
+    got: dict = {}
+    errors: list = []
+    start = threading.Barrier(len(names))
+
+    def run(name: str) -> None:
+        try:
+            start.wait()
+            got[name] = _canon(plans.QUERIES[name].fn(spark, sf_dir).toPandas())
+        except Exception as e:  # noqa: BLE001
+            errors.append(f"{name}: {e!r}")
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in names]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=900)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for name in names:
+        want = _canon(duck.execute(plans.QUERIES[name].oracle).df())
+        pd.testing.assert_frame_equal(
+            got[name], want, check_dtype=False, check_exact=True
+        )
+
+
 @pytest.mark.parametrize("name", _tiered(ROWS_ONLY_QUERIES))
 def test_rows_only_queries_run(name, spark, sf_dir):
     spec = plans.QUERIES[name]

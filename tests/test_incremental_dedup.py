@@ -13,6 +13,10 @@
    history source enters no scan. Pinned via ``inputFiles()`` plus the
    withCachedData plan string (each lens covers what the other hides).
 
+3. FOLD EQUALITY — a merge folded back into the index store
+   (``commit_*_fold``) resolves (``read_*_index_resolved``) to the
+   fresh build over the unioned corpus, day after day.
+
 Also covers the adversarial merge shapes: a batch doc BRIDGING two
 history components (labels must fuse to the global min), a batch id
 SMALLER than its history component's label (remap must rewrite
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 from esther_apache_spark_spark.operators import dedup as D
 from esther_apache_spark_spark.operators import incremental as I
 from esther_apache_spark_spark.operators.components import connected_components
+from esther_apache_spark_spark.sources import index_store as S
 
 # slow tier (VERDICT r10 #2): excluded from the default fast tier;
 # run with --full-tests / SPARK_GRAFT_FULL_TESTS=1 (the round-close gate)
@@ -255,8 +260,8 @@ def test_merge_plan_reads_index_not_history(spark, sf_dir):
         docs.filter(~in_hist).write.parquet(batch_path)
         b = spark.read.parquet(batch_path)
         path = f"{root}/mhindex"
-        I.write_index(I.build_minhash_bucket_index(h), path)
-        idx = I.read_index(spark, path, ["bucket_reps", "labels"])
+        I.commit_index(I.build_minhash_bucket_index(h), path)
+        idx = S.read_snapshot(spark, path, ["bucket_reps", "labels"])
         edges = I.minhash_merge_edges(
             b, idx["bucket_reps"], collapse_exact=False
         )
@@ -287,65 +292,79 @@ def _kv(df, *cols):
             for r in df.collect()}
 
 
-def test_apply_minhash_merge_to_index_equals_fresh_build(spark, sf_dir):
-    """After the merge is folded back (apply_minhash_merge_to_index),
-    the index must equal build_minhash_bucket_index over the UNIONED
-    corpus row-for-row — labels AND bucket reps — so the nightly job
-    never needs a from-scratch rebuild."""
+def _fold_minhash(spark, path, batch):
+    """One nightly fold against the store: merge the batch into the
+    resolved view pinned at the latest manifest, commit the fold with
+    that manifest's epoch, and return the batch labels."""
+    m = S.read_manifest(path)
+    idx = I.read_minhash_index_resolved(spark, path, m["version"])
+    batch_labels, remap = I.incremental_minhash_merge(
+        batch, idx["bucket_reps"]
+    )
+    I.commit_minhash_fold(
+        path, batch, batch_labels, remap, expected_epoch=m["epoch"]
+    )
+    return batch_labels
+
+
+def _assert_minhash_index_equal(got, fresh):
+    assert _kv(got["labels"], "node", "comp") == _kv(
+        fresh["labels"], "node", "comp"
+    )
+    assert _kv(got["bucket_reps"], "_band", "_bucket", "_rep") == _kv(
+        fresh["bucket_reps"], "_band", "_bucket", "_rep"
+    )
+
+
+def test_minhash_fold_equals_fresh_build(spark, sf_dir, tmp_path):
+    """After the merge is folded back (commit_minhash_fold), the
+    resolved index must equal build_minhash_bucket_index over the
+    UNIONED corpus row-for-row — labels AND bucket reps — so the
+    nightly job never needs a from-scratch rebuild."""
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < int(0.8 * (1 << 32))
     h, b = docs.filter(in_hist), docs.filter(~in_hist)
-    idx = I.build_minhash_bucket_index(h)
-    batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"]
-    )
-    updated = I.apply_minhash_merge_to_index(
-        idx["bucket_reps"], idx["labels"], b, batch_labels, remap,
-    )
-    fresh = I.build_minhash_bucket_index(docs)
-    assert _kv(updated["labels"], "node", "comp") == _kv(
-        fresh["labels"], "node", "comp"
-    )
-    assert _kv(updated["bucket_reps"], "_band", "_bucket", "_rep") == _kv(
-        fresh["bucket_reps"], "_band", "_bucket", "_rep"
+    path = str(tmp_path / "mh")
+    I.commit_index(I.build_minhash_bucket_index(h), path)
+    _fold_minhash(spark, path, b)
+    _assert_minhash_index_equal(
+        I.read_minhash_index_resolved(spark, path),
+        I.build_minhash_bucket_index(docs),
     )
 
 
-def test_apply_minhash_merge_to_index_fixture_shapes(spark, mh_split):
+def test_minhash_fold_fixture_shapes(spark, mh_split, tmp_path):
     """The adversarial shapes on the tiny fixture: singleton-gains-
     member (30+3), smaller-batch-id remap (10->5), all-novel batch
-    self-rows — updated index == fresh build over the union."""
+    self-rows — resolved index == fresh build over the union."""
     h, b = mh_split
-    idx = I.build_minhash_bucket_index(h)
-    batch_labels, remap = I.incremental_minhash_merge(
-        b, idx["bucket_reps"]
-    )
-    updated = I.apply_minhash_merge_to_index(
-        idx["bucket_reps"], idx["labels"], b, batch_labels, remap,
-    )
-    fresh = I.build_minhash_bucket_index(h.unionByName(b))
-    assert _kv(updated["labels"], "node", "comp") == _kv(
-        fresh["labels"], "node", "comp"
-    )
-    assert _kv(updated["bucket_reps"], "_band", "_bucket", "_rep") == _kv(
-        fresh["bucket_reps"], "_band", "_bucket", "_rep"
+    path = str(tmp_path / "mh")
+    I.commit_index(I.build_minhash_bucket_index(h), path)
+    _fold_minhash(spark, path, b)
+    _assert_minhash_index_equal(
+        I.read_minhash_index_resolved(spark, path),
+        I.build_minhash_bucket_index(h.unionByName(b)),
     )
 
 
-def test_apply_srp_merge_to_index_equals_fresh_build(spark, vec_split):
+def test_srp_fold_equals_fresh_build(spark, vec_split, tmp_path):
     h, b = vec_split
     kw = dict(threshold=0.4, n_planes=4, n_tables=12, dim=4)
-    idx = I.build_srp_vector_index(h, **kw)
+    path = str(tmp_path / "srp")
+    I.commit_index(I.build_srp_vector_index(h, **kw), path)
+    m = S.read_manifest(path)
+    idx = I.read_srp_index_resolved(spark, path, m["version"])
     batch_labels, remap = I.incremental_srp_merge(
         b, idx["buckets"], idx["vectors"], idx["labels"], **kw
     )
-    updated = I.apply_srp_merge_to_index(
-        idx["buckets"], idx["vectors"], idx["labels"], b, batch_labels,
-        remap, n_planes=4, n_tables=12, dim=4,
+    I.commit_srp_fold(
+        path, b, batch_labels, remap, expected_epoch=m["epoch"],
+        n_planes=4, n_tables=12, dim=4,
     )
+    updated = I.read_srp_index_resolved(spark, path)
     fresh = I.build_srp_vector_index(h.unionByName(b), **kw)
     assert _kv(updated["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
@@ -356,7 +375,7 @@ def test_apply_srp_merge_to_index_equals_fresh_build(spark, vec_split):
     assert updated["vectors"].count() == fresh["vectors"].count()
 
 
-def test_two_day_merge_fold_merge_equals_fresh(spark, mh_split):
+def test_two_day_merge_fold_merge_equals_fresh(spark, mh_split, tmp_path):
     """Induction pinned concretely: day-1 merge folded into the index,
     then a day-2 batch merged against the UPDATED index — labels and
     index equal a from-scratch build over all three slices."""
@@ -365,24 +384,14 @@ def test_two_day_merge_fold_merge_equals_fresh(spark, mh_split):
         [(60, TXT_D), (2, TXT_C), (70, "yet more genuinely novel content here")],
         "doc_id long, text string",
     )
-    idx = I.build_minhash_bucket_index(h)
-    bl1, rm1 = I.incremental_minhash_merge(b1, idx["bucket_reps"])
-    day1 = I.apply_minhash_merge_to_index(
-        idx["bucket_reps"], idx["labels"], b1, bl1, rm1
-    )
-    bl2, rm2 = I.incremental_minhash_merge(
-        b2, day1["bucket_reps"]
-    )
-    day2 = I.apply_minhash_merge_to_index(
-        day1["bucket_reps"], day1["labels"], b2, bl2, rm2
-    )
+    path = str(tmp_path / "mh")
+    I.commit_index(I.build_minhash_bucket_index(h), path)
+    _fold_minhash(spark, path, b1)
+    bl2 = _fold_minhash(spark, path, b2)
     union = h.unionByName(b1).unionByName(b2)
-    fresh = I.build_minhash_bucket_index(union)
-    assert _kv(day2["labels"], "node", "comp") == _kv(
-        fresh["labels"], "node", "comp"
-    )
-    assert _kv(day2["bucket_reps"], "_band", "_bucket", "_rep") == _kv(
-        fresh["bucket_reps"], "_band", "_bucket", "_rep"
+    _assert_minhash_index_equal(
+        I.read_minhash_index_resolved(spark, path),
+        I.build_minhash_bucket_index(union),
     )
     # day-2 batch labels equal the full recompute over the union
     full = _full_labels(

@@ -2,13 +2,14 @@
 
 The shared-index deployment runs the nightly fold / weekly compaction /
 takedown retirement as WRITERS while streaming novelty gates and ad-hoc
-merges READ the same path; plain directory reads tear under that. The
-store's claims, each pinned here:
+merges READ the same path; plain directory reads tear under that, so
+the store is the only way an index is written and read. The store's
+claims, each pinned here:
 
 1. EQUIVALENCE — every lifecycle step run through snapshot commits
-   (build → fold → fold → retire → compact) yields the SAME resolved
-   frames as the plain-directory API, which are themselves pinned equal
-   to fresh builds (tests/test_index_lifecycle.py).
+   (build → fold → fold → retire → compact) yields resolved frames
+   equal to a fresh build over the then-current corpus (the frame-level
+   operators are pinned the same way in tests/test_index_lifecycle.py).
 2. ATOMICITY — data files written but not yet published are invisible;
    a reader resolves only complete manifests (publication is a single
    create-if-absent link of an fsynced temp file).
@@ -138,8 +139,8 @@ def test_snapshot_lifecycle_equals_fresh_build(spark, store_root):
 
 def test_unpublished_files_are_invisible(spark, store_root):
     """Claim 2: rows written without a manifest publication do not
-    reach readers — the exact torn state the directory protocol
-    exposes mid-fold."""
+    reach readers — the torn state a plain-directory append exposes
+    mid-fold."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A)])
     I.commit_index(I.build_minhash_bucket_index(h), path)
@@ -460,7 +461,7 @@ def test_srp_stream_gate_survives_all_empty_triggers(spark, sf_dir, store_root):
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = f"{store_root}/srp"
-    I.write_index(
+    I.commit_index(
         I.build_srp_vector_index(emb.limit(50), dim=EMBEDDING_DIM), path
     )
     got = run_stream_srp_novelty(
@@ -631,10 +632,11 @@ def test_srp_snapshot_fold_and_retire(spark, store_root):
 
 def test_streaming_gate_reads_snapshot_store(spark, sf_dir, store_root):
     """The per-trigger streaming novelty gate is the concurrent reader
-    the store exists for: over a SNAPSHOT-committed index it must admit
-    exactly the novel set it admits over the directory index (the gate
-    routes through ``read_index_tables``, pinning one manifest version
-    per trigger)."""
+    the store exists for: it must gate against the LATEST published
+    snapshot (a v1 index over half the history, replaced by a v2 over
+    all of it) and admit exactly the batch docs whose band keys share
+    no (band, bucket) with v2's ``bucket_reps``."""
+    from esther_apache_spark_spark.operators import dedup as D
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import load_table
     from esther_apache_spark_spark.streaming.events import (
@@ -642,17 +644,29 @@ def test_streaming_gate_reads_snapshot_store(spark, sf_dir, store_root):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    history = docs.filter(
-        hash_bucket(F.col("doc_id"), salt="incrmh") < I.HIST_GATE_FRAC
+    in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < I.HIST_GATE_FRAC
+    history, batch = docs.filter(in_hist), docs.filter(~in_hist)
+    half = history.filter(hash_bucket(F.col("doc_id"), salt="half") < (1 << 31))
+    path = f"{store_root}/snap"
+    v1 = I.build_minhash_bucket_index(half)
+    v2 = I.build_minhash_bucket_index(history)
+    I.commit_index(v1, path)
+    I.commit_index(v2, path)
+    bband = D.minhash_band_frame(batch).select(
+        "_id", F.posexplode("_bh").alias("_band", "_bucket")
     )
-    idx = I.build_minhash_bucket_index(history)
-    dir_path, snap_path = f"{store_root}/dir", f"{store_root}/snap"
-    I.write_index(idx, dir_path)
-    I.commit_index(
-        I.build_minhash_bucket_index(history), snap_path
-    )
-    want = _kv(run_stream_minhash_novelty(spark, sf_dir, dir_path), "doc_id")
-    got = _kv(run_stream_minhash_novelty(spark, sf_dir, snap_path), "doc_id")
+
+    def novel(idx):
+        hits = bband.join(
+            idx["bucket_reps"].select("_band", "_bucket"),
+            ["_band", "_bucket"],
+            "semi",
+        ).select(F.col("_id").alias("doc_id"))
+        return _kv(batch.join(hits, "doc_id", "left_anti"), "doc_id")
+
+    want = novel(v2)
+    assert want != novel(v1)  # the two versions gate differently
+    got = _kv(run_stream_minhash_novelty(spark, sf_dir, path), "doc_id")
     assert got == want and len(got) > 0
 
 

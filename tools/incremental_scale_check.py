@@ -6,7 +6,8 @@ For each modality (minhash bands over documents, SRP over embeddings),
 on a hash split of the given corpus (history = 1 - batch_frac):
 
 - ``index_build_sec`` — the NIGHTLY cost: pair-gen + CC over history,
-  band/bucket projection, parquet write. Paid once per corpus refresh.
+  band/bucket projection, one snapshot commit to the index store.
+  Paid once per corpus refresh.
 - ``merge_sec`` — the DAILY cost: band the arriving batch, probe the
   persisted index, self-join the batch, CC over the touched subgraph,
   materialize batch labels + remap. This is the number that must stay
@@ -28,7 +29,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -64,6 +67,7 @@ def main() -> None:
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import EMBEDDING_DIM, load_table
     from esther_apache_spark_spark.session import get_spark
+    from esther_apache_spark_spark.sources.index_store import read_snapshot
 
     spark = get_spark("incremental-scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -76,6 +80,7 @@ def main() -> None:
 
     hist_gate = int((1.0 - batch_frac) * (1 << 32))
     out = {"sf_dir": sf_dir, "batch_frac": batch_frac, "cold": cold, "modalities": {}}
+    root = tempfile.mkdtemp(prefix="incr_scale_")
 
     def _full_labels_count(batch_ids, id_col, pairs):
         lab = connected_components(
@@ -91,15 +96,15 @@ def main() -> None:
     docs = load_table(spark, sf_dir, "documents")
     gate = hash_bucket(F.col("doc_id"), salt="incrmh") < hist_gate
     hist, batch = docs.filter(gate), docs.filter(~gate)
-    idx_path = "/tmp/incr_scale_mh"
+    idx_path = f"{root}/mh"
 
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
-    I.write_index(I.build_minhash_bucket_index(hist), idx_path)
+    I.commit_index(I.build_minhash_bucket_index(hist), idx_path)
     build = time.perf_counter() - t0
 
-    idx = I.read_index(spark, idx_path, ["bucket_reps", "labels"])
+    idx = read_snapshot(spark, idx_path, ["bucket_reps", "labels"])
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
@@ -129,16 +134,16 @@ def main() -> None:
     emb = load_table(spark, sf_dir, "embeddings")
     vgate = hash_bucket(F.col("vec_id"), salt="incrsem") < hist_gate
     vh, vb = emb.filter(vgate), emb.filter(~vgate)
-    srp_path = "/tmp/incr_scale_srp"
+    srp_path = f"{root}/srp"
     kw = dict(threshold=0.4, n_planes=4, n_tables=12, dim=EMBEDDING_DIM)
 
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
-    I.write_index(I.build_srp_vector_index(vh, **kw), srp_path)
+    I.commit_index(I.build_srp_vector_index(vh, **kw), srp_path)
     build = time.perf_counter() - t0
 
-    vidx = I.read_index(spark, srp_path, ["buckets", "vectors", "labels"])
+    vidx = read_snapshot(spark, srp_path, ["buckets", "vectors", "labels"])
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
@@ -166,6 +171,7 @@ def main() -> None:
     print(f"[incr] srp {out['modalities']['srp']}", file=sys.stderr, flush=True)
 
     spark.stop()
+    shutil.rmtree(root, ignore_errors=True)
     print(json.dumps(out, separators=(",", ":")), flush=True)
 
 

@@ -5,27 +5,19 @@ nightly fold / takedown retirement / weekly compaction WRITING the
 shared dedup index while streaming novelty gates and ad-hoc merges
 READ it concurrently.
 
-Two arms over the same sf0.1 MinHash index workload:
+Over an sf0.1 MinHash index workload: build -> K folds -> retire ->
+compact, each published as an atomic manifest commit, with reader
+threads hammering the resolved view throughout. VERIFIED, not just
+reported: every reader observation (version, labels+reps checksum)
+must equal the canonical checksum recomputed AFTER the run by
+time-traveling to that version, and reader errors must be zero. Ends
+with a vacuum and a latest-still-reads check. (The plain-directory
+protocol this store replaced tore 8 of 12 concurrent reads during
+compaction swaps — BASELINE.md r10.)
 
-1. SNAPSHOT arm (the claim under test): build -> K folds -> retire ->
-   compact, each published as an atomic manifest commit, with reader
-   threads hammering the resolved view throughout. VERIFIED, not just
-   reported: every reader observation (version, labels+reps checksum)
-   must equal the canonical checksum recomputed AFTER the run by
-   time-traveling to that version, and reader errors must be zero.
-   Ends with a vacuum and a latest-still-reads check.
-
-2. LEGACY arm (the motivation): the same index served as a plain
-   directory while repeated ``compact_index`` swaps (rmtree+rename)
-   run — each swap has a window where a table directory does not
-   exist. Readers record exceptions and checksums not matching the
-   (unchanged) quiesced state; both counts are REPORTED as torn reads
-   (timing-dependent on one box, so not asserted — zero just means the
-   race window was not hit this run).
-
-The snapshot arm is also runnable under real separate executor JVMs
-via ``tools/local_cluster_check.py --snapshot-drill`` (this module's
-arms are imported there), so the store's executor-side data-file
+The drill is also runnable under real separate executor JVMs via
+``tools/local_cluster_check.py --snapshot-drill`` (``snapshot_arm`` is
+imported there), so the store's executor-side data-file
 writes + driver-side manifest publication cross process boundaries.
 
 Prints one JSON line. Run idle.
@@ -70,7 +62,7 @@ def _checksum(resolved) -> tuple:
 
 def build_inputs(spark, sf_dir: str, folds: int):
     """History slice, K disjoint daily batches, and a retirement slice
-    over the documents table — the shared workload of both arms."""
+    over the documents table."""
     from pyspark.sql import functions as F
 
     from esther_apache_spark_spark.operators import incremental as I
@@ -186,62 +178,10 @@ def snapshot_arm(spark, path: str, history, days, retired,
     return out
 
 
-def legacy_arm(spark, path: str, history, days, readers: int = 2,
-               compactions: int = 6) -> dict:
-    """Serve the same index as a plain directory and hammer it with
-    readers while compaction swaps run; report torn reads."""
-    from esther_apache_spark_spark.operators import incremental as I
-
-    I.write_index(
-        I.build_minhash_bucket_index(history), path
-    )
-    for day in days:
-        resolved = I.read_minhash_index_resolved(spark, path)
-        bl, rm = I.incremental_minhash_merge(
-            day, resolved["bucket_reps"]
-        )
-        I.append_minhash_merge_to_index(path, day, bl, rm)
-    quiesced = _checksum(I.read_minhash_index_resolved(spark, path))
-    lstop = threading.Event()
-    ltorn: list = []
-    lreads = [0]
-
-    def legacy_reader() -> None:
-        while not lstop.is_set():
-            try:
-                chk = _checksum(I.read_minhash_index_resolved(spark, path))
-                lreads[0] += 1
-                if chk != quiesced:
-                    ltorn.append(("checksum", str(chk)))
-            except Exception as e:  # noqa: BLE001
-                ltorn.append(("exception", f"{type(e).__name__}: {e}"[:160]))
-
-    lthreads = [
-        threading.Thread(target=legacy_reader, daemon=True)
-        for _ in range(readers)
-    ]
-    for th in lthreads:
-        th.start()
-    # compaction preserves the view, so every deviation a reader sees
-    # during these swaps is a torn read by definition
-    for _ in range(compactions):
-        I.compact_index(spark, path, "minhash")
-    lstop.set()
-    for th in lthreads:
-        th.join(timeout=120)
-    return {
-        "compactions": compactions,
-        "reads_completed": lreads[0],
-        "torn_reads": len(ltorn),
-        "first_torn": ltorn[0] if ltorn else None,
-    }
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--folds", type=int, default=4)
     ap.add_argument("--readers", type=int, default=2)
-    ap.add_argument("--legacy-compactions", type=int, default=6)
     args = ap.parse_args()
 
     from esther_apache_spark_spark.session import get_spark
@@ -256,10 +196,6 @@ def main() -> None:
     try:
         out["snapshot"] = snapshot_arm(
             spark, f"{root}/snap", history, days, retired, args.readers
-        )
-        out["legacy"] = legacy_arm(
-            spark, f"{root}/legacy", history, days, args.readers,
-            args.legacy_compactions,
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
