@@ -153,6 +153,15 @@ def _non_null_vec(df: DataFrame, vec_col: str) -> DataFrame:
     return df.filter(is_valid_vector(F.col(vec_col)))
 
 
+def _vector_dim(df: DataFrame, vec_col: str) -> int:
+    """The width of ``vec_col``, read off the first row — one driver
+    job, which callers skip when ``dim`` is passed."""
+    first = df.select(F.size(vec_col).alias("d")).first()
+    if first is None:
+        raise ValueError("empty dataframe; pass dim explicitly")
+    return first["d"]
+
+
 def exact_dedup(df: DataFrame, on: str | list[str], keep_by: list[Column] | None = None) -> DataFrame:
     """Exact dedup: keep one row per key set.
 
@@ -1489,10 +1498,7 @@ def embedding_cosine_dups(
         df, F.md5(F.to_json(F.col(vec_col))), collapse_exact, "vec"
     )
     if dim is None:
-        first = df.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty dataframe; pass dim explicitly")
-        dim = first["d"]
+        dim = _vector_dim(df, vec_col)
 
     # NO cast to array<double> here: the source column is float32 and
     # every consumer of _v is a numpy kernel that widens to float64 on
@@ -1728,10 +1734,7 @@ def embedding_cosine_components(
             pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
     if dim is None:
-        first = df.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty dataframe; pass dim explicitly")
-        dim = first["d"]
+        dim = _vector_dim(df, vec_col)
     base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     groups, members = _collapse_identical_vec(base)
     rep_pairs = _srp_rep_pairs(

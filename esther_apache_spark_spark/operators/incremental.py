@@ -13,7 +13,8 @@ recompute — new labels are minima over the AFFECTED components only.
 
 Index formats — each index is the tables of ONE snapshot store
 (``sources/index_store.py``), published by ``commit_index`` and read
-through ``index_store.read_snapshot`` or the resolved readers below:
+through ``index_store.read_snapshot`` or ``read_index_resolved``. The
+store's tables name its family; the lifecycle reads it from there:
 
 - MinHash (``build_minhash_bucket_index``): ``bucket_reps`` — one row
   per occupied ``(_band, _bucket)`` per distinct component representative
@@ -32,7 +33,7 @@ through ``index_store.read_snapshot`` or the resolved readers below:
   each candidate, so buckets cannot collapse to reps here; the rerank
   is one cross-GEMM per (table, bucket, shard) cogroup.
 - Both: a ``remap_log`` table (old_comp, new_comp) once a fold has been
-  appended (``commit_*_fold``), resolved at read time.
+  appended (``commit_fold``), resolved at read time.
 
 Merge (``incremental_minhash_merge`` / ``incremental_srp_merge``):
 the arriving batch is banded/bucketed (one narrow pass over BATCH
@@ -59,6 +60,8 @@ bounded by the bucket→rep collapse (minhash) / per-candidate rerank
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,9 +78,74 @@ from esther_apache_spark_spark.sources import index_store as S
 HIST_GATE_FRAC = int(0.8 * (1 << 32))
 
 
+def _merge_labels(
+    edges: DataFrame, batch: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """CC over a merge graph's ``(src, dst)`` edges, split into the
+    merge's ``(batch_labels, remap)`` pair (see
+    ``incremental_minhash_merge``)."""
+    merged = connected_components(edges)
+    batch_ids = batch.select(F.col(id_col))
+    batch_labels = batch_ids.join(
+        merged, batch_ids[id_col] == merged.node, "left"
+    ).select(
+        F.col(id_col),
+        F.coalesce("comp", F.col(id_col)).alias("comp"),
+    )
+    # History-side label moves: every NON-batch node in the merge graph
+    # is a history rep — a component label (whose members' labels must
+    # be rewritten) or a previously-UNLABELED singleton now joined to a
+    # component (whose implicit own-id label gains a real one). In both
+    # cases the rep's old label IS the node id, so the remap is simply
+    # (node, comp) where they differ; the nightly job applies it to the
+    # labels table (rewrite on match, insert for singleton reps).
+    remap = (
+        merged.join(batch_ids, merged.node == batch_ids[id_col], "left_anti")
+        .filter(F.col("comp") != F.col("node"))
+        .select(F.col("node").alias("old_comp"), F.col("comp").alias("new_comp"))
+    )
+    return batch_labels, remap
+
+
 # ---------------------------------------------------------------------------
 # MinHash band index.
 # ---------------------------------------------------------------------------
+
+
+def _minhash_doc_bands(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Per-doc band keys ``(_id, _band, _bucket)`` — the ``doc_bands``
+    rows the build and a fold persist, and the merge's probe keys."""
+    sig = D.minhash_band_frame(
+        docs,
+        id_col=id_col,
+        text_col=text_col,
+        num_perm=num_perm,
+        bands=bands,
+        shingle_n=shingle_n,
+    )
+    return sig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
+
+
+def _bucket_reps(doc_bands: DataFrame, labels: DataFrame) -> DataFrame:
+    """The bucket→component map: each doc's band keys under its
+    component label (``labels`` node → comp; unlabeled docs are their
+    own rep), one row per distinct ``(_band, _bucket, _rep)``."""
+    return (
+        doc_bands.join(labels, doc_bands._id == labels.node, "left")
+        .select(
+            "_band",
+            "_bucket",
+            F.coalesce("comp", F.col("_id")).alias("_rep"),
+        )
+        .distinct()
+    )
 
 
 def build_minhash_bucket_index(
@@ -118,25 +186,14 @@ def build_minhash_bucket_index(
     labels = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    sig = D.minhash_band_frame(
-        history,
-        id_col=id_col,
-        text_col=text_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
+    banded = _minhash_doc_bands(
+        history, id_col, text_col, num_perm, bands, shingle_n
     )
-    banded = sig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
-    bucket_reps = (
-        banded.join(labels, banded._id == labels.node, "left")
-        .select(
-            "_band",
-            "_bucket",
-            F.coalesce("comp", F.col("_id")).alias("_rep"),
-        )
-        .distinct()
-    )
-    return {"bucket_reps": bucket_reps, "labels": labels, "doc_bands": banded}
+    return {
+        "bucket_reps": _bucket_reps(banded, labels),
+        "labels": labels,
+        "doc_bands": banded,
+    }
 
 
 def minhash_merge_edges(
@@ -156,15 +213,9 @@ def minhash_merge_edges(
     can be audited (tests pin that it scans the index parquet and the
     BATCH slice only — CC's checkpoints would truncate this plan
     from the final labels frame)."""
-    bsig = D.minhash_band_frame(
-        batch,
-        id_col=id_col,
-        text_col=text_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
+    bband = _minhash_doc_bands(
+        batch, id_col, text_col, num_perm, bands, shingle_n
     )
-    bband = bsig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
     # batch ↔ history-component edges: bucket co-occupancy IS the
     # banding pair criterion, and the index already collapsed each
     # bucket to its component reps
@@ -227,32 +278,45 @@ def incremental_minhash_merge(
         max_bucket=max_bucket,
         collapse_exact=collapse_exact,
     )
-    merged = connected_components(edges)
-    batch_ids = batch.select(F.col(id_col))
-    batch_labels = batch_ids.join(
-        merged, batch_ids[id_col] == merged.node, "left"
-    ).select(
-        F.col(id_col),
-        F.coalesce("comp", F.col(id_col)).alias("comp"),
-    )
-    # History-side label moves: every NON-batch node in the merge graph
-    # is a history rep — a component label (whose members' labels must
-    # be rewritten) or a previously-UNLABELED singleton now joined to a
-    # component (whose implicit own-id label gains a real one). In both
-    # cases the rep's old label IS the node id, so the remap is simply
-    # (node, comp) where they differ; the nightly job applies it to the
-    # labels table (rewrite on match, insert for singleton reps).
-    remap = (
-        merged.join(batch_ids, merged.node == batch_ids[id_col], "left_anti")
-        .filter(F.col("comp") != F.col("node"))
-        .select(F.col("node").alias("old_comp"), F.col("comp").alias("new_comp"))
-    )
-    return batch_labels, remap
+    return _merge_labels(edges, batch, id_col)
 
 
 # ---------------------------------------------------------------------------
 # SRP / embedding index.
 # ---------------------------------------------------------------------------
+
+
+def _srp_doc_rows(
+    docs: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_planes: int = 4,
+    n_tables: int = 12,
+    seed: int = 42,
+    dim: int | None = None,
+) -> dict[str, DataFrame]:
+    """Per-doc SRP index rows — ``buckets`` (``_id, _table, _bucket``)
+    and ``vectors`` (``_id, _v``) — as the build and a fold persist
+    them."""
+    from esther_apache_spark_spark.operators.similarity import (
+        srp_table_buckets_vec,
+    )
+
+    if dim is None:
+        dim = D._vector_dim(docs, vec_col)
+    proj = docs.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        srp_table_buckets_vec(
+            F.col(vec_col), dim, n_planes, n_tables, seed
+        ).alias("_all"),
+    )
+    return {
+        "buckets": proj.select(
+            "_id", F.posexplode("_all").alias("_table", "_bucket")
+        ),
+        "vectors": proj.select("_id", "_v"),
+    }
 
 
 def build_srp_vector_index(
@@ -271,15 +335,8 @@ def build_srp_vector_index(
     (history's embedding SOURCE is never re-read), and component
     ``labels`` (CC over cosine-gated pairs, the
     ``embedding_cosine_components`` labels)."""
-    from esther_apache_spark_spark.operators.similarity import (
-        srp_table_buckets_vec,
-    )
-
     if dim is None:
-        first = history.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty history; pass dim explicitly")
-        dim = first["d"]
+        dim = D._vector_dim(history, vec_col)
     labels = D.embedding_cosine_components(
         history,
         id_col=id_col,
@@ -291,16 +348,8 @@ def build_srp_vector_index(
         dim=dim,
         max_bucket=max_bucket,
     )
-    proj = history.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        srp_table_buckets_vec(
-            F.col(vec_col), dim, n_planes, n_tables, seed
-        ).alias("_all"),
-    )
-    buckets = proj.select("_id", F.posexplode("_all").alias("_table", "_bucket"))
-    vectors = proj.select("_id", "_v")
-    return {"buckets": buckets, "vectors": vectors, "labels": labels}
+    rows = _srp_doc_rows(history, id_col, vec_col, n_planes, n_tables, seed, dim)
+    return {**rows, "labels": labels}
 
 
 def srp_batch_history_hits(
@@ -318,7 +367,7 @@ def srp_batch_history_hits(
 ) -> DataFrame:
     """Cosine-gated batch↔history candidate pairs ``(_bid, _hid)``
     against the persisted SRP index — the probe shared by the batch
-    merge (``srp_merge_edges``) and the streaming novelty gate
+    merge (``incremental_srp_merge``) and the streaming novelty gate
     (``streaming/events.run_stream_srp_novelty``): batch vectors are
     SRP-bucketed, bucket co-occupancy with the index ``buckets``
     nominates candidates, and the index ``vectors`` copy supplies the
@@ -344,10 +393,7 @@ def srp_batch_history_hits(
     )
 
     if dim is None:
-        first = batch.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty batch; pass dim explicitly")
-        dim = first["d"]
+        dim = D._vector_dim(batch, vec_col)
     bproj = D._cache(
         batch.select(
             F.col(id_col).alias("_bid"),
@@ -457,8 +503,7 @@ def srp_batch_history_hits(
         .dropDuplicates(["_bid", "_hid"])
     )
 
-
-def srp_merge_edges(
+def incremental_srp_merge(
     batch: DataFrame,
     buckets: DataFrame,
     vectors: DataFrame,
@@ -471,13 +516,14 @@ def srp_merge_edges(
     seed: int = 42,
     dim: int | None = None,
     max_bucket: int | None = 4096,
-) -> DataFrame:
-    """The SRP merge graph's edge set ``(src, dst)`` — cosine-gated
-    batch↔history edges from ``srp_batch_history_hits`` (history
-    entering as its component label) plus batch↔batch edges. Split out
-    so its lineage can be audited: the plan scans the index parquet
-    tables and the BATCH slice only (CC's checkpoints would truncate
-    this from the final labels frame)."""
+) -> tuple[DataFrame, DataFrame]:
+    """Merge an arriving embedding batch into the persisted SRP index.
+    Same contract as ``incremental_minhash_merge``, with the cosine
+    gate the minhash path doesn't need: batch↔history candidates
+    (bucket co-occupancy against the index ``buckets``) are exactly
+    reranked against the index ``vectors`` copy — zero-norm rows
+    dropped, cosine rounded to 4 dp, ≥ ``threshold`` — before entering
+    the merge graph through the history side's component label."""
     gated = srp_batch_history_hits(
         batch,
         buckets,
@@ -510,70 +556,13 @@ def srp_merge_edges(
         dim=dim,
         max_bucket=max_bucket,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    return bh.unionByName(bb)
-
-
-def incremental_srp_merge(
-    batch: DataFrame,
-    buckets: DataFrame,
-    vectors: DataFrame,
-    labels: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    n_tables: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-    max_bucket: int | None = 4096,
-) -> tuple[DataFrame, DataFrame]:
-    """Merge an arriving embedding batch into the persisted SRP index.
-    Same contract as ``incremental_minhash_merge``, with the cosine
-    gate the minhash path doesn't need: batch↔history candidates
-    (bucket co-occupancy against the index ``buckets``) are exactly
-    reranked against the index ``vectors`` copy — zero-norm rows
-    dropped, cosine rounded to 4 dp, ≥ ``threshold`` — before entering
-    the merge graph through the history side's component label."""
-    edges = srp_merge_edges(
-        batch,
-        buckets,
-        vectors,
-        labels,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
-        dim=dim,
-        max_bucket=max_bucket,
-    )
-    merged = connected_components(edges)
-    batch_ids = batch.select(F.col(id_col))
-    batch_labels = batch_ids.join(
-        merged, batch_ids[id_col] == merged.node, "left"
-    ).select(
-        F.col(id_col),
-        F.coalesce("comp", F.col(id_col)).alias("comp"),
-    )
-    # History-side label moves: every NON-batch node in the merge graph
-    # is a history rep — a component label (whose members' labels must
-    # be rewritten) or a previously-UNLABELED singleton now joined to a
-    # component (whose implicit own-id label gains a real one). In both
-    # cases the rep's old label IS the node id, so the remap is simply
-    # (node, comp) where they differ; the nightly job applies it to the
-    # labels table (rewrite on match, insert for singleton reps).
-    remap = (
-        merged.join(batch_ids, merged.node == batch_ids[id_col], "left_anti")
-        .filter(F.col("comp") != F.col("node"))
-        .select(F.col("node").alias("old_comp"), F.col("comp").alias("new_comp"))
-    )
-    return batch_labels, remap
+    return _merge_labels(bh.unionByName(bb), batch, id_col)
 
 
 # ---------------------------------------------------------------------------
 # Index lifecycle (VERDICT r9 #2): document retirement (tombstones) and
-# sub-linear folds (append-commit + remap log + compaction).
+# sub-linear folds (append-commit + remap log + compaction), one code
+# path over either family.
 #
 # The r9 index could only GROW: every fold rewrote the ENTIRE labels /
 # bucket_reps tables (at 100 TB the nightly job re-writes the whole
@@ -581,8 +570,9 @@ def incremental_srp_merge(
 # and TTL'd crawl slices, which a production pipeline hits within its
 # first month. Two additions close both:
 #
-# RETIREMENT (``retire_minhash_docs`` / ``retire_srp_docs``): exact
-# deletion is NOT "drop the member rows" — removing a doc can
+# RETIREMENT (``retire_minhash_docs`` / ``retire_srp_docs``; published
+# by ``retire_index``): exact deletion is NOT "drop the member rows" —
+# removing a doc can
 # (a) orphan a component label (the retired doc WAS the min id: the
 #     survivors must re-elect their minimum),
 # (b) SPLIT a component (the retired doc was the only bridge between
@@ -596,15 +586,15 @@ def incremental_srp_merge(
 # ``doc_bands``; SRP re-ranks from the index's ``vectors`` copy).
 # Result is pinned equal to a fresh build over the surviving corpus.
 #
-# SUB-LINEAR FOLDS (``commit_*_fold`` + ``remap_log`` +
+# SUB-LINEAR FOLDS (``commit_fold`` + ``remap_log`` +
 # ``compact_index``): the daily fold APPENDS to the index store (new
 # parquet files only — O(batch) rows written, no base table
 # rewritten): the batch's labels/bands/vectors plus the merge's remap
 # appended to a ``remap_log`` table, in one commit. Readers resolve
-# labels through the log's transitive closure (``_read_resolvable`` —
-# CC over the log's (old, new) edges; exact because merge labels only
-# ever DECREASE to the new component minimum, so the closure's min IS
-# the final label; retirement, which can RAISE labels, is a
+# labels through the log's transitive closure (``read_index_resolved``
+# — CC over the log's (old, new) edges; exact because merge labels
+# only ever DECREASE to the new component minimum, so the closure's min
+# IS the final label; retirement, which can RAISE labels, is a
 # compaction-class operation and runs on the resolved view).
 # ``compact_index`` materializes the resolved view and truncates the
 # log — the weekly job. Fold and retirement costs are recorded in
@@ -628,6 +618,28 @@ def _chain_edges_within(keys_df: DataFrame, id_col: str, part_cols: list[str]) -
         .filter(F.col("_prev").isNotNull() & (F.col("_prev") != F.col(id_col)))
         .select(F.col("_prev").alias("src"), F.col(id_col).alias("dst"))
     )
+
+
+def _affected(
+    labels: DataFrame, retired: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The retirement prelude: ``(rid, aff, surv, kept)`` — the distinct
+    retired ids (``_retid``), the AFFECTED components (``comp`` of any
+    retired member), their surviving members (``node``, the only docs a
+    retirement re-labels) and the untouched label rows of every other
+    component. The new labels are ``kept`` plus the survivors' re-run
+    CC."""
+    rid = retired.select(F.col(id_col).alias("_retid")).distinct()
+    aff = (
+        labels.join(rid, labels.node == rid._retid, "semi")
+        .select("comp")
+        .distinct()
+    )
+    members = labels.join(aff, "comp", "semi")
+    surv = members.join(rid, members.node == rid._retid, "left_anti").select(
+        "node"
+    )
+    return rid, aff, surv, labels.join(aff, "comp", "left_anti")
 
 
 def retire_minhash_docs(
@@ -654,22 +666,12 @@ def retire_minhash_docs(
     survivors' contribution under their new labels; unaffected rows
     pass through untouched (components never share buckets, so the
     rewrite is proportional to the affected slice, not the index)."""
-    rid = retired.select(F.col(id_col).alias("_retid")).distinct()
-    aff = (
-        labels.join(rid, labels.node == rid._retid, "semi")
-        .select("comp")
-        .distinct()
-    )
-    members = labels.join(aff, "comp", "semi")
-    surv = members.join(rid, members.node == rid._retid, "left_anti").select(
-        "node"
-    )
+    rid, aff, surv, kept_labels = _affected(labels, retired, id_col)
     sb = doc_bands.join(surv, doc_bands._id == surv.node, "semi")
     sub = connected_components(
         _chain_edges_within(sb.select("_id", "_band", "_bucket"), "_id",
                             ["_band", "_bucket"])
     )
-    new_labels = labels.join(aff, "comp", "left_anti").unionByName(sub)
     # rows to drop: every row owned by an affected component, plus the
     # retired docs' own-id rows (unlabeled singletons are their own rep
     # and never share a bucket — sharing one would make them a pair)
@@ -677,21 +679,12 @@ def retire_minhash_docs(
         rid.select(F.col("_retid").alias("_rep"))
     )
     kept = bucket_reps.join(drop, "_rep", "left_anti")
-    surv_bands = doc_bands.join(surv, doc_bands._id == surv.node, "semi")
-    regen = (
-        surv_bands.join(sub, surv_bands._id == sub.node, "left")
-        .select(
-            "_band", "_bucket", F.coalesce("comp", F.col("_id")).alias("_rep")
-        )
-        .distinct()
-    )
-    new_doc_bands = doc_bands.join(
-        rid, doc_bands._id == rid._retid, "left_anti"
-    )
     return {
-        "bucket_reps": kept.unionByName(regen),
-        "labels": new_labels,
-        "doc_bands": new_doc_bands,
+        "bucket_reps": kept.unionByName(_bucket_reps(sb, sub)),
+        "labels": kept_labels.unionByName(sub),
+        "doc_bands": doc_bands.join(
+            rid, doc_bands._id == rid._retid, "left_anti"
+        ),
     }
 
 
@@ -708,7 +701,8 @@ def retire_srp_docs(
     dim: int | None = None,
     max_bucket: int | None = 4096,
 ) -> dict[str, DataFrame]:
-    """SRP twin of ``retire_minhash_docs``. ``buckets``/``vectors`` are
+    """Retire vectors from an SRP index, with the contract of
+    ``retire_minhash_docs``. ``buckets``/``vectors`` are
     per-doc tables, so their retirement is a plain anti-join; labels of
     AFFECTED components are re-derived by re-ranking the surviving
     members' vectors — read from the index's own ``vectors`` copy, the
@@ -718,16 +712,7 @@ def retire_srp_docs(
     over those pairs. Cosine edges are not transitive, so the minhash
     path's chain shortcut does not apply here; the pair operator's
     ``max_bucket`` caps bound the rerank instead."""
-    rid = retired.select(F.col(id_col).alias("_retid")).distinct()
-    aff = (
-        labels.join(rid, labels.node == rid._retid, "semi")
-        .select("comp")
-        .distinct()
-    )
-    members = labels.join(aff, "comp", "semi")
-    surv = members.join(rid, members.node == rid._retid, "left_anti").select(
-        "node"
-    )
+    rid, _, surv, kept_labels = _affected(labels, retired, id_col)
     surv_vecs = vectors.join(surv, vectors._id == surv.node, "semi").select(
         F.col("_id").alias(id_col), F.col("_v").alias("embedding")
     )
@@ -743,142 +728,61 @@ def retire_srp_docs(
         max_bucket=max_bucket,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     sub = connected_components(pairs)
-    new_labels = labels.join(aff, "comp", "left_anti").unionByName(sub)
     return {
         "buckets": buckets.join(rid, buckets._id == rid._retid, "left_anti"),
         "vectors": vectors.join(rid, vectors._id == rid._retid, "left_anti"),
-        "labels": new_labels,
+        "labels": kept_labels.unionByName(sub),
     }
 
 
 # ---------------------------------------------------------------------------
-# Sub-linear folds: append-commit + remap log + compaction.
+# One lifecycle over either family. A store's manifest names its family
+# (``bucket_reps`` → MinHash, ``vectors`` → SRP); the spec below is all
+# the read, fold, retire and compact steps need to know about it.
 # ---------------------------------------------------------------------------
 
 
-def _minhash_fold_delta(
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
+class _Family(NamedTuple):
+    id_col: str  # the batch / retired frames' default id column
+    # (batch, labels(node, comp), **kw) → the fold's per-doc tables
+    fold_rows: Callable[..., dict[str, DataFrame]]
+    # (resolved tables, retired, **kw) → the pruned index
+    retire: Callable[..., dict[str, DataFrame]]
+
+
+def _minhash_fold_rows(
+    batch: DataFrame, labels: DataFrame, **kw
 ) -> dict[str, DataFrame]:
-    """The O(batch) per-table row delta ONE MinHash fold appends
-    (``commit_minhash_fold``): batch band keys under their final labels
-    (bucket_reps), the per-doc band rows (doc_bands), the batch's
-    non-self labels PLUS the remap rows as label rows — (old_comp →
-    new_comp) is exactly the label row a previously-singleton rep
-    gains, and for already-labeled reps it duplicates what log
-    resolution computes (the resolved read's distinct folds it) — and
-    the remap itself (remap_log). Correctness precondition, pinned by
-    test: merges must run against the RESOLVED view, so each remap's
-    old_comp is a CURRENT label and the log stays a forest of
-    strictly-decreasing chains whose closure-min is the final label."""
-    bsig = D.minhash_band_frame(
-        batch,
-        id_col=id_col,
-        text_col=text_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-    )
-    bband = bsig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
-    bl = batch_labels.select(
-        F.col(id_col).alias("_id"), F.col("comp").alias("_rep")
-    )
-    rm = remap.select("old_comp", "new_comp")
-    return {
-        "bucket_reps": bband.join(bl, "_id")
-        .select("_band", "_bucket", "_rep")
-        .distinct(),
-        "doc_bands": bband,
-        "labels": batch_labels.filter(F.col("comp") != F.col(id_col))
-        .select(F.col(id_col).alias("node"), "comp")
-        .unionByName(
-            rm.select(
-                F.col("old_comp").alias("node"),
-                F.col("new_comp").alias("comp"),
-            )
+    doc_bands = _minhash_doc_bands(batch, **kw)
+    return {"bucket_reps": _bucket_reps(doc_bands, labels), "doc_bands": doc_bands}
+
+
+_FAMILIES = {
+    "bucket_reps": _Family(
+        "doc_id",
+        _minhash_fold_rows,
+        lambda t, retired, **kw: retire_minhash_docs(
+            t["bucket_reps"], t["labels"], t["doc_bands"], retired, **kw
         ),
-        "remap_log": rm,
-    }
-
-
-def _srp_fold_delta(
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-) -> dict[str, DataFrame]:
-    """SRP twin of ``_minhash_fold_delta`` (``commit_srp_fold``):
-    ``buckets`` / ``vectors`` are per-doc tables, so their deltas are
-    plain appends of the batch's projections; labels and the remap
-    follow the same log discipline as the minhash fold."""
-    from esther_apache_spark_spark.operators.similarity import (
-        srp_table_buckets_vec,
-    )
-
-    if dim is None:
-        first = batch.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty batch; pass dim explicitly")
-        dim = first["d"]
-    bproj = batch.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        srp_table_buckets_vec(
-            F.col(vec_col), dim, n_planes, n_tables, seed
-        ).alias("_all"),
-    )
-    rm = remap.select("old_comp", "new_comp")
-    return {
-        "buckets": bproj.select(
-            "_id", F.posexplode("_all").alias("_table", "_bucket")
+    ),
+    "vectors": _Family(
+        "vec_id",
+        lambda batch, labels, **kw: _srp_doc_rows(batch, **kw),
+        lambda t, retired, **kw: retire_srp_docs(
+            t["buckets"], t["vectors"], t["labels"], retired, **kw
         ),
-        "vectors": bproj.select("_id", "_v"),
-        "labels": batch_labels.filter(F.col("comp") != F.col(id_col))
-        .select(F.col(id_col).alias("node"), "comp")
-        .unionByName(
-            rm.select(
-                F.col("old_comp").alias("node"),
-                F.col("new_comp").alias("comp"),
-            )
-        ),
-        "remap_log": rm,
-    }
+    ),
+}
 
 
-def _read_resolvable(
-    spark: SparkSession, path: str, version: int | None
-) -> tuple[dict[str, DataFrame], DataFrame | None]:
-    """Every table of ONE pinned snapshot (latest by default), with the
-    remap log replaced by its transitive closure as a resolution map
-    ``(node=any logged comp value, comp=its final label)`` — CC over
-    the log's (old, new) edges; ``None`` when the snapshot has no log.
-    Exact because merge-remaps only ever LOWER a label to the new
-    component minimum: the log is a forest of decreasing chains/trees
-    whose connected minimum IS the final label (retirement can raise
-    labels, which is why it is compaction-class and never enters the
-    log). The log is O(components touched per fold) — tiny next to the
-    index — so this closure is cheap and its application to the base
-    tables is a broadcast-size join. Reading the log at the same
-    version as the base tables is what keeps the view untorn."""
-    raw = S.read_snapshot(spark, path, version=version)
-    log = raw.pop("remap_log", None)
-    if log is None:
-        return raw, None
-    return raw, connected_components(
-        log.select(
-            F.col("old_comp").alias("src"), F.col("new_comp").alias("dst")
-        )
+def _family(tables) -> _Family:
+    """The family of a store holding ``tables`` (names)."""
+    for name, fam in _FAMILIES.items():
+        if name in tables:
+            return fam
+    raise ValueError(
+        "not an index store: it holds neither bucket_reps (MinHash) nor "
+        f"vectors (SRP), only {sorted(tables)}"
     )
 
 
@@ -913,70 +817,44 @@ def _resolve_col(
     )
 
 
-def read_minhash_index_resolved(
+def read_index_resolved(
     spark: SparkSession, path: str, version: int | None = None
 ) -> dict[str, DataFrame]:
-    """Open a MinHash index store as its resolved view: labels and
-    bucket reps pushed through the remap-log closure, duplicates
-    folded, label frame closed under rep self-rows — equal (pinned) to
-    a fresh build over the accumulated corpus. ALL tables (including
-    the remap log) are read from one pinned manifest version (latest
-    by default), so concurrent folds/compactions cannot tear the view;
-    ``version`` time-travels."""
-    raw, res = _read_resolvable(spark, path, version)
-    labels = _with_rep_self_rows(
-        _resolve_col(raw["labels"], "comp", res).distinct()
+    """Open an index store (either family) as its resolved view:
+    ``labels.comp`` and, in a MinHash store, ``bucket_reps._rep`` pushed
+    through the remap-log closure, duplicates folded, the label frame
+    closed under rep self-rows — equal (pinned) to a fresh build over
+    the accumulated corpus. Every other table (``doc_bands``,
+    ``buckets``, ``vectors`` — per-doc appends) passes through raw.
+
+    The closure is CC over the log's (old, new) edges, mapping every
+    logged comp to its final label. Exact because merge-remaps only
+    ever LOWER a label to the new component minimum: the log is a
+    forest of decreasing chains/trees whose connected minimum IS the
+    final label (retirement can raise labels, which is why it is
+    compaction-class and never enters the log). The log is O(components
+    touched per fold), so the closure is cheap and its application a
+    broadcast-size join.
+
+    ALL tables (the log included) are read from one pinned manifest
+    version (latest by default), so concurrent folds/compactions cannot
+    tear the view; ``version`` time-travels."""
+    tables = S.read_snapshot(spark, path, version=version)
+    _family(tables)  # a store that names no family is not an index
+    log = tables.pop("remap_log", None)
+    res = None if log is None else connected_components(
+        log.select(
+            F.col("old_comp").alias("src"), F.col("new_comp").alias("dst")
+        )
     )
-    return {
-        "bucket_reps": _resolve_col(raw["bucket_reps"], "_rep", res).distinct(),
-        "labels": labels,
-        "doc_bands": raw["doc_bands"],
-    }
-
-
-def read_srp_index_resolved(
-    spark: SparkSession, path: str, version: int | None = None
-) -> dict[str, DataFrame]:
-    """SRP twin of ``read_minhash_index_resolved`` (buckets/vectors are
-    per-doc appends and pass through raw)."""
-    raw, res = _read_resolvable(spark, path, version)
-    labels = _with_rep_self_rows(
-        _resolve_col(raw["labels"], "comp", res).distinct()
+    tables["labels"] = _with_rep_self_rows(
+        _resolve_col(tables["labels"], "comp", res).distinct()
     )
-    return {
-        "buckets": raw["buckets"],
-        "vectors": raw["vectors"],
-        "labels": labels,
-    }
-
-
-def compact_index(spark: SparkSession, path: str, kind: str) -> None:
-    """The weekly compaction: materialize the resolved view into fresh
-    base tables and truncate the remap log, bounding resolved-read cost
-    between compactions. ``kind`` is ``"minhash"`` or ``"srp"``. The
-    resolved view is published as one replace-commit — concurrent
-    readers keep whatever version they pinned, the log truncates to an
-    empty table in the same commit, and old files survive until
-    ``vacuum_snapshots``."""
-    version = S.latest_version(path)
-    if kind == "minhash":
-        resolved = read_minhash_index_resolved(spark, path, version)
-    elif kind == "srp":
-        resolved = read_srp_index_resolved(spark, path, version)
-    else:
-        raise ValueError(f"unknown index kind: {kind!r}")
-    # expected_base: the resolved frames were computed at `version`;
-    # a commit landing in between must fail the publish
-    # (ConcurrentReplaceError) rather than be silently erased.
-    # bump_epoch=False: compaction preserves the logical view, so a
-    # concurrent fold's delta stays valid and may re-merge.
-    S.commit_snapshot(
-        path,
-        _with_truncated_log(spark, path, version, resolved),
-        mode="replace",
-        expected_base=version,
-        bump_epoch=False,
-    )
+    if "bucket_reps" in tables:
+        tables["bucket_reps"] = _resolve_col(
+            tables["bucket_reps"], "_rep", res
+        ).distinct()
+    return tables
 
 
 # ---------------------------------------------------------------------------
@@ -1001,20 +879,19 @@ def _with_truncated_log(
     return {**frames, "remap_log": log.limit(0)}
 
 
-def commit_index(
-    index: dict[str, DataFrame], path: str, mode: str = "replace"
-) -> int:
+def commit_index(index: dict[str, DataFrame], path: str) -> int:
     """Publish an index (e.g. a fresh ``build_*_index`` output) as one
-    atomic snapshot commit; returns the published version. A replace
-    over an EXISTING store is compare-and-swapped against the current
-    latest version (a commit racing in between raises
-    ``ConcurrentReplaceError`` — rebuilds derive from the corpus, so
-    the caller decides whether the race matters and re-publishes)."""
-    expected = S.latest_version(path) if mode == "replace" else None
-    return S.commit_snapshot(path, index, mode=mode, expected_base=expected)
+    atomic replace-commit; returns the published version. The replace
+    is compare-and-swapped against the store's latest version — the
+    empty store included — so a commit racing in between raises
+    ``ConcurrentReplaceError`` (rebuilds derive from the corpus, so the
+    caller decides whether the race matters and re-publishes)."""
+    return S.commit_snapshot(
+        path, index, mode="replace", expected_base=S.latest_version(path)
+    )
 
 
-def commit_minhash_fold(
+def commit_fold(
     path: str,
     batch: DataFrame,
     batch_labels: DataFrame,
@@ -1022,91 +899,91 @@ def commit_minhash_fold(
     expected_epoch: int | None = None,
     **kw,
 ) -> int:
-    """The SUB-LINEAR nightly fold (VERDICT r9 #2b): the O(batch)
-    ``_minhash_fold_delta`` published as ONE append-commit — no
-    existing file is rewritten, and a reader never sees the fold's
-    ``bucket_reps`` without its ``remap_log``. Readers resolve stale
-    labels through the log's closure (``read_minhash_index_resolved``);
-    ``compact_index`` materializes and truncates weekly.
+    """The SUB-LINEAR nightly fold (VERDICT r9 #2b): a merge's O(batch)
+    row delta published as ONE append-commit — no existing file is
+    rewritten, and a reader never sees the fold's rows without its
+    ``remap_log``. Readers resolve stale labels through the log's
+    closure (``read_index_resolved``); ``compact_index`` materializes
+    and truncates weekly. ``kw`` are the family's build parameters
+    (``id_col``, and ``text_col``/``num_perm``/``bands``/``shingle_n``
+    or ``vec_col``/``n_planes``/``n_tables``/``seed``/``dim``).
+
+    The delta: the batch's non-self labels PLUS the remap rows as label
+    rows — (old_comp → new_comp) is exactly the label row a
+    previously-singleton rep gains, and for already-labeled reps it
+    duplicates what log resolution computes (the resolved read's
+    distinct folds it) — the remap itself (``remap_log``), and the
+    batch's per-doc rows from the same function the build uses
+    (MinHash ``doc_bands`` plus their ``bucket_reps`` under the final
+    labels; SRP ``buckets`` and ``vectors``). Correctness precondition,
+    pinned by test: merges must run against the RESOLVED view, so each
+    remap's old_comp is a CURRENT label and the log stays a forest of
+    strictly-decreasing chains whose closure-min is the final label.
 
     Pass ``expected_epoch`` (the manifest ``epoch`` captured when the
     resolved view the merge ran against was read): a retirement landing
     between derivation and commit then raises ``StaleAppendError``
     instead of silently re-merging labels that may reference retired
     documents."""
+    m = S.read_manifest(path)
+    if m is None:
+        raise FileNotFoundError(f"no published snapshot under {path}")
+    fam = _family(m["tables"])
+    id_col = kw.setdefault("id_col", fam.id_col)
+    labels = batch_labels.select(F.col(id_col).alias("node"), "comp")
+    rm = remap.select("old_comp", "new_comp")
+    delta = fam.fold_rows(batch, labels, **kw)
+    delta["labels"] = labels.filter(
+        F.col("comp") != F.col("node")
+    ).unionByName(
+        rm.select(F.col("old_comp").alias("node"), F.col("new_comp").alias("comp"))
+    )
+    delta["remap_log"] = rm
     return S.commit_snapshot(
-        path,
-        _minhash_fold_delta(batch, batch_labels, remap, **kw),
-        mode="append",
-        expected_epoch=expected_epoch,
+        path, delta, mode="append", expected_epoch=expected_epoch
     )
 
 
-def commit_srp_fold(
-    path: str,
-    batch: DataFrame,
-    batch_labels: DataFrame,
-    remap: DataFrame,
-    expected_epoch: int | None = None,
-    **kw,
+def retire_index(
+    spark: SparkSession, path: str, retired: DataFrame, **retire_kw
 ) -> int:
-    """SRP twin of ``commit_minhash_fold``, with the same
-    ``expected_epoch`` contract."""
-    return S.commit_snapshot(
-        path,
-        _srp_fold_delta(batch, batch_labels, remap, **kw),
-        mode="append",
-        expected_epoch=expected_epoch,
-    )
-
-
-def retire_minhash_index(
-    spark: SparkSession,
-    path: str,
-    retired: DataFrame,
-    id_col: str = "doc_id",
-) -> int:
-    """Retire documents from a MinHash index store: read the resolved
-    view at one pinned version, prune it with ``retire_minhash_docs``,
-    and publish the pruned index as a replace-commit. Retirement
-    re-elects labels (it can RAISE them), so the remap log — whose
-    closure assumes labels only ever decrease — is truncated in the
-    same commit; the pruned tables it publishes are already fully
+    """Retire documents from an index store: read the resolved view at
+    one pinned version, prune it with the family's ``retire_*_docs``
+    (``retire_kw`` are its parameters), and publish the pruned index as
+    a replace-commit compare-and-swapped against that version.
+    Retirement re-elects labels (it can RAISE them), so the remap log —
+    whose closure assumes labels only ever decrease — is truncated in
+    the same commit; the pruned tables it publishes are already fully
     resolved."""
     version = S.latest_version(path)
-    resolved = read_minhash_index_resolved(spark, path, version)
-    pruned = retire_minhash_docs(
-        resolved["bucket_reps"],
-        resolved["labels"],
-        resolved["doc_bands"],
-        retired,
-        id_col=id_col,
-    )
-    pruned = _with_truncated_log(spark, path, version, pruned)
+    resolved = read_index_resolved(spark, path, version)
+    pruned = _family(resolved).retire(resolved, retired, **retire_kw)
     return S.commit_snapshot(
-        path, pruned, mode="replace", expected_base=version
+        path,
+        _with_truncated_log(spark, path, version, pruned),
+        mode="replace",
+        expected_base=version,
     )
 
 
-def retire_srp_index(
-    spark: SparkSession,
-    path: str,
-    retired: DataFrame,
-    id_col: str = "vec_id",
-    **retire_kw,
-) -> int:
-    """SRP twin of ``retire_minhash_index``."""
+def compact_index(spark: SparkSession, path: str) -> None:
+    """The weekly compaction: materialize the resolved view into fresh
+    base tables and truncate the remap log, bounding resolved-read cost
+    between compactions. The resolved view is published as one
+    replace-commit — concurrent readers keep whatever version they
+    pinned, the log truncates to an empty table in the same commit, and
+    old files survive until ``vacuum_snapshots``."""
     version = S.latest_version(path)
-    resolved = read_srp_index_resolved(spark, path, version)
-    pruned = retire_srp_docs(
-        resolved["buckets"],
-        resolved["vectors"],
-        resolved["labels"],
-        retired,
-        id_col=id_col,
-        **retire_kw,
-    )
-    pruned = _with_truncated_log(spark, path, version, pruned)
-    return S.commit_snapshot(
-        path, pruned, mode="replace", expected_base=version
+    resolved = read_index_resolved(spark, path, version)
+    # expected_base: the resolved frames were computed at `version`;
+    # a commit landing in between must fail the publish
+    # (ConcurrentReplaceError) rather than be silently erased.
+    # bump_epoch=False: compaction preserves the logical view, so a
+    # concurrent fold's delta stays valid and may re-merge.
+    S.commit_snapshot(
+        path,
+        _with_truncated_log(spark, path, version, resolved),
+        mode="replace",
+        expected_base=version,
+        bump_epoch=False,
     )

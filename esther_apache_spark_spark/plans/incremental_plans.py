@@ -248,7 +248,7 @@ def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFram
     """Index lifecycle end-to-end (VERDICT r9 #2a): the nightly MinHash
     index is built over history, a takedown slice (30% of history by an
     independent hash gate) is RETIRED from the index store —
-    ``retire_minhash_index`` re-elects component minima, realizes
+    ``retire_index`` re-elects component minima, realizes
     bridge-splits and drops orphaned bucket rows from the index's own
     per-doc ``doc_bands``, never re-reading corpus content, and commits
     the pruned index — and the arriving batch then merges against it.
@@ -268,7 +268,7 @@ def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFram
     retired = history.filter(
         hash_bucket(F.col("doc_id"), salt="retire") < _RETIRE_FRAC
     ).select("doc_id")
-    I.retire_minhash_index(spark, path, retired)
+    I.retire_index(spark, path, retired)
     reps = read_snapshot(spark, path, ["bucket_reps"])["bucket_reps"]
     batch_labels, _remap = I.incremental_minhash_merge(batch, reps)
     return batch_labels.select(

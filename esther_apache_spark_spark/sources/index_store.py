@@ -187,23 +187,24 @@ def commit_snapshot(
       version its frames were computed from) — enforced, because a
       replace that loses a race cannot be re-merged mechanically;
       losing raises :class:`ConcurrentReplaceError` and the caller
-      re-derives from the new latest. ``bump_epoch=True`` (default)
+      re-derives from the new latest. On an empty store an omitted
+      ``expected_base`` means "computed against the empty store": a
+      replace that another commit beats to the first version raises
+      too, rather than erasing it. ``bump_epoch=True`` (default)
       marks the replace as meaning-changing (retirement, rebuild);
       compaction — which preserves the logical view — passes False so
       concurrent appends keep their mechanical re-merge.
     """
     if mode not in ("append", "replace"):
         raise ValueError(f"unknown commit mode: {mode!r}")
-    if (
-        mode == "replace"
-        and expected_base is None
-        and latest_version(path) is not None
-    ):
-        raise ValueError(
-            "replace on a non-empty store requires expected_base (the "
-            "version the replacement frames were computed from) — "
-            "otherwise a concurrent commit can be silently erased"
-        )
+    if mode == "replace" and expected_base is None:
+        if latest_version(path) is not None:
+            raise ValueError(
+                "replace on a non-empty store requires expected_base (the "
+                "version the replacement frames were computed from) — "
+                "otherwise a concurrent commit can be silently erased"
+            )
+        expected_base = 0  # computed against the empty store
     written: dict[str, dict] = {}
     for name, df in delta.items():
         written[name] = {
@@ -215,11 +216,7 @@ def commit_snapshot(
         base_tables = dict(latest["tables"]) if latest else {}
         base_version = latest["version"] if latest else 0
         base_epoch = latest.get("epoch", 0) if latest else 0
-        if (
-            mode == "replace"
-            and expected_base is not None
-            and base_version != expected_base
-        ):
+        if mode == "replace" and base_version != expected_base:
             raise ConcurrentReplaceError(
                 f"replace computed from v{expected_base} but the store "
                 f"is at v{base_version}; re-derive and retry"

@@ -14,7 +14,7 @@
    withCachedData plan string (each lens covers what the other hides).
 
 3. FOLD EQUALITY — a merge folded back into the index store
-   (``commit_*_fold``) resolves (``read_*_index_resolved``) to the
+   (``commit_fold``) resolves (``read_index_resolved``) to the
    fresh build over the unioned corpus, day after day.
 
 Also covers the adversarial merge shapes: a batch doc BRIDGING two
@@ -297,11 +297,11 @@ def _fold_minhash(spark, path, batch):
     resolved view pinned at the latest manifest, commit the fold with
     that manifest's epoch, and return the batch labels."""
     m = S.read_manifest(path)
-    idx = I.read_minhash_index_resolved(spark, path, m["version"])
+    idx = I.read_index_resolved(spark, path, m["version"])
     batch_labels, remap = I.incremental_minhash_merge(
         batch, idx["bucket_reps"]
     )
-    I.commit_minhash_fold(
+    I.commit_fold(
         path, batch, batch_labels, remap, expected_epoch=m["epoch"]
     )
     return batch_labels
@@ -317,7 +317,7 @@ def _assert_minhash_index_equal(got, fresh):
 
 
 def test_minhash_fold_equals_fresh_build(spark, sf_dir, tmp_path):
-    """After the merge is folded back (commit_minhash_fold), the
+    """After the merge is folded back (commit_fold), the
     resolved index must equal build_minhash_bucket_index over the
     UNIONED corpus row-for-row — labels AND bucket reps — so the
     nightly job never needs a from-scratch rebuild."""
@@ -331,7 +331,7 @@ def test_minhash_fold_equals_fresh_build(spark, sf_dir, tmp_path):
     I.commit_index(I.build_minhash_bucket_index(h), path)
     _fold_minhash(spark, path, b)
     _assert_minhash_index_equal(
-        I.read_minhash_index_resolved(spark, path),
+        I.read_index_resolved(spark, path),
         I.build_minhash_bucket_index(docs),
     )
 
@@ -345,7 +345,7 @@ def test_minhash_fold_fixture_shapes(spark, mh_split, tmp_path):
     I.commit_index(I.build_minhash_bucket_index(h), path)
     _fold_minhash(spark, path, b)
     _assert_minhash_index_equal(
-        I.read_minhash_index_resolved(spark, path),
+        I.read_index_resolved(spark, path),
         I.build_minhash_bucket_index(h.unionByName(b)),
     )
 
@@ -356,15 +356,15 @@ def test_srp_fold_equals_fresh_build(spark, vec_split, tmp_path):
     path = str(tmp_path / "srp")
     I.commit_index(I.build_srp_vector_index(h, **kw), path)
     m = S.read_manifest(path)
-    idx = I.read_srp_index_resolved(spark, path, m["version"])
+    idx = I.read_index_resolved(spark, path, m["version"])
     batch_labels, remap = I.incremental_srp_merge(
         b, idx["buckets"], idx["vectors"], idx["labels"], **kw
     )
-    I.commit_srp_fold(
+    I.commit_fold(
         path, b, batch_labels, remap, expected_epoch=m["epoch"],
         n_planes=4, n_tables=12, dim=4,
     )
-    updated = I.read_srp_index_resolved(spark, path)
+    updated = I.read_index_resolved(spark, path)
     fresh = I.build_srp_vector_index(h.unionByName(b), **kw)
     assert _kv(updated["labels"], "node", "comp") == _kv(
         fresh["labels"], "node", "comp"
@@ -390,7 +390,7 @@ def test_two_day_merge_fold_merge_equals_fresh(spark, mh_split, tmp_path):
     bl2 = _fold_minhash(spark, path, b2)
     union = h.unionByName(b1).unionByName(b2)
     _assert_minhash_index_equal(
-        I.read_minhash_index_resolved(spark, path),
+        I.read_index_resolved(spark, path),
         I.build_minhash_bucket_index(union),
     )
     # day-2 batch labels equal the full recompute over the union

@@ -14,7 +14,7 @@ Retirement claims, pinned per modality:
    (minhash ``doc_bands``, SRP ``vectors``); corpus content never
    enters the plan (a takedown may arrive after the slice was TTL'd).
 
-Append-fold claims (folds published by ``commit_*_fold`` to the
+Append-fold claims (folds published by ``commit_fold`` to the
 snapshot store):
 
 3. The resolved read of an append-mode index (appends + remap log)
@@ -73,9 +73,9 @@ def _fold_minhash(spark, path, day):
     """One nightly fold, production pattern: merge against the resolved
     view pinned at the latest manifest, commit with its epoch."""
     m = S.read_manifest(path)
-    resolved = I.read_minhash_index_resolved(spark, path, m["version"])
+    resolved = I.read_index_resolved(spark, path, m["version"])
     bl, rm = I.incremental_minhash_merge(day, resolved["bucket_reps"])
-    I.commit_minhash_fold(path, day, bl, rm, expected_epoch=m["epoch"])
+    I.commit_fold(path, day, bl, rm, expected_epoch=m["epoch"])
 
 
 def _assert_minhash_equals_fresh(surviving, got):
@@ -357,21 +357,21 @@ def test_append_fold_three_day_chain_equals_fresh(spark):
             "old_comp", "new_comp",
         )
         assert (20, 2) in log and (2, 1) in log
-        got = I.read_minhash_index_resolved(spark, path)
+        got = I.read_index_resolved(spark, path)
         _assert_minhash_equals_fresh(union, got)
         # compaction preserves the view and truncates the log: the
         # compacted manifest's remap_log names none of the logged files
         # (Spark writes one schema-only parquet file for the empty
         # frame) and reads back empty
         log_files = set(S.read_manifest(path)["tables"]["remap_log"]["files"])
-        I.compact_index(spark, path, "minhash")
+        I.compact_index(spark, path)
         compacted = S.read_manifest(path)["tables"]["remap_log"]["files"]
         assert log_files and not log_files & set(compacted)
         assert S.read_snapshot(spark, path, ["remap_log"])[
             "remap_log"
         ].count() == 0
         _assert_minhash_equals_fresh(
-            union, I.read_minhash_index_resolved(spark, path)
+            union, I.read_index_resolved(spark, path)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -393,21 +393,21 @@ def test_append_fold_srp_equals_fresh(spark):
         union = h
         for day in days:
             m = S.read_manifest(path)
-            resolved = I.read_srp_index_resolved(spark, path, m["version"])
+            resolved = I.read_index_resolved(spark, path, m["version"])
             bl, rm = I.incremental_srp_merge(
                 day, resolved["buckets"], resolved["vectors"],
                 resolved["labels"], **bkw,
             )
-            I.commit_srp_fold(
+            I.commit_fold(
                 path, day, bl, rm, expected_epoch=m["epoch"],
                 n_planes=4, n_tables=12, dim=4,
             )
             union = union.unionByName(day)
-        got = I.read_srp_index_resolved(spark, path)
+        got = I.read_index_resolved(spark, path)
         _assert_srp_equals_fresh(union, got, bkw)
-        I.compact_index(spark, path, "srp")
+        I.compact_index(spark, path)
         _assert_srp_equals_fresh(
-            union, I.read_srp_index_resolved(spark, path), bkw
+            union, I.read_index_resolved(spark, path), bkw
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

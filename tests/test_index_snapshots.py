@@ -88,11 +88,11 @@ def _fold_once(spark, path, day):
     # fails the commit (StaleAppendError) instead of re-merging stale
     # labels
     m = S.read_manifest(path)
-    resolved = I.read_minhash_index_resolved(spark, path, m["version"])
+    resolved = I.read_index_resolved(spark, path, m["version"])
     bl, rm = I.incremental_minhash_merge(
         day, resolved["bucket_reps"]
     )
-    return I.commit_minhash_fold(
+    return I.commit_fold(
         path, day, bl, rm, expected_epoch=m.get("epoch", 0),
     )
 
@@ -107,7 +107,7 @@ def test_snapshot_lifecycle_equals_fresh_build(spark, store_root):
     assert v == 1
 
     def check(corpus):
-        got = I.read_minhash_index_resolved(spark, path)
+        got = I.read_index_resolved(spark, path)
         fresh = I.build_minhash_bucket_index(corpus)
         assert _labels_set(got) == _labels_set(fresh)
         assert _kv(got["bucket_reps"], "_band", "_bucket", "_rep") == _kv(
@@ -123,13 +123,13 @@ def test_snapshot_lifecycle_equals_fresh_build(spark, store_root):
         union = union.unionByName(day)
         check(union)
 
-    I.retire_minhash_index(
+    I.retire_index(
         spark, path, spark.createDataFrame([(2,), (50,)], "doc_id long")
     )
     union = union.filter(~F.col("doc_id").isin(2, 50))
     check(union)
 
-    I.compact_index(spark, path, "minhash")
+    I.compact_index(spark, path)
     check(union)
     # the log is truncated by the compaction commit (0 rows — the
     # commit may still carry one empty schema-bearing parquet file)
@@ -144,14 +144,14 @@ def test_unpublished_files_are_invisible(spark, store_root):
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A)])
     I.commit_index(I.build_minhash_bucket_index(h), path)
-    before = _labels_set(I.read_minhash_index_resolved(spark, path))
+    before = _labels_set(I.read_index_resolved(spark, path))
     # land data files for a bogus label row, but never publish
     S._write_table_files(
         spark.createDataFrame([(999, 1)], "node long, comp long"),
         path,
         "labels",
     )
-    assert _labels_set(I.read_minhash_index_resolved(spark, path)) == before
+    assert _labels_set(I.read_index_resolved(spark, path)) == before
 
 
 def test_commits_never_touch_live_files_and_time_travel(spark, store_root):
@@ -162,23 +162,23 @@ def test_commits_never_touch_live_files_and_time_travel(spark, store_root):
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
     I.commit_index(I.build_minhash_bucket_index(h), path)
     v1 = S.latest_version(path)
-    labels_v1 = _labels_set(I.read_minhash_index_resolved(spark, path, v1))
+    labels_v1 = _labels_set(I.read_index_resolved(spark, path, v1))
     sigs = _data_file_sigs(path)
 
     _fold_once(spark, path, _docs(spark, [(5, TXT_A)]))
-    I.retire_minhash_index(
+    I.retire_index(
         spark, path, spark.createDataFrame([(20,)], "doc_id long")
     )
-    I.compact_index(spark, path, "minhash")
+    I.compact_index(spark, path)
 
     after = _data_file_sigs(path)
     for p, sig in sigs.items():
         assert after.get(p) == sig, f"live data file touched: {p}"
     assert _labels_set(
-        I.read_minhash_index_resolved(spark, path, v1)
+        I.read_index_resolved(spark, path, v1)
     ) == labels_v1
     # and the latest view reflects all three steps
-    assert _labels_set(I.read_minhash_index_resolved(spark, path)) == {
+    assert _labels_set(I.read_index_resolved(spark, path)) == {
         (5, 5), (10, 5), (11, 5),
     }
 
@@ -320,15 +320,77 @@ def test_replace_requires_expected_base_on_nonempty_store(spark, store_root):
         S.commit_snapshot(path, {"labels": df}, mode="replace")
 
 
+def test_empty_store_replace_race_raises_for_the_loser(
+    spark, store_root, monkeypatch
+):
+    """Two replace-commits computed against an EMPTY store (two index
+    builds publishing to one fresh path): the one that publishes second
+    must raise ConcurrentReplaceError instead of erasing the first. The
+    competitor publishes from inside the first writer's data-file
+    write, so the interleaving is fixed, not left to thread timing."""
+    path = f"{store_root}/t"
+
+    def _df(*pairs):
+        return spark.createDataFrame(list(pairs), "node long, comp long")
+
+    orig = S._write_table_files
+    raced: list = []
+
+    def racing_write(df, p, table):
+        if not raced:
+            raced.append(table)
+            I.commit_index({"labels": _df((2, 2))}, p)
+        return orig(df, p, table)
+
+    monkeypatch.setattr(S, "_write_table_files", racing_write)
+    with pytest.raises(S.ConcurrentReplaceError):
+        I.commit_index({"labels": _df((1, 1))}, path)
+    assert raced == ["labels"]
+    assert S.latest_version(path) == 1
+    got = _kv(S.read_snapshot(spark, path, ["labels"])["labels"],
+              "node", "comp")
+    assert got == {(2, 2)}  # only the competitor's rows
+
+
+@pytest.mark.parametrize(
+    "step", ["read_index_resolved", "compact_index", "retire_index",
+             "commit_fold"],
+)
+def test_lifecycle_rejects_store_without_family(spark, store_root, step):
+    """The lifecycle reads an index's family off its manifest
+    (``bucket_reps`` → MinHash, ``vectors`` → SRP); a store holding
+    neither is not an index, and every step refuses it before
+    publishing anything."""
+    path = f"{store_root}/t"
+    labels = spark.createDataFrame([(1, 1)], "node long, comp long")
+    S.commit_snapshot(path, {"labels": labels}, mode="replace")
+    batch = _docs(spark, [(5, TXT_A)])
+    batch_labels = spark.createDataFrame([(5, 5)], "doc_id long, comp long")
+    remap = spark.createDataFrame([], "old_comp long, new_comp long")
+    calls = {
+        "read_index_resolved": lambda: I.read_index_resolved(spark, path),
+        "compact_index": lambda: I.compact_index(spark, path),
+        "retire_index": lambda: I.retire_index(
+            spark, path, batch.select("doc_id")
+        ),
+        "commit_fold": lambda: I.commit_fold(
+            path, batch, batch_labels, remap
+        ),
+    }
+    with pytest.raises(ValueError, match="neither bucket_reps"):
+        calls[step]()
+    assert S.latest_version(path) == 1
+
+
 def test_retire_invalidates_inflight_fold_end_to_end(spark, store_root):
     """Wrapper-level twin of the stale-append test: a minhash fold
     merged against the pre-retirement resolved view must fail its
-    commit once retire_minhash_index has landed."""
+    commit once retire_index has landed."""
     path = f"{store_root}/mh"
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
     I.commit_index(I.build_minhash_bucket_index(h), path)
     m = S.read_manifest(path)
-    resolved = I.read_minhash_index_resolved(spark, path, m["version"])
+    resolved = I.read_index_resolved(spark, path, m["version"])
     day = _docs(spark, [(5, TXT_A)])
     bl, rm = I.incremental_minhash_merge(
         day, resolved["bucket_reps"]
@@ -336,24 +398,24 @@ def test_retire_invalidates_inflight_fold_end_to_end(spark, store_root):
     bl = bl.localCheckpoint()
     rm = rm.localCheckpoint()
     # the retirement lands while the fold is in flight
-    I.retire_minhash_index(
+    I.retire_index(
         spark, path, spark.createDataFrame([(10,)], "doc_id long")
     )
     with pytest.raises(S.StaleAppendError):
-        I.commit_minhash_fold(
+        I.commit_fold(
             path, day, bl, rm, expected_epoch=m.get("epoch", 0),
         )
     # re-derived against the post-retirement view: goes through and
     # equals the fresh build over the post-retirement corpus
     m2 = S.read_manifest(path)
-    resolved2 = I.read_minhash_index_resolved(spark, path, m2["version"])
+    resolved2 = I.read_index_resolved(spark, path, m2["version"])
     bl2, rm2 = I.incremental_minhash_merge(
         day, resolved2["bucket_reps"]
     )
-    I.commit_minhash_fold(
+    I.commit_fold(
         path, day, bl2, rm2, expected_epoch=m2.get("epoch", 0),
     )
-    got = I.read_minhash_index_resolved(spark, path)
+    got = I.read_index_resolved(spark, path)
     fresh = I.build_minhash_bucket_index(
         h.filter(F.col("doc_id") != 10).unionByName(day),
     )
@@ -393,14 +455,14 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
                 day = _docs(spark, rows)
                 for _ in range(12):
                     m = S.read_manifest(path)
-                    resolved = I.read_minhash_index_resolved(
+                    resolved = I.read_index_resolved(
                         spark, path, m["version"]
                     )
                     bl, rm = I.incremental_minhash_merge(
                         day, resolved["bucket_reps"]
                     )
                     try:
-                        I.commit_minhash_fold(
+                        I.commit_fold(
                             path, day, bl, rm,
                             expected_epoch=m.get("epoch", 0),
                         )
@@ -420,7 +482,7 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
                 ids = spark.createDataFrame([(rid,)], "doc_id long")
                 for _ in range(12):
                     try:
-                        I.retire_minhash_index(spark, path, ids)
+                        I.retire_index(spark, path, ids)
                         break
                     except S.ConcurrentReplaceError:
                         stale_retries["retire"] += 1
@@ -444,7 +506,7 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
         _docs(spark, [r for b in batches for r in b])
     ).filter(~F.col("doc_id").isin(retire_ids))
     fresh = I.build_minhash_bucket_index(final_corpus)
-    got = I.read_minhash_index_resolved(spark, path)
+    got = I.read_index_resolved(spark, path)
     assert _labels_set(got) == _labels_set(fresh)
 
 
@@ -478,8 +540,8 @@ def test_vacuum_keeps_horizon_and_drops_the_rest(spark, store_root):
     h = _docs(spark, [(10, TXT_A), (11, TXT_A), (20, TXT_C), (21, TXT_C)])
     I.commit_index(I.build_minhash_bucket_index(h), path)
     _fold_once(spark, path, _docs(spark, [(5, TXT_A)]))
-    I.compact_index(spark, path, "minhash")  # v3: fresh files only
-    want = _labels_set(I.read_minhash_index_resolved(spark, path))
+    I.compact_index(spark, path)  # v3: fresh files only
+    want = _labels_set(I.read_index_resolved(spark, path))
 
     n_files_before = len(_data_file_sigs(path))
     stats = S.vacuum_snapshots(path, keep_last=1, grace_seconds=0)
@@ -487,7 +549,7 @@ def test_vacuum_keeps_horizon_and_drops_the_rest(spark, store_root):
     assert stats["files_deleted"] > 0
     assert len(_data_file_sigs(path)) == n_files_before - stats["files_deleted"]
     # kept version unchanged; vacuumed versions are gone
-    assert _labels_set(I.read_minhash_index_resolved(spark, path)) == want
+    assert _labels_set(I.read_index_resolved(spark, path)) == want
     with pytest.raises(FileNotFoundError):
         S.read_manifest(path, 1)
     # referenced-file accounting was exact: nothing the kept manifest
@@ -612,17 +674,17 @@ def test_srp_snapshot_fold_and_retire(spark, store_root):
     h = _vecs([(10, base), (11, base), (20, other), (30, other)])
     I.commit_index(I.build_srp_vector_index(h, **bkw), path)
     day = _vecs([(5, base), (50, [0.0, 0.0, 0.1, -1.0])])
-    resolved = I.read_srp_index_resolved(spark, path)
+    resolved = I.read_index_resolved(spark, path)
     bl, rm = I.incremental_srp_merge(
         day, resolved["buckets"], resolved["vectors"], resolved["labels"],
         **bkw,
     )
-    I.commit_srp_fold(path, day, bl, rm, n_planes=4, n_tables=12, dim=4)
-    I.retire_srp_index(
+    I.commit_fold(path, day, bl, rm, n_planes=4, n_tables=12, dim=4)
+    I.retire_index(
         spark, path, spark.createDataFrame([(10,)], "vec_id long"),
         **{**kw, "seed": 42},
     )
-    got = I.read_srp_index_resolved(spark, path)
+    got = I.read_index_resolved(spark, path)
     fresh = I.build_srp_vector_index(
         h.unionByName(day).filter(F.col("vec_id") != 10), **bkw
     )

@@ -56,7 +56,7 @@ def _kv(df, *cols):
 
 
 def _assert_resolved_equals_fresh(spark, path, live, trace):
-    got = I.read_minhash_index_resolved(spark, path)
+    got = I.read_index_resolved(spark, path)
     corpus = spark.createDataFrame(
         sorted(live.items()), "doc_id long, text string"
     )
@@ -111,13 +111,13 @@ def test_random_lifecycle_schedule_matches_fresh_build(spark, seed):
                     sorted(batch_rows.items()), "doc_id long, text string"
                 )
                 m = S.read_manifest(path)
-                resolved = I.read_minhash_index_resolved(
+                resolved = I.read_index_resolved(
                     spark, path, m["version"]
                 )
                 bl, rm = I.incremental_minhash_merge(
                     batch, resolved["bucket_reps"]
                 )
-                I.commit_minhash_fold(
+                I.commit_fold(
                     path, batch, bl, rm,
                     expected_epoch=m.get("epoch", 0),
                 )
@@ -128,7 +128,7 @@ def test_random_lifecycle_schedule_matches_fresh_build(spark, seed):
                     continue
                 k = min(len(live), rng.randint(1, 4))
                 ids = rng.sample(sorted(live), k)
-                I.retire_minhash_index(
+                I.retire_index(
                     spark,
                     path,
                     spark.createDataFrame(
@@ -139,7 +139,7 @@ def test_random_lifecycle_schedule_matches_fresh_build(spark, seed):
                     del live[i]
                 trace.append(f"retire({sorted(ids)})")
             elif op == "compact":
-                I.compact_index(spark, path, "minhash")
+                I.compact_index(spark, path)
                 trace.append("compact")
             else:
                 # grace 0: ops are single-threaded here, no writer in

@@ -9,7 +9,8 @@ on a hash split of the given corpus (history = 1 - batch_frac):
   band/bucket projection, one snapshot commit to the index store.
   Paid once per corpus refresh.
 - ``merge_sec`` — the DAILY cost: band the arriving batch, probe the
-  persisted index, self-join the batch, CC over the touched subgraph,
+  persisted index (its resolved view, as the nightly fold reads it),
+  self-join the batch, CC over the touched subgraph,
   materialize batch labels + remap. This is the number that must stay
   small as history grows.
 - ``full_recompute_sec`` — what a pipeline without the index pays
@@ -67,7 +68,6 @@ def main() -> None:
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import EMBEDDING_DIM, load_table
     from esther_apache_spark_spark.session import get_spark
-    from esther_apache_spark_spark.sources.index_store import read_snapshot
 
     spark = get_spark("incremental-scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -104,7 +104,7 @@ def main() -> None:
     I.commit_index(I.build_minhash_bucket_index(hist), idx_path)
     build = time.perf_counter() - t0
 
-    idx = read_snapshot(spark, idx_path, ["bucket_reps", "labels"])
+    idx = I.read_index_resolved(spark, idx_path)
     if cold:
         _drop_caches()
     t0 = time.perf_counter()
@@ -143,7 +143,7 @@ def main() -> None:
     I.commit_index(I.build_srp_vector_index(vh, **kw), srp_path)
     build = time.perf_counter() - t0
 
-    vidx = read_snapshot(spark, srp_path, ["buckets", "vectors", "labels"])
+    vidx = I.read_index_resolved(spark, srp_path)
     if cold:
         _drop_caches()
     t0 = time.perf_counter()

@@ -104,7 +104,7 @@ def snapshot_arm(spark, path: str, history, days, retired,
                     time.sleep(0.02)
                     continue
                 chk = _checksum(
-                    I.read_minhash_index_resolved(spark, path, v)
+                    I.read_index_resolved(spark, path, v)
                 )
                 observations.append((v, chk))
             except Exception as e:  # noqa: BLE001
@@ -124,19 +124,19 @@ def snapshot_arm(spark, path: str, history, days, retired,
     for day in days:
         t1 = time.perf_counter()
         m = S.read_manifest(path)
-        resolved = I.read_minhash_index_resolved(spark, path, m["version"])
+        resolved = I.read_index_resolved(spark, path, m["version"])
         bl, rm = I.incremental_minhash_merge(
             day, resolved["bucket_reps"]
         )
-        I.commit_minhash_fold(
+        I.commit_fold(
             path, day, bl, rm, expected_epoch=m.get("epoch", 0),
         )
         commit_secs.append(round(time.perf_counter() - t1, 3))
     t1 = time.perf_counter()
-    I.retire_minhash_index(spark, path, retired)
+    I.retire_index(spark, path, retired)
     retire_sec = round(time.perf_counter() - t1, 3)
     t1 = time.perf_counter()
-    I.compact_index(spark, path, "minhash")
+    I.compact_index(spark, path)
     compact_sec = round(time.perf_counter() - t1, 3)
     # let readers catch the final state before stopping
     time.sleep(1.0)
@@ -151,13 +151,13 @@ def snapshot_arm(spark, path: str, history, days, retired,
     # observe it — the post-vacuum check below needs it)
     latest = S.latest_version(path)
     canon = {
-        v: _checksum(I.read_minhash_index_resolved(spark, path, v))
+        v: _checksum(I.read_index_resolved(spark, path, v))
         for v in sorted({v for v, _ in observations} | {latest})
     }
     mismatches = [(v, chk) for v, chk in observations if canon[v] != chk]
     vac = S.vacuum_snapshots(path, keep_last=2, grace_seconds=0)
     latest_ok = _checksum(
-        I.read_minhash_index_resolved(spark, path)
+        I.read_index_resolved(spark, path)
     ) == canon[latest]
     out = {
         "wall_sec": round(wall, 3),
