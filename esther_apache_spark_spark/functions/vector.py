@@ -9,8 +9,18 @@ vectorized alternative for wide top-k scans.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def vector_dim(df: DataFrame, vec_col: str) -> int:
+    """The width of ``vec_col``, read off the first row — one driver
+    job, which callers skip when ``dim`` is passed."""
+    first = df.select(F.size(vec_col).alias("d")).first()
+    if first is None:
+        raise ValueError("empty dataframe; pass dim explicitly")
+    return first["d"]
+
 
 def dot(a: Column, b: Column) -> Column:
     """Elementwise dot product of two array<numeric> columns."""

@@ -58,6 +58,7 @@ from esther_apache_spark_spark.functions.text import (
     tokenize,
     word_shingles,
 )
+from esther_apache_spark_spark.functions.vector import is_valid_vector, vector_dim
 from esther_apache_spark_spark.operators.windows import keep_first
 
 # --- cache lifecycle -------------------------------------------------------
@@ -148,18 +149,7 @@ def _non_null_vec(df: DataFrame, vec_col: str) -> DataFrame:
     """Exclude NULL vectors and vectors with NULL elements: cosine is
     undefined for them, and a ragged batch would kill the GEMM kernels
     mid-job at scale. Mirrors the kernels' zero-norm exclusion."""
-    from esther_apache_spark_spark.functions.vector import is_valid_vector
-
     return df.filter(is_valid_vector(F.col(vec_col)))
-
-
-def _vector_dim(df: DataFrame, vec_col: str) -> int:
-    """The width of ``vec_col``, read off the first row — one driver
-    job, which callers skip when ``dim`` is passed."""
-    first = df.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        raise ValueError("empty dataframe; pass dim explicitly")
-    return first["d"]
 
 
 def exact_dedup(df: DataFrame, on: str | list[str], keep_by: list[Column] | None = None) -> DataFrame:
@@ -1498,7 +1488,7 @@ def embedding_cosine_dups(
         df, F.md5(F.to_json(F.col(vec_col))), collapse_exact, "vec"
     )
     if dim is None:
-        dim = _vector_dim(df, vec_col)
+        dim = vector_dim(df, vec_col)
 
     # NO cast to array<double> here: the source column is float32 and
     # every consumer of _v is a numpy kernel that widens to float64 on
@@ -1734,7 +1724,7 @@ def embedding_cosine_components(
             pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
     if dim is None:
-        dim = _vector_dim(df, vec_col)
+        dim = vector_dim(df, vec_col)
     base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     groups, members = _collapse_identical_vec(base)
     rep_pairs = _srp_rep_pairs(

@@ -65,6 +65,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esther_apache_spark_spark.functions.vector import vector_dim
 from esther_apache_spark_spark.operators import dedup as D
 from esther_apache_spark_spark.operators.components import connected_components
 from esther_apache_spark_spark.sources import index_store as S
@@ -303,7 +304,7 @@ def _srp_doc_rows(
     )
 
     if dim is None:
-        dim = D._vector_dim(docs, vec_col)
+        dim = vector_dim(docs, vec_col)
     proj = docs.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
@@ -336,7 +337,7 @@ def build_srp_vector_index(
     ``labels`` (CC over cosine-gated pairs, the
     ``embedding_cosine_components`` labels)."""
     if dim is None:
-        dim = D._vector_dim(history, vec_col)
+        dim = vector_dim(history, vec_col)
     labels = D.embedding_cosine_components(
         history,
         id_col=id_col,
@@ -393,7 +394,7 @@ def srp_batch_history_hits(
     )
 
     if dim is None:
-        dim = D._vector_dim(batch, vec_col)
+        dim = vector_dim(batch, vec_col)
     bproj = D._cache(
         batch.select(
             F.col(id_col).alias("_bid"),

@@ -27,6 +27,7 @@ from esther_apache_spark_spark.functions.vector import (
     cosine_similarity,
     dot,
     is_valid_vector,
+    vector_dim,
 )
 from esther_apache_spark_spark.operators.windows import top_k_per_group
 
@@ -216,10 +217,7 @@ def lsh_bucket(
     SRP-LSH). Vectors with equal bucket are cosine-similar with high
     probability; bucket count is 2^n_planes."""
     if dim is None:
-        first = df.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("empty dataframe; pass dim explicitly")
-        dim = first["d"]
+        dim = vector_dim(df, vec_col)
     planes = _plane_literals(dim, n_planes, seed)
     v = F.col(vec_col).cast("array<double>")
     bucket: Column = F.lit(0).cast("long")
@@ -469,10 +467,7 @@ def ann_topk_lsh(
         pairs = cb.join(qb, "bucket")
     else:
         if dim is None:
-            first = corpus.select(F.size(vec_col).alias("d")).first()
-            if first is None:
-                raise ValueError("empty dataframe; pass dim explicitly")
-            dim = first["d"]
+            dim = vector_dim(corpus, vec_col)
         # (table, bucket) exploded from the per-table signature array;
         # the same seeded planes (expression form — SQL-replayable by
         # the catalog oracle) bucket both sides.

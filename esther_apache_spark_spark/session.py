@@ -40,13 +40,23 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, Any] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-sane defaults.
+    """Build a SparkSession with scale-sane defaults, or return the live
+    one untouched.
 
     ``master`` defaults to ``local[N]`` where N comes from
     ``$SPARK_GRAFT_CPUS`` (driver contract) or the machine's core count.
     On a real cluster pass ``master=None`` via spark-submit and these
     builder calls merge with the cluster conf.
+
+    The arguments apply only when a session is created. A live session
+    is returned as it is: ``getOrCreate`` would re-apply every builder
+    conf to it, so a second caller (a CLI entry point, a tool run inside
+    a test process) would silently change the shuffle width and app name
+    under every query already planning on that session.
     """
+    live = SparkSession._instantiatedSession  # getOrCreate's own reuse test
+    if live is not None and live._sc._jsc is not None:
+        return live
     cores = _local_cores()
     builder = (
         SparkSession.builder.appName(app_name)

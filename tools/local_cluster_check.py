@@ -22,9 +22,10 @@ Exit code 0 iff every query ran and row counts matched.
 ``--kill-executor`` (VERDICT r9 #5) is the executor-LOSS drill the
 plain tier cannot provide: it runs ``semantic_dedup_survivors`` (the
 checkpointed-CC heavyweight) once undisturbed for a baseline, then
-again while SIGKILLing one executor JVM mid-flight (at ~40% of the
-baseline wall-clock — inside the CC iteration), and asserts the
-second run COMPLETES with row-identical results. Recovery is Spark
+again while SIGKILLing one executor JVM mid-flight (as the first
+distributed CC round checkpoints, which the drill forces by setting
+``components.DRIVER_MAX_EDGES = 0``), and asserts the second run
+COMPLETES with row-identical results. Recovery is Spark
 standalone's own machinery — the worker relaunches the executor, lost
 tasks re-run, lost shuffle blocks recompute from lineage, and the CC
 rounds' reliable disk checkpoints (shared storage) survive the loss —
@@ -76,16 +77,35 @@ def _kill_executor_drill(sf_dir: str) -> None:
         "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/spark_graft_ckpt_lc"
     )
     from esther_apache_spark_spark import plans
+    from esther_apache_spark_spark.operators import components
     from esther_apache_spark_spark.session import get_spark
 
+    # The drill exists to lose an executor inside the distributed CC
+    # rounds; the survivor graph (826 edges at sf0.1) would otherwise be
+    # labelled in driver memory.
+    components.DRIVER_MAX_EDGES = 0
+    master = "local-cluster[2,8,4096]"
     spark = get_spark(
         "local-cluster-kill-drill",
-        master="local-cluster[2,8,8192]",
+        master=master,
         shuffle_partitions=16,
-        extra_conf={"spark.executor.memory": "7g"},
+        extra_conf={"spark.executor.memory": "3g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     spec = plans.QUERIES["semantic_dedup_survivors"]
+
+    # The kill waits for the first round checkpoint of the disturbed
+    # run: a fixed delay measured on the cold baseline landed after the
+    # warm run had already finished.
+    frame_cls = type(spark.range(0))
+    in_rounds = threading.Event()
+    checkpoint = frame_cls.checkpoint
+
+    def _checkpoint(self, *args, **kwargs):
+        in_rounds.set()
+        return checkpoint(self, *args, **kwargs)
+
+    frame_cls.checkpoint = _checkpoint
 
     def run_once() -> tuple[set, float]:
         t0 = time.perf_counter()
@@ -107,9 +127,15 @@ def _kill_executor_drill(sf_dir: str) -> None:
         except Exception as exc:  # noqa: BLE001 — the drill's verdict
             result["err"] = str(exc).splitlines()[0][:300]
 
+    in_rounds.clear()
     th = threading.Thread(target=_target)
+    t0 = time.perf_counter()
     th.start()
-    time.sleep(max(1.0, 0.4 * t_base))  # land inside the CC iteration
+    while not in_rounds.wait(0.1) and th.is_alive():
+        pass
+    time.sleep(0.2)  # let the checkpoint job start its tasks
+    kill_at = time.perf_counter() - t0
+    in_flight = in_rounds.is_set() and th.is_alive()
     pids = _executor_pids()
     killed = None
     if pids:
@@ -120,19 +146,21 @@ def _kill_executor_drill(sf_dir: str) -> None:
     spark.stop()
     ok = (
         killed is not None
+        and in_flight
         and "err" not in result
         and result.get("rows") == baseline
     )
     out = {
         "ok": ok,
         "mode": "kill-executor",
-        "master": "local-cluster[2,8,8192]",
+        "master": master,
         "sf_dir": sf_dir,
         "query": "semantic_dedup_survivors",
         "baseline_rows": len(baseline),
         "baseline_sec": round(t_base, 3),
         "killed_pid": killed,
-        "kill_at_sec": round(max(1.0, 0.4 * t_base), 3),
+        "kill_at_sec": round(kill_at, 3),
+        "killed_in_flight": in_flight,
         "recovered_rows": len(result.get("rows", ())),
         "recovered_sec": round(result.get("sec", 0.0), 3),
         "rows_identical": result.get("rows") == baseline,
