@@ -12,7 +12,12 @@ library pieces:
    are nondeterministic in the reference; we order by the full item
    tuple so results are stable)
 4. distributed sinks — ``partitionBy`` CSV layout instead of a driver-side
-   pandas groupby loop; sqlite kept as the explicit small-result boundary
+   pandas groupby loop; sqlite kept as the explicit small-result boundary.
+   ``orders_clean`` is a subtree of ``daily_city_sales``, and the writer
+   materializes these two multi-consumer frames once, in its own
+   ``cache_scope``, instead of re-running the lineage for each sink. The
+   builder itself stays lazy and caches only the customers dimension,
+   so single-consumer callers pay no cache fill.
 
 Deliberately preserved reference semantics (SURVEY.md §7 hard parts):
 
@@ -35,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esther_apache_spark_spark.functions.cleaning import order_date_str, truthy_bool
+from esther_apache_spark_spark.operators.dedup import _cache, cache_scope
 from esther_apache_spark_spark.schemas import (
     FRESHKART_CUSTOMERS,
     FRESHKART_ORDERS,
@@ -71,11 +77,8 @@ def run_freshkart_pipeline(
     # persist(StorageLevel) (reference tuto_rdd_pyspark(2).ipynb cells
     # 33-35); the default cache() is already MEMORY_AND_DISK, the right
     # level when a cached dim can outgrow executor memory at 100 TB.
-    customers_clean = (
-        customers_clean.cache()
-        if dim_storage_level is None
-        else customers_clean.persist(dim_storage_level)
-    )
+    # Enrolled in the active cache_scope, which unpersists it on exit.
+    customers_clean = _cache(customers_clean, dim_storage_level)
     refunds_clean = (
         refunds.withColumn("amount", F.col("amount").try_cast("double"))
         .na.fill({"amount": 0.0})
@@ -131,25 +134,27 @@ def run_freshkart_pipeline(
         .withColumn("order_date", order_date_str(F.col("created_at")))
     )
 
-    # -- refunds pre-aggregated BELOW the join (J2/A2, reference :156-161) -
+    # ``orders_clean`` is a subtree of the daily aggregate, so a writer
+    # that caches it computes the JSON scan, dedup and per-order chain
+    # once for both sinks.
+    orders_clean = per_order_active.select(
+        "order_id",
+        "customer_id",
+        "city",
+        "channel",
+        "order_date",
+        "items_sold",
+        "gross_revenue_eur",
+    )
+
+    # -- refunds pre-aggregated BELOW the join (J2/A2, reference :156-161);
+    #    one row per order_id, so the left join adds no rows -------------
     refunds_sum = refunds_clean.groupBy("order_id").agg(
         F.sum("amount").alias("refunds_eur")
     )
-    per_order_ref = (
-        per_order_active.join(F.broadcast(refunds_sum), on="order_id", how="left")
-        .na.fill({"refunds_eur": 0.0})
-        .select(
-            "order_id",
-            "customer_id",
-            "city",
-            "channel",
-            "order_date",
-            "created_at",
-            "items_sold",
-            "gross_revenue_eur",
-            "refunds_eur",
-        )
-    )
+    per_order_ref = orders_clean.join(
+        F.broadcast(refunds_sum), on="order_id", how="left"
+    ).na.fill({"refunds_eur": 0.0})
 
     # -- daily aggregate + net (reference :175-184) ------------------------
     agg_df = (
@@ -168,16 +173,6 @@ def run_freshkart_pipeline(
         )
         .withColumnRenamed("order_date", "date")
         .orderBy("date", "city", "channel")
-    )
-
-    orders_clean = per_order_ref.select(
-        "order_id",
-        "customer_id",
-        "city",
-        "channel",
-        "order_date",
-        "items_sold",
-        "gross_revenue_eur",
     )
 
     return {
@@ -200,19 +195,27 @@ def write_freshkart_outputs(
     defaults are the reference's ``;`` + ``%.2f`` (``settings.yaml:6-9``)
     — sqlite as the small-result boundary (K3), rejects side channel
     (K4). ``settings.run_freshkart_from_settings`` wires a reference
-    settings file straight through to these parameters."""
-    write_csv_dialect(
-        dfs["daily_city_sales"],
-        f"{output_dir}/daily_city_sales_csv",
-        sep=sep,
-        float_cols=["items_sold", "gross_revenue_eur", "refunds_eur", "net_revenue_eur"],
-        float_format_decimals=float_format_decimals,
-        partition_by="date",
-        encoding=encoding,
-    )
-    write_csv_dialect(
-        dfs["rejects"], f"{output_dir}/rejects_items_csv", sep=sep,
-        single_file=True, encoding=encoding,
-    )
-    write_sqlite(dfs["orders_clean"], db_path, "orders_clean")
-    write_sqlite(dfs["daily_city_sales"], db_path, "daily_city_sales")
+    settings file straight through to these parameters.
+
+    ``orders_clean`` and ``daily_city_sales`` each feed two sinks, so
+    both are cached for the duration of the write (``orders_clean``
+    first: the daily aggregate is built on it and reads its cache) and
+    unpersisted when it returns or raises."""
+    with cache_scope():
+        orders_clean = _cache(dfs["orders_clean"])
+        daily = _cache(dfs["daily_city_sales"])
+        write_csv_dialect(
+            daily,
+            f"{output_dir}/daily_city_sales_csv",
+            sep=sep,
+            float_cols=["items_sold", "gross_revenue_eur", "refunds_eur", "net_revenue_eur"],
+            float_format_decimals=float_format_decimals,
+            partition_by="date",
+            encoding=encoding,
+        )
+        write_csv_dialect(
+            dfs["rejects"], f"{output_dir}/rejects_items_csv", sep=sep,
+            single_file=True, encoding=encoding,
+        )
+        write_sqlite(orders_clean, db_path, "orders_clean")
+        write_sqlite(daily, db_path, "daily_city_sales")

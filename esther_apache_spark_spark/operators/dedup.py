@@ -70,11 +70,12 @@ _active_cache_scope: ContextVar[list | None] = ContextVar(
 )
 
 
-def _cache(df: DataFrame) -> DataFrame:
+def _cache(df: DataFrame, storage_level=None) -> DataFrame:
     """``df.cache()`` (MEMORY_AND_DISK deserialized — a cached frame
-    larger than executor memory spills instead of thrashing eviction)
-    that enrolls the frame in the active cache_scope."""
-    df = df.cache()
+    larger than executor memory spills instead of thrashing eviction),
+    or ``df.persist(storage_level)`` when one is given, that enrolls the
+    frame in the active cache_scope."""
+    df = df.cache() if storage_level is None else df.persist(storage_level)
     scope = _active_cache_scope.get()
     if scope is not None:
         scope.append(df)

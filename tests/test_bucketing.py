@@ -41,7 +41,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     # skip the bucketed read ("Bucketed: false (disabled by query
     # planner)") — disable auto-broadcast to exercise the path a 100 TB
     # fact⋈fact join would take.
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    thresh = spark.conf.getAll.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         plan = _explain(joined)
@@ -57,4 +57,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         agg_plan = _explain(lb.groupBy("l_orderkey").agg(F.sum("l_quantity")))
         assert "Exchange" not in agg_plan, agg_plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+        if thresh is None:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        else:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)

@@ -220,14 +220,17 @@ def test_tokenize_sql_independent_of_escaped_string_literals(spark):
     df = spark.createDataFrame([("Hello, World!\tA_b",)], "text string")
     want = df.select(tokenize(F.col("text"))).first()[0]
     assert want == ["hello", "world", "a_b"]
-    old = spark.conf.get(conf)
+    old = spark.conf.getAll.get(conf)
     try:
         for setting in ("true", "false"):
             spark.conf.set(conf, setting)
             got = df.selectExpr(tokenize_sql("text")).first()[0]
             assert got == want, setting
     finally:
-        spark.conf.set(conf, old)
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
 
 
 def test_minhash_vec_properties(spark):

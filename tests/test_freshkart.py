@@ -76,6 +76,80 @@ def test_csv_dialect_and_partitioned_layout(fk, tmp_path):
     assert len(rej) == 1
 
 
+def _input_rows_since(spark, last_stage: int) -> tuple[int, int]:
+    """(input rows summed over the stages newer than ``last_stage`` that
+    ran, newest stage id), read from the in-process status store the way
+    ``perfbench/tracing.py:stage_stats`` reads it. A scan counts its file
+    rows; a cached-block read counts one record per columnar batch."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    no_quantiles = spark.sparkContext._gateway.new_array(
+        spark.sparkContext._gateway.jvm.double, 0
+    )
+    seq = jsc.statusStore().stageList(None, False, False, no_quantiles, None)
+    rows, newest = 0, last_stage
+    while not seq.isEmpty():  # newest first
+        st = seq.head()
+        seq = seq.tail()
+        if st.stageId() <= last_stage:
+            break
+        newest = max(newest, st.stageId())
+        if st.status().toString() != "SKIPPED":
+            rows += st.inputRecords()
+    return rows, newest
+
+
+def test_write_computes_each_shared_frame_once(spark, fk, tmp_path):
+    """One write reads the orders input at most twice: once for the
+    chain ``orders_clean`` and ``daily_city_sales`` share, once for the
+    rejects sink. Refunds and customers are read at most once each. A
+    writer that recomputes per sink reads the orders four times."""
+    import json
+    from pathlib import Path
+
+    fixture = Path(ensure_fixture())
+    n_orders = sum(len(json.loads(f.read_text())) for f in fixture.glob("orders_*.json"))
+    n_other = sum(
+        len((fixture / f"{name}.csv").read_text().splitlines()) - 1
+        for name in ("refunds", "customers")
+    )
+    _, last = _input_rows_since(spark, -1)
+    write_freshkart_outputs(fk, str(tmp_path), str(tmp_path / "sales.db"))
+    rows, _ = _input_rows_since(spark, last)
+    assert rows >= 2 * n_orders, rows  # both orders scans were seen
+    assert rows <= 2 * n_orders + n_other, (rows, n_orders, n_other)
+
+
+def test_write_leaves_no_cache_behind(spark, fk, tmp_path):
+    """The writer's two caches live only for the write."""
+    from pyspark import StorageLevel
+
+    write_freshkart_outputs(fk, str(tmp_path), str(tmp_path / "sales.db"))
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    for name in ("orders_clean", "daily_city_sales"):
+        assert fk[name].storageLevel == StorageLevel.NONE, name
+        assert cache_manager.lookupCachedData(fk[name]._jdf).isEmpty(), name
+
+
+@pytest.mark.parametrize("level", [None, "DISK_ONLY"])
+def test_dim_cache_freed_by_the_active_scope(spark, level):
+    """The customers dim cache, at the default level or an explicit one,
+    is enrolled in the active ``cache_scope`` and gone once it exits."""
+    from pyspark import StorageLevel
+
+    from esther_apache_spark_spark.operators.dedup import cache_scope
+
+    def cached_plan(df) -> str:
+        # a fresh Dataset re-runs the cache lookup
+        return df.select("*")._jdf.queryExecution().withCachedData().toString()
+
+    storage_level = getattr(StorageLevel, level) if level else None
+    with cache_scope():
+        dfs = run_freshkart_pipeline(spark, ensure_fixture(), storage_level)
+        assert "InMemoryRelation" in cached_plan(dfs["orders_clean"])
+    assert "InMemoryRelation" not in cached_plan(dfs["orders_clean"])
+
+
 def test_run_from_settings_file(spark, tmp_path):
     """The reference's config contract end-to-end: a settings.yaml with
     relative paths and a custom dialect drives the whole pipeline —

@@ -187,14 +187,12 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
     from esther_apache_spark_spark.schemas import load_table
     from esther_apache_spark_spark.session import runtime_filter_conf
 
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        )
-    }
     conf = runtime_filter_conf(application_side_threshold="0")
-    for k in conf:
-        saved[k] = spark.conf.get(k)
+    # None: not set in the session, so restore by unsetting
+    saved = {
+        k: spark.conf.getAll.get(k)
+        for k in ("spark.sql.autoBroadcastJoinThreshold", *conf)
+    }
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)
@@ -219,7 +217,10 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
         )
     finally:
         for k, v in saved.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_dynamic_partition_pruning_on_partitioned_fact(spark, sf_dir, tmp_path):
