@@ -3,8 +3,9 @@
 Engine extension (SURVEY.md §7 M4): no reference citation — the
 reference has no vector surface. Implemented as higher-order built-in
 functions (``zip_with`` / ``aggregate``) so similarity math stays
-JVM-side; the Pandas-UDF path in ``operators.similarity`` is the
-vectorized alternative for wide top-k scans.
+JVM-side; the GEMM panel scan in ``operators.similarity`` (one
+``mapInArrow`` kernel) is the vectorized alternative for wide top-k
+scans.
 """
 
 from __future__ import annotations

@@ -31,7 +31,7 @@ from esther_apache_spark_spark.operators.sampling import (
 from esther_apache_spark_spark.operators.similarity import (
     ann_topk_lsh,
     brute_force_topk,
-    brute_force_topk_pandas,
+    brute_force_topk_arrow,
     ivf_topk,
 )
 from esther_apache_spark_spark.operators.skew import salted_collect_list, salted_join
@@ -68,7 +68,7 @@ __all__ = [
     "salted_collect_list",
     # similarity
     "brute_force_topk",
-    "brute_force_topk_pandas",
+    "brute_force_topk_arrow",
     "ann_topk_lsh",
     "ivf_topk",
     # text

@@ -1,17 +1,23 @@
 """Similarity search over embedding columns (SURVEY.md §7 M4).
 
-Engine extension — the reference has no vector surface. Two paths:
+Engine extension — the reference has no vector surface. Three shapes:
 
 - ``brute_force_topk``: exact cosine top-k. The query set is broadcast
   (small side), the corpus streams — one pass, no shuffle of the corpus;
-  per-query ranking is a window over (query, score). Baseline and
-  correctness oracle for the approximate path.
-- ``lsh_bucket`` / ``ann_topk_lsh``: random-hyperplane LSH (sign of dot
-  product with seeded deterministic planes) bucketing; exact rerank
-  within buckets. The 100 TB path: candidate generation is an equi-join
-  on bucket, never all-pairs.
+  per-query ranking is a window over (query, score). It has no cap on
+  the query set and is the correctness oracle for every other path.
+- ``ann_topk_lsh`` / ``ivf_topk``: random-hyperplane SRP-LSH buckets
+  (sign of dot product with seeded deterministic planes, one signature
+  per table) or IVF inverted lists; exact rerank within them. The 100 TB
+  path: candidate generation is an equi-join, never all-pairs.
+- One GEMM panel scan (``_panel_topk``) behind ``brute_force_topk_arrow``
+  (exact, optionally below a ``max_cosine`` ceiling), ``ann_topk_int8``
+  and ``pq_topk``: the bounded query panel is collected to the driver,
+  every ``mapInArrow`` batch is scored by numpy, and a tie-safe local
+  cut keeps ≤ k rows per query per batch. The kernels differ only in
+  how they prepare the query side and score a batch.
 
-All vector math uses built-in higher-order functions (see
+Expression-form vector math uses built-in higher-order functions (see
 ``functions.vector``); deterministic planes come from a seeded NumPy
 generator materialized as literals — no RNG at execution time.
 """
@@ -20,6 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,7 +40,7 @@ from esther_apache_spark_spark.functions.vector import (
 from esther_apache_spark_spark.operators.windows import top_k_per_group
 
 #: Hard cap on the driver-collected "query panel" accepted by the
-#: GEMM-kernel top-k variants (``brute_force_topk_pandas`` / ``_arrow``,
+#: GEMM-kernel top-k variants (``brute_force_topk_arrow``,
 #: ``ann_topk_int8``, ``pq_topk``). Those kernels close the query matrix
 #: over every task — correct and fast for a bounded panel (10k × 768
 #: float64 ≈ 60 MB broadcast), but a data-sized "queries" frame would
@@ -40,6 +48,8 @@ from esther_apache_spark_spark.operators.windows import top_k_per_group
 #: guidance instead; the fully distributed paths (``brute_force_topk``,
 #: ``ann_topk_lsh``) have no such bound.
 MAX_QUERY_PANEL_ROWS = 10_000
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double"
 
 
 def _collect_query_panel(
@@ -66,9 +76,106 @@ def _collect_query_panel(
             "for a bounded query panel. For a data-sized query set use "
             "the fully distributed paths: brute_force_topk (broadcast "
             "cross-score) or ann_topk_lsh (bucketed equi-join), or "
-            "raise max_rows explicitly if the panel is known to fit."
+            "raise max_query_rows explicitly if the panel is known to fit."
         )
     return rows
+
+
+def _panel_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    max_query_rows: int | None,
+    prepare,
+    score,
+    max_cosine: float | None = None,
+) -> DataFrame:
+    """The GEMM panel scan every bounded-panel top-k kernel runs.
+
+    The valid query panel is collected to the driver (capped by
+    ``_collect_query_panel``) and handed to ``prepare(q_ids, qm) ->
+    (q_ids, state)``, which builds the kernel's query side and may drop
+    queries. The corpus streams through ``mapInArrow``: each non-empty
+    batch's fixed-width list column reshapes zero-copy into a
+    (batch × dim) float64 matrix, and ``score(ids, cm, state) -> (ids,
+    scores)`` returns the corpus ids it keeps with their ROUNDED scores,
+    one column per query.
+
+    The per-query local cut orders by the same key as the global rank:
+    the rounded score, widened to every row tied with the k-th score,
+    then (cosine desc, neighbor_id asc) — so it can never drop a row the
+    global order ranks within k. ``max_cosine`` (exclusive) is applied
+    before the cut, so only neighbors strictly below the ceiling compete.
+    The shuffle carries ≤ k rows per query per batch into the final
+    ``top_k_per_group``."""
+    corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
+    queries = queries.filter(is_valid_vector(F.col(vec_col)))
+    q_rows = _collect_query_panel(queries, query_id_col, vec_col, max_query_rows)
+    if not q_rows:
+        # no queries after the validity filter → empty result, not an
+        # AxisError on a 1-D array
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    q_ids, state = prepare(
+        np.array([r[query_id_col] for r in q_rows]),
+        np.array([r[vec_col] for r in q_rows], dtype="float64"),
+    )
+    if len(q_ids) == 0:  # every query was dropped (e.g. zero int8 norm)
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+
+    def scan(batches):
+        for batch in batches:
+            ids = batch.column(0).to_numpy()
+            varr = batch.column(1)
+            if len(ids) == 0:
+                # Empty batches are legal (empty source split) — skip,
+                # don't misreport them as ragged-width input.
+                continue
+            lens = np.asarray(pc.list_value_length(varr))
+            if lens.min() != lens.max():
+                raise ValueError("embedding column must be fixed-width")
+            cm = (
+                np.asarray(varr.flatten().to_numpy(zero_copy_only=False))
+                .astype("float64")
+                .reshape(len(ids), int(lens[0]))
+            )
+            ids, scores = score(ids, cm, state)  # scores: (batch, n_queries)
+            out_q, out_n, out_c = [], [], []
+            for j, qid in enumerate(q_ids):
+                col, ids_j = scores[:, j], ids
+                if max_cosine is not None:
+                    sel = np.flatnonzero(col < max_cosine)
+                    ids_j, col = ids_j[sel], col[sel]
+                top = min(k, len(ids_j))
+                if top == 0:
+                    continue
+                if top < len(ids_j):
+                    # argpartition gives the top scores but breaks ties
+                    # arbitrarily; widen to ALL rows tied with the k-th
+                    # score before applying the total order
+                    part = np.argpartition(-col, top - 1)[:top]
+                    cand = np.flatnonzero(col >= col[part].min())
+                else:
+                    cand = np.arange(len(ids_j))
+                order = cand[np.lexsort((ids_j[cand], -col[cand]))][:top]
+                out_q.extend([int(qid)] * len(order))
+                out_n.extend(int(ids_j[i]) for i in order)
+                out_c.extend(float(col[i]) for i in order)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(out_q, pa.int64()),
+                    pa.array(out_n, pa.int64()),
+                    pa.array(out_c, pa.float64()),
+                ],
+                names=["query_id", "neighbor_id", "cosine"],
+            )
+
+    scored = corpus.select(id_col, vec_col).mapInArrow(scan, _TOPK_SCHEMA)
+    return top_k_per_group(
+        scored, "query_id", [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
+    )
 
 
 def brute_force_topk(
@@ -110,124 +217,9 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_cosine: float | None = None,
-    max_query_rows: int | None = None,
-) -> DataFrame:
-    """Exact cosine top-k via an Arrow-vectorized ``mapInPandas`` scan —
-    the wide-embedding fast path (same results as ``brute_force_topk``,
-    which is its oracle).
-
-    The query matrix is tiny → sent to every partition via a plain
-    closure (driver-side collect of the queries only). Each Arrow batch
-    becomes one numpy ``corpus_batch @ queries.T`` GEMM — per-element
-    cost ~1 multiply-add instead of an interpreted HOF expression tree;
-    at dim ≳ 256 this wins by orders of magnitude. Per-batch local top-k
-    keeps the shuffle at k rows per query per batch before the final
-    global rank.
-
-    ``max_cosine`` (exclusive, applied to the ROUNDED score) turns the
-    scan into a hard-negative miner: only neighbors strictly below the
-    ceiling compete for the top-k — "closest vectors that are NOT
-    near-duplicates", the negative-pair source for contrastive
-    embedding training. Self-matches (cosine 1.0) fall out
-    automatically."""
-    corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
-    queries = queries.filter(is_valid_vector(F.col(vec_col)))
-    import numpy as np
-    import pandas as pd
-
-    q_rows = _collect_query_panel(queries, query_id_col, vec_col, max_query_rows)
-    if not q_rows:
-        # no queries after the validity filter → empty result, not an
-        # AxisError on a 1-D array
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"
-        )
-    q_ids = np.array([r[query_id_col] for r in q_rows])
-    qm = np.array([r[vec_col] for r in q_rows], dtype="float64")
-    qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-
-    out_schema = (
-        "query_id long, neighbor_id long, cosine double"
-    )
-
-    def scan(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            cm = np.array(pdf[vec_col].tolist(), dtype="float64")
-            cm /= np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            # round BEFORE the local cut: the global rank orders by the
-            # rounded cosine, so the local selection must use the same
-            # key or a raw-score ordering could cut a row the global
-            # (cosine desc, neighbor_id asc) order keeps
-            scores = np.round(cm @ qm.T, 6)  # (batch, n_queries)
-            rows = []
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j]
-                if max_cosine is not None:
-                    sel = np.flatnonzero(col < max_cosine)
-                    ids_j, col = ids[sel], col[sel]
-                else:
-                    ids_j = ids
-                top = min(k, len(ids_j))
-                if top == 0:
-                    continue
-                if top < len(ids_j):
-                    # argpartition gives the top scores but breaks ties
-                    # arbitrarily; widen to ALL rows tied with the k-th
-                    # score, then apply the total order (score desc,
-                    # neighbor_id asc) so the local cut can never drop a
-                    # row the global order ranks within k
-                    part = np.argpartition(-col, top - 1)[:top]
-                    cand = np.flatnonzero(col >= col[part].min())
-                else:
-                    cand = np.arange(len(ids_j))
-                order = cand[np.lexsort((ids_j[cand], -col[cand]))][:top]
-                for i in order:
-                    rows.append((int(qid), int(ids_j[i]), float(col[i])))
-            yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(scan, out_schema)
-    return top_k_per_group(
-        scored, "query_id", [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
-
-
 def _plane_literals(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Append a ``bucket`` column: the sign-bit signature of the vector
-    against ``n_planes`` deterministic random hyperplanes (Charikar's
-    SRP-LSH). Vectors with equal bucket are cosine-similar with high
-    probability; bucket count is 2^n_planes."""
-    if dim is None:
-        dim = vector_dim(df, vec_col)
-    planes = _plane_literals(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
-    bucket: Column = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
-        bit = F.when(dot(v, plane) >= 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(bit)
-    return df.withColumn("bucket", bucket)
 
 
 def _argmax_centroid(vec: Column, centroids: list[list[float]], top: int = 1) -> Column:
@@ -247,56 +239,6 @@ def _argmax_centroid(vec: Column, centroids: list[list[float]], top: int = 1) ->
     return F.transform(F.slice(ranked, 1, top), lambda s: s["cid"])
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 4096,
-    iters: int = 5,
-    seed: int = 42,
-) -> list[list[float]]:
-    """Deterministic driver-side spherical k-means for the IVF coarse
-    quantizer.
-
-    A hash-ordered sample (``orderBy(xxhash64(id, seed))`` — a
-    deterministic pseudo-random shuffle, planned as TakeOrdered: per-
-    partition top-k then a driver merge, no full shuffle) is collected
-    and Lloyd-iterated in NumPy: assign to argmax-dot centroid,
-    recompute means, re-normalize; an emptied cluster keeps its previous
-    centroid. Everything is seeded and order-stable, so the centroids —
-    and therefore every downstream assignment — are reproducible.
-
-    The sample is the only driver-side data (``sample`` rows × dim
-    doubles); training cost is O(iters · sample · nlist · dim) on the
-    driver — trivial next to one corpus scan. At 100 TB this replaces
-    the degenerate first-``nlist``-by-id quantizer with data-adaptive
-    cells: balanced lists, better recall at the same ``nprobe``."""
-    corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
-        .limit(sample)
-        .collect()
-    )
-    m = np.array([r["_v"] for r in rows], dtype="float64")
-    norms = np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    m = m / norms
-    if len(m) <= nlist:
-        return m.tolist()
-    cents = m[:nlist].copy()
-    for _ in range(iters):
-        assign = np.argmax(m @ cents.T, axis=1)
-        for c in range(nlist):
-            members = m[assign == c]
-            if len(members):
-                mean = members.mean(axis=0)
-                n = np.linalg.norm(mean)
-                if n > 1e-12:
-                    cents[c] = mean / n
-    return cents.tolist()
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -313,7 +255,7 @@ def ivf_topk(
     query, exact cosine rerank within them.
 
     ``centroids`` plugs in a trained quantizer (see
-    ``kmeans_centroids``); the default is deterministic-but-degenerate —
+    ``kmeans_centroids_lloyd``); the default is deterministic-but-degenerate —
     the first ``nlist`` corpus vectors by id, L2-normalized on the
     driver. The default is kept as-is because it is SQL-expressible
     (the catalog query's DuckDB oracle replays it exactly); the
@@ -444,51 +386,39 @@ def ann_topk_lsh(
     per-table bucket joins — more tables, same per-table cost). A pair
     at cosine c collides in one table with p = (1 - θ/π)^n_planes and
     in ANY of t tables with 1-(1-p)^t: at c=0.4 a single 8-plane table
-    gives ~19% recall, 4 tables ~57%, 8 tables ~81%. The multi-table
-    join key is (table, bucket) — one equi-join regardless of t; a
-    candidate pair found by several tables is deduplicated before the
-    ranking cut. At 100 TB both forms replace the crossJoin entirely.
+    gives ~19% recall, 4 tables ~57%, 8 tables ~81%. The join key is
+    (table, bucket) — one equi-join regardless of t, and a single table
+    is the t = 1 case (its planes are ``_plane_literals(dim, n_planes,
+    seed)``); with t > 1 a candidate pair found by several tables is
+    deduplicated before the ranking cut. At 100 TB this replaces the
+    crossJoin entirely.
 
     ``dim`` skips the one-row driver probe when the embedding width is
     known (schema metadata)."""
     corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
     queries = queries.filter(is_valid_vector(F.col(vec_col)))
-    if n_tables <= 1:
-        cb = lsh_bucket(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")),
-            "_cv", n_planes=n_planes, seed=seed, dim=dim,
-        )
-        qb = F.broadcast(
-            lsh_bucket(
-                queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-                "_qv", n_planes=n_planes, seed=seed, dim=dim,
-            )
-        )
-        pairs = cb.join(qb, "bucket")
-    else:
-        if dim is None:
-            dim = vector_dim(corpus, vec_col)
-        # (table, bucket) exploded from the per-table signature array;
-        # the same seeded planes (expression form — SQL-replayable by
-        # the catalog oracle) bucket both sides.
-        cb = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
+    if dim is None:
+        dim = vector_dim(corpus, vec_col)
+    # (table, bucket) exploded from the per-table signature array; the
+    # same seeded planes (expression form — SQL-replayable by the catalog
+    # oracle) bucket both sides.
+    cb = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("_cv"),
+        F.posexplode(
+            srp_table_buckets(F.col(vec_col), dim, n_planes, n_tables, seed)
+        ).alias("_table", "_bucket"),
+    )
+    qb = F.broadcast(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(vec_col).alias("_qv"),
             F.posexplode(
                 srp_table_buckets(F.col(vec_col), dim, n_planes, n_tables, seed)
             ).alias("_table", "_bucket"),
         )
-        qb = F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("_qv"),
-                F.posexplode(
-                    srp_table_buckets(F.col(vec_col), dim, n_planes, n_tables, seed)
-                ).alias("_table", "_bucket"),
-            )
-        )
-        pairs = cb.join(qb, ["_table", "_bucket"])
-    scored = pairs.select(
+    )
+    scored = cb.join(qb, ["_table", "_bucket"]).select(
         "query_id",
         "neighbor_id",
         F.round(
@@ -509,6 +439,12 @@ def ann_topk_lsh(
     )
 
 
+def _unit_rows(m: "np.ndarray") -> "np.ndarray":
+    """L2-normalize the rows of ``m`` in place (zero rows stay zero)."""
+    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    return m
+
+
 def brute_force_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -516,76 +452,27 @@ def brute_force_topk_arrow(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
+    max_cosine: float | None = None,
     max_query_rows: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k via ``mapInArrow`` — the zero-copy sibling of
-    ``brute_force_topk_pandas`` (same semantics, same oracle). Arrow
-    RecordBatches reach the kernel without the Arrow→pandas conversion:
-    the list column's flat value buffer reshapes straight into the
-    (batch × dim) GEMM operand, where the pandas path materializes a
-    Python list per row (``Series.tolist``) and re-assembles the matrix
-    — the dominant per-batch overhead for wide embeddings. Same
-    tie-safety: rounded scores before the local cut, ties widened to the
-    k-th score, (cosine desc, neighbor_id asc) total order."""
-    corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
-    queries = queries.filter(is_valid_vector(F.col(vec_col)))
-    import numpy as np
-    import pyarrow as pa
+    """Exact cosine top-k on the GEMM panel scan (same results as
+    ``brute_force_topk``, which is its oracle). The query panel is unit-
+    normalized on the driver; each Arrow batch becomes one numpy
+    ``corpus_batch @ queries.T`` GEMM — per-element cost ~1 multiply-add
+    instead of an interpreted HOF expression tree, which at dim ≳ 256
+    wins by orders of magnitude.
 
-    q_rows = _collect_query_panel(queries, query_id_col, vec_col, max_query_rows)
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"
-        )
-    q_ids = np.array([r[query_id_col] for r in q_rows])
-    qm = np.array([r[vec_col] for r in q_rows], dtype="float64")
-    qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-
-    def scan(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy()
-            varr = batch.column(1)
-            if len(ids) == 0:
-                # Empty batches are legal (empty source split) — skip,
-                # don't misreport them as ragged-width input.
-                continue
-            lens = np.asarray(pa.compute.list_value_length(varr))
-            if lens.min() != lens.max():
-                raise ValueError("embedding column must be fixed-width")
-            cm = (
-                np.asarray(varr.flatten().to_numpy(zero_copy_only=False))
-                .astype("float64")
-                .reshape(len(ids), int(lens[0]))
-            )
-            cm /= np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            scores = np.round(cm @ qm.T, 6)
-            top = min(k, len(ids))
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j]
-                if top < len(ids):
-                    part = np.argpartition(-col, top - 1)[:top]
-                    cand = np.flatnonzero(col >= col[part].min())
-                else:
-                    cand = np.arange(len(ids))
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:top]
-                out_q.extend([int(qid)] * len(order))
-                out_n.extend(int(ids[i]) for i in order)
-                out_c.extend(float(col[i]) for i in order)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_c, pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "cosine"],
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInArrow(
-        scan, "query_id long, neighbor_id long, cosine double"
-    )
-    return top_k_per_group(
-        scored, "query_id", [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
+    ``max_cosine`` (exclusive, applied to the ROUNDED score) turns the
+    scan into a hard-negative miner: only neighbors strictly below the
+    ceiling compete for the top-k — "closest vectors that are NOT
+    near-duplicates", the negative-pair source for contrastive
+    embedding training. Self-matches (cosine 1.0) fall out
+    automatically."""
+    return _panel_topk(
+        corpus, queries, k, id_col, vec_col, query_id_col, max_query_rows,
+        prepare=lambda q_ids, qm: (q_ids, _unit_rows(qm)),
+        score=lambda ids, cm, qm: (ids, np.round(_unit_rows(cm) @ qm.T, 6)),
+        max_cosine=max_cosine,
     )
 
 
@@ -601,6 +488,23 @@ def _quantize_rows(m: "np.ndarray") -> "np.ndarray":
     safe = absm > 0
     out[safe] = np.floor((m[safe] * 127.0) / absm[safe, None] + 0.5)
     return out
+
+
+def _int8_prepare(q_ids, qm):
+    qm = _quantize_rows(qm)
+    q_norms = np.sqrt((qm * qm).sum(axis=1))
+    live = q_norms > 0
+    return q_ids[live], (qm[live], q_norms[live])
+
+
+def _int8_score(ids, cm, state):
+    qm, q_norms = state
+    cm = _quantize_rows(cm)
+    c_norms = np.sqrt((cm * cm).sum(axis=1))
+    keep = c_norms > 0
+    ids, cm, c_norms = ids[keep], cm[keep], c_norms[keep]
+    # integer dots (exact in float64) -> cos = dot/(nc*nq)
+    return ids, np.round((cm @ qm.T) / (c_norms[:, None] * q_norms[None, :]), 6)
 
 
 def ann_topk_int8(
@@ -627,141 +531,12 @@ def ann_topk_int8(
     ops. Fidelity vs true cosine is ~1e-3 absolute for 64-dim unit-ish
     vectors (quantization noise), which reorders only near-ties.
 
-    Same kernel shape as ``brute_force_topk_arrow``: zero-copy Arrow
-    batches, per-batch GEMM, tie-safe local cut, (cosine desc, id asc)
-    total order; zero-norm codes are excluded (cosine undefined)."""
-    corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
-    queries = queries.filter(is_valid_vector(F.col(vec_col)))
-    import pyarrow as pa
-
-    q_rows = _collect_query_panel(queries, query_id_col, vec_col, max_query_rows)
-    if not q_rows:
-        # no queries (possibly all filtered as invalid) → empty top-k,
-        # not an AxisError from a 1-D quantize input
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"
-        )
-    q_ids = np.array([r[query_id_col] for r in q_rows])
-    qm = _quantize_rows(np.array([r[vec_col] for r in q_rows], dtype="float64"))
-    q_norms = np.sqrt((qm * qm).sum(axis=1))
-    live = q_norms > 0
-    q_ids, qm, q_norms = q_ids[live], qm[live], q_norms[live]
-
-    def scan(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy()
-            varr = batch.column(1)
-            if len(ids) == 0:
-                continue
-            lens = np.asarray(pa.compute.list_value_length(varr))
-            if lens.min() != lens.max():
-                raise ValueError("embedding column must be fixed-width")
-            cm = _quantize_rows(
-                np.asarray(varr.flatten().to_numpy(zero_copy_only=False))
-                .astype("float64")
-                .reshape(len(ids), int(lens[0]))
-            )
-            c_norms = np.sqrt((cm * cm).sum(axis=1))
-            keep = c_norms > 0
-            ids, cm, c_norms = ids[keep], cm[keep], c_norms[keep]
-            if len(ids) == 0:
-                continue
-            # integer dots (exact in float64) -> cos = dot/(nc*nq)
-            scores = np.round(
-                (cm @ qm.T) / (c_norms[:, None] * q_norms[None, :]), 6
-            )
-            top = min(k, len(ids))
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j]
-                if top < len(ids):
-                    part = np.argpartition(-col, top - 1)[:top]
-                    cand = np.flatnonzero(col >= col[part].min())
-                else:
-                    cand = np.arange(len(ids))
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:top]
-                out_q.extend([int(qid)] * len(order))
-                out_n.extend(int(ids[i]) for i in order)
-                out_c.extend(float(col[i]) for i in order)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_c, pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "cosine"],
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInArrow(
-        scan, "query_id long, neighbor_id long, cosine double"
+    Runs on the GEMM panel scan (``_panel_topk``); zero-norm codes, on
+    either side, are excluded (cosine undefined)."""
+    return _panel_topk(
+        corpus, queries, k, id_col, vec_col, query_id_col, max_query_rows,
+        prepare=_int8_prepare, score=_int8_score,
     )
-    return top_k_per_group(
-        scored, "query_id", [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
-
-
-def pq_codebook_kmeans(
-    corpus: DataFrame,
-    m_sub: int = 8,
-    ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 4096,
-    iters: int = 5,
-    seed: int = 42,
-):
-    """Trained PQ codebook: plain-L2 Lloyd k-means per SUBSPACE over the
-    int8 codes of a deterministic hash-ordered sample (the same
-    TakeOrdered sampling as ``kmeans_centroids`` — no full shuffle,
-    reproducible on any partitioning). Returns an (m_sub, ksub, d_sub)
-    float64 array for ``pq_topk(codebook=...)``. Trained centroids are
-    REAL-valued means, so the exact-integer SQL replay of the degenerate
-    codebook no longer applies — the trained variant is rows-only, its
-    quality pinned by the recall test (same degenerate/trained pairing
-    as ``ivf_topk`` vs ``similarity_topk_ivf_kmeans``)."""
-    import numpy as np
-
-    corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
-        .limit(sample)
-        .collect()
-    )
-    m = _quantize_rows(np.array([r["_v"] for r in rows], dtype="float64"))
-    m = m[(m * m).sum(axis=1) > 0]
-    dim = m.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    d_sub = dim // m_sub
-    subs = m.reshape(len(m), m_sub, d_sub)
-    cb = np.empty((m_sub, ksub, d_sub))
-    for s in range(m_sub):
-        x = subs[:, s, :]
-        cents = x[:ksub].copy()
-        if len(x) <= ksub:
-            cb[s, : len(x)] = x
-            cb[s, len(x):] = 0.0
-            continue
-        for _ in range(iters):
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(ksub):
-                members = x[assign == c]
-                if len(members):
-                    mu = members.mean(axis=0)
-                    # norm-preserving update: a plain mean of spread-out
-                    # subvectors shrinks toward zero, and the ADC cosine
-                    # divides by the reconstruction norm — shrunken
-                    # centroids distort the ranking nonuniformly.
-                    # Rescale the mean DIRECTION to the members' mean
-                    # norm so reconstructions keep realistic magnitude.
-                    n = np.linalg.norm(mu)
-                    if n > 1e-12:
-                        mu = mu / n * np.linalg.norm(members, axis=1).mean()
-                    cents[c] = mu
-        cb[s] = cents
-    return cb
 
 
 def pq_topk(
@@ -795,26 +570,22 @@ def pq_topk(
     only the final sqrt/divide are single IEEE ops. The codebook here
     is the DEGENERATE deterministic one — the int8 subvectors of the
     ``ksub`` lowest-id valid vectors (same doctrine as ``ivf_topk``'s
-    default quantizer: replayable beats trained for the oracle; a
-    k-means-per-subspace codebook is the drop-in trained upgrade and
-    changes only the centroid table). Recall vs float brute force is
-    property-tested.
+    default quantizer: replayable beats trained for the oracle; the
+    k-means-per-subspace codebook of ``pq_codebook_lloyd`` is the
+    drop-in trained upgrade and changes only the centroid table).
+    Recall vs float brute force is property-tested.
 
     Scale shape: one driver collect of ksub codebook rows + the query
-    matrix; the corpus scan is a zero-copy Arrow pass that would, in a
-    persisted deployment, read the 4-byte PQ codes instead of raw
-    vectors — encode once, query forever; shuffle is ≤ k rows per
-    query per batch."""
-    import numpy as np
-    import pyarrow as pa
-
+    matrix; the corpus scan is the GEMM panel scan (``_panel_topk``),
+    which would, in a persisted deployment, read the 4-byte PQ codes
+    instead of raw vectors — encode once, query forever; shuffle is ≤ k
+    rows per query per batch."""
     corpus = corpus.filter(is_valid_vector(F.col(vec_col)))
-    queries = queries.filter(is_valid_vector(F.col(vec_col)))
 
     if codebook is not None:
-        # trained path (pq_codebook_kmeans): real-valued centroids —
-        # deterministic given the seeded sample, but no longer
-        # exact-integer, so rows-only rather than SQL-replayed
+        # trained path (pq_codebook_lloyd): real-valued centroids —
+        # deterministic, but no longer exact-integer, so rows-only
+        # rather than SQL-replayed
         cb = np.asarray(codebook, dtype="float64")
         m_sub, ksub, d_sub = cb.shape
     else:
@@ -832,9 +603,7 @@ def pq_topk(
             .collect()
         )
         if not cb_rows:
-            return corpus.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine double"
-            )
+            return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
         cb_all = _quantize_rows(
             np.array([r[vec_col] for r in cb_rows], dtype="float64")
         )
@@ -847,82 +616,42 @@ def pq_topk(
         # (m_sub, ksub, d_sub)
         cb = cb_all.reshape(ksub, m_sub, d_sub).transpose(1, 0, 2).copy()
     cb_n2 = (cb * cb).sum(axis=2)  # (m_sub, ksub) centroid norm² per subspace
+    subspaces = np.arange(m_sub)[None, :]
 
-    q_rows = _collect_query_panel(queries, query_id_col, vec_col, max_query_rows)
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"
-        )
-    q_ids = np.array([r[query_id_col] for r in q_rows])
-    qm = _quantize_rows(np.array([r[vec_col] for r in q_rows], dtype="float64"))
-    q_n2 = (qm * qm).sum(axis=1)
-    live = q_n2 > 0
-    q_ids, qm, q_n2 = q_ids[live], qm[live], q_n2[live]
-    # ADC dot tables: (n_q, m_sub, ksub)
-    qsub = qm.reshape(len(q_ids), m_sub, d_sub)
-    adc = np.einsum("qmd,mkd->qmk", qsub, cb)
+    def prepare(q_ids, qm):
+        qm = _quantize_rows(qm)
+        q_n2 = (qm * qm).sum(axis=1)
+        live = q_n2 > 0
+        q_ids, qm, q_n2 = q_ids[live], qm[live], q_n2[live]
+        # ADC dot tables: (n_q, m_sub, ksub)
+        qsub = qm.reshape(len(q_ids), m_sub, d_sub)
+        return q_ids, (np.einsum("qmd,mkd->qmk", qsub, cb), q_n2)
 
-    def scan(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy()
-            varr = batch.column(1)
-            if len(ids) == 0:
-                continue
-            lens = np.asarray(pa.compute.list_value_length(varr))
-            if lens.min() != lens.max():
-                raise ValueError("embedding column must be fixed-width")
-            cm = _quantize_rows(
-                np.asarray(varr.flatten().to_numpy(zero_copy_only=False))
-                .astype("float64")
-                .reshape(len(ids), int(lens[0]))
-            )
-            keep = (cm * cm).sum(axis=1) > 0
-            ids, cm = ids[keep], cm[keep]
-            if len(ids) == 0:
-                continue
-            sub = cm.reshape(len(ids), m_sub, d_sub)
-            # L2 encode: argmin_c |x|² - 2·x·c + |c|²; |x|² is constant
-            # per (row, subspace) so argmin over (-2·dot + |c|²) suffices;
-            # np.argmin takes the FIRST minimum — the lowest-index
-            # tiebreak the oracle's (d, cid) order states
-            dots = np.einsum("nmd,mkd->nmk", sub, cb)
-            codes = np.argmin(cb_n2[None, :, :] - 2.0 * dots, axis=2)  # (n, m_sub)
-            rows_idx = np.arange(len(ids))[:, None]
-            r_n2 = cb_n2[np.arange(m_sub)[None, :], codes].sum(axis=1)  # (n,)
-            ok = r_n2 > 0
-            if not ok.any():
-                continue
-            ids, codes, r_n2 = ids[ok], codes[ok], r_n2[ok]
-            rows_idx = np.arange(len(ids))[:, None]
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                # score = Σ_s adc[j, s, code_s]
-                dot = adc[j][np.arange(m_sub)[None, :], codes].sum(axis=1)
-                col = np.round(dot / np.sqrt(r_n2 * q_n2[j]), 6)
-                top = min(k, len(ids))
-                if top < len(ids):
-                    part = np.argpartition(-col, top - 1)[:top]
-                    cand = np.flatnonzero(col >= col[part].min())
-                else:
-                    cand = np.arange(len(ids))
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:top]
-                out_q.extend([int(qid)] * len(order))
-                out_n.extend(int(ids[i]) for i in order)
-                out_c.extend(float(col[i]) for i in order)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_c, pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "cosine"],
-            )
+    def score(ids, cm, state):
+        adc, q_n2 = state
+        cm = _quantize_rows(cm)
+        keep = (cm * cm).sum(axis=1) > 0
+        ids, cm = ids[keep], cm[keep]
+        sub = cm.reshape(len(ids), m_sub, d_sub)
+        # L2 encode: argmin_c |x|² - 2·x·c + |c|²; |x|² is constant
+        # per (row, subspace) so argmin over (-2·dot + |c|²) suffices;
+        # np.argmin takes the FIRST minimum — the lowest-index
+        # tiebreak the oracle's (d, cid) order states
+        dots = np.einsum("nmd,mkd->nmk", sub, cb)
+        codes = np.argmin(cb_n2[None, :, :] - 2.0 * dots, axis=2)  # (n, m_sub)
+        r_n2 = cb_n2[subspaces, codes].sum(axis=1)  # (n,)
+        ok = r_n2 > 0
+        ids, codes, r_n2 = ids[ok], codes[ok], r_n2[ok]
+        # score of query j = Σ_s adc[j, s, code_s], one column per query
+        cols = [
+            np.round(adc[j][subspaces, codes].sum(axis=1) / np.sqrt(r_n2 * q_n2[j]), 6)
+            for j in range(len(q_n2))
+        ]
+        return ids, np.stack(cols, axis=1)
 
-    scored = corpus.select(id_col, vec_col).mapInArrow(
-        scan, "query_id long, neighbor_id long, cosine double"
-    )
-    return top_k_per_group(
-        scored, "query_id", [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
+    return _panel_topk(
+        corpus, queries, k, id_col, vec_col, query_id_col, max_query_rows,
+        prepare=prepare, score=score,
     )
 
 
@@ -934,10 +663,9 @@ def kmeans_centroids_lloyd(
     iters: int = 5,
     scale: int = 1_000_000,
 ) -> list[list[float]]:
-    """DISTRIBUTED spherical k-means for the IVF coarse quantizer —
-    the full-corpus upgrade of the driver-side ``kmeans_centroids``
-    sampler (VERDICT r06 #3): every vector votes in every Lloyd round,
-    so the quantizer reflects the true density, not a 4096-row sample.
+    """DISTRIBUTED spherical k-means for the IVF coarse quantizer:
+    every vector votes in every Lloyd round, so the quantizer reflects
+    the true density of the whole corpus, not a driver-side sample.
 
     Geometry: vectors are L2-normalized FIRST, then integer-quantized
     (``clustering.quantize_vectors``); on unit vectors Euclidean argmin
@@ -980,8 +708,8 @@ def kmeans_centroids_lloyd(
     for _ in range(iters):
         assigned = _assign_arrow(q, cent)
         new = _update(assigned)
-        # an emptied cluster keeps its previous centroid (same rule as
-        # the driver-side trainer) — bounded k-row outer join
+        # an emptied cluster keeps its previous centroid — bounded
+        # k-row outer join
         cent = (
             cent.select("cid", F.col("cv").alias("_prev"))
             .join(new, on="cid", how="left")
@@ -1003,9 +731,9 @@ def pq_codebook_lloyd(
     iters: int = 5,
     dim: int | None = None,
 ):
-    """DISTRIBUTED per-subspace PQ codebook trainer — the full-corpus
-    upgrade of ``pq_codebook_kmeans``'s driver-side 4096-row sampler
-    (VERDICT r06 #3). All m_sub subspaces train in ONE frame: the int8
+    """DISTRIBUTED per-subspace PQ codebook trainer: every valid vector
+    votes, no driver-side sample. All m_sub subspaces train in ONE
+    frame: the int8
     codes (``functions.vector.quantize_int8`` — the exact domain
     ``pq_topk`` encodes in) slice into (vec_id, sub, subvector) rows,
     and each Lloyd round is a broadcast of the (m_sub · ksub)-row
@@ -1017,14 +745,14 @@ def pq_codebook_lloyd(
     PARTITION-DETERMINISTIC by construction: member sums (codes, code
     norm²) are exact BIGINTs, so shuffle order cannot perturb a bit;
     the real-valued centroid is derived per GROUP from those integers
-    (mean = s/n, one IEEE division per dim). The norm-preserving update
-    mirrors the driver trainer's intent with one deliberate change:
-    the mean direction is rescaled to the members' RMS norm
-    (sqrt(Σ‖x‖²/n) — exact-integer numerator) instead of the mean of
-    norms, whose float sum would be shuffle-order-dependent. RMS ≥
+    (mean = s/n, one IEEE division per dim). The update is
+    norm-preserving: a plain mean of spread-out subvectors shrinks
+    toward zero, and the ADC cosine divides by the reconstruction norm,
+    so the mean direction is rescaled to the members' RMS norm
+    (sqrt(Σ‖x‖²/n) — exact-integer numerator) rather than their mean
+    norm, whose float sum would be shuffle-order-dependent. RMS ≥
     mean-norm with equality at concentrated norms, so reconstruction
-    magnitudes stay realistic and the ADC ranking geometry is the
-    same; recall parity is pinned in tests.
+    magnitudes stay realistic; recall is pinned in tests.
 
     Returns an (m_sub, ksub, d_sub) float64 numpy codebook for
     ``pq_topk(codebook=...)``. Seeds are the degenerate codebook (int8
@@ -1134,7 +862,7 @@ def pq_codebook_lloyd(
             # Σ‖x‖² (sum of member subvector norm² over members), so
             # one row IS the cluster total — take it as-is (ADVICE r7:
             # the old /d_sub shrank every centroid by sqrt(d_sub) vs
-            # the documented sqrt(Σ‖x‖²/n) and the driver trainer)
+            # the documented sqrt(Σ‖x‖²/n))
             F.first("sn2").alias("_sn2x"),
         )
         new = mu.select(

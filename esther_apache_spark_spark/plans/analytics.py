@@ -447,19 +447,19 @@ def similarity_topk_pq_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook — now the DISTRIBUTED full-corpus trainer
     (`similarity.pq_codebook_lloyd`): all m_sub subspaces Lloyd-iterate
     in one frame of exact-integer int8 codes, every member votes, and
-    only the m_sub×ksub×d_sub codebook reaches the driver (the old
-    4096-row driver sampler `pq_codebook_kmeans` remains for bounded
-    panels). Real-valued centroids break the exact-integer SQL replay,
+    only the m_sub×ksub×d_sub codebook reaches the driver. The scan is
+    the same GEMM panel scan as `similarity_topk_pq`; only the codebook
+    differs. Real-valued centroids break the exact-integer SQL replay,
     so this is rows-only, mirroring the `similarity_topk_ivf` /
     `similarity_topk_ivf_kmeans` pairing; partition-determinism
     survives because every shuffled aggregate is an exact BIGINT.
     Honest caveat, measured and pinned in tests/test_scale_guards.py:
     on this synthetic near-UNIFORM embedding corpus k-means has no
-    cluster structure to exploit, and the degenerate codebook (real
-    full-norm subvectors) recalls slightly better (0.36 vs 0.30 on the
-    sf0.01 panel) — training pays off on real clustered embeddings,
-    which is why both codebooks stay one argument apart; the
-    distributed trainer does beat the driver sampler (0.30 vs 0.28)."""
+    cluster structure to exploit, and which codebook recalls better
+    flips with the scale factor (trained 0.38 vs degenerate 0.44 at
+    sf0.001, 0.44 vs 0.36 at sf0.01) — training pays off on real
+    clustered embeddings, which is why both codebooks stay one
+    argument apart."""
     from esther_apache_spark_spark.operators.similarity import (
         pq_codebook_lloyd,
         pq_topk,

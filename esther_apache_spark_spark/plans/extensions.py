@@ -275,8 +275,10 @@ def _duck_plane(p: list[float]) -> str:
 def _srp_bucket_sql(e: str, planes: list[list[float]], lo: int, n: int) -> str:
     """SQL for the SRP sign-bit bucket of expression ``e`` against
     ``planes[lo:lo+n]`` — the same ``dot >= 0 -> bit i`` rule as
-    ``lsh_bucket``/``srp_table_buckets``; both engines evaluate the dot
-    as a sequential fold, so the signs (and hence buckets) agree."""
+    ``srp_table_buckets`` (one table of ``n`` planes per call, which is
+    how ``ann_topk_lsh`` buckets any number of tables); both engines
+    evaluate the dot as a sequential fold, so the signs (and hence
+    buckets) agree."""
     return " + ".join(
         f"CASE WHEN list_dot_product({e}, {_duck_plane(planes[lo + i])}) >= 0"
         f" THEN {1 << i} ELSE 0 END"
@@ -1150,7 +1152,7 @@ def similarity_topk_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInArrow GEMM top-k (zero-copy Arrow kernel — completes the
+    """mapInArrow GEMM top-k (the zero-copy panel scan — completes the
     Python-execution surface: pandas_udf, mapInPandas, applyInPandas,
     applyInPandasWithState, cogroup applyInPandas, mapInArrow). Shares
     the brute-force oracle: identical results, different transport."""
@@ -1177,14 +1179,16 @@ def similarity_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME exact top-10 as similarity_topk_bruteforce, computed by
-    the Arrow-vectorized mapInPandas GEMM path — sharing the brute-force
-    oracle proves the Pandas-UDF fast path bit-matches the expression
-    path (up to the stated 1e-6 rounding)."""
+    the GEMM panel scan (``brute_force_topk_arrow``, the one numpy
+    kernel for exact top-k) — sharing the brute-force oracle proves the
+    vectorized path bit-matches the expression path (up to the stated
+    1e-6 rounding). Kept under its old name, which it had when a
+    separate mapInPandas twin ran it."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return S.brute_force_topk_pandas(emb, queries, k=10, query_id_col="query_id")
+    return S.brute_force_topk_arrow(emb, queries, k=10, query_id_col="query_id")
 
 
 @register(
@@ -1210,8 +1214,8 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold (cosine < 0.4) — similar enough to be informative
     negatives, distant enough to not be positives (the near-dup band at
     ≥ 0.4 belongs to `dedup_embedding_cosine`; self-matches at 1.0 fall
-    out with it). Runs on the same mapInPandas GEMM scan as
-    `similarity_topk_pandas` with the ceiling applied to the rounded
+    out with it). Runs on the same GEMM panel scan as
+    `similarity_topk_arrow` with the ceiling applied to the rounded
     score inside the kernel, BEFORE the local top-k cut — filtering
     after a plain top-k would lose every negative outranked by the
     anchor's duplicates. Shuffle stays ≤ k rows per anchor per batch."""
@@ -1219,7 +1223,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return S.brute_force_topk_pandas(
+    return S.brute_force_topk_arrow(
         emb, queries, k=5, query_id_col="query_id", max_cosine=0.4
     )
 
@@ -1285,12 +1289,13 @@ def similarity_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the whole corpus (`similarity.kmeans_centroids_lloyd` — exact-
     integer Lloyd rounds on unit-normalized vectors, only the nlist×dim
     centroid table ever reaches the driver) replaces the degenerate
-    first-nlist quantizer — data-adaptive cells, and measurably better
-    recall than the old 4096-row driver-side sampler at equal nprobe
-    (0.86 vs 0.50 recall@10 on the sf0.01 audit panel; pinned in
-    tests/test_scale_guards.py). Exact-integer shuffles keep the result
-    partition-deterministic, but k-means itself is not SQL-expressible
-    → rows-only check."""
+    first-nlist quantizer with data-adaptive cells: recall@10 0.86 on
+    the sf0.01 audit panel and 0.88 at sf0.001 (floor 0.8 pinned in
+    tests/test_scale_guards.py). On this near-uniform synthetic corpus
+    the degenerate quantizer recalls 0.92 at the same nprobe; the
+    trained cells win on clustered data (also pinned there).
+    Exact-integer shuffles keep the result partition-deterministic, but
+    k-means itself is not SQL-expressible → rows-only check."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"

@@ -58,8 +58,9 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("operators/dedup.py", "hot"): "df-pruned stop-shingle set, capped by max_df selectivity on distinct shingles",
     # fixed-size query matrices (ANN query side is user-provided, small
     # by contract and collected to the driver anyway)
+    # (raw, or bucketed by ann_topk_lsh — the same small-by-contract
+    # query matrix either way)
     ("operators/similarity.py", "queries"): "query matrix, driver-collected by contract",
-    ("operators/similarity.py", "lsh_bucket"): "bucketed QUERY side (same small-by-contract query matrix)",
     # caller-gated opt-in (default off)
     ("operators/rangejoin.py", "ib"): "behind broadcast_intervals flag, caller asserts boundedness",
     # classifier weight table: one row per token-hash bucket, bounded by

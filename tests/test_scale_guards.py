@@ -46,6 +46,18 @@ def _vec_df(spark, vecs):
     )
 
 
+def _panel_kernels():
+    """Every kernel on the GEMM panel scan, sized for the tiny dim-2
+    corpora below (``pq_topk``'s codebook is its ``ksub`` lowest-id
+    valid vectors, split into ``m_sub`` subspaces)."""
+    return [
+        S.brute_force_topk_arrow,
+        lambda c, q, k: S.brute_force_topk_arrow(c, q, k=k, max_cosine=0.9),
+        S.ann_topk_int8,
+        lambda c, q, k: S.pq_topk(c, q, k=k, m_sub=2, ksub=2),
+    ]
+
+
 def _max_degree(pairs):
     """Max per-node edge count — the scale invariant: with the bucket
     cap, a cluster member pairs with O(bands · max_bucket) neighbors no
@@ -225,6 +237,10 @@ def test_embedding_dim_param_skips_driver_probe(spark):
 
 
 def test_kmeans_centroids_deterministic_and_better_recall(spark):
+    """The distributed IVF trainer the catalog runs
+    (``kmeans_centroids_lloyd``) must match or beat the degenerate
+    first-``nlist`` quantizer on clustered data and train the same model
+    on a repartitioned corpus (exact-integer shuffles)."""
     rng = np.random.default_rng(5)
     nlist, per = 16, 30
     centers = rng.standard_normal((nlist, 32))
@@ -248,8 +264,10 @@ def test_kmeans_centroids_deterministic_and_better_recall(spark):
         got = {(r["query_id"], r["neighbor_id"]) for r in result.collect()}
         return len(got & truth) / len(truth)
 
-    cents = S.kmeans_centroids(corpus, nlist=nlist, iters=5, seed=42)
-    assert cents == S.kmeans_centroids(corpus, nlist=nlist, iters=5, seed=42)
+    cents = S.kmeans_centroids_lloyd(corpus, nlist=nlist, iters=5)
+    assert cents == S.kmeans_centroids_lloyd(
+        corpus.repartition(7, "vec_id"), nlist=nlist, iters=5
+    )
 
     r_default = recall(
         S.ivf_topk(corpus, queries, k=10, nlist=nlist, nprobe=2)
@@ -290,10 +308,57 @@ def test_arrow_topk_tolerates_empty_batches(spark):
 
     got = S.brute_force_topk_arrow(corpus, queries, k=2).collect()
     assert {(r["query_id"], r["neighbor_id"]) for r in got} == {(100, 1), (100, 3)}
+    got = S.brute_force_topk_arrow(corpus, queries, k=2, max_cosine=0.9).collect()
+    assert {(r["query_id"], r["neighbor_id"]) for r in got} == {(100, 3), (100, 2)}
+    got = S.ann_topk_int8(corpus, queries, k=2).collect()
+    assert {(r["query_id"], r["neighbor_id"]) for r in got} == {(100, 1), (100, 3)}
+    got = S.pq_topk(corpus, queries, k=2, m_sub=2, ksub=2).collect()
+    assert {(r["query_id"], r["neighbor_id"]) for r in got} == {(100, 1), (100, 3)}
 
     # Genuinely empty corpus: zero result rows, no crash.
     empty = spark.createDataFrame([], schema)
-    assert S.brute_force_topk_arrow(empty, queries, k=2).count() == 0
+    for kern in _panel_kernels():
+        assert kern(empty, queries, k=2).count() == 0
+
+
+def test_panel_scan_cut_is_tie_safe(spark):
+    """The panel scan's local cut must keep every row the global
+    (cosine desc, neighbor_id asc) order ranks within k, also when the
+    k-th score is tied across many rows and batches. The corpus is 5
+    directions at 8 magnitudes, 40 rows per direction over 6
+    partitions, so every query sees at most 5 distinct rounded cosines
+    and k=7 / k=45 cut inside a tied group. ``brute_force_topk`` is the
+    reference; with ``max_cosine`` the reference is every pair strictly
+    below the ceiling (0.888889 is one query's tied score), cut to k."""
+    dirs = np.array(
+        [[1, 0, 0], [0, 1, 0], [1, 1, 0], [1, 2, 2], [3, 0, 4]], dtype="float64"
+    )
+    vecs = [dirs[i % 5] * (1 + i // 5 % 8) for i in range(200)]
+    corpus = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    ).repartition(6)
+    queries = spark.createDataFrame(
+        [(100 + j, [1.0, 0.5 * j, 1.0]) for j in range(3)],
+        "query_id long, embedding array<double>",
+    )
+
+    def rows(df):
+        return sorted((r["query_id"], r["neighbor_id"], r["cosine"]) for r in df.collect())
+
+    for k in (7, 45):
+        want = rows(S.brute_force_topk(corpus, queries, k=k))
+        assert rows(S.brute_force_topk_arrow(corpus, queries, k=k)) == want, k
+
+    every = rows(S.brute_force_topk(corpus, queries, k=200))
+    for ceiling, k in ((0.9, 7), (0.9, 45), (0.888889, 7)):
+        want = []
+        for q in sorted({q for q, _, _ in every}):
+            below = [(c, n) for qq, n, c in every if qq == q and c < ceiling]
+            below.sort(key=lambda t: (-t[0], t[1]))
+            want += [(q, n, c) for c, n in below[:k]]
+        got = rows(S.brute_force_topk_arrow(corpus, queries, k=k, max_cosine=ceiling))
+        assert got == sorted(want), (ceiling, k)
 
 
 def test_lsh_multi_table_raises_recall(spark):
@@ -402,7 +467,6 @@ def test_dedup_and_ann_tolerate_null_text_and_vectors(spark):
     queries = vecs.select(F.col("vec_id").alias("query_id"), "embedding")
     for fn in (
         S.brute_force_topk,
-        S.brute_force_topk_pandas,
         S.brute_force_topk_arrow,
         S.ann_topk_int8,
     ):
@@ -488,9 +552,8 @@ def test_ann_kernels_tolerate_empty_query_side(spark):
         [(9, None)], "query_id long, embedding array<double>"
     )
     for q in (empty, allnull):
-        assert S.brute_force_topk_pandas(corpus, q, k=3).count() == 0
-        assert S.brute_force_topk_arrow(corpus, q, k=3).count() == 0
-        assert S.ann_topk_int8(corpus, q, k=3).count() == 0
+        for kern in _panel_kernels():
+            assert kern(corpus, q, k=3).count() == 0
 
 
 def test_ann_query_panel_guard_fails_fast_on_oversized_queries(spark):
@@ -507,23 +570,15 @@ def test_ann_query_panel_guard_fails_fast_on_oversized_queries(spark):
         F.col("id").alias("query_id"),
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
     )
-    kernels = [
-        S.brute_force_topk_pandas,
-        S.brute_force_topk_arrow,
-        S.ann_topk_int8,
-        # pq_topk builds its (bounded, ksub-row) codebook before the
-        # query collect — shrink it to fit the 8-vector dim-2 corpus
-        lambda c, q, k: S.pq_topk(c, q, k=k, m_sub=2, ksub=4),
-    ]
-    for kern in kernels:
-        with pytest.raises(ValueError, match="query panel exceeds"):
+    for kern in _panel_kernels():
+        with pytest.raises(ValueError, match="query panel exceeds.*max_query_rows"):
             kern(corpus, big, k=3)
     # tighter explicit cap trips on a small panel …
     small = big.limit(5)
-    with pytest.raises(ValueError, match="query panel exceeds"):
-        S.brute_force_topk_pandas(corpus, small, k=3, max_query_rows=4)
+    with pytest.raises(ValueError, match="query panel exceeds.*max_query_rows"):
+        S.brute_force_topk_arrow(corpus, small, k=3, max_query_rows=4)
     # … and an explicit raise admits the oversized one (results sane)
-    out = S.brute_force_topk_pandas(
+    out = S.brute_force_topk_arrow(
         corpus, big.limit(12), k=2, max_query_rows=S.MAX_QUERY_PANEL_ROWS + 5
     )
     # every admitted query is served (rounded-cosine ties may widen a
@@ -533,11 +588,11 @@ def test_ann_query_panel_guard_fails_fast_on_oversized_queries(spark):
 
 
 @pytest.mark.slow  # minutes-long single test; full tier only (VERDICT r10 #2)
-def test_distributed_trainers_recall_geq_driver_samplers(spark, sf_dir):
+def test_distributed_trainers_recall_floor_and_partition_determinism(spark, sf_dir):
     """VERDICT r06 #3: the distributed full-corpus trainers
-    (``kmeans_centroids_lloyd``, ``pq_codebook_lloyd``) must recall at
-    least as well as the driver-side samplers they replace as the
-    catalog default, on the standard 5-query audit panel. Also pins
+    (``kmeans_centroids_lloyd``, ``pq_codebook_lloyd``) must clear an
+    absolute recall floor on the standard 5-query audit panel (measured
+    IVF 0.88 / 0.86 and PQ 0.38 / 0.44 at sf0.001 / sf0.01). Also pins
     partition-determinism: retraining on a repartitioned corpus yields
     the identical model (exact-integer shuffles)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -553,17 +608,13 @@ def test_distributed_trainers_recall_geq_driver_samplers(spark, sf_dir):
         got = {(r.query_id, r.neighbor_id) for r in df.collect()}
         return len(got & bf) / len(bf)
 
-    cents_sample = S.kmeans_centroids(emb, nlist=16, iters=5, seed=42)
     cents_lloyd = S.kmeans_centroids_lloyd(emb, nlist=16, iters=5)
-    r_sample = recall(S.ivf_topk(emb, queries, k=10, nprobe=4, centroids=cents_sample))
     r_lloyd = recall(S.ivf_topk(emb, queries, k=10, nprobe=4, centroids=cents_lloyd))
-    assert r_lloyd >= r_sample, (r_lloyd, r_sample)
+    assert r_lloyd >= 0.8, r_lloyd
 
-    cb_sample = S.pq_codebook_kmeans(emb)
     cb_lloyd = S.pq_codebook_lloyd(emb)
-    r_pq_sample = recall(S.pq_topk(emb, queries, k=10, codebook=cb_sample))
     r_pq_lloyd = recall(S.pq_topk(emb, queries, k=10, codebook=cb_lloyd))
-    assert r_pq_lloyd >= r_pq_sample, (r_pq_lloyd, r_pq_sample)
+    assert r_pq_lloyd >= 0.3, r_pq_lloyd
 
     # partition-determinism: same model bit-for-bit on a reshuffled corpus
     shuffled = emb.repartition(7, "vec_id")
@@ -602,16 +653,17 @@ def test_pq_topk_recall_vs_bruteforce(spark, sf_dir):
 
 
 def test_pq_trained_codebook_recall_and_reproducibility(spark, sf_dir):
-    """Trained-PQ contract: meaningful recall (the codebook is usable),
-    reproducible training (same seed → same centroids → identical
+    """Trained-PQ contract for the trainer the catalog runs
+    (``pq_codebook_lloyd``): meaningful recall (the codebook is usable)
+    and reproducible training (same corpus → same centroids → identical
     result set). NOT asserted: trained > degenerate — the synthetic
     embeddings are near-uniform (no cluster structure for k-means to
-    exploit), and the degenerate codebook's full-norm REAL subvectors
-    measurably recall better here (0.36-0.44 vs 0.28-0.34); the trained
-    path exists for real clustered embedding spaces."""
+    exploit), and which codebook recalls better flips with the scale
+    factor (trained 0.38 vs degenerate 0.44 at sf0.001, 0.44 vs 0.36 at
+    sf0.01); the trained path exists for real clustered spaces."""
     from esther_apache_spark_spark.operators.similarity import (
         brute_force_topk,
-        pq_codebook_kmeans,
+        pq_codebook_lloyd,
         pq_topk,
     )
     from esther_apache_spark_spark.schemas import load_table
@@ -632,11 +684,11 @@ def test_pq_trained_codebook_recall_and_reproducibility(spark, sf_dir):
             len(exact[q]) for q in exact
         )
 
-    cb = pq_codebook_kmeans(emb)
+    cb = pq_codebook_lloyd(emb)
     trained = recall(pq_topk(emb, queries, k=10, codebook=cb))
     assert trained >= 0.2, trained
 
-    cb2 = pq_codebook_kmeans(emb)
+    cb2 = pq_codebook_lloyd(emb)
     a = sorted(map(tuple, pq_topk(emb, queries, k=10, codebook=cb).collect()))
     b = sorted(map(tuple, pq_topk(emb, queries, k=10, codebook=cb2).collect()))
     assert a == b
