@@ -72,7 +72,7 @@ from esther_apache_spark_spark.sources import index_store as S
 
 # Single definition of the simulated history/batch split used by every
 # incremental catalog entry, its DuckDB oracle, AND the streaming
-# novelty gates (ADVICE r9: the gate was duplicated inline in
+# novelty gate (ADVICE r9: the gate was duplicated inline in
 # streaming/events.py — changing it in one place silently desynced the
 # streaming entry from its oracle). hash_bucket(id, salt) < HIST_GATE_FRAC
 # selects the 80% "history" slice; >= is the arriving batch.
@@ -369,7 +369,7 @@ def srp_batch_history_hits(
     """Cosine-gated batch↔history candidate pairs ``(_bid, _hid)``
     against the persisted SRP index — the probe shared by the batch
     merge (``incremental_srp_merge``) and the streaming novelty gate
-    (``streaming/events.run_stream_srp_novelty``): batch vectors are
+    (``streaming/events.run_stream_novelty``): batch vectors are
     SRP-bucketed, bucket co-occupancy with the index ``buckets``
     nominates candidates, and the index ``vectors`` copy supplies the
     exact rerank (4-dp cosine ≥ ``threshold``) — the history embedding
@@ -739,7 +739,8 @@ def retire_srp_docs(
 # ---------------------------------------------------------------------------
 # One lifecycle over either family. A store's manifest names its family
 # (``bucket_reps`` → MinHash, ``vectors`` → SRP); the spec below is all
-# the read, fold, retire and compact steps need to know about it.
+# the read, fold, retire and compact steps — and the streaming novelty
+# gate ``streaming/events.run_stream_novelty`` — need to know about it.
 # ---------------------------------------------------------------------------
 
 
@@ -749,6 +750,14 @@ class _Family(NamedTuple):
     fold_rows: Callable[..., dict[str, DataFrame]]
     # (resolved tables, retired, **kw) → the pruned index
     retire: Callable[..., dict[str, DataFrame]]
+    # the streaming gate's probe: the tables it reads from one pinned
+    # version, and (batch, those tables, *, probe parameters) → ``_id``
+    # of batch rows with a history near-dup candidate
+    probe_tables: tuple[str, ...]
+    history_hits: Callable[..., DataFrame]
+    source: str  # the testdata table the gate streams
+    hist_salt: str  # hash_bucket salt of the history/batch split
+    out_cols: tuple[str, ...]  # the gate's output columns
 
 
 def _minhash_fold_rows(
@@ -758,6 +767,48 @@ def _minhash_fold_rows(
     return {"bucket_reps": _bucket_reps(doc_bands, labels), "doc_bands": doc_bands}
 
 
+def _minhash_history_hits(
+    batch: DataFrame,
+    tables: dict[str, DataFrame],
+    *,
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+) -> DataFrame:
+    # bucket co-occupancy IS the banding pair criterion: any shared
+    # (band, bucket) with history is an LSH candidate
+    keys = tables["bucket_reps"].select("_band", "_bucket")
+    bands_df = _minhash_doc_bands(
+        batch, num_perm=num_perm, bands=bands, shingle_n=shingle_n
+    )
+    return bands_df.join(keys, ["_band", "_bucket"], "semi").select("_id")
+
+
+def _srp_history_hits(
+    batch: DataFrame,
+    tables: dict[str, DataFrame],
+    *,
+    threshold: float = 0.4,
+    n_planes: int = 4,
+    n_tables: int = 12,
+    seed: int = 42,
+    dim: int | None = None,
+    max_bucket: int | None = 4096,
+) -> DataFrame:
+    hits = srp_batch_history_hits(
+        batch,
+        tables["buckets"],
+        tables["vectors"],
+        threshold=threshold,
+        n_planes=n_planes,
+        n_tables=n_tables,
+        seed=seed,
+        dim=dim,
+        max_bucket=max_bucket,
+    )
+    return hits.select(F.col("_bid").alias("_id"))
+
+
 _FAMILIES = {
     "bucket_reps": _Family(
         "doc_id",
@@ -765,6 +816,11 @@ _FAMILIES = {
         lambda t, retired, **kw: retire_minhash_docs(
             t["bucket_reps"], t["labels"], t["doc_bands"], retired, **kw
         ),
+        ("bucket_reps",),
+        _minhash_history_hits,
+        "documents",
+        "incrmh",
+        ("doc_id", "lang"),
     ),
     "vectors": _Family(
         "vec_id",
@@ -772,6 +828,11 @@ _FAMILIES = {
         lambda t, retired, **kw: retire_srp_docs(
             t["buckets"], t["vectors"], t["labels"], retired, **kw
         ),
+        ("buckets", "vectors"),
+        _srp_history_hits,
+        "embeddings",
+        "incrsem",
+        ("vec_id", "label"),
     ),
 }
 

@@ -20,9 +20,6 @@ so the oracle never needs to model the index at all.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,9 +31,9 @@ from esther_apache_spark_spark.plans.extensions import (
     minhash_pairs_cte_body,
 )
 from esther_apache_spark_spark.schemas import EMBEDDING_DIM, load_table
-from esther_apache_spark_spark.sources.index_store import read_snapshot
+from esther_apache_spark_spark.sources.index_store import read_snapshot, scratch_dir
 
-# Shared with the streaming novelty gates (ADVICE r9): one definition.
+# Shared with the streaming novelty gate (ADVICE r9): one definition.
 _HIST_FRAC = I.HIST_GATE_FRAC
 
 # The recursive min-label walk shared by both oracles; expects a
@@ -77,35 +74,6 @@ def _retire_gate_sql(id_expr: str) -> str:
     )
 
 
-def _index_dir(kind: str) -> str:
-    """A fresh snapshot-store path for ONE catalog call's simulated
-    nightly index. Every call publishes into its own store, so calls
-    running at once — two driver processes, or two threads sharing a
-    session — never commit to the same store (a second replace-commit
-    on a shared path would raise ``ConcurrentReplaceError``). The
-    stores live under one per-process root, removed at interpreter
-    exit (keyed by PID so one process's exit never reaps another's)."""
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_incr", f"pid{os.getpid()}"
-    )
-    os.makedirs(root, exist_ok=True)
-    _reap_at_exit(root)
-    return tempfile.mkdtemp(prefix=f"{kind}_", dir=root)
-
-
-_REAP_REGISTERED: set[str] = set()
-
-
-def _reap_at_exit(root: str) -> None:
-    if root in _REAP_REGISTERED:
-        return
-    _REAP_REGISTERED.add(root)
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-
-
 @register(
     "incremental_minhash_dedup_new_docs",
     oracle=f"""
@@ -136,7 +104,7 @@ def incremental_minhash_dedup_new_docs(
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < _HIST_FRAC
     history, batch = docs.filter(in_hist), docs.filter(~in_hist)
 
-    path = _index_dir("mh")
+    path = scratch_dir("mh")
     I.commit_index(I.build_minhash_bucket_index(history), path)
     reps = read_snapshot(spark, path, ["bucket_reps"])["bucket_reps"]
     batch_labels, _remap = I.incremental_minhash_merge(batch, reps)
@@ -171,7 +139,7 @@ def incremental_semantic_dedup_new_docs(
     in_hist = hash_bucket(F.col("vec_id"), salt="incrsem") < _HIST_FRAC
     history, batch = emb.filter(in_hist), emb.filter(~in_hist)
 
-    path = _index_dir("srp")
+    path = scratch_dir("srp")
     I.commit_index(I.build_srp_vector_index(history, dim=EMBEDDING_DIM), path)
     idx = read_snapshot(spark, path, ["buckets", "vectors", "labels"])
     batch_labels, _remap = I.incremental_srp_merge(
@@ -213,19 +181,16 @@ def streaming_minhash_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFram
     signatures → bands for the WHOLE corpus and checks batch docs for
     history bucket co-occupancy — exactly the gate's semantics, no
     index modeled."""
-    from esther_apache_spark_spark.streaming.events import (
-        run_stream_minhash_novelty,
-    )
+    from esther_apache_spark_spark.operators.sampling import hash_bucket
+    from esther_apache_spark_spark.streaming.events import run_stream_novelty
 
     docs = load_table(spark, sf_dir, "documents")
-    from esther_apache_spark_spark.operators.sampling import hash_bucket
-
     history = docs.filter(
         hash_bucket(F.col("doc_id"), salt="incrmh") < _HIST_FRAC
     )
-    path = _index_dir("mh")
+    path = scratch_dir("mh")
     I.commit_index(I.build_minhash_bucket_index(history), path)
-    return run_stream_minhash_novelty(spark, sf_dir, path)
+    return run_stream_novelty(spark, sf_dir, path)
 
 
 @register(
@@ -263,7 +228,7 @@ def incremental_dedup_after_retire(spark: SparkSession, sf_dir: str) -> DataFram
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < _HIST_FRAC
     history, batch = docs.filter(in_hist), docs.filter(~in_hist)
 
-    path = _index_dir("mh")
+    path = scratch_dir("mh")
     I.commit_index(I.build_minhash_bucket_index(history), path)
     retired = history.filter(
         hash_bucket(F.col("doc_id"), salt="retire") < _RETIRE_FRAC
@@ -307,14 +272,12 @@ def streaming_srp_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch vectors for a reranked history partner — exactly the gate's
     semantics, no index modeled."""
     from esther_apache_spark_spark.operators.sampling import hash_bucket
-    from esther_apache_spark_spark.streaming.events import (
-        run_stream_srp_novelty,
-    )
+    from esther_apache_spark_spark.streaming.events import run_stream_novelty
 
     emb = load_table(spark, sf_dir, "embeddings")
     history = emb.filter(
         hash_bucket(F.col("vec_id"), salt="incrsem") < _HIST_FRAC
     )
-    path = _index_dir("srp")
+    path = scratch_dir("srp")
     I.commit_index(I.build_srp_vector_index(history, dim=EMBEDDING_DIM), path)
-    return run_stream_srp_novelty(spark, sf_dir, path, dim=EMBEDDING_DIM)
+    return run_stream_novelty(spark, sf_dir, path, dim=EMBEDDING_DIM)

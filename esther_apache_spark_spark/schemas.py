@@ -181,7 +181,7 @@ except ImportError:  # pragma: no cover
 # (which Spark's reader rejects as TimestampType — read as raw int64
 # nanos via session conf spark.sql.legacy.parquet.nanosAsLong, then
 # `div 1000` to micros) or plain TIMESTAMP(MICROS) (read natively).
-# The footer is probed once per path to pick the branch; DuckDB oracles
+# The footer is probed on each read to pick the branch; DuckDB oracles
 # see the same file, and epoch_us() agrees with both paths.
 _EVENTS_RAW = _st(
     ("event_id", LongType()),
@@ -192,23 +192,21 @@ _EVENTS_RAW = _st(
     ("props", StringType()),
 )
 
-_EVENTS_TS_UNIT: dict[str, str] = {}
-
 
 def _events_ts_unit(path: str) -> str:
-    """Parquet time unit ('ns'/'us'/'ms') of events.ts, from the footer."""
-    if path not in _EVENTS_TS_UNIT:
-        import glob
-        import os
+    """Parquet time unit ('ns'/'us'/'ms') of events.ts, from the footer.
+    Read on every call: the footer read is cheap, and a file rewritten
+    at the same path must not answer with its predecessor's unit."""
+    import glob
+    import os
 
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        probe = path
-        if os.path.isdir(path):  # spark-style directory of part files
-            probe = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
-        field = pq.ParquetFile(probe).schema_arrow.field("ts")
-        _EVENTS_TS_UNIT[path] = getattr(field.type, "unit", "us")
-    return _EVENTS_TS_UNIT[path]
+    probe = path
+    if os.path.isdir(path):  # spark-style directory of part files
+        probe = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
+    field = pq.ParquetFile(probe).schema_arrow.field("ts")
+    return getattr(field.type, "unit", "us")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

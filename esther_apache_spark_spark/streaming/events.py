@@ -729,204 +729,98 @@ def run_stream_bloom_novelty(
     return spark.table(name)
 
 
-def run_stream_minhash_novelty(
+def run_stream_novelty(
     spark: SparkSession,
     sf_dir: str,
     index_path: str,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     hist_frac: int | None = None,
-    hist_salt: str = "incrmh",
+    **probe_kw,
 ) -> DataFrame:
-    """Streaming NEAR-dup novelty gate against the persisted MinHash
-    band index of ``operators/incremental.py`` — the banded sibling of
+    """Streaming NEAR-dup novelty gate against a persisted incremental
+    index (``operators/incremental.py``) — the index-probe sibling of
     ``run_stream_bloom_novelty`` (exact ids), sharing ONE index format
     with the batch ingest path (VERDICT r8 #6): the nightly job commits
-    ``bucket_reps`` to the index store at ``index_path``
+    the index to the snapshot store at ``index_path``
     (``sources/index_store.py``); both the batch merge and this stream
     probe it.
 
-    Per micro-batch (foreachBatch — the banding needs a batch context:
-    signature frames cache, and the probe is an ordinary equi-join):
-    arriving docs are banded, band keys semi-joined against the index's
-    (band, bucket) set, and docs with NO bucket co-occupancy in history
-    — no LSH near-dup candidate — pass through as novel. Docs with
-    empty/whitespace text share the sentinel signature, so they are
-    novel only if history has no such doc; null-text docs never band
-    and always pass. The index is RE-READ each micro-batch, so a
-    concurrent nightly rebuild is picked up at the next trigger —
-    streaming state is ZERO (the gate is a join against storage, not a
-    state store), which is the 100 TB/day posture: per-key streaming
-    state grows with corpus age, the index is already maintained by the
-    batch path. Returns the accumulated (batch) novel-docs table."""
-    import tempfile as _tempfile
+    The store's manifest names its family, read once before the stream
+    starts: a MinHash store gates arriving ``documents`` by band-key
+    co-occupancy with ``bucket_reps`` (docs with empty/whitespace text
+    share the sentinel signature, so they are novel only if history has
+    no such doc; null-text docs never band and always pass); an SRP
+    store gates arriving ``embeddings`` through the batch merge's own
+    probe (``srp_batch_history_hits``: bucket candidates reranked by
+    exact 4-dp cosine against the index's ``vectors`` copy).
+    ``probe_kw`` are that probe's parameters (MinHash: ``num_perm``,
+    ``bands``, ``shingle_n``; SRP: ``threshold``, ``n_planes``,
+    ``n_tables``, ``seed``, ``dim``, ``max_bucket``), checked against
+    the family before the stream starts. Rows with no history hit
+    have no near-duplicate anywhere in history — novel, streamed
+    through; the rest are held for the batch merge. ``hist_frac``
+    (default ``HIST_GATE_FRAC``) gates which rows arrive, with the
+    family's salt.
 
-    from esther_apache_spark_spark.operators import dedup as D
-    from esther_apache_spark_spark.operators.incremental import HIST_GATE_FRAC
-    from esther_apache_spark_spark.operators.sampling import hash_bucket
-    from esther_apache_spark_spark.schemas import TESTDATA
-
-    # ADVICE r9: the history/batch split derives from the ONE shared
-    # constant (and is overridable), so the plan entry, this gate, and
-    # the DuckDB oracle can never silently desynchronize.
-    if hist_frac is None:
-        hist_frac = HIST_GATE_FRAC
-    out_dir = _tempfile.mkdtemp(prefix="stream_mh_novel_")
-
-    src = (
-        spark.readStream.schema(TESTDATA["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .filter(hash_bucket(F.col("doc_id"), salt=hist_salt) >= hist_frac)
-    )
-
-    def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from esther_apache_spark_spark.sources.index_store import (
-            read_snapshot,
-        )
-
-        # pins one manifest version per trigger, so a nightly fold
-        # committing mid-stream is picked up atomically at the NEXT
-        # trigger
-        reps = read_snapshot(spark, index_path, ["bucket_reps"])[
-            "bucket_reps"
-        ]
-        sig = D.minhash_band_frame(
-            batch_df,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-        )
-        bband = sig.select("_id", F.posexplode("_bh").alias("_band", "_bucket"))
-        hits = (
-            bband.join(
-                reps.select("_band", "_bucket"), ["_band", "_bucket"], "semi"
-            )
-            .select(F.col("_id").alias("doc_id"))
-            .distinct()
-        )
-        novel = batch_df.join(hits, "doc_id", "left_anti").select(
-            "doc_id", "lang"
-        )
-        try:
-            novel.write.mode("append").parquet(out_dir)
-        finally:
-            # the band frame persists per micro-batch (module cache
-            # doctrine); on an unbounded stream those entries would
-            # accumulate one per trigger — release each after its
-            # batch's write consumed it
-            sig.unpersist()
-
-    q = src.writeStream.foreachBatch(_gate_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out_dir)
-
-
-def run_stream_srp_novelty(
-    spark: SparkSession,
-    sf_dir: str,
-    index_path: str,
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    n_tables: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-    max_bucket: int | None = 4096,
-    hist_frac: int | None = None,
-    hist_salt: str = "incrsem",
-) -> DataFrame:
-    """Streaming SEMANTIC novelty gate — the embedding twin of
-    ``run_stream_minhash_novelty`` (VERDICT r9 #4): arriving embeddings
-    are gated against the persisted SRP index the batch merge maintains
-    (``operators/incremental.py`` — ONE index format for both ingest
-    paths). Unlike the minhash gate, bucket co-occupancy alone is only
-    a CANDIDATE here — the gate needs the index's ``vectors`` copy for
-    the exact 4-dp cosine ≥ ``threshold`` rerank, via the SAME probe
-    the batch merge runs (``srp_batch_history_hits``: bucket equi-join,
-    hot-bucket history sharding, per-(table, bucket, shard) cross-GEMM).
-    Vectors with NO reranked history hit have no near-duplicate
-    anywhere in history — novel, streamed through; the rest are held
-    for the batch merge.
-
-    Same 100 TB posture as the minhash gate: ZERO streaming state (the
-    gate is a join against storage — per-key state would grow with
-    corpus age), index re-read each trigger (a concurrent nightly
-    rebuild is picked up at the next trigger), per-trigger plan-barrier
-    caches released via ``cache_scope``. Returns the accumulated
-    (batch) novel-vectors table."""
-    import tempfile as _tempfile
+    Per trigger (foreachBatch — the probe needs a batch context: its
+    frames cache, and the probe is an ordinary join), the probe tables
+    are read from one pinned manifest version, so a nightly fold
+    committing mid-stream is picked up atomically at the next trigger
+    and the SRP rerank never joins a newer ``buckets`` table against an
+    older ``vectors`` table. Streaming state is ZERO (the gate is a
+    join against storage; per-key state would grow with corpus age),
+    each trigger's caches are released through ``cache_scope``, and an
+    empty trigger is skipped. Returns the accumulated (batch) novel
+    rows, read from a directory under ``index_store.scratch_root()``."""
+    import inspect
+    import os
 
     from esther_apache_spark_spark.operators import dedup as D
     from esther_apache_spark_spark.operators import incremental as I
     from esther_apache_spark_spark.operators.sampling import hash_bucket
-    from esther_apache_spark_spark.schemas import TESTDATA
-    from esther_apache_spark_spark.sources.index_store import read_snapshot
+    from esther_apache_spark_spark.sources import index_store as S
 
+    m = S.read_manifest(index_path)
+    if m is None:
+        raise FileNotFoundError(f"no published snapshot under {index_path}")
+    fam = I._family(m["tables"])
+    # a keyword the family's probe does not take raises here, not
+    # inside the running stream (or never, if every trigger is empty)
+    inspect.signature(fam.history_hits).bind(None, None, **probe_kw)
     if hist_frac is None:
         hist_frac = I.HIST_GATE_FRAC
-    out_dir = _tempfile.mkdtemp(prefix="stream_srp_novel_")
-
+    out_dir = S.scratch_dir("stream_novel")
     src = (
-        spark.readStream.schema(TESTDATA["embeddings"])
+        spark.readStream.schema(TESTDATA[fam.source])
         .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "embeddings.parquet")
+        .option("pathGlobFilter", f"{fam.source}.parquet")
         .parquet(sf_dir)
-        .filter(hash_bucket(F.col("vec_id"), salt=hist_salt) >= hist_frac)
+        .filter(hash_bucket(F.col(fam.id_col), salt=fam.hist_salt) >= hist_frac)
     )
 
     def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # a trigger whose rows all fall in the history slice yields an
-        # empty batch; with dim=None the probe's dim inference would
-        # raise inside foreachBatch and kill the whole stream — an
-        # empty batch gates to an empty novel set, so skip it
+        # a trigger whose rows all fall in the history slice is empty;
+        # the SRP probe's dim inference would raise on it inside
+        # foreachBatch and kill the stream
         if batch_df.isEmpty():
             return
-        # version-consistent: buckets and vectors come from one pinned
-        # manifest — the cosine rerank must never join a newer buckets
-        # table against an older vectors table
-        idx = read_snapshot(spark, index_path, ["buckets", "vectors"])
-        buckets, vectors = idx["buckets"], idx["vectors"]
+        tables = S.read_snapshot(spark, index_path, list(fam.probe_tables))
         with D.cache_scope():
-            hits = (
-                I.srp_batch_history_hits(
-                    batch_df,
-                    buckets,
-                    vectors,
-                    threshold=threshold,
-                    n_planes=n_planes,
-                    n_tables=n_tables,
-                    seed=seed,
-                    dim=dim,
-                    max_bucket=max_bucket,
-                )
-                .select(F.col("_bid").alias("vec_id"))
-                .distinct()
+            hits = fam.history_hits(batch_df, tables, **probe_kw).select(
+                F.col("_id").alias(fam.id_col)
             )
-            novel = batch_df.join(hits, "vec_id", "left_anti").select(
-                "vec_id", "label"
-            )
-            # materialize INSIDE the scope (the scope unpersists the
-            # probe's plan-barrier caches on exit — r9's per-trigger
-            # cache-release doctrine, a44b097)
-            novel.write.mode("append").parquet(out_dir)
+            novel = batch_df.join(hits.distinct(), fam.id_col, "left_anti")
+            # materialize inside the scope, before it unpersists
+            novel.select(*fam.out_cols).write.mode("append").parquet(out_dir)
 
     q = src.writeStream.foreachBatch(_gate_batch).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    import os as _os
-
-    if not any(n.endswith(".parquet") for n in _os.listdir(out_dir)):
-        # every trigger was empty (all rows in the history slice):
-        # nothing was appended, so build the empty result directly
-        return spark.createDataFrame([], TESTDATA["embeddings"]).select(
-            "vec_id", "label"
+    if not any(n.endswith(".parquet") for n in os.listdir(out_dir)):
+        # every trigger was empty: nothing was appended
+        return spark.createDataFrame([], TESTDATA[fam.source]).select(
+            *fam.out_cols
         )
     return spark.read.parquet(out_dir)
 

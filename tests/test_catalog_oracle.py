@@ -33,6 +33,7 @@ import bench as _bench
 _FAMILY_REPS = {
     "incremental_minhash_dedup_new_docs",
     "streaming_minhash_novelty_docs",
+    "streaming_srp_novelty_docs",
 }
 _PANEL = (
     driver_panel_queries()
@@ -83,10 +84,10 @@ def test_incremental_entries_on_two_threads_in_one_session(spark, duck, sf_dir):
     ConcurrentReplaceError), and both results stay oracle-exact."""
     import threading
 
-    from esther_apache_spark_spark.plans import incremental_plans
+    from esther_apache_spark_spark.sources.index_store import scratch_dir
 
     # the race itself is timing-dependent; the per-call store is not
-    assert incremental_plans._index_dir("mh") != incremental_plans._index_dir("mh")
+    assert scratch_dir("mh") != scratch_dir("mh")
     names = ["incremental_minhash_dedup_new_docs", "incremental_dedup_after_retire"]
     got: dict = {}
     errors: list = []

@@ -39,6 +39,7 @@ import json
 import os
 import shutil
 import tempfile
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -510,27 +511,54 @@ def test_two_writer_fold_vs_retire_race_converges(spark, store_root):
     assert _labels_set(got) == _labels_set(fresh)
 
 
-def test_srp_stream_gate_survives_all_empty_triggers(spark, sf_dir, store_root):
+@pytest.mark.parametrize(
+    "family, cols",
+    [("minhash", {"doc_id", "lang"}), ("srp", {"vec_id", "label"})],
+)
+def test_stream_gate_survives_all_empty_triggers(
+    spark, sf_dir, store_root, family, cols
+):
     """A trigger whose rows all fall in the history slice yields an
     empty micro-batch; with dim unset the probe's dim inference used to
     raise inside foreachBatch and kill the stream. hist_frac at the
     hash ceiling makes EVERY trigger empty — the gate must return an
-    empty novel set, not crash."""
+    empty novel set, not crash, for a store of either family."""
     from esther_apache_spark_spark.schemas import EMBEDDING_DIM, load_table
-    from esther_apache_spark_spark.streaming.events import (
-        run_stream_srp_novelty,
-    )
+    from esther_apache_spark_spark.streaming.events import run_stream_novelty
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = f"{store_root}/srp"
-    I.commit_index(
-        I.build_srp_vector_index(emb.limit(50), dim=EMBEDDING_DIM), path
-    )
-    got = run_stream_srp_novelty(
-        spark, sf_dir, path, hist_frac=(1 << 32)
-    )
+    path = f"{store_root}/{family}"
+    if family == "srp":
+        emb = load_table(spark, sf_dir, "embeddings")
+        index = I.build_srp_vector_index(emb.limit(50), dim=EMBEDDING_DIM)
+    else:
+        docs = load_table(spark, sf_dir, "documents")
+        index = I.build_minhash_bucket_index(docs.limit(50))
+    I.commit_index(index, path)
+    got = run_stream_novelty(spark, sf_dir, path, hist_frac=(1 << 32))
     assert got.count() == 0
-    assert set(got.columns) == {"vec_id", "label"}
+    assert set(got.columns) == cols == set(I._family(index).out_cols)
+
+
+def test_stream_gate_output_lives_under_the_reaped_root(
+    spark, sf_dir, store_root
+):
+    """The gate's accumulated output is written under the per-process
+    scratch root that is removed at interpreter exit — not into a bare
+    mkdtemp directory nothing ever removes."""
+    from esther_apache_spark_spark.schemas import load_table
+    from esther_apache_spark_spark.streaming.events import run_stream_novelty
+
+    path = f"{store_root}/mh"
+    docs = load_table(spark, sf_dir, "documents")
+    I.commit_index(I.build_minhash_bucket_index(docs.limit(5)), path)
+    got = run_stream_novelty(spark, sf_dir, path)
+    files = got.inputFiles()
+    root = os.path.realpath(S.scratch_root())
+    assert files and got.count() > 0
+    assert root in S._REAPED
+    for f in files:
+        local = os.path.realpath(urlparse(f).path)
+        assert os.path.commonpath([local, root]) == root, f
 
 
 def test_vacuum_keeps_horizon_and_drops_the_rest(spark, store_root):
@@ -701,9 +729,7 @@ def test_streaming_gate_reads_snapshot_store(spark, sf_dir, store_root):
     from esther_apache_spark_spark.operators import dedup as D
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import load_table
-    from esther_apache_spark_spark.streaming.events import (
-        run_stream_minhash_novelty,
-    )
+    from esther_apache_spark_spark.streaming.events import run_stream_novelty
 
     docs = load_table(spark, sf_dir, "documents")
     in_hist = hash_bucket(F.col("doc_id"), salt="incrmh") < I.HIST_GATE_FRAC
@@ -728,7 +754,7 @@ def test_streaming_gate_reads_snapshot_store(spark, sf_dir, store_root):
 
     want = novel(v2)
     assert want != novel(v1)  # the two versions gate differently
-    got = _kv(run_stream_minhash_novelty(spark, sf_dir, path), "doc_id")
+    got = _kv(run_stream_novelty(spark, sf_dir, path), "doc_id")
     assert got == want and len(got) > 0
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -605,3 +606,47 @@ def test_daily_anomaly_stream_prefix_containment(spark, sf_dir, tmp_path):
     )
     assert streamed <= full_batch
     assert len(streamed) > 0
+
+
+def test_novelty_gate_rejects_bad_store_before_the_stream_starts(
+    spark, sf_dir, tmp_path
+):
+    """The gate reads its store's family before it starts the stream: a
+    missing store, a store that names no index family, and a probe
+    keyword the store's family does not take all raise on the caller's
+    thread and leave no query running."""
+    from esther_apache_spark_spark.sources import index_store as S
+    from esther_apache_spark_spark.streaming.events import run_stream_novelty
+
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(FileNotFoundError):
+        run_stream_novelty(spark, sf_dir, str(tmp_path / "missing"))
+    path = str(tmp_path / "labels_only")
+    labels = spark.createDataFrame([(1, 1)], "node long, comp long")
+    S.commit_snapshot(path, {"labels": labels}, mode="replace")
+    with pytest.raises(ValueError, match="not an index store"):
+        run_stream_novelty(spark, sf_dir, path)
+    # the other family's parameter, and a column name neither probe
+    # lets the caller override (the gate's source schema is fixed)
+    for table, bad in (("bucket_reps", "dim"), ("vectors", "num_perm")):
+        path = str(tmp_path / table)
+        S.commit_snapshot(path, {table: labels}, mode="replace")
+        for kw in (bad, "id_col", "text_col", "vec_col"):
+            with pytest.raises(TypeError, match=kw):
+                run_stream_novelty(spark, sf_dir, path, **{kw: 8})
+    assert {q.id for q in spark.streams.active} == before
+
+
+def test_events_ts_unit_follows_a_rewritten_file(tmp_path):
+    """The ts unit is read from the footer on every call, so a file
+    rewritten in place at the same path reports its new unit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esther_apache_spark_spark.schemas import _events_ts_unit
+
+    path = str(tmp_path / "events.parquet")
+    for unit in ("ns", "us"):
+        ts = pa.array([0, 1], pa.timestamp(unit))
+        pq.write_table(pa.table({"ts": ts}), path)
+        assert _events_ts_unit(path) == unit

@@ -251,6 +251,7 @@ def main() -> None:
         "incremental_minhash_dedup_new_docs",
         "incremental_semantic_dedup_new_docs",
         "streaming_minhash_novelty_docs",
+        "streaming_srp_novelty_docs",
     ]
     names = bench.HEADLINE + bench.PIPELINE + extras
     failures: dict[str, str] = {}
