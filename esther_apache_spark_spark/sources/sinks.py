@@ -33,7 +33,10 @@ def write_csv_dialect(
     ``pipeline_pyspark.py:201-222``). Formatting happens at projection time
     (``format_number``-style) so the distributed writer emits final bytes —
     no pandas loop. ``partition_by`` gives the per-date file layout (K2)
-    natively via ``partitionBy``.
+    natively via ``partitionBy``. ``single_file=True`` writes one file
+    through ``coalesce(1)``, which is narrow: the whole upstream scan
+    collapses into that one task (no shuffle, no parallel read) and the
+    rows land in partition order.
     """
     out = df
     for c in float_cols:

@@ -204,3 +204,19 @@ def test_doc_counts_match_registry():
     assert m2 and (int(m2.group(1)), int(m2.group(2))) == (n_q, n_o), (
         f"CATALOG.md says {m2.groups() if m2 else None}, registry has ({n_q}, {n_o})"
     )
+
+
+def test_catalog_md_is_current():
+    """CATALOG.md is exactly what ``tools/dump_catalog.py`` renders from
+    the registry: a changed summary line or entry that was not
+    regenerated fails here, not in a later reader's diff."""
+    import importlib.util
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "dump_catalog", root / "tools" / "dump_catalog.py"
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    assert (root / "CATALOG.md").read_text() == tool.render()

@@ -131,6 +131,76 @@ def test_write_leaves_no_cache_behind(spark, fk, tmp_path):
         assert cache_manager.lookupCachedData(fk[name]._jdf).isEmpty(), name
 
 
+@pytest.mark.parametrize(
+    "failing",
+    [("rejects_items_csv",), ("daily_city_sales_csv",),
+     ("rejects_items_csv", "daily_city_sales_csv")],
+    ids=["rejects", "daily", "both"],
+)
+def test_failed_sink_reaches_caller_and_frees_caches(spark, fk, tmp_path, monkeypatch, failing):
+    """The rejects sink runs on a worker thread and the daily chain in
+    the caller's: a failure on either side propagates, none is dropped
+    (when both fail the rejects error carries the daily one as its
+    ``__context__``), and the writer's caches are freed on every path."""
+    from pyspark import StorageLevel
+
+    from esther_apache_spark_spark.freshkart import pipeline
+
+    real_sink = pipeline.write_csv_dialect
+
+    def sink(df, path, **kw):
+        name = path.rsplit("/", 1)[-1]
+        if name in failing:
+            raise RuntimeError(f"injected {name} failure")
+        return real_sink(df, path, **kw)
+
+    monkeypatch.setattr(pipeline, "write_csv_dialect", sink)
+    with pytest.raises(RuntimeError, match=f"injected {failing[0]} failure") as err:
+        write_freshkart_outputs(fk, str(tmp_path), str(tmp_path / "sales.db"))
+    if len(failing) == 2:
+        assert "injected daily_city_sales_csv failure" in str(err.value.__context__)
+    for name in ("orders_clean", "daily_city_sales"):
+        assert fk[name].storageLevel == StorageLevel.NONE, name
+
+
+def test_write_jobs_keep_the_callers_group_and_tags(spark, fk, tmp_path):
+    """Every job of a write, the rejects job on the worker thread
+    included, runs in the caller's job group and carries its session
+    tag."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    first = jsc.dagScheduler().numTotalJobs()
+    sc.setJobGroup("freshkart-write", "one FreshKart write")
+    spark.addTag("freshkart-write-tag")
+    try:
+        write_freshkart_outputs(fk, str(tmp_path), str(tmp_path / "sales.db"))
+    finally:
+        spark.removeTag("freshkart-write-tag")
+        sc._jsc.clearJobGroup()
+    jobs = set(range(first, jsc.dagScheduler().numTotalJobs()))
+    jsc.listenerBus().waitUntilEmpty()
+    assert len(jobs) >= 2
+    assert jobs <= set(sc.statusTracker().getJobIdsForGroup("freshkart-write"))
+    for j in jobs:
+        tags = jsc.statusStore().job(j).jobTags()
+        assert any(
+            tags.apply(i).endswith("-freshkart-write-tag") for i in range(tags.size())
+        ), (j, tags.mkString(", "))
+
+
+def test_rejects_file_keeps_the_scan_order(spark, fk, tmp_path):
+    """The single rejects file holds the quarantined rows in scan order,
+    as the reference writes them: row for row what one partition of the
+    rejects frame collects."""
+    write_freshkart_outputs(fk, str(tmp_path), str(tmp_path / "sales.db"))
+    (path,) = glob.glob(str(tmp_path / "rejects_items_csv" / "*.csv"))
+    with open(path, newline="") as f:
+        header, *rows = list(csv.reader(f, delimiter=";"))
+    expected = fk["rejects"].coalesce(1).collect()
+    assert header == fk["rejects"].columns
+    assert rows == [[str(v) for v in r] for r in expected]
+
+
 @pytest.mark.parametrize("level", [None, "DISK_ONLY"])
 def test_dim_cache_freed_by_the_active_scope(spark, level):
     """The customers dim cache, at the default level or an explicit one,

@@ -31,7 +31,8 @@ def first_line(doc: str) -> str:
     return ""
 
 
-def main() -> None:
+def render() -> str:
+    """CATALOG.md's full text for the current registry."""
     rows = []
     for name in sorted(plans.QUERIES):
         spec = plans.QUERIES[name]
@@ -39,7 +40,7 @@ def main() -> None:
         rows.append(f"| `{name}` | {kind} | {first_line(spec.doc)} |")
     n_total = len(plans.QUERIES)
     n_oracled = sum(1 for s in plans.QUERIES.values() if s.oracle)
-    body = "\n".join(
+    return "\n".join(
         [
             HEADER,
             f"**{n_total} queries, {n_oracled} oracled, "
@@ -51,10 +52,13 @@ def main() -> None:
             "",
         ]
     )
+
+
+def main() -> None:
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md")
     with open(out, "w") as f:
-        f.write(body)
-    print(f"CATALOG.md written ({n_total} queries)")
+        f.write(render())
+    print(f"CATALOG.md written ({len(plans.QUERIES)} queries)")
 
 
 if __name__ == "__main__":
