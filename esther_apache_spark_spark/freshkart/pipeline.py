@@ -45,12 +45,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esther_apache_spark_spark.functions.cleaning import order_date_str, truthy_bool
-from esther_apache_spark_spark.operators.dedup import _cache, cache_scope
 from esther_apache_spark_spark.schemas import (
     FRESHKART_CUSTOMERS,
     FRESHKART_ORDERS,
     FRESHKART_REFUNDS,
 )
+from esther_apache_spark_spark.scope import cache_scope, cached
 from esther_apache_spark_spark.sources.readers import read_csv, read_json_multiline
 from esther_apache_spark_spark.sources.sinks import (
     quarantine_split,
@@ -88,7 +88,7 @@ def run_freshkart_pipeline(
     # at perfbench seed 4 on 4 cores, and two 13-round one-JVM A/Bs of
     # the write without it read medians 1.62 -> 1.54 s and 1.49 -> 1.42 s,
     # both inside the with-cache interquartile range (within noise).
-    customers_clean = _cache(customers_clean, dim_storage_level)
+    customers_clean = cached(customers_clean, dim_storage_level)
     refunds_clean = (
         refunds.withColumn("amount", F.col("amount").try_cast("double"))
         .na.fill({"amount": 0.0})
@@ -230,8 +230,8 @@ def write_freshkart_outputs(
         )
         try:
             with cache_scope():
-                orders_clean = _cache(dfs["orders_clean"])
-                daily = _cache(dfs["daily_city_sales"])
+                orders_clean = cached(dfs["orders_clean"])
+                daily = cached(dfs["daily_city_sales"])
                 write_csv_dialect(
                     daily,
                     f"{output_dir}/daily_city_sales_csv",

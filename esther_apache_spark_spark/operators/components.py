@@ -63,6 +63,8 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructField, StructType
 
+from esther_apache_spark_spark.scope import cache_scope, cached
+
 #: Graphs with at most this many edges are labelled in driver memory;
 #: larger ones run the distributed rounds. Tests and drills set it to 0
 #: to force the distributed path.
@@ -155,9 +157,10 @@ def _cc_loop(edges, src, dst, _ckpt):
     # candidate generation). The aggregate executes the plan exactly
     # once under normal AQE (coalesced post-shuffle partitions, runtime
     # joins), fills the cache, and every later read takes blocks; it
-    # also counts NULL endpoints, which no path can label.
-    ed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    try:
+    # also counts NULL endpoints, which no path can label. The scope
+    # releases the cache before this returns.
+    with cache_scope():
+        ed = cached(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
         n_ed, n_null = ed.agg(
             F.count(F.lit(1)),
             F.count_if(F.col("a").isNull() | F.col("b").isNull()),
@@ -170,8 +173,6 @@ def _cc_loop(edges, src, dst, _ckpt):
         if n_ed <= DRIVER_MAX_EDGES:
             return _driver_labels(ed, both.schema["a"].dataType)
         und = _ckpt(both.distinct())
-    finally:
-        ed.unpersist()
     # Seed labels with the FIRST neighbor-min round fused into the node
     # scan (r10): comp₀(v) = min(v, min neighbors) is exactly what the
     # old identity-seeded loop computed in its first propagation, for

@@ -22,30 +22,15 @@ Scale notes:
   inside mega-clusters is given up. Pass ``max_bucket=None`` to disable.
 - Signatures are fixed-width arrays (num_perm longs), so the shuffle
   payload per doc is O(num_perm), independent of doc size.
-- The ``.cache()`` calls are load-bearing: they are plan barriers that
-  keep Arrow-batched UDFs out of generator operators AND the relation
-  both sides of the self-join reuse. They are not unpersisted eagerly
-  (results are lazy — the frames are still needed when the caller
-  materializes). For a single query per session that is fine (executor
-  storage is reclaimed at session end); a pipeline composing SEVERAL
-  dedup passes in one long-lived session should wrap each pass in
-  ``cache_scope()``, which unpersists every frame the pass cached as
-  the scope exits — materialize results INSIDE the scope::
-
-      with cache_scope():
-          pairs = minhash_lsh_candidates(docs)
-          pairs.write.parquet(out)      # materialized in-scope
-      # executor storage for this pass is freed here
-
-  (``spark.catalog.clearCache()`` remains the blunt whole-session
-  fallback.)
+- The plan-barrier caches (``scope.cached``) are load-bearing; a
+  pipeline composing several dedup passes in one long-lived session
+  wraps each pass in ``scope.cache_scope()`` to free them (see
+  ``scope.py``).
 """
 
 from __future__ import annotations
 
-import contextlib
 import re
-from contextvars import ContextVar
 
 import numpy as np
 import pandas as pd
@@ -60,50 +45,8 @@ from esther_apache_spark_spark.functions.text import (
 )
 from esther_apache_spark_spark.functions.vector import is_valid_vector, vector_dim
 from esther_apache_spark_spark.operators.windows import keep_first
-
-# --- cache lifecycle -------------------------------------------------------
-# Every plan-barrier cache in this module registers with the active
-# cache_scope (if any), so composed pipelines can free executor storage
-# per pass instead of accumulating it until eviction thrashes.
-_active_cache_scope: ContextVar[list | None] = ContextVar(
-    "_dedup_cache_scope", default=None
-)
-
-
-def _cache(df: DataFrame, storage_level=None) -> DataFrame:
-    """``df.cache()`` (MEMORY_AND_DISK deserialized — a cached frame
-    larger than executor memory spills instead of thrashing eviction),
-    or ``df.persist(storage_level)`` when one is given, that enrolls the
-    frame in the active cache_scope."""
-    df = df.cache() if storage_level is None else df.persist(storage_level)
-    scope = _active_cache_scope.get()
-    if scope is not None:
-        scope.append(df)
-    return df
-
-
-@contextlib.contextmanager
-def cache_scope():
-    """Scope the plan-barrier caches of the dedup operators.
-
-    Frames cached by any dedup operator called inside the ``with`` block
-    are unpersisted when the block exits — materialize results inside
-    the scope (see module docstring). Scopes nest: each scope frees only
-    the frames cached while it was the innermost one. Caveat: Spark's
-    CacheManager keys entries by analyzed plan, so two scopes running an
-    operator over the IDENTICAL input share one entry — the first scope
-    to exit unpersists it for both. Distinct passes over distinct inputs
-    (the composed-pipeline case this exists for) are unaffected. Without
-    a scope, behavior is unchanged (caches live until session end or
-    ``spark.catalog.clearCache()``)."""
-    frames: list[DataFrame] = []
-    token = _active_cache_scope.set(frames)
-    try:
-        yield
-    finally:
-        _active_cache_scope.reset(token)
-        for df in frames:
-            df.unpersist()
+# cache_scope is re-exported: bench.py and perfbench import it from here
+from esther_apache_spark_spark.scope import cache_scope, cached  # noqa: F401
 
 
 def _spread_narrow_input(df: DataFrame) -> DataFrame:
@@ -505,8 +448,8 @@ def _collapse_identical_text(
     Both frames are cached per the module cache doctrine."""
     keyed = df.select(F.col(id_col).alias("_cid"), F.col(text_col).alias("_ct"))
     keyed = keyed.withColumn("_tkey", F.md5(F.coalesce(F.col("_ct"), F.lit(""))))
-    members = _cache(keyed.select("_tkey", F.col("_cid").alias("_mid")))
-    groups = _cache(
+    members = cached(keyed.select("_tkey", F.col("_cid").alias("_mid")))
+    groups = cached(
         keyed.groupBy("_tkey")
         .agg(F.min("_cid").alias(id_col), F.first("_ct").alias(text_col))
     )
@@ -794,7 +737,7 @@ def minhash_band_frame(
     bh_arr = "array(" + ", ".join(
         band_hash_sql("_sig", b) for b in range(bands)
     ) + ")"
-    return _cache(base_df.select(
+    return cached(base_df.select(
         "_id",
         minhash_signature_vec(F.col("_base"), num_perm).alias("_sig"),
     ).select("_id", "_sig", F.expr(bh_arr).alias("_bh")))
@@ -1172,7 +1115,7 @@ def ngram_jaccard_pairs(
     # LOST at warm medians — the repartition + wide cache reads cost more
     # than the fill parallelism buys; the spread stays only in
     # substring_dup_spans, where it measured 1.5x.)
-    shingled = _cache(df.select(*sel))
+    shingled = cached(df.select(*sel))
     # feeds the index join and the exact-recount joins
     inv = shingled.select("_id", F.explode("_sh").alias("_g"))
     hot = None
@@ -1312,7 +1255,7 @@ def simhash_candidates(
 
     # cache = reuse across both join sides AND a plan barrier keeping the
     # Arrow UDF out of the posexplode generator (see minhash note)
-    fp = _cache(df.select(  # df already NULL-text-filtered at entry
+    fp = cached(df.select(  # df already NULL-text-filtered at entry
         F.col(id_col).alias("_id"),
         simhash_vec(token_hashes).alias("_fp"),
     ))
@@ -1541,8 +1484,8 @@ def _collapse_identical_vec(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     expansion joins; groups holds one vector per DISTINCT content and
     spills to disk at corpus scale)."""
     keyed = base.withColumn("_vkey", F.md5(F.to_json(F.col("_v"))))
-    members = _cache(keyed.select("_vkey", F.col("_id").alias("_mid")))
-    groups = _cache(
+    members = cached(keyed.select("_vkey", F.col("_id").alias("_mid")))
+    groups = cached(
         keyed.groupBy("_vkey")
         .agg(F.min("_id").alias("_id"), F.first("_v").alias("_v"))
     )
@@ -1593,7 +1536,7 @@ def _srp_rep_pairs(
     # it), and spills MEMORY_AND_DISK at corpus scale. Measured at
     # sf0.1: dedup_embedding_cosine 1.68 -> 1.34 s warm, identical
     # pairs.
-    proj = _cache(src.select(
+    proj = cached(src.select(
         "_id",
         "_v",
         srp_table_buckets_vec(F.col("_v"), dim, n_planes, n_tables, seed).alias(
@@ -1937,7 +1880,7 @@ def substring_dup_spans(
         gw = members.groupBy("_tkey").agg(F.count(F.lit(1)).alias("_w"))
         # cached: feeds both the df aggregate and the dup-position
         # semi-join — one tokenize/explode pass per distinct text total
-        pos_h = _cache(_pos_windows(groups, "_tkey"))
+        pos_h = cached(_pos_windows(groups, "_tkey"))
         occurrences = pos_h.select("_h", "_id")
         if scope == "cross_doc":
             occurrences = occurrences.distinct()
@@ -1957,7 +1900,7 @@ def substring_dup_spans(
         # per-token md5 pass. The spread (r11) unsticks the tokenize+
         # md5+explode pass from a single-row-group scan — see
         # _spread_narrow_input for the scale gate.
-        pos_h = _cache(_pos_windows(_spread_narrow_input(df), id_col))
+        pos_h = cached(_pos_windows(_spread_narrow_input(df), id_col))
         occurrences = pos_h.select("_h", "_id")
         if scope == "cross_doc":
             occurrences = occurrences.distinct()
@@ -2183,7 +2126,7 @@ def ngram_containment_pairs(
     # LOST at warm medians — the repartition + wide cache reads cost more
     # than the fill parallelism buys; the spread stays only in
     # substring_dup_spans, where it measured 1.5x.)
-    shingled = _cache(df.select(*sel))
+    shingled = cached(df.select(*sel))
     nonempty = shingled.filter(F.size("_sh") > 0)
     inv = nonempty.select("_id", F.explode("_sh").alias("_g"))
     if max_df is not None:

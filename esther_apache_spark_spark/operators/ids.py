@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from esther_apache_spark_spark.scope import cached
+
 
 def assign_contiguous_ids(
     df: DataFrame,
@@ -32,18 +34,14 @@ def assign_contiguous_ids(
 ) -> DataFrame:
     """Append ``id_col`` = dense rank 0..N-1 under ``order_by`` (must
     be a total order for deterministic ids)."""
-    from esther_apache_spark_spark.operators.dedup import _cache
-
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # The cache is a CORRECTNESS barrier here, not a hint: the counts
     # job and the tagging job must see the SAME range bounds, and
     # repartitionByRange derives its bounds from a sample — two
     # independent recomputations of the lineage could split rows
-    # differently and corrupt the offsets. Enrolled via dedup._cache so
-    # a surrounding dedup.cache_scope() actually frees it (a raw
-    # persist() on this local would be unreleasable by callers);
-    # DataFrame.cache() is MEMORY_AND_DISK, so it spills at scale.
-    d = _cache(
+    # differently and corrupt the offsets. Enrolled in the caller's
+    # cache_scope; MEMORY_AND_DISK, so it spills at scale.
+    d = cached(
         df.repartitionByRange(parts, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("_pid", F.spark_partition_id())

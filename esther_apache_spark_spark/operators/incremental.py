@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from esther_apache_spark_spark.functions.vector import vector_dim
 from esther_apache_spark_spark.operators import dedup as D
 from esther_apache_spark_spark.operators.components import connected_components
+from esther_apache_spark_spark.scope import cached
 from esther_apache_spark_spark.sources import index_store as S
 
 # Single definition of the simulated history/batch split used by every
@@ -395,7 +396,7 @@ def srp_batch_history_hits(
 
     if dim is None:
         dim = vector_dim(batch, vec_col)
-    bproj = D._cache(
+    bproj = cached(
         batch.select(
             F.col(id_col).alias("_bid"),
             F.col(vec_col).alias("_bv"),

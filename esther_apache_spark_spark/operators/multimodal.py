@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from esther_apache_spark_spark.scope import scratch_dir
+
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = StructType(
@@ -376,14 +378,16 @@ def jvm_image_features(
     already live as files and feed the ``image`` source directly,
     skipping the spill; the spill path exists for payload-COLUMN data
     like the ``MEDIA`` table. Local mode: any tmp dir. Files are left
-    for the returned (lazy) frame to re-read; the caller owns cleanup
-    after materialization."""
+    for the returned (lazy) frame to re-read. A caller-given
+    ``work_dir`` is the caller's to remove; the default is a
+    ``scope.scratch_dir``, removed when the caller's ``cache_scope``
+    exits (materialize inside it) or, outside any scope, at interpreter
+    exit."""
     import os
     import re
-    import tempfile
 
     if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="jvm_img_")
+        work_dir = scratch_dir("jvm_img")
     os.makedirs(work_dir, exist_ok=True)
 
     def _write(rows) -> None:

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from esther_apache_spark_spark.scope import cached
+
 
 def exclusive_prefix_sum(
     df: DataFrame,
@@ -47,13 +49,11 @@ def exclusive_prefix_sum(
     TOTAL order — include a unique tiebreaker). Distributed: no global
     window, no driver-side data; only per-partition totals reach the
     driver."""
-    from esther_apache_spark_spark.operators.dedup import _cache
-
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # Cache is a correctness barrier (same reason as assign_contiguous_ids):
     # the totals job and the tagging job must see identical range bounds,
     # and repartitionByRange samples to derive them.
-    d = _cache(
+    d = cached(
         df.repartitionByRange(parts, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("_pid", F.spark_partition_id())

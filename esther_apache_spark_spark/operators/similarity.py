@@ -38,6 +38,7 @@ from esther_apache_spark_spark.functions.vector import (
     vector_dim,
 )
 from esther_apache_spark_spark.operators.windows import top_k_per_group
+from esther_apache_spark_spark.scope import cache_scope, cached
 
 #: Hard cap on the driver-collected "query panel" accepted by the
 #: GEMM-kernel top-k variants (``brute_force_topk_arrow``,
@@ -697,26 +698,26 @@ def kmeans_centroids_lloyd(
             lambda x: x / F.greatest(l2_norm(F.col(vec_col).cast("array<double>")), F.lit(1e-12)),
         ).alias("_uv"),
     )
-    q = quantize_vectors(unit, id_col="vec_id", vec_col="_uv", scale=scale).cache()
     from pyspark.sql import Window
 
-    seeds = q.orderBy("vec_id").limit(nlist)
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).cast("long").alias("cid"),
-        F.col("qv").alias("cv"),
-    )
-    for _ in range(iters):
-        assigned = _assign_arrow(q, cent)
-        new = _update(assigned)
-        # an emptied cluster keeps its previous centroid — bounded
-        # k-row outer join
-        cent = (
-            cent.select("cid", F.col("cv").alias("_prev"))
-            .join(new, on="cid", how="left")
-            .select("cid", F.coalesce("cv", "_prev").alias("cv"))
+    with cache_scope():  # q is released once the centroids are collected
+        q = cached(quantize_vectors(unit, id_col="vec_id", vec_col="_uv", scale=scale))
+        seeds = q.orderBy("vec_id").limit(nlist)
+        cent = seeds.select(
+            (F.row_number().over(Window.orderBy("vec_id")) - 1).cast("long").alias("cid"),
+            F.col("qv").alias("cv"),
         )
-    rows = sorted(cent.collect(), key=lambda r: r["cid"])  # k rows: model constant
-    q.unpersist()
+        for _ in range(iters):
+            assigned = _assign_arrow(q, cent)
+            new = _update(assigned)
+            # an emptied cluster keeps its previous centroid — bounded
+            # k-row outer join
+            cent = (
+                cent.select("cid", F.col("cv").alias("_prev"))
+                .join(new, on="cid", how="left")
+                .select("cid", F.coalesce("cv", "_prev").alias("cv"))
+            )
+        rows = sorted(cent.collect(), key=lambda r: r["cid"])  # k rows: model constant
     m = np.array([r["cv"] for r in rows], dtype="float64") / float(scale)
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
     return m.tolist()

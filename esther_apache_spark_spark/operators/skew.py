@@ -16,6 +16,17 @@ runtime. These helpers cover the cases AQE can't fix:
   whole no matter the thresholds; materialize the build side
   (checkpoint / table) to restore AQE's split, broadcast it if small,
   or use ``salted_join``, which never depends on plan shape;
+- a small box. AQE splits a partition only when it is MORE than
+  ``skewJoin.skewedPartitionFactor`` (5) times the median partition.
+  With ``shuffle.partitions`` equal to the core count, which is
+  ``session.get_spark``'s default, a 50 % hot key on 4 cores lands in
+  a partition of about 62 % of the rows against a 12.5 % median: 5
+  times it at most, so AQE leaves it whole. Measured on 4 cores with
+  the planted-skew join of ``tests/test_scale_guards.py`` (200k rows,
+  half on one key, that test's lowered thresholds): no split at 4
+  shuffle partitions, a split at 8, 16 and 32. On such a box
+  ``salted_join`` is the only skew defence at the default width;
+  raising ``spark.sql.shuffle.partitions`` restores AQE's split;
 - value-retaining aggregations (``collect_list``-style) where one group's
   values overwhelm a single reducer → two-stage salted aggregate.
 

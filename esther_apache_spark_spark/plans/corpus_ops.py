@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from esther_apache_spark_spark.plans.catalog import register
 from esther_apache_spark_spark.schemas import load_table
+from esther_apache_spark_spark.scope import cache_scope, cached
 
 
 @register(
@@ -1035,10 +1036,10 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     coincides with greedy BPE exactly). The DuckDB oracle replays all
     six rounds as unrolled CTEs with scalar-subquery replaces —
     bit-identical including tiebreaks."""
-    out, base, _final = _bpe_learn(spark, sf_dir)
-    # the merge table is already driver-local — the vocabulary cache has
-    # served its purpose and can be freed eagerly
-    base.unpersist()
+    # the merge table is driver-local, so the vocabulary cache is freed
+    # as soon as it is learned
+    with cache_scope():
+        out, _final = _bpe_learn(spark, sf_dir)
     return spark.createDataFrame(
         out, "rank int, sym_a string, sym_b string, freq long"
     )
@@ -1046,12 +1047,10 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_learn(
     spark: SparkSession, sf_dir: str
-) -> tuple[list[tuple[int, str, str, int]], DataFrame, DataFrame]:
-    """Shared BPE trainer: returns (ranked merges, cached char-level
-    vocabulary, vocabulary with ALL merges applied). The base cache is
-    enrolled via dedup._cache, so a surrounding ``dedup.cache_scope()``
-    frees it; callers whose result no longer depends on it (the merge
-    table is driver-local) should ``base.unpersist()`` eagerly."""
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
+    """Shared BPE trainer: returns (ranked merges, vocabulary with ALL
+    merges applied). The char-level vocabulary under the latter is
+    cached in the caller's ``cache_scope``."""
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
@@ -1059,9 +1058,7 @@ def _bpe_learn(
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    from esther_apache_spark_spark.operators.dedup import _cache
-
-    base = _cache(
+    base = cached(
         words.select(
             F.concat(
                 F.lit(" "), F.regexp_replace("w", "(.)", "$1 "), F.lit("</w> ")
@@ -1115,7 +1112,7 @@ def _bpe_learn(
         cur = cur.withColumn(
             "s", F.replace("s", F.lit(f" {a} {b} "), F.lit(f" {a}{b} "))
         )
-    return out, base, cur
+    return out, cur
 
 
 @register("bpe_subword_frequencies", oracle=_bpe_subword_oracle())
@@ -1128,7 +1125,7 @@ def bpe_subword_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     work happens on the weighted word vocabulary; the final count is
     one explode + hash aggregate with a rounded TakeOrdered head
     (freq DESC, sym ASC — total order)."""
-    _merges, base, final = _bpe_learn(spark, sf_dir)
+    _merges, final = _bpe_learn(spark, sf_dir)
     out = (
         final.select("cnt", F.explode(F.split(F.trim("s"), " ")).alias("sym"))
         .groupBy("sym")

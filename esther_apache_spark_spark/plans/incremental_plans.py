@@ -16,6 +16,10 @@ recompute in SQL (signatures/buckets, pairing, recursive-CTE
 components) restricted to batch docs: the incremental merge's correctness claim IS that its
 labels equal the full recompute's (min-of-mins over merged components),
 so the oracle never needs to model the index at all.
+
+The per-call store is a ``scope.scratch_dir``: the returned labels read
+it lazily, so it is removed when the caller's ``cache_scope`` exits
+(materialize inside it), or at interpreter exit outside any scope.
 """
 
 from __future__ import annotations
@@ -31,7 +35,8 @@ from esther_apache_spark_spark.plans.extensions import (
     minhash_pairs_cte_body,
 )
 from esther_apache_spark_spark.schemas import EMBEDDING_DIM, load_table
-from esther_apache_spark_spark.sources.index_store import read_snapshot, scratch_dir
+from esther_apache_spark_spark.scope import scratch_dir
+from esther_apache_spark_spark.sources.index_store import read_snapshot
 
 # Shared with the streaming novelty gate (ADVICE r9): one definition.
 _HIST_FRAC = I.HIST_GATE_FRAC

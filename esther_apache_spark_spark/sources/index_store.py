@@ -53,42 +53,12 @@ from __future__ import annotations
 import glob
 import json
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_manifests"
-
-_REAPED: set[str] = set()
-
-
-def scratch_root() -> str:
-    """This process's root for per-call index stores and streaming gate
-    outputs, removed at interpreter exit (keyed by PID, so one
-    process's exit never reaps another's)."""
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_incr", f"pid{os.getpid()}"
-    )
-    os.makedirs(root, exist_ok=True)
-    # unlocked: two threads racing here register the same rmtree
-    # twice, and the second finds nothing left to remove
-    if root not in _REAPED:
-        _REAPED.add(root)
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-def scratch_dir(kind: str) -> str:
-    """A fresh directory under ``scratch_root()`` for ONE call. Calls
-    running at once — two driver processes, or two threads sharing a
-    session — never share one, so no call's replace-commit races
-    another's (``ConcurrentReplaceError``)."""
-    return tempfile.mkdtemp(prefix=f"{kind}_", dir=scratch_root())
 
 
 def _manifest_path(path: str, version: int) -> str:

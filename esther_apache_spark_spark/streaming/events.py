@@ -15,12 +15,16 @@ bounded. The sessionize operator is the batch twin of
 from __future__ import annotations
 
 import contextlib
+import os
+import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esther_apache_spark_spark.schemas import TESTDATA
+from esther_apache_spark_spark.scope import cache_scope, on_exit, scratch_dir
 
 # Off-heap state store for big-state streaming (see DEPLOYMENT.md).
 ROCKSDB_STATE_STORE = (
@@ -86,6 +90,56 @@ def streaming_events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drain(
+    spark: SparkSession, stream: DataFrame, mode: str, prefix: str, feed=None
+) -> DataFrame:
+    """Run ``stream`` into a memory sink in output ``mode`` until it
+    has drained, and return the sink's table. ``feed(q)``, when given,
+    runs after the first drain: the sentinel runners drop their flush
+    files there and drain again. The sink's temp view is dropped when
+    the active ``cache_scope`` exits; a frame already read from it keeps
+    reading the sink's rows."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    on_exit(lambda: spark.catalog.dropTempView(name))
+    q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        if feed is not None:
+            feed(q)
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
+def _staged_events(spark: SparkSession, sf_dir: str, tmp: str):
+    """Copy the events file into ``tmp``, dated a minute back so it
+    streams before any sentinel, and return (a file stream over
+    ``tmp``, the copy's path, the events' max ts in micros)."""
+    from esther_apache_spark_spark.schemas import load_table
+
+    copy = os.path.join(tmp, "00_events.parquet")
+    shutil.copy(f"{sf_dir}/events.parquet", copy)
+    t0 = time.time() - 60
+    os.utime(copy, (t0, t0))
+    max_ts_us = (
+        load_table(spark, sf_dir, "events")
+        .agg(F.max(F.unix_micros("ts")).alias("m"))
+        .collect()[0]["m"]
+    )
+    return _dir_events_stream(spark, tmp, copy), copy, max_ts_us
+
+
+def _dir_events_stream(spark: SparkSession, d: str, like: str) -> DataFrame:
+    """A file stream over the events-shaped parquet files in ``d``,
+    read with the ts unit of ``like`` (see ``streaming_events_source``)."""
+    from esther_apache_spark_spark.schemas import _EVENTS_RAW, _events_ts_unit
+
+    if _events_ts_unit(like) == "ns":
+        raw = spark.readStream.schema(_EVENTS_RAW).parquet(d)
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return spark.readStream.schema(TESTDATA["events"]).parquet(d)
+
+
 def tumbling_agg(events: DataFrame, window: str = "1 hour", watermark: str = "30 minutes") -> DataFrame:
     """Tumbling-window count+sum per event_type. Works on batch and
     streaming inputs alike; the watermark is applied only when streaming."""
@@ -112,19 +166,12 @@ def run_streaming_tumbling_agg(spark: SparkSession, sf_dir: str, window: str = "
     """Drive the streaming tumbling agg to completion via the memory sink
     and return the (batch) result table. Complete output mode so every
     window is emitted regardless of watermark progress."""
-    name = f"stream_agg_{uuid.uuid4().hex[:8]}"
-    q = (
-        tumbling_agg(streaming_events_source(spark, sf_dir), window)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
+    return _drain(
+        spark,
+        tumbling_agg(streaming_events_source(spark, sf_dir), window),
+        "complete",
+        "stream_agg",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def stream_to_partitioned_parquet(
@@ -203,20 +250,9 @@ def running_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"user_totals_{uuid.uuid4().hex[:8]}"
-    q = (
-        updates.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # multiple micro-batches emit multiple updates per user; the final
     # state is the row with the highest n_events per user
-    all_updates = spark.table(name)
+    all_updates = _drain(spark, updates, "update", "user_totals")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         all_updates.withColumn("_rn", F.row_number().over(w))
@@ -301,7 +337,6 @@ def running_user_peak_stream(
             pass
 
     stream = streaming_events_source(spark, sf_dir)
-    name = f"user_peak_{uuid.uuid4().hex[:8]}"
     with state_store_provider(spark):
         updates = stream.groupBy("user_id").transformWithStateInPandas(
             PeakProcessor(),
@@ -309,17 +344,7 @@ def running_user_peak_stream(
             outputMode="Update",
             timeMode="None",
         )
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    all_updates = spark.table(name)
+        all_updates = _drain(spark, updates, "update", "user_peak")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         all_updates.withColumn("_rn", F.row_number().over(w))
@@ -355,8 +380,7 @@ def run_stream_dedup(
     length — the property that makes exact dedup viable on an unbounded
     100 TB/day ingest. Driven to completion on the file source; returns
     the deduped (batch) result table."""
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
+    deduped = (
         streaming_events_source(spark, sf_dir)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -366,16 +390,8 @@ def run_stream_dedup(
             "event_type",
             F.unix_micros(F.col("ts")).alias("ts_us"),
         )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(spark, deduped, "append", "stream_dedup")
 
 
 def interval_join_views_purchases(
@@ -422,22 +438,11 @@ def run_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, so the completed stream equals the batch twin row-for-row."""
     src1 = streaming_events_source(spark, sf_dir)
     src2 = streaming_events_source(spark, sf_dir)
-    name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-    q = (
-        interval_join_views_purchases(
-            src1.filter(F.col("event_type") == "view"),
-            src2.filter(F.col("event_type") == "purchase"),
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+    joined = interval_join_views_purchases(
+        src1.filter(F.col("event_type") == "view"),
+        src2.filter(F.col("event_type") == "purchase"),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(spark, joined, "append", "stream_ij")
 
 
 def enriched_segment_totals(events: DataFrame, customer: DataFrame) -> DataFrame:
@@ -471,19 +476,8 @@ def run_streaming_enriched_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     from esther_apache_spark_spark.schemas import load_table
 
     customer = load_table(spark, sf_dir, "customer")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched_segment_totals(streaming_events_source(spark, sf_dir), customer)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    totals = enriched_segment_totals(streaming_events_source(spark, sf_dir), customer)
+    return _drain(spark, totals, "complete", "stream_enrich")
 
 
 def interval_join_views_purchases_left(
@@ -607,19 +601,12 @@ def windowed_distinct_users_hll(
 def run_streaming_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the windowed HLL distinct to completion via the memory
     sink (complete mode) and return the result table."""
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    q = (
-        windowed_distinct_users_hll(streaming_events_source(spark, sf_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
+    return _drain(
+        spark,
+        windowed_distinct_users_hll(streaming_events_source(spark, sf_dir)),
+        "complete",
+        "stream_hll",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def windowed_user_freq_cms(
@@ -667,19 +654,12 @@ def windowed_user_freq_cms(
 def run_streaming_user_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the windowed CMS pages to completion via the memory sink
     (complete mode) and return the result table."""
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    q = (
-        windowed_user_freq_cms(streaming_events_source(spark, sf_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
+    return _drain(
+        spark,
+        windowed_user_freq_cms(streaming_events_source(spark, sf_dir)),
+        "complete",
+        "stream_cms",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def run_stream_bloom_novelty(
@@ -695,8 +675,6 @@ def run_stream_bloom_novelty(
     corpus, the Bloom gate is a constant-size broadcastable literal
     with a sized, deterministic false-drop rate. Returns the streamed
     (batch) result table."""
-    import uuid as _uuid
-
     from esther_apache_spark_spark.operators import sketches as SK
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.schemas import load_table
@@ -708,8 +686,7 @@ def run_stream_bloom_novelty(
         SK.bloom_words(hist, "event_id", m_bits=m_bits, k_hashes=k_hashes, salt="sbloom"),
         m_bits,
     )
-    name = f"stream_bloom_{_uuid.uuid4().hex[:8]}"
-    q = (
+    novel = (
         streaming_events_source(spark, sf_dir)
         .filter(
             ~SK.bloom_contains_expr(
@@ -717,16 +694,8 @@ def run_stream_bloom_novelty(
             )
         )
         .select("event_id", "user_id", "event_type")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(spark, novel, "append", "stream_bloom")
 
 
 def run_stream_novelty(
@@ -770,11 +739,11 @@ def run_stream_novelty(
     join against storage; per-key state would grow with corpus age),
     each trigger's caches are released through ``cache_scope``, and an
     empty trigger is skipped. Returns the accumulated (batch) novel
-    rows, read from a directory under ``index_store.scratch_root()``."""
+    rows, read from a ``scope.scratch_dir`` that is removed when the
+    caller's ``cache_scope`` exits (or at interpreter exit outside any
+    scope)."""
     import inspect
-    import os
 
-    from esther_apache_spark_spark.operators import dedup as D
     from esther_apache_spark_spark.operators import incremental as I
     from esther_apache_spark_spark.operators.sampling import hash_bucket
     from esther_apache_spark_spark.sources import index_store as S
@@ -788,7 +757,7 @@ def run_stream_novelty(
     inspect.signature(fam.history_hits).bind(None, None, **probe_kw)
     if hist_frac is None:
         hist_frac = I.HIST_GATE_FRAC
-    out_dir = S.scratch_dir("stream_novel")
+    out_dir = scratch_dir("stream_novel")
     src = (
         spark.readStream.schema(TESTDATA[fam.source])
         .option("maxFilesPerTrigger", "1")
@@ -804,7 +773,7 @@ def run_stream_novelty(
         if batch_df.isEmpty():
             return
         tables = S.read_snapshot(spark, index_path, list(fam.probe_tables))
-        with D.cache_scope():
+        with cache_scope():
             hits = fam.history_hits(batch_df, tables, **probe_kw).select(
                 F.col("_id").alias(fam.id_col)
             )
@@ -909,19 +878,8 @@ def event_transitions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"transitions_{uuid.uuid4().hex[:8]}"
-    q = (
-        updates.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        _drain(spark, updates, "append", "transitions")
         .groupBy("from_type", "to_type")
         .agg(F.sum("n").alias("n"))
     )
@@ -941,9 +899,6 @@ def _write_sentinel_event(
     real ``event_type``) so state flushes; the caller filters
     ``user_id >= 0`` / the sentinel's own never-closing unit out of the
     result."""
-    import os
-    import time
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -969,6 +924,18 @@ def _write_sentinel_event(
     pq.write_table(pa.table(cols, schema=sch), path)
     now = time.time()
     os.utime(path, (now, now))
+
+
+def _flush_twice(q, dst_dir: str, src_file: str, max_ts_us: int) -> None:
+    """The two-round sentinel flush: the first far-future sentinel
+    advances the watermark past every real row, the second forces the
+    micro-batch in which that watermark evicts and emits the remaining
+    append-mode state."""
+    day_us = 86_400_000_000
+    _write_sentinel_event(dst_dir, src_file, max_ts_us + 30 * day_us, -1)
+    q.processAllAvailable()
+    _write_sentinel_event(dst_dir, src_file, max_ts_us + 60 * day_us, -2)
+    q.processAllAvailable()
 
 
 def run_streaming_session_agg(
@@ -997,37 +964,9 @@ def run_streaming_session_agg(
     the watermark — bounded by active users × gap, independent of
     stream length; the shuffle is the same (user) hash exchange as the
     batch groupBy."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from esther_apache_spark_spark.schemas import (
-        _EVENTS_RAW,
-        _events_ts_unit,
-        load_table,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_session_")
-    try:
-        src = f"{sf_dir}/events.parquet"
-        copy = os.path.join(tmp, "00_events.parquet")
-        shutil.copy(src, copy)
-        t0 = time.time() - 60
-        os.utime(copy, (t0, t0))
-
-        max_ts_us = (
-            load_table(spark, sf_dir, "events")
-            .agg(F.max(F.unix_micros("ts")).alias("m"))
-            .collect()[0]["m"]
-        )
-
-        if _events_ts_unit(copy) == "ns":
-            raw = spark.readStream.schema(_EVENTS_RAW).parquet(tmp)
-            stream = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            stream = spark.readStream.schema(TESTDATA["events"]).parquet(tmp)
-
+    with cache_scope():  # the staged copy is removed before this returns
+        tmp = scratch_dir("stream_session")
+        stream, copy, max_ts_us = _staged_events(spark, sf_dir, tmp)
         sessions = (
             stream.withWatermark("ts", watermark)
             .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
@@ -1046,25 +985,11 @@ def run_streaming_session_agg(
                 "total_value",
             )
         )
-        name = f"stream_session_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+        out = _drain(
+            spark, sessions, "append", "stream_session",
+            lambda q: _flush_twice(q, tmp, copy, max_ts_us),
         )
-        try:
-            q.processAllAvailable()
-            day_us = 86_400_000_000
-            _write_sentinel_event(tmp, copy, max_ts_us + 30 * day_us, -1)
-            q.processAllAvailable()
-            _write_sentinel_event(tmp, copy, max_ts_us + 60 * day_us, -2)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(name).filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return out.filter(F.col("user_id") >= 0)
 
 
 def run_streaming_interval_coverage(
@@ -1095,37 +1020,9 @@ def run_streaming_interval_coverage(
     eviction micro-batch). State is one struct per OPEN (user, session),
     watermark-GC'd — bounded by active users, independent of stream
     length."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from esther_apache_spark_spark.schemas import (
-        _EVENTS_RAW,
-        _events_ts_unit,
-        load_table,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_islands_")
-    try:
-        src = f"{sf_dir}/events.parquet"
-        copy = os.path.join(tmp, "00_events.parquet")
-        shutil.copy(src, copy)
-        t0 = time.time() - 60
-        os.utime(copy, (t0, t0))
-
-        max_ts_us = (
-            load_table(spark, sf_dir, "events")
-            .agg(F.max(F.unix_micros("ts")).alias("m"))
-            .collect()[0]["m"]
-        )
-
-        if _events_ts_unit(copy) == "ns":
-            raw = spark.readStream.schema(_EVENTS_RAW).parquet(tmp)
-            stream = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            stream = spark.readStream.schema(TESTDATA["events"]).parquet(tmp)
-
+    with cache_scope():  # the staged copy is removed before this returns
+        tmp = scratch_dir("stream_islands")
+        stream, copy, max_ts_us = _staged_events(spark, sf_dir, tmp)
         sessions = (
             stream.withWatermark("ts", watermark)
             .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
@@ -1136,38 +1033,19 @@ def run_streaming_interval_coverage(
                 F.unix_micros("win.end").alias("e_us"),
             )
         )
-        name = f"stream_islands_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+        out = _drain(
+            spark, sessions, "append", "stream_islands",
+            lambda q: _flush_twice(q, tmp, copy, max_ts_us),
         )
-        try:
-            q.processAllAvailable()
-            day_us = 86_400_000_000
-            _write_sentinel_event(tmp, copy, max_ts_us + 30 * day_us, -1)
-            q.processAllAvailable()
-            _write_sentinel_event(tmp, copy, max_ts_us + 60 * day_us, -2)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return (
-            spark.table(name)
-            .filter(F.col("user_id") >= 0)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_islands"),
-                F.sum(F.col("e_us") - F.col("s_us")).cast("long").alias(
-                    "covered_us"
-                ),
-                F.max(F.col("e_us") - F.col("s_us")).cast("long").alias(
-                    "longest_us"
-                ),
-            )
+    return (
+        out.filter(F.col("user_id") >= 0)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_islands"),
+            F.sum(F.col("e_us") - F.col("s_us")).cast("long").alias("covered_us"),
+            F.max(F.col("e_us") - F.col("s_us")).cast("long").alias("longest_us"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
 
 
 def run_streaming_late_data_audit(
@@ -1195,40 +1073,31 @@ def run_streaming_late_data_audit(
     watermark the on-time batch established), then the standard
     two-round far-future sentinel flush to evict append-mode state.
     State is one row per open (window, type), watermark-GC'd."""
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from esther_apache_spark_spark.functions.money import dec2
-    from esther_apache_spark_spark.schemas import _EVENTS_RAW, _events_ts_unit
+    from esther_apache_spark_spark.schemas import _events_ts_unit
 
-    tmp = tempfile.mkdtemp(prefix="stream_late_")
-    try:
-        src = f"{sf_dir}/events.parquet"
-        tbl = pq.read_table(src)
-        rem = pc.cast(
-            pc.subtract(
-                tbl["event_id"], pc.multiply(pc.divide(tbl["event_id"], 7), 7)
-            ),
-            "int64",
-        )
-        ontime = tbl.filter(pc.not_equal(rem, 0))
-        delayed = tbl.filter(pc.equal(rem, 0))
+    src = f"{sf_dir}/events.parquet"
+    tbl = pq.read_table(src)
+    rem = pc.cast(
+        pc.subtract(tbl["event_id"], pc.multiply(pc.divide(tbl["event_id"], 7), 7)),
+        "int64",
+    )
+    ontime = tbl.filter(pc.not_equal(rem, 0))
+    delayed = tbl.filter(pc.equal(rem, 0))
+    max_ts_us = pc.max(pc.cast(tbl["ts"], "int64")).as_py()
+    if _events_ts_unit(src) == "ns":
+        max_ts_us //= 1000
+
+    with cache_scope():  # the feed directory is removed before this returns
+        tmp = scratch_dir("stream_late")
         f1 = os.path.join(tmp, "00_ontime.parquet")
         pq.write_table(ontime, f1)
         t0 = time.time() - 60
         os.utime(f1, (t0, t0))
-
-        if _events_ts_unit(src) == "ns":
-            raw = spark.readStream.schema(_EVENTS_RAW).parquet(tmp)
-            stream = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            stream = spark.readStream.schema(TESTDATA["events"]).parquet(tmp)
+        stream = _dir_events_stream(spark, tmp, src)
 
         # NOTE: the flush sentinels must NOT be filtered before the
         # aggregation — a pre-watermark filter gets pushed below the
@@ -1253,35 +1122,17 @@ def run_streaming_late_data_audit(
                 "total_cents",
             )
         )
-        name = f"stream_late_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
+
+        def _feed(q) -> None:
             f2 = os.path.join(tmp, "01_delayed.parquet")
             pq.write_table(delayed, f2)
             now = time.time()
             os.utime(f2, (now, now))
             q.processAllAvailable()
-            max_ts_us = (
-                pc.max(pc.cast(tbl["ts"], "int64")).as_py()
-            )
-            if _events_ts_unit(src) == "ns":
-                max_ts_us //= 1000
-            day_us = 86_400_000_000
-            _write_sentinel_event(tmp, src, max_ts_us + 30 * day_us, -1)
-            q.processAllAvailable()
-            _write_sentinel_event(tmp, src, max_ts_us + 60 * day_us, -2)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(name).filter(F.col("event_type") != "flush")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            _flush_twice(q, tmp, src, max_ts_us)
+
+        out = _drain(spark, agg, "append", "stream_late", _feed)
+    return out.filter(F.col("event_type") != "flush")
 
 
 def run_streaming_psi_bin_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1299,7 +1150,6 @@ def run_streaming_psi_bin_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are associative."""
     from esther_apache_spark_spark.plans.mlprep import psi_bin_expr
 
-    name = f"stream_psi_{uuid.uuid4().hex[:8]}"
     src = streaming_events_source(spark, sf_dir)
     cnt = (
         src.select("event_type", *psi_bin_expr())
@@ -1309,17 +1159,7 @@ def run_streaming_psi_bin_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.lit(1) - F.col("e")).alias("c2"),
         )
     )
-    q = (
-        cnt.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(spark, cnt, "complete", "stream_psi")
 
 
 def run_streaming_moment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1331,7 +1171,6 @@ def run_streaming_moment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     change the final answer — the canonical mergeable-state shape every
     streaming metrics pipeline should reduce to before deriving
     mean/variance."""
-    name = f"stream_mom_{uuid.uuid4().hex[:8]}"
     d38 = "decimal(38,0)"
     src = streaming_events_source(spark, sf_dir)
     cents = F.col("value").cast("decimal(12,2)") * 100
@@ -1344,17 +1183,7 @@ def run_streaming_moment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("cents").cast(d38) * F.col("cents")).alias("ss"),
         )
     )
-    q = (
-        m.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(spark, m, "complete", "stream_mom")
 
 
 def _daily_anomaly_update(key, pdfs, state):
@@ -1435,60 +1264,29 @@ def daily_anomaly_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     no filtering needed). Returns the raw (day, cents, prior-moments)
     emissions; `streaming_daily_anomaly_zscore` applies the shared
     z-score readout."""
-    import os
-    import shutil
-    import tempfile
-    import time
+    from esther_apache_spark_spark.schemas import load_table
 
-    from esther_apache_spark_spark.schemas import (
-        _EVENTS_RAW,
-        _events_ts_unit,
-        load_table,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_anom_")
-    try:
-        src = f"{sf_dir}/events.parquet"
-        copy = os.path.join(tmp, "00_events.parquet")
-        shutil.copy(src, copy)
-        t0 = time.time() - 60
-        os.utime(copy, (t0, t0))
-
-        batch_ev = load_table(spark, sf_dir, "events")
-        max_ts_us = batch_ev.agg(F.max(F.unix_micros("ts")).alias("m")).collect()[0][
-            "m"
-        ]
+    with cache_scope():  # the staged copy is removed before this returns
+        tmp = scratch_dir("stream_anom")
+        stream, copy, max_ts_us = _staged_events(spark, sf_dir, tmp)
         types = sorted(
-            r["event_type"] for r in batch_ev.select("event_type").distinct().collect()
+            r["event_type"]
+            for r in load_table(spark, sf_dir, "events")
+            .select("event_type")
+            .distinct()
+            .collect()
         )
 
-        if _events_ts_unit(copy) == "ns":
-            raw = spark.readStream.schema(_EVENTS_RAW).parquet(tmp)
-            stream = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            stream = spark.readStream.schema(TESTDATA["events"]).parquet(tmp)
-
-        name = f"stream_anom_{uuid.uuid4().hex[:8]}"
-        q = (
-            daily_anomaly_updates(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
+        def _close_days(q) -> None:
             day_us = 86_400_000_000
             for i, t in enumerate(types):
                 _write_sentinel_event(
                     tmp, copy, max_ts_us + 30 * day_us, -(i + 1), event_type=t
                 )
             q.processAllAvailable()
-        finally:
-            q.stop()
-        # materialize: the memory sink's table dies with the next query
-        return spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
+
+        out = _drain(
+            spark, daily_anomaly_updates(stream), "update", "stream_anom", _close_days
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # materialize: the memory sink's table dies with the next query
+    return spark.createDataFrame(out.collect(), out.schema)

@@ -220,3 +220,59 @@ def test_catalog_md_is_current():
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
     assert (root / "CATALOG.md").read_text() == tool.render()
+
+
+def _lifecycle_calls(tree):
+    """(line, what, enclosing function) for every call that makes or
+    releases a cache, a scratch directory, an exit hook or a memory
+    sink."""
+    import ast
+
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                attr, base = child.func.attr, child.func.value
+                base_name = base.id if isinstance(base, ast.Name) else None
+                if attr in ("cache", "persist", "unpersist"):
+                    out.append((child.lineno, f".{attr}(", inner))
+                elif attr == "mkdtemp" or (attr, base_name) == ("register", "atexit"):
+                    out.append((child.lineno, f"{base_name}.{attr}", inner))
+                elif (
+                    attr == "format"
+                    and child.args
+                    and isinstance(child.args[0], ast.Constant)
+                    and child.args[0].value == "memory"
+                ):
+                    out.append((child.lineno, '.format("memory")', inner))
+            elif isinstance(child, ast.Call) and getattr(child.func, "id", None) == "mkdtemp":
+                out.append((child.lineno, "mkdtemp", inner))
+            visit(child, inner)
+
+    visit(tree, None)
+    return out
+
+
+def test_one_scope_owns_every_release():
+    """Only ``scope.py`` caches, persists, unpersists, makes temp
+    directories or registers exit hooks, and only the streaming drain
+    helper starts a memory sink, so everything a call leaves behind is
+    released by the caller's ``cache_scope`` (static: no Spark)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "esther_apache_spark_spark"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "scope.py":
+            continue
+        for line, what, fn in _lifecycle_calls(ast.parse(path.read_text())):
+            if (rel, what, fn) == ("streaming/events.py", '.format("memory")', "_drain"):
+                continue
+            bad.append(f"{rel}:{line} {what} in {fn}")
+    assert not bad, bad

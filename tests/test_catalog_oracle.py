@@ -77,35 +77,74 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
 
 
 @pytest.mark.slow
-def test_incremental_entries_on_two_threads_in_one_session(spark, duck, sf_dir):
-    """Two incremental entries run at once on one session: each call
-    commits its index into a store of its own, so neither call's
-    replace-commit races the other's (a shared store path would raise
-    ConcurrentReplaceError), and both results stay oracle-exact."""
+def test_incremental_entries_on_two_threads_in_one_session(
+    spark, duck, sf_dir, monkeypatch
+):
+    """Two incremental entries run at once on one session, each thread
+    inside its own ``cache_scope``. Each call commits its index into a
+    store of its own, so neither call's replace-commit races the
+    other's (a shared store path would raise ConcurrentReplaceError),
+    and both results stay oracle-exact. Each scope removes only its own
+    thread's stores: the first thread's are gone once its scope exits,
+    while the second's stay on disk until the second scope exits."""
+    import os
     import threading
 
-    from esther_apache_spark_spark.sources.index_store import scratch_dir
+    from esther_apache_spark_spark import scope
+    from esther_apache_spark_spark.plans import incremental_plans
 
     # the race itself is timing-dependent; the per-call store is not
-    assert scratch_dir("mh") != scratch_dir("mh")
-    names = ["incremental_minhash_dedup_new_docs", "incremental_dedup_after_retire"]
+    assert scope.scratch_dir("mh") != scope.scratch_dir("mh")
+    made: dict[str, list[str]] = {}
+    real_scratch_dir = incremental_plans.scratch_dir
+
+    def recording_scratch_dir(kind: str) -> str:
+        path = real_scratch_dir(kind)
+        made.setdefault(threading.current_thread().name, []).append(path)
+        return path
+
+    monkeypatch.setattr(incremental_plans, "scratch_dir", recording_scratch_dir)
+    first, second = names = [
+        "incremental_minhash_dedup_new_docs",
+        "incremental_dedup_after_retire",
+    ]
     got: dict = {}
     errors: list = []
-    start = threading.Barrier(len(names))
+    computed = threading.Barrier(len(names) + 1, timeout=900)
+    release = {n: threading.Event() for n in names}
 
     def run(name: str) -> None:
         try:
-            start.wait()
-            got[name] = _canon(plans.QUERIES[name].fn(spark, sf_dir).toPandas())
+            with scope.cache_scope():
+                got[name] = _canon(plans.QUERIES[name].fn(spark, sf_dir).toPandas())
+                computed.wait()
+                release[name].wait(timeout=900)
         except Exception as e:  # noqa: BLE001
             errors.append(f"{name}: {e!r}")
+            computed.abort()
 
-    threads = [threading.Thread(target=run, args=(n,)) for n in names]
-    for t in threads:
+    threads = {n: threading.Thread(target=run, args=(n,), name=n) for n in names}
+    for t in threads.values():
         t.start()
-    for t in threads:
-        t.join(timeout=900)
-    assert not any(t.is_alive() for t in threads)
+    try:
+        computed.wait()
+        assert made[first] and made[second]
+        assert all(os.path.isdir(p) for p in made[first] + made[second])
+        release[first].set()
+        threads[first].join(timeout=900)
+        assert not any(os.path.exists(p) for p in made[first])
+        assert all(os.path.isdir(p) for p in made[second])
+        release[second].set()
+        threads[second].join(timeout=900)
+        assert not any(os.path.exists(p) for p in made[second])
+    except threading.BrokenBarrierError:
+        pass  # a thread failed; ``errors`` says why
+    finally:
+        for e in release.values():
+            e.set()
+        for t in threads.values():
+            t.join(timeout=900)
+    assert not any(t.is_alive() for t in threads.values())
     assert not errors, errors
     for name in names:
         want = _canon(duck.execute(plans.QUERIES[name].oracle).df())

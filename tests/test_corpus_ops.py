@@ -228,7 +228,10 @@ def test_bpe_learn_survives_fully_merged_word(spark, tmp_path):
     throw. The dominant two-char word here fully merges in 2 rounds;
     the remaining 4 rounds must proceed on the other words, matching
     the oracle's empty range(1, len) contribution for 1-symbol words."""
+    from pyspark.sql import functions as F
+
     from esther_apache_spark_spark.plans.corpus_ops import _bpe_learn
+    from esther_apache_spark_spark.scope import cache_scope
 
     text = " ".join(["aa"] * 50 + ["bcde", "bcdf", "bcdg", "bcdh", "bcdi"] * 3)
     docs = spark.createDataFrame(
@@ -236,23 +239,18 @@ def test_bpe_learn_survives_fully_merged_word(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    merges, base, final = _bpe_learn(spark, str(tmp_path))
-    base.unpersist()
+    with cache_scope():
+        merges, final = _bpe_learn(spark, str(tmp_path))
+        syms = {
+            r["sym"]
+            for r in final.select(F.explode(F.split(F.trim("s"), " ")).alias("sym"))
+            .collect()
+        }
     # 'a </w>' (ASC tiebreak) then 'a a</w>' win the first two rounds,
     # collapsing "aa" to the single symbol 'aa</w>'
     assert (merges[0][1], merges[0][2]) == ("a", "</w>")
     assert (merges[1][1], merges[1][2]) == ("a", "a</w>")
     assert len(merges) == 6  # later rounds proceeded without crashing
-    syms = {
-        r["sym"]
-        for r in final.select(
-            __import__("pyspark.sql.functions", fromlist=["F"]).explode(
-                __import__("pyspark.sql.functions", fromlist=["F"]).split(
-                    __import__("pyspark.sql.functions", fromlist=["F"]).trim("s"), " "
-                )
-            ).alias("sym")
-        ).collect()
-    }
     assert "aa</w>" in syms
 
 

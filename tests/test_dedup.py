@@ -589,9 +589,9 @@ def test_persist_storage_level_exposed(spark):
     frame outgrows executor memory), visible on the frame's
     storageLevel. Explicit levels live on FreshKart's
     ``dim_storage_level`` (next test)."""
-    from esther_apache_spark_spark.operators import dedup as D
+    from esther_apache_spark_spark.scope import cached
 
-    c = D._cache(spark.range(10).selectExpr("id * 2 AS x"))
+    c = cached(spark.range(10).selectExpr("id * 2 AS x"))
     assert c.storageLevel.useMemory and c.storageLevel.useDisk
     c.unpersist()
 

@@ -44,6 +44,7 @@ from urllib.parse import urlparse
 import pytest
 from pyspark.sql import functions as F
 
+from esther_apache_spark_spark import scope
 from esther_apache_spark_spark.operators import incremental as I
 from esther_apache_spark_spark.sources import index_store as S
 
@@ -553,9 +554,9 @@ def test_stream_gate_output_lives_under_the_reaped_root(
     I.commit_index(I.build_minhash_bucket_index(docs.limit(5)), path)
     got = run_stream_novelty(spark, sf_dir, path)
     files = got.inputFiles()
-    root = os.path.realpath(S.scratch_root())
+    root = os.path.realpath(scope.scratch_root())
     assert files and got.count() > 0
-    assert root in S._REAPED
+    assert root in scope._REAPED
     for f in files:
         local = os.path.realpath(urlparse(f).path)
         assert os.path.commonpath([local, root]) == root, f
