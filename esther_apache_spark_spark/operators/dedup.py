@@ -133,10 +133,11 @@ def _hot_nsh_arr(
     bucket_col: str,
     nbands: int,
     max_bucket: int,
-) -> DataFrame:
+) -> DataFrame | None:
     """Per-id shard-modulus array for hot-bucket sharding:
     ``_nsh_arr[b] = ceil(bucket_size / max_bucket)`` for the id's
-    band-``b`` bucket, 1 when the bucket is at or under the cap.
+    band-``b`` bucket, 1 when the bucket is at or under the cap — or
+    ``None`` when no bucket is over the cap.
 
     ``shard(id, b) = md5('shard:' || id || ':' || b) % nsh_arr[b]`` (see
     ``_shard_hash_sql``) then bounds every
@@ -148,13 +149,15 @@ def _hot_nsh_arr(
     condition for every band — see the first-meet-band comments at the
     call sites.
 
-    Only over-cap buckets are materialized: the size aggregation is
-    map-side combinable, the ``> max_bucket`` filter leaves a frame that
-    is empty on healthy data (AQE turns both joins into empty
-    broadcasts), and only ids touching a hot bucket reach the per-id
-    aggregation. Consumers left-join the result and coalesce missing ids
-    to all-ones, so the capped plan is byte-identical to the uncapped
-    plan on non-pathological data.
+    The over-cap (band, bucket) aggregate is map-side combinable and is
+    probed once, eagerly (``isEmpty``), before the caller plans its
+    join. On healthy data it is empty: the helper returns ``None``,
+    ``_with_shards`` fills the all-ones moduli, and the caller's plan is
+    exactly the ``max_bucket=None`` plan, with no hot-key aggregate or
+    join left in it. When a bucket is over the cap, the returned frame
+    plans that aggregate again (the probe's narrow pass runs once more),
+    only ids touching a hot bucket reach the per-id aggregation, and
+    consumers left-join it and coalesce missing ids to all-ones.
 
     Expressions are assembled as SQL strings (r11, guide §4 driver
     side): the former Column-builder form cost ~40 py4j round-trips per
@@ -171,6 +174,8 @@ def _hot_nsh_arr(
             f"cast(ceil(_n / {mb}) as bigint) AS _nsh",
         )
     )
+    if hot.isEmpty():
+        return None
     return (
         exploded.join(hot, [band_col, bucket_col])
         .groupBy(id_col)
@@ -189,7 +194,8 @@ def _hot_nsh_arr(
 
 def _with_shards(src: DataFrame, nsh: DataFrame | None, nbands: int) -> DataFrame:
     """Left-join the hot-bucket modulus arrays onto ``src`` (all-ones for
-    ids that touch no hot bucket, or when sharding is disabled)."""
+    ids that touch no hot bucket; no join at all when ``nsh`` is
+    ``None``: sharding is disabled or no bucket is over the cap)."""
     if nsh is not None:
         src = src.join(nsh, "_id", "left")
     else:
@@ -945,6 +951,32 @@ def minhash_cross_matches(
     )
 
 
+def _hot_shingles(
+    shingled: DataFrame, max_df: int | None, weighted: bool
+) -> DataFrame | None:
+    """The shingles ``_g`` of a ``(…, _sh[, _dfw])`` frame's distinct
+    shingle arrays whose document frequency exceeds ``max_df``, or
+    ``None`` when pruning is off or no shingle is that hot. Document
+    frequency counts rows, or sums ``_dfw`` when ``weighted`` (the
+    member count under collapse — see ``ngram_jaccard_pairs``). The
+    aggregate is map-side combinable and is probed once, eagerly
+    (``isEmpty``), so that on data without a stop-shingle the caller
+    plans no anti-join and no hot-subset correction. When the frame is
+    non-empty each consumer plans the aggregate again: the probe's
+    narrow pass runs once more."""
+    if max_df is None:
+        return None
+    cols, df_expr = (["_dfw"], F.sum("_dfw")) if weighted else ([], F.count(F.lit(1)))
+    hot = (
+        shingled.select(*cols, F.explode("_sh").alias("_g"))
+        .groupBy("_g")
+        .agg(df_expr.alias("_df"))
+        .filter(F.col("_df") > max_df)
+        .select("_g")
+    )
+    return None if hot.isEmpty() else hot
+
+
 def _ngram_collapsed_parts(
     df: DataFrame,
     id_col: str,
@@ -1055,7 +1087,12 @@ def ngram_jaccard_pairs(
     so any emitted pair carries its true Jaccard including hot shingles.
     A pair is missed only if ALL its shared shingles are hot — the
     default cap (100k docs) makes that astronomically unlikely for real
-    near-dups. ``max_df=None`` disables pruning (fully exact).
+    near-dups. ``max_df=None`` disables pruning (fully exact). One eager
+    probe of the df aggregate (``_hot_shingles``) decides before
+    planning whether any shingle is over ``max_df``: with none, the
+    plan is the ``max_df=None`` plan; with some, the broadcast
+    anti-join and the hot-subset correction are planned and the df
+    aggregate runs once more than the probe.
 
     ``collapse_exact`` is the clone-heavy-corpus knob (same machinery
     as the minhash/simhash/embedding paths): byte-identical texts
@@ -1116,22 +1153,18 @@ def ngram_jaccard_pairs(
     # than the fill parallelism buys; the spread stays only in
     # substring_dup_spans, where it measured 1.5x.)
     shingled = cached(df.select(*sel))
-    # feeds the index join and the exact-recount joins
-    inv = shingled.select("_id", F.explode("_sh").alias("_g"))
-    hot = None
-    inv_kept = inv
-    if max_df is not None:
-        # document frequency per shingle is a map-side-combinable count
-        # (weighted by member count under collapse — see docstring);
-        # the hot-shingle list is tiny (≤ distinct_shingles/max_df) → broadcast anti-join
-        if _df_weight_col is not None:
-            dfagg = shingled.select(
-                "_dfw", F.explode("_sh").alias("_g")
-            ).groupBy("_g").agg(F.sum("_dfw").alias("_df"))
-        else:
-            dfagg = inv.groupBy("_g").agg(F.count(F.lit(1)).alias("_df"))
-        hot = dfagg.filter(F.col("_df") > max_df).select("_g")
-        inv_kept = inv.join(F.broadcast(hot), "_g", "left_anti")
+    # feeds the index join; each row carries its document's FULL set
+    # size, which the pair aggregate keeps in its group key (a function
+    # of the id), so no per-doc size side join comes back afterwards
+    inv = shingled.select(
+        "_id", F.size("_sh").alias("_sz"), F.explode("_sh").alias("_g")
+    )
+    # document frequency per shingle (weighted by member count under
+    # collapse — see docstring); the hot-shingle list is tiny
+    # (≤ distinct_shingles/max_df) → broadcast anti-join, planned only
+    # when the probe finds a shingle over max_df
+    hot = _hot_shingles(shingled, max_df, _df_weight_col is not None)
+    inv_kept = inv if hot is None else inv.join(F.broadcast(hot), "_g", "left_anti")
     # Intersection by COUNTING the inverted-index join (r10): the arrays
     # are distinct per document, so the self-join emits exactly one row
     # per (pair, shared kept shingle) and a partial-aggregable count IS
@@ -1144,7 +1177,12 @@ def ngram_jaccard_pairs(
         inv_kept.alias("a")
         .join(inv_kept.alias("b"), "_g")
         .filter(F.col("a._id") < F.col("b._id"))
-        .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .groupBy(
+            F.col("a._id").alias("id_a"),
+            F.col("b._id").alias("id_b"),
+            F.col("a._sz").alias("_sza"),
+            F.col("b._sz").alias("_szb"),
+        )
         .agg(F.count(F.lit(1)).alias("_common"))
     )
     if hot is not None:
@@ -1171,6 +1209,8 @@ def ngram_jaccard_pairs(
             .select(
                 "id_a",
                 "id_b",
+                "_sza",
+                "_szb",
                 (
                     F.col("_common")
                     + F.when(
@@ -1180,22 +1220,11 @@ def ngram_jaccard_pairs(
                 ).alias("_common"),
             )
         )
-    sizes = shingled.select("_id", F.size("_sh").alias("_sz"))
     # jaccard = |A∩B| / |A∪B| as a raw double ratio — int/int division is
     # bit-identical across engines (no decimal re-rounding to drift)
-    jac = (
-        common.join(
-            sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sza")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_szb")),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("_common") / (F.col("_sza") + F.col("_szb") - F.col("_common")),
-        )
+    jac = common.withColumn(
+        "jaccard",
+        F.col("_common") / (F.col("_sza") + F.col("_szb") - F.col("_common")),
     )
     return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
@@ -2008,36 +2037,6 @@ def ngram_containment_pairs(
             collapse_exact=False,
             _df_weight_col="_dfw",
         )
-        # Intra eligibility must mirror the direct path EXACTLY: two
-        # identical docs pair iff they share at least one KEPT shingle
-        # (every shingle of the text hotter than max_df ⇒ no candidate
-        # row survives the pruned inverted index ⇒ no pair — and this
-        # op's oracle mirrors that pruning, unlike the Jaccard op's
-        # unpruned all-pairs oracle). Gate on "group has ≥ 1 shingle
-        # with member-weighted df ≤ max_df"; with pruning off this is
-        # just the nonempty-shingle gate.
-        sh_g = groups.select(
-            "_tkey",
-            F.explode(
-                F.array_distinct(
-                    shingle_hashes(tokenize(F.col(text_col)), shingle_n)
-                )
-            ).alias("_g"),
-        )
-        if max_df is not None:
-            dfagg = (
-                sh_g.join(gw, "_tkey")
-                .groupBy("_g")
-                .agg(F.sum("_dfw").alias("_df"))
-            )
-            hot = dfagg.filter(F.col("_df") > max_df).select("_g")
-            eligible_keys = (
-                sh_g.join(F.broadcast(hot), "_g", "left_anti")
-                .select("_tkey")
-                .distinct()
-            )
-        else:
-            eligible_keys = sh_g.select("_tkey").distinct()
         rep_map = groups.select(F.col(id_col).alias("_rep"), "_tkey")
         if expand_cap is not None:
             wcap = Window.partitionBy("_tkey").orderBy("_mid")
@@ -2061,7 +2060,26 @@ def ngram_containment_pairs(
             )
         )
         if threshold <= 1.0:
-            im = members.join(eligible_keys, "_tkey", "semi")
+            # Intra eligibility must mirror the direct path EXACTLY: two
+            # identical docs pair iff they share at least one KEPT shingle
+            # (every shingle of the text hotter than max_df ⇒ no candidate
+            # row survives the pruned inverted index ⇒ no pair — and this
+            # op's oracle mirrors that pruning, unlike the Jaccard op's
+            # unpruned all-pairs oracle). Gate on "group has ≥ 1 shingle
+            # with member-weighted df ≤ max_df"; with pruning off this is
+            # just the nonempty-shingle gate, and so it is when no
+            # shingle is over max_df.
+            sh = groups.select(
+                "_tkey",
+                F.array_distinct(
+                    shingle_hashes(tokenize(F.col(text_col)), shingle_n)
+                ).alias("_sh"),
+            )
+            hot = _hot_shingles(sh.join(gw, "_tkey"), max_df, weighted=True)
+            sh_g = sh.select("_tkey", F.explode("_sh").alias("_g"))
+            if hot is not None:
+                sh_g = sh_g.join(F.broadcast(hot), "_g", "left_anti")
+            im = members.join(sh_g.select("_tkey").distinct(), "_tkey", "semi")
             one = F.lit(1.0).alias("containment")
             if expand_cap is None:
                 ia = im.select("_tkey", F.col("_mid").alias("_ia"))
@@ -2129,16 +2147,8 @@ def ngram_containment_pairs(
     shingled = cached(df.select(*sel))
     nonempty = shingled.filter(F.size("_sh") > 0)
     inv = nonempty.select("_id", F.explode("_sh").alias("_g"))
-    if max_df is not None:
-        if _df_weight_col is not None:
-            dfagg = (
-                nonempty.select("_dfw", F.explode("_sh").alias("_g"))
-                .groupBy("_g")
-                .agg(F.sum("_dfw").alias("_df"))
-            )
-        else:
-            dfagg = inv.groupBy("_g").agg(F.count(F.lit(1)).alias("_df"))
-        hot = dfagg.filter(F.col("_df") > max_df).select("_g")
+    hot = _hot_shingles(nonempty, max_df, _df_weight_col is not None)
+    if hot is not None:
         inv = inv.join(F.broadcast(hot), "_g", "left_anti")
     cand = (
         inv.alias("a")

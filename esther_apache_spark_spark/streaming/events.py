@@ -1285,8 +1285,6 @@ def daily_anomaly_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             q.processAllAvailable()
 
-        out = _drain(
+        return _drain(
             spark, daily_anomaly_updates(stream), "update", "stream_anom", _close_days
         )
-    # materialize: the memory sink's table dies with the next query
-    return spark.createDataFrame(out.collect(), out.schema)

@@ -89,6 +89,31 @@ def _n_components(pairs, ids):
     return len({find(i) for i in ids})
 
 
+def _probe_sides(op, hot_cap, cold_cap, marker):
+    """Run ``op(cap)`` — a frame keyed by its first two columns, valued by
+    its third — at a cap its eager hot-key probe finds nothing over, at
+    one it finds a hot key under, and uncapped. The first plans no hot
+    branch (no ``marker`` in the executed plan) and returns exactly the
+    uncapped rows; the second plans it and returns a subset of them with
+    the same values. Returns (uncapped, hot-capped) as dicts."""
+
+    def run(cap):
+        df = op(cap)
+        got = {(r[0], r[1]): r[2] for r in df.collect()}
+        return got, df._jdf.queryExecution().executedPlan().toString()
+
+    full, _ = run(None)
+    assert full
+    cold, plan = run(cold_cap)
+    assert marker not in plan, plan
+    assert cold == full
+    hot, plan = run(hot_cap)
+    assert marker in plan, plan
+    for k, v in hot.items():
+        assert v == pytest.approx(full[k], abs=1e-4), k
+    return full, hot
+
+
 BOILER = (
     "this document is provided as is without warranty of any kind either "
     "express or implied including but not limited to the implied warranties "
@@ -138,6 +163,18 @@ def test_simhash_hot_bucket_bounded_and_connected(spark):
     assert _max_degree(cluster_pairs) <= 4 * 4 * 40  # bands × slack × cap
     assert _n_components(cluster_pairs, range(n_dup)) == 1
 
+    # both sides of the hot-bucket probe on the direct path: 30 clones
+    # share every band's bucket, over a cap of 10 and under one of 50
+    small = _docs_df(spark, [BOILER] * 30 + uniques)
+    _probe_sides(
+        lambda mb: D.simhash_candidates(
+            small, band_bits=15, max_bucket=mb, collapse_exact=False
+        ),
+        hot_cap=10,
+        cold_cap=50,
+        marker="LeftOuter",
+    )
+
 
 def test_embedding_hot_bucket_bounded_and_connected(spark):
     rng = np.random.default_rng(17)
@@ -162,25 +199,58 @@ def test_embedding_hot_bucket_bounded_and_connected(spark):
     assert _max_degree(cluster_pairs) <= 6 * 4 * 32  # tables × slack × cap
     assert _n_components(cluster_pairs, range(n_dup)) == 1
 
+    # both sides of the hot-bucket probe on the direct path (100 clones
+    # + the 40 uniques): over a cap of 32 and under one of 140
+    small = _vec_df(spark, np.vstack([vecs[:100], vecs[n_dup:]]))
+    _probe_sides(
+        lambda mb: D.embedding_cosine_dups(
+            small, threshold=0.9, n_planes=4, n_tables=6, dim=16,
+            max_bucket=mb, collapse_exact=False,
+        ),
+        hot_cap=32,
+        cold_cap=140,
+        marker="LeftOuter",
+    )
+
+
+def _normal_docs(spark):
+    return _docs_df(
+        spark,
+        [
+            f"document {i} about {'spark' if i % 2 else 'pandas'} engines "
+            f"with shared middle section of recurring words and tail {i}"
+            for i in range(40)
+        ],
+    )
+
 
 def test_capped_results_identical_on_normal_data(spark):
-    """Buckets at/under the cap: nshards=1 → results byte-identical."""
-    texts = [
-        f"document {i} about {'spark' if i % 2 else 'pandas'} engines "
-        f"with shared middle section of recurring words and tail {i}"
-        for i in range(40
-        )
-    ]
-    df = _docs_df(spark, texts)
-    capped = sorted(
-        (r["id_a"], r["id_b"], r["sig_agreement"])
-        for r in D.minhash_lsh_candidates(df, max_bucket=4096).collect()
+    """Buckets at/under the cap: no hot bucket → results byte-identical
+    to the uncapped plan; a cap of 1 makes every shared bucket hot."""
+    df = _normal_docs(spark)
+    _probe_sides(
+        lambda mb: D.minhash_lsh_candidates(df, max_bucket=mb),
+        hot_cap=1,
+        cold_cap=4096,
+        marker="LeftOuter",
     )
-    uncapped = sorted(
-        (r["id_a"], r["id_b"], r["sig_agreement"])
-        for r in D.minhash_lsh_candidates(df, max_bucket=None).collect()
-    )
-    assert capped == uncapped
+
+
+def test_no_hot_key_plans_no_hot_branch(spark):
+    """With no hot key the eager probes leave every hot-key branch out of
+    the executed plan: no stop-shingle anti-join or ``collect_set``
+    correction in n-gram Jaccard, no join against the hot-bucket
+    aggregate in MinHash-LSH."""
+    df = _normal_docs(spark)
+    for op, absent in (
+        (D.ngram_jaccard_pairs, ("LeftAnti", "collect_set")),
+        (D.minhash_lsh_candidates, ("LeftOuter", "collect_list")),
+    ):
+        res = op(df, collapse_exact=False)
+        assert res.collect()
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        for word in absent:
+            assert word not in plan, (op.__name__, word, plan)
 
 
 def test_ngram_df_pruning_drops_hot_keeps_exact_values(spark):
@@ -194,14 +264,13 @@ def test_ngram_df_pruning_drops_hot_keeps_exact_values(spark):
     fillers = [f"{stop} filler doc {i} about topic {i * 11}" for i in range(20)]
     df = _docs_df(spark, reals + fillers)
 
-    pruned = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(df, threshold=0.0, max_df=5).collect()
-    }
-    full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(df, threshold=0.0, max_df=None).collect()
-    }
+    # the stop-shingle is in all 22 docs: over max_df=5, not over 22
+    full, pruned = _probe_sides(
+        lambda md: D.ngram_jaccard_pairs(df, threshold=0.0, max_df=md),
+        hot_cap=5,
+        cold_cap=22,
+        marker="LeftAnti",
+    )
     # pruning dropped candidates that shared ONLY hot shingles…
     assert len(pruned) < len(full)
     # …but every surviving pair carries its EXACT jaccard (hot shingles
@@ -790,24 +859,29 @@ def test_containment_directional_and_pruning_exact(spark):
     ] + [f"{stop} filler doc {i} about topic {i * 7}" for i in range(20)]
     df = _docs_df(spark, docs)
 
-    full = {
-        (r["src_id"], r["dst_id"]): r["containment"]
-        for r in D.ngram_containment_pairs(df, threshold=0.0, max_df=None).collect()
-    }
-    # directional: the short doc is fully contained in the long one…
-    assert full[(0, 1)] == 1.0
-    # …but not vice versa
-    assert full[(1, 0)] < 0.3
+    # the stop-shingle is in 21 of the 22 docs: over max_df=5, not over
+    # 22; the collapsed path probes member-weighted df, and with no
+    # clones returns the direct path's rows at either cap
+    for ce in (False, True):
+        full, pruned = _probe_sides(
+            lambda md: D.ngram_containment_pairs(
+                df, threshold=0.0, max_df=md, collapse_exact=ce
+            ),
+            hot_cap=5,
+            cold_cap=22,
+            marker="LeftAnti",
+        )
+        # directional: the short doc is fully contained in the long one…
+        assert full[(0, 1)] == 1.0
+        # …but not vice versa
+        assert full[(1, 0)] < 0.3
 
-    pruned = {
-        (r["src_id"], r["dst_id"]): r["containment"]
-        for r in D.ngram_containment_pairs(df, threshold=0.0, max_df=5).collect()
-    }
-    # pruning drops candidates sharing ONLY hot shingles, keeps values exact
-    assert len(pruned) < len(full)
-    for p, c in pruned.items():
-        assert c == full[p], p
-    assert pruned[(0, 1)] == 1.0
+        # pruning drops candidates sharing ONLY hot shingles, keeps
+        # values exact
+        assert len(pruned) < len(full)
+        for p, c in pruned.items():
+            assert c == full[p], p
+        assert pruned[(0, 1)] == 1.0
 
 
 def test_capped_running_balance_clamps_and_matches_reference(spark):
